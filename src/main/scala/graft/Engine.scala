@@ -14,6 +14,25 @@ import org.apache.spark.sql.SparkSession
   * Idempotent and cheap — callable from every table load.
   */
 object Engine {
+  /** Entries of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100) — the analogue
+    * of compiling a Gandiva projector once and evaluating it on every
+    * batch. A curation pass generates about 230 distinct classes and a
+    * whole curation or lakehouse run about 300, so at the default every
+    * pass recompiles nearly all of them; 1000 is over 3x that working
+    * set (SCALE.md has the measured sets and the metaspace cost). */
+  val CodegenCacheMaxEntries = 1000
+
+  /** Static confs every session of the engine is built with. They must
+    * be on the builder: Spark reads them once (the codegen cache is
+    * created by the JVM's first compile), so `configure` on a live
+    * session cannot change them. */
+  val buildConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheMaxEntries.toString,
+    // reliable `iterCheckpoint` files are deleted once their RDD is
+    // garbage-collected, so checkpoint dirs do not grow without bound
+    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
+
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -40,22 +59,6 @@ object Engine {
     // sf0.1, 2.8 s -> 0.9 s; zero effect on any >1 GB exchange).
     spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
       "64k")
-    // File-output commit protocol v2 (task commits rename directly into
-    // the destination; job commit is a no-op) + no _SUCCESS marker.
-    // v1's job-level atomicity is REDUNDANT under this engine's write
-    // paths: TableLog publishes data-before-log (files in an
-    // unpublished UUID subdir are unreachable until the log commit
-    // lands), and the egress round-trips write to per-query scratch
-    // dirs they immediately re-read whole. v2 removes one rename pass
-    // + a driver-side sequential rename loop per write job — measured
-    // A/B (one JVM, alternating, 3 pairs): log_cdf 0.87×,
-    // log_checkpoint 0.94×, log_clone 0.96×, others noise-neutral.
-    // At 100 TB the same reasoning holds (and v2 is the standard
-    // posture for rename-based committers on many-file jobs).
-    spark.conf.set(
-      "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-    spark.conf.set(
-      "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     // native expressions (GraftExtensions is the spark.sql.extensions
     // path for cluster deployment; this covers already-built sessions)
     GraftExtensions.functions.foreach { case (name, _, builder) =>
@@ -77,6 +80,7 @@ object Engine {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.maxResultSize", "2g")
+      .config(buildConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     configure(s)

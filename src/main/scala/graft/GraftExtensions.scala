@@ -17,10 +17,16 @@ import graft.functions.{CdcChunks, CosineSimilarity, Md5BucketFeats, Md5Shingles
   * function registry (`cpp/src/gandiva/function_registry.cc`) is the
   * analogous plug-in point for its JIT'd kernels.
   *
-  * Cluster deployments should also set `spark.sql.timeType.enabled=
-  * true` in spark-defaults: extensions cannot set confs, and the
-  * engine's TIME column support (IPC/Flight codecs, `ipc_types`)
-  * needs Spark 4.1's TIME type unlocked.
+  * Extensions cannot set confs, so cluster deployments should also put
+  * these in spark-defaults:
+  *  - `spark.sql.timeType.enabled=true`: the engine's TIME column
+  *    support (IPC/Flight codecs, `ipc_types`) needs Spark 4.1's TIME
+  *    type unlocked;
+  *  - the static confs of `Engine.buildConfs`, which `Engine.session`
+  *    sets on its builder: `spark.sql.codegen.cache.maxEntries=1000`
+  *    (the generated-class cache holds the engine's working set) and
+  *    `spark.cleaner.referenceTracking.cleanCheckpoints=true`
+  *    (reliable `iterCheckpoint` files are deleted with their RDDs).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -448,9 +448,14 @@ object FlightGrpc {
         }
         private def advance(): Unit =
           while (!done && !cur.hasNext) {
+            // release the drained batch BEFORE waiting for the next: the
+            // feeder enqueues another batch as soon as this poll empties
+            // the queue, and the drained one must not be held (or
+            // counted) beside those two
+            feed.residentRows.addAndGet(-curSize)
+            cur = Iterator.empty; curSize = 0
             nextMsg() match {
               case PartitionFeed.RowBatch(rows) =>
-                feed.residentRows.addAndGet(-curSize)
                 cur = rows.iterator; curSize = rows.length
               case PartitionFeed.End => done = true
               case PartitionFeed.Err(e) => throw e

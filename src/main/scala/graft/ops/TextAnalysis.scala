@@ -547,28 +547,9 @@ object TextAnalysis {
     // back-fill executors the tokenize stages leave idle. r14 profile:
     // 40 sequential jobs, wall 5.6 s vs job-sum 3.9 s — the gap is
     // scheduler round-trips this overlap absorbs. Results are
-    // unaffected: both legs are read only after BOTH builds complete.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val ivfBuild = pool.submit(new java.util.concurrent.Callable[Unit] {
-      override def call(): Unit =
-        Similarity.buildIvfIndex(s, dir, s"$root/ivf")
-    })
-    val docs = t(s, dir, "documents")
-    // cluster by bucket before the partitioned write: a partitionBy
-    // writer opens one file per (task, value) pair, so leaving the
-    // agg exchange's task layout in place writes up to tasks × buckets
-    // tiny files (measured 16×16 at sf0.1 — the write job doubled on
-    // open/commit overhead alone). The explicit-count repartition pins
-    // one file per bucket per holding task (guide §6 file sizing; same
-    // lesson as TableLog.appendPartitioned's pinned count — bare
-    // repartition(cols) is an AQE coalesce target).
-    val p = s.sessionState.conf.numShufflePartitions
-    docs.select(col("doc_id"), explode(toks(col("text"))).as("term"))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .withColumn("bkt", termBucket(col("term")))
-      .repartition(p, col("bkt"))
-      .sortWithinPartitions("term")
-      .write.mode("overwrite").partitionBy("bkt").parquet(s"$root/postings")
+    // unaffected: both legs are read only after BOTH builds complete
+    // (inParallel returns when both have, and a failed build interrupts
+    // and awaits the other).
     // corpus stats OBSERVED during the doclen write (count and Σdl are
     // exactly n_docs and Σ tokens): r14 already dropped the third
     // tokenize pass by re-reading the artifact; the observation drops
@@ -578,16 +559,33 @@ object TextAnalysis {
     // keyed by observation name — an anonymous Observation would leak a
     // fresh random key into the artifact every run
     val obs = org.apache.spark.sql.Observation("hybrid_corpus_stats")
-    docs.select(col("doc_id"), size(toks(col("text"))).as("dl"))
-      .observe(obs, count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$root/doclen")
+    inParallel(() => {
+      val docs = t(s, dir, "documents")
+      // cluster by bucket before the partitioned write: a partitionBy
+      // writer opens one file per (task, value) pair, so leaving the
+      // agg exchange's task layout in place writes up to tasks × buckets
+      // tiny files (measured 16×16 at sf0.1 — the write job doubled on
+      // open/commit overhead alone). The explicit-count repartition pins
+      // one file per bucket per holding task (guide §6 file sizing; same
+      // lesson as TableLog.appendPartitioned's pinned count — bare
+      // repartition(cols) is an AQE coalesce target).
+      val p = s.sessionState.conf.numShufflePartitions
+      docs.select(col("doc_id"), explode(toks(col("text"))).as("term"))
+        .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
+        .withColumn("bkt", termBucket(col("term")))
+        .repartition(p, col("bkt"))
+        .sortWithinPartitions("term")
+        .write.mode("overwrite").partitionBy("bkt").parquet(s"$root/postings")
+      docs.select(col("doc_id"), size(toks(col("text"))).as("dl"))
+        .observe(obs, count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+        .write.mode("overwrite").parquet(s"$root/doclen")
+      val sp = s; import sp.implicits._
+      Seq((obs.get("n_docs").asInstanceOf[Long],
+          obs.get("sum_dl").asInstanceOf[Long])).toDF("n_docs", "sum_dl")
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
+    }, () => Similarity.buildIvfIndex(s, dir, s"$root/ivf"))
     val nDocs = obs.get("n_docs").asInstanceOf[Long]
     val sumDl = obs.get("sum_dl").asInstanceOf[Long]
-    locally { val sp = s; import sp.implicits._
-      Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/stats") }
-    // both index trees must exist before either leg reads
-    try ivfBuild.get() finally pool.shutdown()
     // ---- lexical leg from the index ----
     val avgdl = sumDl.toDouble / nDocs
     val posts = s.read.parquet(s"$root/postings")

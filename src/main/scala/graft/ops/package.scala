@@ -29,18 +29,6 @@ package object ops {
   def davgSql(col: String): String =
     s"${dsumSql(col)} / COUNT($col)"
 
-  /** Fan a SMALL input out to the session's cores before CPU-dense
-    * per-row work (md5 feature kernels, edit-distance verification):
-    * a one-row-group parquet file cannot split, so a small scan
-    * serializes minutes of per-row CPU on 1-2 tasks regardless of core
-    * count — the inverse of the AQE-coalescing problem, and nothing in
-    * Spark expands a scan's parallelism after planning. The added
-    * round-robin exchange is bounded by the SIZE GUARD (plan-stats
-    * estimate < 256 MB, i.e. trivially shuffleable), so at production
-    * scale — where the scan itself supplies parallelism — this is an
-    * identity, never an extra pass over big data. Only for call sites
-    * whose downstream is partitioning-independent (aggregates/joins);
-    * every use is oracle-checked. */
   /** Run independent driver-submitted actions concurrently (guide
     * §2.6 "overlap independent jobs"): Spark happily schedules several
     * jobs at once — actions are only sequential because driver code
@@ -50,8 +38,9 @@ package object ops {
     * propagate with the original cause. */
   def inParallel(actions: (() => Unit)*): Unit = {
     if (actions.lengthCompare(1) <= 0) { actions.foreach(_()); return }
-    val pool =
-      java.util.concurrent.Executors.newFixedThreadPool(actions.length - 1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      actions.length - 1, { (r: Runnable) =>
+        val t = new Thread(r, "graft-inParallel"); t.setDaemon(true); t })
     try {
       val futs = actions.tail.map(a =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
@@ -61,8 +50,16 @@ package object ops {
       futs.foreach(f => try f.get() catch {
         case e: java.util.concurrent.ExecutionException => throw e.getCause
       })
-    } finally pool.shutdownNow()
+    } finally {
+      // a failed leg interrupts its siblings and waits for them: no
+      // pool thread outlives the call
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue,
+        java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
   }
+
+  private val checkpointDirLock = new Object
 
   /** Materialize an iteration frame with truncated lineage — the
     * graph/CC loop primitive. Default: `localCheckpoint(eager)` (zero
@@ -79,13 +76,29 @@ package object ops {
     val s = df.sparkSession
     s.conf.getOption("spark.graft.checkpointDir") match {
       case Some(dir) if dir.nonEmpty =>
-        if (s.sparkContext.getCheckpointDir.isEmpty)
-          s.sparkContext.setCheckpointDir(dir)
+        // check-and-set under one lock: two loops checkpointing at once
+        // must not each set (and so each create) a checkpoint subdir
+        checkpointDirLock.synchronized {
+          if (s.sparkContext.getCheckpointDir.isEmpty)
+            s.sparkContext.setCheckpointDir(dir)
+        }
         df.checkpoint(true)
       case _ => df.localCheckpoint(true)
     }
   }
 
+  /** Fan a SMALL input out to the session's cores before CPU-dense
+    * per-row work (md5 feature kernels, edit-distance verification):
+    * a one-row-group parquet file cannot split, so a small scan
+    * serializes minutes of per-row CPU on 1-2 tasks regardless of core
+    * count — the inverse of the AQE-coalescing problem, and nothing in
+    * Spark expands a scan's parallelism after planning. The added
+    * round-robin exchange is bounded by the SIZE GUARD (plan-stats
+    * estimate < 256 MB, i.e. trivially shuffleable), so at production
+    * scale — where the scan itself supplies parallelism — this is an
+    * identity, never an extra pass over big data. Only for call sites
+    * whose downstream is partitioning-independent (aggregates/joins);
+    * every use is oracle-checked. */
   def fanOutSmall(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes

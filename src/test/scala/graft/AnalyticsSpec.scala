@@ -336,6 +336,32 @@ class AnalyticsSpec extends SparkSpec {
         s"term '$term' missing from the pushed IN filter:\n" + plan)
   }
 
+  test("indexed hybrid: a failing lexical build leaves no live pool " +
+      "thread") {
+    import scala.jdk.CollectionConverters._
+    // no documents table: the lexical build fails while the IVF build
+    // runs beside it on the embeddings
+    val dir = java.nio.file.Files.createTempDirectory("graft-hybrid")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sfDir, "embeddings.parquet"),
+      dir.resolve("embeddings.parquet"))
+    def live = Thread.getAllStackTraces.keySet.asScala.toSet
+    val before = live
+    try {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        TextAnalysis.qHybridIndexed(spark, dir.toString))
+      assert(e.getMessage.contains("documents"), e.getMessage)
+      val leaked = (live -- before).filter(t =>
+        !t.isDaemon || t.getName == "graft-inParallel")
+      assert(leaked.isEmpty,
+        s"threads outlived the query: ${leaked.map(_.getName)}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(graft.ops.Egress.outRoot(dir.toString)))
+    }
+  }
+
   test("hybrid search: RRF fusion is rank-consistent and depth-bounded") {
     val rows = TextAnalysis.qHybridSearch(spark, sfDir).collect()
     assert(rows.nonEmpty && rows.length <= 20)

@@ -18,6 +18,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(Engine.buildConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     Engine.configure(s)
