@@ -6,6 +6,12 @@ import java.nio.file.{Files, Paths}
   * queries — the plan-shape evidence (pushdown, broadcast vs shuffle,
   * partial aggregation, codegen spans) reviewed each round.
   * Run: `sbt "runMain graft.DumpPlans"` (regenerates the committed file).
+  *
+  * With SPARK_GRAFT_ONLY set it writes per-query plan evidence for the
+  * optimization rounds instead: `plans/<round>/<key>_<tag>.txt` for
+  * each listed key.
+  * Run: SPARK_GRAFT_ONLY=k1,k2 SPARK_GRAFT_TAG=before \
+  *   SPARK_GRAFT_ROUND=r14 sbt "runMain graft.DumpPlans"
   */
 object DumpPlans {
 
@@ -64,7 +70,30 @@ object DumpPlans {
     "sql_named_window", "sql_values", "sql_asof_join",
     "tensor_ipc", "sparse_tensor_ipc", "ipc_dict_delta", "ipc_dict_dsv2")
 
+  private def formatted(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+
   def main(args: Array[String]): Unit = {
+    val keys = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
+      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    if (keys.nonEmpty) perKey(keys) else plansMd()
+  }
+
+  private def perKey(keys: Seq[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val tag = sys.env.getOrElse("SPARK_GRAFT_TAG", "before")
+    val round = sys.env.getOrElse("SPARK_GRAFT_ROUND", "r14")
+    val spark = Engine.session("8", "8")
+    Files.createDirectories(Paths.get(s"plans/$round"))
+    for (k <- keys) {
+      val txt = formatted(SparkEntry.queries(k)(spark, sfDir))
+      Files.writeString(Paths.get(s"plans/$round/${k}_$tag.txt"), txt)
+      println(s"[plandump] wrote plans/$round/${k}_$tag.txt")
+    }
+    spark.stop()
+  }
+
+  private def plansMd(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = Engine.session("4", "4")
     val sb = new StringBuilder
@@ -76,10 +105,8 @@ object DumpPlans {
     sb.append("on facts, `partial_`/final aggregate pairs, and codegen ")
     sb.append("stage ids (`[codegen id : n]`).\n")
     for (name <- headline) {
-      val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(formatted(SparkEntry.queries(name)(spark, sfDir)))
       sb.append("```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)

@@ -65,11 +65,14 @@ object Engine {
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.SmallDimBroadcastRule(),
-        graft.plans.WindowTopKRewriteRule())
-    spark.experimental.extraStrategies =
-      Seq(graft.plans.TopKPerGroupStrategy)
+    // prepend only the graft rules that are missing: rules a user
+    // installed survive, and a second call adds nothing
+    val exp = spark.experimental
+    exp.extraOptimizations = Seq(graft.plans.SmallDimBroadcastRule(),
+      graft.plans.WindowTopKRewriteRule())
+      .filterNot(exp.extraOptimizations.contains) ++ exp.extraOptimizations
+    exp.extraStrategies = Seq(graft.plans.TopKPerGroupStrategy)
+      .filterNot(exp.extraStrategies.contains) ++ exp.extraStrategies
     spark
   }
 

@@ -23,10 +23,8 @@ import FlightProto._
 /** TRUE gRPC Arrow Flight transport — the reference's FlightService
   * (`format/Flight.proto:38-160`) served over real gRPC/HTTP-2, so a
   * STOCK Flight client (e.g. pyarrow.flight) connects with no custom
-  * code on its side. This supersedes [[FlightLite]]'s bespoke socket
-  * framing as the interop surface; FlightLite remains the
-  * dependency-free fallback and the two share the engine's Arrow IPC
-  * codec as the data plane.
+  * code on its side. It is the engine's one Flight transport, and its
+  * data plane is the engine's own Arrow IPC stream codec.
   *
   * Transport: the gRPC runtime shaded inside the Spark distribution's
   * connect module (`org.sparkproject.connect.grpc`, a public Apache
@@ -37,9 +35,9 @@ import FlightProto._
   * encoded by [[FlightProto]] (hand-rolled wire codec; the
   * environment has no protoc and no arrow-flight jar).
   *
-  * Verbs — all 8 of the reference's proto, same semantics as
-  * [[FlightLite]] (view-name PATH tickets vs SQL CMD tickets,
-  * DoPut-into-temp-view, the 3-action command surface):
+  * Verbs — all 8 of the reference's proto (view-name PATH tickets vs
+  * SQL CMD tickets, DoPut-into-temp-view, the 3-action command
+  * surface):
   * Handshake, ListFlights, GetFlightInfo (+ one endpoint per
   * partition of the server-side plan, pinned to one plan generation),
   * GetSchema, DoGet, DoPut, DoAction, ListActions.
@@ -51,27 +49,24 @@ import FlightProto._
   * [[FlightGrpc.collectFlightData]] on the way in (tolerant of both
   * prefixed and bare headers, since stock senders differ by vintage).
   * Mid-stream query failures surface as real gRPC status errors
-  * (trailers), so — unlike the socket transport — no poison-frame
-  * convention is needed: every stock client fails loudly by
-  * construction.
+  * (trailers), so no poison-frame convention is needed: every stock
+  * client fails loudly by construction.
   *
-  * Auth parity with [[FlightLite]]: a server built with an
-  * `authSecret` issues a deterministic bearer token at Handshake
-  * (credential in the handshake payload, or a stock client's
-  * `authorization: Basic` header — both checked against the secret)
-  * and every other verb must present `authorization: Bearer <token>`
-  * call metadata; unauthenticated calls get UNAUTHENTICATED before
-  * any work runs.
+  * Auth: a server built with an `authSecret` issues a deterministic
+  * bearer token at Handshake (credential in the handshake payload, or
+  * a stock client's `authorization: Basic` header — both checked
+  * against the secret) and every other verb must present
+  * `authorization: Bearer <token>` call metadata; unauthenticated
+  * calls get UNAUTHENTICATED before any work runs.
   *
-  * Scale note: identical posture to [[FlightLite]] — a control/egress
-  * surface, not a distributed operator. Single-ticket DoGet pulls
-  * through `toLocalIterator` (one partition resident), endpoint
-  * tickets serve one partition each for parallel consumers through
-  * [[PartitionFeed]] (O(one batch) resident in-JVM — never an
-  * `Array[Row]` of the partition, so a skewed partition cannot OOM
-  * the server), DoGet responses respect gRPC flow control (the emit
-  * loop waits on `isReady`, so a slow client never buffers the result
-  * on the server), and bulk interchange remains the
+  * Scale note: a control/egress surface, not a distributed operator.
+  * Single-ticket DoGet pulls through `toLocalIterator` (one partition
+  * resident), endpoint tickets serve one partition each for parallel
+  * consumers through [[PartitionFeed]] (O(one batch) resident in-JVM —
+  * never an `Array[Row]` of the partition, so a skewed partition
+  * cannot OOM the server), DoGet responses respect gRPC flow control
+  * (the emit loop waits on `isReady`, so a slow client never buffers
+  * the result on the server), and bulk interchange remains the
   * partition-parallel file/DSv2 sources.
   */
 object FlightGrpc {
@@ -491,8 +486,8 @@ object FlightGrpc {
     private def stallMs: Long =
       drainStallOverrideMs.getOrElse(FlightGrpc.drainStallMs)
 
-    // GetFlightInfo-pinned plans, as in FlightLite: all endpoint DoGets
-    // of one info call read ONE plan generation (bounded at 64)
+    // GetFlightInfo-pinned plans: all endpoint DoGets of one info call
+    // read ONE plan generation (bounded at 64)
     private val pinned = new java.util.LinkedHashMap[String, DataFrame]()
 
     private def resolve(ticket: String): DataFrame = {
@@ -1039,12 +1034,12 @@ object FlightGrpc {
 
   // ---- oracle-checked query -----------------------------------------------
 
-  /** Full gRPC wire round-trip as a correctness row — the gRPC twin of
-    * [[FlightLite.qFlightRoundtrip]]: upload `nation` over DoPut,
-    * aggregate it back over DoGet with a SQL CMD ticket, every value
-    * crossing HTTP/2 twice, so the oracle hash over the ORIGINAL
-    * parquet proves the protobuf codec, the FlightData re-framing, and
-    * the gRPC transport in both directions. */
+  /** Full gRPC wire round-trip as a correctness row, served under both
+    * the `flight_roundtrip` and `flight_grpc` keys: upload `nation`
+    * over DoPut, aggregate it back over DoGet with a SQL CMD ticket,
+    * every value crossing HTTP/2 twice, so the oracle hash over the
+    * ORIGINAL parquet proves the protobuf codec, the FlightData
+    * re-framing, and the gRPC transport in both directions. */
   def qFlightGrpcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val server = new Server(s).start()
     try {

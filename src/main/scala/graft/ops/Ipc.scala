@@ -1099,8 +1099,7 @@ object Ipc {
 
   /** Incremental stream-format writer: drains `rows` in [[BatchRows]]
     * batches straight to `out` (socket, pipe, file), holding at most
-    * one batch in memory — the transport-side half of the codec that
-    * [[graft.ops.FlightLite]] serves DoGet responses with. */
+    * one batch in memory — the transport-side half of the codec. */
   def writeIpcStreamTo(rows: Iterator[Row], schema: StructType,
       out: java.io.OutputStream, compression: String = "none"): Unit = {
     import org.apache.arrow.vector.compression.CompressionUtil.CodecType
@@ -1114,14 +1113,13 @@ object Ipc {
         root, null, ch,
         org.apache.arrow.vector.ipc.message.IpcOption.DEFAULT, readCodecs, ct)
     }
-    // A failing row iterator (e.g. a query error feeding a Flight
-    // DoGet) must not leak the allocator's direct buffers — but it
-    // must also NOT close the writer: ArrowStreamWriter.close() calls
-    // end(), which emits the Arrow end-of-stream marker, and a cleanly
-    // terminated stream would make the client accept partial rows as
-    // success. On error we release only root + allocator, so the peer
-    // sees a TRUNCATED stream (protocol error) — the failure signal
-    // FlightLite's streamStarted catch depends on.
+    // A failing row iterator (e.g. a query error mid-stream) must not
+    // leak the allocator's direct buffers — but it must also NOT close
+    // the writer: ArrowStreamWriter.close() calls end(), which emits
+    // the Arrow end-of-stream marker, and any stream consumer would
+    // then accept the partial rows as a complete result. On error we
+    // release only root + allocator, so the consumer sees a TRUNCATED
+    // stream (a protocol error) — IpcSpec pins this.
     var ok = false
     try {
       writer.start()
@@ -1154,17 +1152,12 @@ object Ipc {
   }
 
   /** Stream-format read: schema from the stream head, batches to EOS. */
-  def readIpcStream(bytes: Array[Byte]): (Seq[Row], StructType) =
-    readIpcStreamFrom(new java.io.ByteArrayInputStream(bytes))
-
-  /** Stream-format read from any InputStream (socket, pipe): consumes
-    * batches until the Arrow end-of-stream marker. */
-  def readIpcStreamFrom(in: java.io.InputStream): (Seq[Row], StructType) = {
+  def readIpcStream(bytes: Array[Byte]): (Seq[Row], StructType) = {
     val allocator = new RootAllocator()
     // try/finally: a truncated or corrupt stream must not leak the
     // allocator's direct buffers
-    val rd = new org.apache.arrow.vector.ipc.ArrowStreamReader(in, allocator,
-      readCodecs)
+    val rd = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+      new java.io.ByteArrayInputStream(bytes), allocator, readCodecs)
     try {
       val root = rd.getVectorSchemaRoot
       val nCols = root.getSchema.getFields.size()

@@ -1232,18 +1232,31 @@ object TextAnalysis {
     // one collected copy: r14's profile showed the Spark-side loop as
     // 22 jobs / 0.64 s job-sum / ~1.5 s wall — pure scheduler
     // round-trips over a 300-row single-partition table. Semantics are
-    // replicated operation-for-operation (oracle-hash-identical):
-    //  - seq encoding: '~' + each char + '~', '_' sentinel;
-    //  - pair counts: adjacent symbol pairs weighted by word cnt
-    //    (exact Long sums — same as the old sum("cnt"));
-    //  - election: max by (count desc, pair lexicographically asc) —
-    //    ASCII-only symbols, so String ordering == UTF8 binary order;
-    //  - merge: two leftmost-nonoverlapping replace passes — Java
-    //    String.replace shares Spark's / DuckDB's replace semantics.
-    val vocab: Array[(String, Long)] = words.collect()
-      .map(r => ("~" + r.getString(0).flatMap(c => s"$c~") + "_~",
-        r.getLong(1)))
-    var seqs = vocab
+    // replicated operation-for-operation (oracle-hash-identical), see
+    // [[bpeMerges]].
+    import s.implicits._
+    bpeMerges(words.collect().toSeq.map(r => (r.getString(0), r.getLong(1))))
+      .toDF("step", "lhs", "rhs", "merged", "freq")
+      .orderBy("step")
+  }
+
+  /** The merge loop of [[qBpeTrain]] over a (word, count) vocabulary:
+    *  - seq encoding: '~' + each code point + '~', '_' sentinel;
+    *  - pair counts: adjacent symbol pairs weighted by word cnt
+    *    (exact Long sums);
+    *  - election: max by (count desc, pair in UTF-8 byte order asc) —
+    *    the order of Spark's and DuckDB's string sorts;
+    *  - merge: two leftmost-nonoverlapping replace passes — Java
+    *    String.replace shares Spark's / DuckDB's replace semantics.
+    * Returns (step, lhs, rhs, merged, freq) per learned merge. */
+  private[graft] def bpeMerges(words: Seq[(String, Long)])
+      : Seq[(Int, String, String, String, Long)] = {
+    def utf8(p: String) = p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    var seqs = words.map { case (w, cnt) =>
+      val seq = new java.lang.StringBuilder("~")
+      w.codePoints().forEach(cp => seq.appendCodePoint(cp).append('~'))
+      (seq.append("_~").toString, cnt)
+    }
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     for (step <- 1 to BpeIters) {
       val counts = scala.collection.mutable.HashMap.empty[String, Long]
@@ -1259,7 +1272,8 @@ object TextAnalysis {
       var bestPair: String = null
       var bestC = Long.MinValue
       counts.foreach { case (p, c) =>
-        if (c > bestC || (c == bestC && p.compareTo(bestPair) < 0)) {
+        if (c > bestC || (c == bestC &&
+            java.util.Arrays.compareUnsigned(utf8(p), utf8(bestPair)) < 0)) {
           bestPair = p; bestC = c
         }
       }
@@ -1272,9 +1286,7 @@ object TextAnalysis {
       seqs = seqs.map { case (seq, cnt) =>
         (seq.replace(pat, rep).replace(pat, rep), cnt) }
     }
-    import s.implicits._
-    merges.result().toDF("step", "lhs", "rhs", "merged", "freq")
-      .orderBy("step")
+    merges.result()
   }
 
 

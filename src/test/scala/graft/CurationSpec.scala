@@ -588,6 +588,20 @@ class CurationSpec extends SparkSpec {
       "no row shows any noise — the mechanism is not engaged")
   }
 
+  test("bpe merges split words by code point and break ties in UTF-8 " +
+      "byte order") {
+    // U+FF41 sorts before U+1D49C in UTF-8 (= code point) order but
+    // after it in UTF-16 order, and a UTF-16 split would cut U+1D49C
+    // into two lone surrogates; the ASCII word supplies the later steps
+    val wide = "\uFF41"
+    val astral = new String(Character.toChars(0x1D49C))
+    val merges = TextAnalysis.bpeMerges(
+      Seq(astral -> 5L, wide -> 5L, "abcdefghij" -> 1L))
+    assert(merges.take(3) == Seq((1, wide, "_", wide + "_", 5L),
+      (2, astral, "_", astral + "_", 5L), (3, "a", "b", "ab", 1L)))
+    assert(merges.size == 8)
+  }
+
   test("whitening is a per-dimension monotone (affine) map") {
     val rows = graft.ops.Similarity.qEmbedWhiten(spark, sfDir).collect()
       .map(r => r.getAs[Long]("vec_id") ->

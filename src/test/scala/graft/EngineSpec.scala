@@ -1,10 +1,45 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** Session-build conventions: the static confs reach the session, and
-  * Spark's generated-class cache holds the engine's working set. */
+/** Session-build conventions: the static confs reach the session,
+  * Spark's generated-class cache holds the engine's working set, and
+  * `Engine.configure` adds its planner rules without dropping a
+  * user's. */
 class EngineSpec extends SparkSpec {
+
+  private object UserRule extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan = plan
+  }
+  private object UserStrategy extends SparkStrategy {
+    def apply(plan: LogicalPlan): Seq[SparkPlan] = Nil
+  }
+
+  test("configure keeps user-installed rules and installs its own once") {
+    val exp = spark.experimental
+    val (savedOpt, savedStrat) = (exp.extraOptimizations, exp.extraStrategies)
+    try {
+      exp.extraOptimizations = Seq(UserRule)
+      exp.extraStrategies = Seq(UserStrategy)
+      Engine.configure(spark)
+      Engine.configure(spark)
+      val opt = exp.extraOptimizations
+      for (r <- Seq(UserRule, graft.plans.SmallDimBroadcastRule(),
+          graft.plans.WindowTopKRewriteRule()))
+        assert(opt.count(_ == r) == 1, s"$r in $opt")
+      assert(opt.size == 3, opt)
+      val strat = exp.extraStrategies
+      for (st <- Seq(UserStrategy, graft.plans.TopKPerGroupStrategy))
+        assert(strat.count(_ == st) == 1, s"$st in $strat")
+      assert(strat.size == 2, strat)
+    } finally {
+      exp.extraOptimizations = savedOpt
+      exp.extraStrategies = savedStrat
+    }
+  }
 
   test("the shared session is built with the engine's static confs") {
     for ((k, v) <- Engine.buildConfs)

@@ -113,12 +113,18 @@ class FlightGrpcSpec extends SparkSpec {
       val (got, _) = FlightGrpc.doGet("127.0.0.1", port,
         "SELECT COUNT(*) AS n, SUM(id) AS s FROM fg_sql")
       assert(got === Seq(Row(3L, 6L)))
-      assert(FlightGrpc.listActions("127.0.0.1", port).size === 3)
+      val actions = FlightGrpc.listActions("127.0.0.1", port)
+      assert(actions.size === 3)
+      assert(actions.exists(_.startsWith("drop_view:")))
+      assert(actions.exists(_.startsWith("row_count:")))
       assert(FlightGrpc.doAction("127.0.0.1", port,
         "row_count", "fg_sql") === "3")
       assert(FlightGrpc.doAction("127.0.0.1", port,
         "drop_view", "fg_sql") === "true")
       assert(!FlightGrpc.listFlights("127.0.0.1", port).contains("fg_sql"))
+      val unknown = intercept[Exception](
+        FlightGrpc.doAction("127.0.0.1", port, "nope", "x"))
+      assert(unknown.getMessage.contains("unknown action"))
     } finally server.close()
   }
 
@@ -138,6 +144,13 @@ class FlightGrpcSpec extends SparkSpec {
       val (single, _) = FlightGrpc.doGet("127.0.0.1", port, "fg_parts")
       assert(parallel.map(_.getLong(0)) === single.map(_.getLong(0)))
       assert(parallel.map(_.getLong(0)).sorted === (1L to 1000L))
+      // one endpoint alone returns a strict subset
+      val (p0, _) = FlightGrpc.doGet("127.0.0.1", port, endpoints.head)
+      assert(p0.nonEmpty && p0.size < 1000)
+      // SQL (CMD) tickets get endpoints too
+      val (_, sqlEndpoints) = FlightGrpc.getFlightInfo("127.0.0.1", port,
+        "SELECT v % 13 AS m, COUNT(*) AS c FROM fg_parts GROUP BY v % 13")
+      assert(sqlEndpoints.nonEmpty)
     } finally server.close()
   }
 
@@ -154,7 +167,6 @@ class FlightGrpcSpec extends SparkSpec {
       assert(endpoints.size == 2)
       // a concurrent writer replaces the view BETWEEN GetFlightInfo
       // and the endpoint pulls — the classic parallel-consumer race
-      // (FlightLiteSpec pins the same contract on the socket transport)
       Seq(100L, 200L).toDF("v").createOrReplaceTempView("fg_pin")
       val got = endpoints.flatMap(e =>
         FlightGrpc.doGet("127.0.0.1", port, e)._1).map(_.getLong(0)).sorted
@@ -188,6 +200,10 @@ class FlightGrpcSpec extends SparkSpec {
       assert(hw > 0, "feed accounting never engaged")
       assert(hw <= 2 * graft.ops.Ipc.BatchRows,
         s"serving path held $hw rows resident (> 2 batches)")
+      // the single-ticket DoGet of the same view arrives whole too
+      val (whole, _) = FlightGrpc.doGet("127.0.0.1", port, "fg_big")
+      assert(whole.size === n)
+      assert(whole.map(_.getLong(0)).sum === n.toLong * (n - 1) / 2)
     } finally server.close()
   }
 
@@ -317,12 +333,38 @@ class FlightGrpcSpec extends SparkSpec {
       val e3 = intercept[Exception](FlightGrpc.doPut("127.0.0.1", port,
         "fg_auth", rows, schema, token = "bogus"))
       assert(e3.getMessage.toLowerCase.contains("unauthenticated"))
+      // a forged token is refused on every verb, not only DoPut
+      val forged = "0" * 32
+      val e4 = intercept[Exception](
+        FlightGrpc.doGet("127.0.0.1", port, "SELECT 1", token = forged))
+      assert(e4.getMessage.toLowerCase.contains("unauthenticated"))
+      val e5 = intercept[Exception](FlightGrpc.doAction("127.0.0.1", port,
+        "clear_cache", token = forged))
+      assert(e5.getMessage.toLowerCase.contains("unauthenticated"))
       // with the token everything works
       assert(FlightGrpc.doPut("127.0.0.1", port, "fg_auth", rows, schema,
         token = token) === 3)
       assert(FlightGrpc.listFlights("127.0.0.1", port, token = token)
         .contains("fg_auth"))
+      assert(FlightGrpc.doAction("127.0.0.1", port, "row_count", "fg_auth",
+        token = token) === "3")
+      // the composite client carries the token through GetFlightInfo
+      // and every endpoint DoGet
+      val noTok = intercept[Exception](
+        FlightGrpc.doGetParallel("127.0.0.1", port, "fg_auth"))
+      assert(noTok.getMessage.toLowerCase.contains("unauthenticated"))
+      assert(FlightGrpc.doGetParallel("127.0.0.1", port, "fg_auth",
+        token = token)._1.map(_.getLong(0)).sorted === Seq(1L, 2L, 3L))
     } finally server.close()
+    // an open server accepts any credential with a stable token per
+    // credential
+    val open = new FlightGrpc.Server(spark).start()
+    try {
+      val t1 = FlightGrpc.handshake("127.0.0.1", open.boundPort, "anything")
+      assert(t1.matches("[0-9a-f]{32}"), s"unexpected token shape: $t1")
+      assert(FlightGrpc.handshake("127.0.0.1", open.boundPort, "anything") == t1)
+      assert(FlightGrpc.handshake("127.0.0.1", open.boundPort, "other") != t1)
+    } finally open.close()
   }
 
   test("mid-stream query failure surfaces as a gRPC status error, " +
@@ -345,6 +387,12 @@ class FlightGrpcSpec extends SparkSpec {
       val e2 = intercept[Exception](
         FlightGrpc.doGet("127.0.0.1", port, "SELECT * FROM nope_xyz"))
       assert(e2.getMessage.nonEmpty)
+      // and a syntax error; the server keeps serving afterwards
+      val e3 = intercept[Exception](
+        FlightGrpc.doGet("127.0.0.1", port, "SELECT FROM nope("))
+      assert(e3.getMessage.nonEmpty)
+      FlightGrpc.doPut("127.0.0.1", port, "fg_after", rows, schema)
+      assert(FlightGrpc.doGet("127.0.0.1", port, "fg_after")._1.size === 3)
     } finally server.close()
   }
 
@@ -448,5 +496,10 @@ class FlightGrpcSpec extends SparkSpec {
     assert(got.nonEmpty)
     assert(df.schema.fieldNames.toSeq ===
       Seq("n_regionkey", "n", "first_name", "max_key"))
+    // both registry keys serve the same rows under the same oracle SQL
+    assert(SparkEntry.queries("flight_roundtrip")(spark, sfDir)
+      .collect().toSeq === got.toSeq)
+    assert(SparkEntry.oracleSql("flight_roundtrip") ===
+      SparkEntry.oracleSql("flight_grpc"))
   }
 }
