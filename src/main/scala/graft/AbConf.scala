@@ -13,23 +13,16 @@ object AbConf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val keys = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty)
+    val keys = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")).getOrElse(Nil)
     val confKey = sys.env("SPARK_GRAFT_AB_KEY")
     val a = sys.env("SPARK_GRAFT_AB_A")
     val b = sys.env("SPARK_GRAFT_AB_B")
     val n = sys.env.getOrElse("SPARK_GRAFT_AB_N", "3").toInt
     val spark = Engine.session(cpus, cpus)
-    def clean(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-    }
     def once(k: String): Double = {
-      clean()
+      Bench.dropDeadBlocks(spark)
       val t0 = System.nanoTime()
-      SparkEntry.queries(k)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      Bench.materialize(SparkEntry.queries(k)(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)

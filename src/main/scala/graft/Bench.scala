@@ -1,16 +1,39 @@
 package graft
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
 
   /** Full materialization: noop-format write executes every operator
     * and expression in the plan (a bare .count() lets Catalyst delete
     * ORDER BYs and prune most projections, under-measuring). */
-  private def materialize(df: DataFrame): Unit =
+  def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** Hermetic timing: several queries localCheckpoint/persist
+    * intermediates (IVF assignment, SemDeDup cells, CC iterations)
+    * and nothing unpersists them after the query returns — 200
+    * queries into the suite the block manager is full of dead blocks,
+    * and storage-memory pressure was observed to inflate the
+    * late-alphabet knn family ~16x vs isolated runs. Each query's
+    * persisted state is invocation-local (Tables caches PLANS, not
+    * blocks), so dropping all persistent RDDs + cached tables between
+    * queries cannot change any answer — it only makes each timing
+    * independent of suite position, which is also the semantics a
+    * fresh-session production run would see.
+    * blocking=true: block-manager eviction must finish BEFORE the next
+    * query's timer starts, or cleanup I/O bleeds into its timed region. */
+  def dropDeadBlocks(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // local-iteration escape hatch: SPARK_GRAFT_ONLY=q1,q2 restricts the
+    // timed set (never set by the driver; the committed artifacts always
+    // come from full runs)
+    val only = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")).map(_.toSet)
     val spark = Engine.session(cpus, cpus)
     // collect Dataset.observe metrics (e.g. dedup_ngram's candidate
     // count) as a side effect of the timed runs — written to
@@ -65,33 +88,10 @@ object Bench {
     // Name-sorted execution order: Map iteration order is arbitrary
     // and JVM warm state depends on position, so a stable order keeps
     // per-query numbers comparable across rounds.
-    // local-iteration escape hatch: SPARK_GRAFT_ONLY=q1,q2 restricts the
-    // timed set (never set by the driver; the committed artifacts always
-    // come from full runs)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Hermetic timing: several queries localCheckpoint/persist
-    // intermediates (IVF assignment, SemDeDup cells, CC iterations)
-    // and nothing unpersists them after the query returns — 200
-    // queries into the suite the block manager is full of dead blocks,
-    // and storage-memory pressure was observed to inflate the
-    // late-alphabet knn family ~16x vs isolated runs. Each query's
-    // persisted state is invocation-local (Tables caches PLANS, not
-    // blocks), so dropping all persistent RDDs + cached tables between
-    // queries cannot change any answer — it only makes each timing
-    // independent of suite position, which is also the semantics a
-    // fresh-session production run would see.
-    // blocking=true: block-manager eviction must finish BEFORE the next
-    // query's timer starts, or cleanup I/O bleeds into its timed region
-    def dropDeadBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-    }
-    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => DataFrame): Double = {
-      dropDeadBlocks()
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+      dropDeadBlocks(spark)
       val t0 = System.nanoTime()
       try { materialize(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>

@@ -74,9 +74,10 @@ object DumpPlans {
     df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
 
   def main(args: Array[String]): Unit = {
-    val keys = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    if (keys.nonEmpty) perKey(keys) else plansMd()
+    SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")) match {
+      case Some(keys) => perKey(keys)
+      case None => plansMd()
+    }
   }
 
   private def perKey(keys: Seq[String]): Unit = {

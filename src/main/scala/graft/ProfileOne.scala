@@ -22,8 +22,7 @@ object ProfileOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val keys = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty)
+    val keys = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")).getOrElse(Nil)
     val spark = Engine.session(cpus, cpus)
 
     val jobs = mutable.ArrayBuffer[JobRow]()
@@ -76,7 +75,7 @@ object ProfileOne {
     for (k <- keys) {
       val fn = SparkEntry.queries(k)
       // untimed warm-up (plan-specific codegen + JIT)
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Bench.materialize(fn(spark, sfDir))
       catch { case e: Throwable =>
         System.err.println(s"[profile] $k warmup FAILED: ${e.getMessage}") }
       lock.synchronized {
@@ -84,7 +83,7 @@ object ProfileOne {
       }
       enabled = true
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Bench.materialize(fn(spark, sfDir))
       catch { case e: Throwable =>
         System.err.println(s"[profile] $k FAILED: ${e.getMessage}") }
       val wall = (System.nanoTime() - t0) / 1e9
@@ -111,9 +110,7 @@ object ProfileOne {
         println("  gaps>50ms: " + gaps.map { case (a, b, g) =>
           s"job$a->job$b ${g}ms" }.mkString(", "))
       // drop leaked persisted state between keys, as the bench does
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
+      Bench.dropDeadBlocks(spark)
     }
     spark.stop()
   }

@@ -48,9 +48,6 @@ import org.apache.spark.sql.functions._
   */
 object ScaleBench {
 
-  private def materialize(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   /** Per-replica text bijection: four independent 6-letter-class
     * rotations over the corpus's 24-letter alphabet (6⁴ = 1296
     * distinct composed permutations), so every replica up to ×1296
@@ -146,11 +143,10 @@ object ScaleBench {
     // n-gram dedup (the heaviest candidate generator — the one whose
     // exponent would expose a quadratic), IVF ANN, two-leg hybrid
     // retrieval, row-local text scoring, iterative graph
-    val qs = sys.env.getOrElse("SPARK_GRAFT_SCALE_QUERIES",
-      "q1_agg,tpch_q3,join_inner,window_rank,topk_group,dedup_exact," +
-        "dedup_minhash,dedup_ngram,knn_ivf,hybrid_search,text_quality," +
-        "pagerank")
-      .split(",").map(_.trim).filter(SparkEntry.queries.contains)
+    val qs = SparkEntry.select(sys.env.get("SPARK_GRAFT_SCALE_QUERIES"))
+      .getOrElse(Seq("q1_agg", "tpch_q3", "join_inner", "window_rank",
+        "topk_group", "dedup_exact", "dedup_minhash", "dedup_ngram",
+        "knn_ivf", "hybrid_search", "text_quality", "pagerank"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Engine.session(cpus, cpus)
 
@@ -159,9 +155,7 @@ object ScaleBench {
     // same hermetic-timing discipline as Bench: dead cached blocks from
     // one query must not bill storage pressure to the next
     def dropDeadBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
+      Bench.dropDeadBlocks(spark)
       // shuffle-FILE reclamation is ContextCleaner-driven and the
       // cleaner only fires on GC; at ×1000 the suite accumulates tens
       // of GB of dead shuffle files between queries without this nudge
@@ -172,7 +166,7 @@ object ScaleBench {
     }
     // untimed warm-up at the smallest multiplier
     for (q <- qs) {
-      try materialize(SparkEntry.queries(q)(spark, s"$root/x${mults.head}"))
+      try Bench.materialize(SparkEntry.queries(q)(spark, s"$root/x${mults.head}"))
       catch { case _: Throwable => () }
       dropDeadBlocks()
     }
@@ -184,7 +178,7 @@ object ScaleBench {
       for (q <- qs) {
         dropDeadBlocks()
         val t0 = System.nanoTime()
-        val ok = try { materialize(SparkEntry.queries(q)(spark, dir)); true }
+        val ok = try { Bench.materialize(SparkEntry.queries(q)(spark, dir)); true }
         catch { case e: Throwable =>
           System.err.println(s"FAIL $q x$m: $e"); false }
         times((m, q)) = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0

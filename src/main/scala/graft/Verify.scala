@@ -7,12 +7,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.session(cpus, cpus)
-    new java.io.File(outDir).mkdirs()
     // local-iteration escape hatch mirroring Bench: SPARK_GRAFT_ONLY=a,b
     // restricts the dumped set (never set by the driver)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")).map(_.toSet)
+    val spark = Engine.session(cpus, cpus)
+    new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>

@@ -307,10 +307,14 @@ object FlightGrpc {
     *    enqueues one batch at a time.
     *
     * Serving-side residency is therefore O(one batch) of rows in-JVM
-    * and O(compressed partition bytes) cross-JVM. `residentRows`
-    * accounts rows held by the queue plus the batch the writer is
-    * draining; `lastHighWater` publishes the per-stream maximum for
-    * the spec's heap-ceiling assert. */
+    * and O(compressed partition bytes) cross-JVM. `highWater` is the
+    * most rows seen resident at once: the batch waiting in the queue
+    * plus the rows the DoGet writer holds (`drainingRows`, which only
+    * the writer's thread changes). Both sides sample it — the producer
+    * after each `offer`, the consumer on receiving each batch — so
+    * every served batch is counted whichever side gets to it first.
+    * `lastHighWater` publishes the per-stream maximum for the spec's
+    * heap-ceiling assert. */
   private[graft] object PartitionFeed {
     sealed trait Msg
     final case class RowBatch(rows: Array[Row]) extends Msg
@@ -320,8 +324,16 @@ object FlightGrpc {
     final class Feed {
       val queue = new java.util.concurrent.ArrayBlockingQueue[Msg](1)
       @volatile var closed = false
-      val residentRows = new java.util.concurrent.atomic.AtomicInteger(0)
+      @volatile var drainingRows = 0
       val highWater = new java.util.concurrent.atomic.AtomicInteger(0)
+      def sampleResident(): Unit = {
+        val queued = queue.peek() match {
+          case RowBatch(rows) => rows.length
+          case _ => 0
+        }
+        highWater.getAndAccumulate(drainingRows + queued,
+          (a: Int, b: Int) => math.max(a, b))
+      }
       /** Blocking put that aborts (instead of hanging the task or the
         * feeder forever) once the consumer has torn the feed down —
         * e.g. the gRPC client cancelled mid-stream. */
@@ -332,12 +344,7 @@ object FlightGrpc {
             "DoGet consumer closed the partition feed")
           in = queue.offer(m, 50, TimeUnit.MILLISECONDS)
         }
-        m match {
-          case RowBatch(rows) =>
-            val r = residentRows.addAndGet(rows.length)
-            highWater.getAndAccumulate(r, (a: Int, b: Int) => math.max(a, b))
-          case _ => ()
-        }
+        sampleResident()
       }
     }
 
@@ -447,11 +454,13 @@ object FlightGrpc {
             // feeder enqueues another batch as soon as this poll empties
             // the queue, and the drained one must not be held (or
             // counted) beside those two
-            feed.residentRows.addAndGet(-curSize)
+            feed.drainingRows -= curSize
             cur = Iterator.empty; curSize = 0
             nextMsg() match {
               case PartitionFeed.RowBatch(rows) =>
                 cur = rows.iterator; curSize = rows.length
+                feed.drainingRows += curSize
+                feed.sampleResident()
               case PartitionFeed.End => done = true
               case PartitionFeed.Err(e) => throw e
             }

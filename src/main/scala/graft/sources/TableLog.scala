@@ -873,22 +873,18 @@ object TableLog {
     * sidecar write and its data rewrite share no outputs, so the
     * commit's wall is max(two jobs) instead of their sum — the next
     * job's tasks back-fill executors the first job's tail leaves
-    * idle. Exceptions from either side propagate (the secondary's
-    * cause unwrapped); the orphaned-dir contract is unchanged — a
-    * failure before publish leaves at most the same unreferenced
-    * subdirs the sequential order could. */
+    * idle. Runs on [[graft.ops.inParallel]]: `a` on the caller thread
+    * (`activeCache` is thread-local), `b` on the pool thread, and both
+    * legs are awaited even when one throws.
+    * Exceptions from either side propagate with their original cause;
+    * the orphaned-dir contract is unchanged — a failure before publish
+    * leaves at most the same unreferenced subdirs the sequential order
+    * could. */
   private def par2[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    try {
-      val fb = pool.submit(new java.util.concurrent.Callable[B] {
-        override def call(): B = b
-      })
-      val ra = a
-      val rb = try fb.get() catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-      (ra, rb)
-    } finally pool.shutdownNow()
+    var ra: Option[A] = None
+    var rb: Option[B] = None
+    graft.ops.inParallel(() => ra = Some(a), () => rb = Some(b))
+    (ra.get, rb.get)
   }
 
   /** Write `df` into a fresh per-commit subdir; returns (subdir,

@@ -10,14 +10,33 @@ import org.apache.spark.sql.types._
 class RelationalSpec extends SparkSpec {
 
   test("every declared query runs and every query has an oracle") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet),
-      "oracle entries without a query")
+    // a duplicate key in the table would silently shadow its twin in
+    // the derived maps, so distinctness is checked on the table itself
+    val keys = SparkEntry.registry.map(_.key)
+    assert(keys.distinct == keys, s"duplicate keys: ${keys.diff(keys.distinct)}")
+    assert(keys.size == 316)
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    SparkEntry.oracleSql.foreach { case (name, sql) =>
+      assert(sql.trim.nonEmpty, s"$name has a blank oracle")
+    }
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sfDir)
       assert(df.columns.nonEmpty, s"$name has no columns")
       val n = df.count()
       assert(n >= 0, s"$name failed")
     }
+  }
+
+  test("select trims names, drops blanks and rejects unknown keys") {
+    assert(SparkEntry.select(None) === None)
+    assert(SparkEntry.select(Some("")) === None)
+    assert(SparkEntry.select(Some(" q1_agg , topk ,,")) === Some(Seq("q1_agg", "topk")))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Some("q1_agg,no_such_key")))
+    assert(e.getMessage.contains("no_such_key"))
+    val both = intercept[IllegalArgumentException](
+      SparkEntry.select(Some("nope_a, topk, nope_b")))
+    assert(both.getMessage.contains("nope_a") && both.getMessage.contains("nope_b"))
   }
 
   test("entry returns rows") {
