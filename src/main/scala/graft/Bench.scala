@@ -27,6 +27,23 @@ object Bench {
     spark.catalog.clearCache()
   }
 
+  /** The per-query times of a committed BENCH_DETAIL.json, usable as
+    * this run's regression baseline only when that run had the same
+    * core count (its `cpus`): against a baseline from another core
+    * count every ratio measures the machine, not the code. Left = why
+    * there is no baseline. */
+  def baseline(detail: String, cpus: String): Either[String, Map[String, Double]] =
+    "\"cpus\":\"([^\"]*)\"".r.findFirstMatchIn(detail).map(_.group(1)) match {
+      case Some(`cpus`) =>
+        val qsec = "\"queries\":\\{([^}]*)\\}".r
+          .findFirstMatchIn(detail).map(_.group(1)).getOrElse("")
+        Right("\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(qsec)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap)
+      case other =>
+        Left(s"the committed BENCH_DETAIL.json was taken at cpus=" +
+          s"${other.getOrElse("(not recorded)")}, this run has cpus=$cpus")
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -105,7 +122,8 @@ object Bench {
     // SPARK_GRAFT_BASELINE=none: run without a regression baseline.
     // Used for off-scale runs (e.g. the sf1 evidence pass) where every
     // query is legitimately slower than the committed sf0.1 detail and
-    // outlier-retries would double the wall time for nothing.
+    // outlier-retries would double the wall time for nothing. A detail
+    // taken at another core count is no baseline either (see `baseline`).
     val prior: Map[String, Double] = if (
       sys.env.get("SPARK_GRAFT_BASELINE").contains("none")) Map.empty
     else try {
@@ -119,10 +137,13 @@ object Bench {
         case _: Throwable => new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get("BENCH_DETAIL.json")), "UTF-8")
       }
-      val qsec = "\"queries\":\\{([^}]*)\\}".r
-        .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-      "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(qsec)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      baseline(txt, cpus) match {
+        case Right(times) => times
+        case Left(why) =>
+          System.err.println(s"bench: running without a baseline, as with " +
+            s"SPARK_GRAFT_BASELINE=none: $why")
+          Map.empty
+      }
     } catch { case _: Throwable => Map.empty }
     def isOutlier(n: String, v: Double): Boolean =
       prior.get(n).exists(p => p >= 0 && v >= 0 && v > p * 1.5 && v - p > 0.3)
@@ -202,7 +223,7 @@ object Bench {
     val warmJson = warmups.filter(n => results.exists(_._1 == n)).sorted
       .map(n => "\"" + n + "\"").mkString("[", ",", "]")
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","sf":"$sfName","failures":$failures,"median_ratio":${f(medRatio)},"median_ratio_first_pass":${f(medRatioFirst)},"polluted":$polluted,"retried":$retriedJson,"warm_keys":$warmJson,"regressions":$regJson,"observed":$obsJson,"queries":${dict(results)}}\n"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","sf":"$sfName","cpus":"$cpus","failures":$failures,"median_ratio":${f(medRatio)},"median_ratio_first_pass":${f(medRatioFirst)},"polluted":$polluted,"retried":$retriedJson,"warm_keys":$warmJson,"regressions":$regJson,"observed":$obsJson,"queries":${dict(results)}}\n"""
         .getBytes("UTF-8"))
     val slowest = results.sortBy { case (_, v) => if (v < 0) Double.MinValue else -v }
       .take(30)

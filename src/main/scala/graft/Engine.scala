@@ -25,10 +25,13 @@ object Engine {
 
   /** Static confs every session of the engine is built with. They must
     * be on the builder: Spark reads them once (the codegen cache is
-    * created by the JVM's first compile), so `configure` on a live
-    * session cannot change them. */
+    * created by the JVM's first compile, extensions when the session
+    * is built), so `configure` on a live session cannot change them. */
   val buildConfs: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheMaxEntries.toString,
+    // filter literals read from the plan, not inlined, so a read that
+    // differs from the last one only in a literal reuses its class
+    "spark.sql.extensions" -> classOf[graft.plans.ParamLiteralExtension].getName,
     // reliable `iterCheckpoint` files are deleted once their RDD is
     // garbage-collected, so checkpoint dirs do not grow without bound
     "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")

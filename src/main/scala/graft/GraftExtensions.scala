@@ -27,6 +27,16 @@ import graft.functions.{CdcChunks, CosineSimilarity, Md5BucketFeats, Md5Shingles
   *    (the generated-class cache holds the engine's working set) and
   *    `spark.cleaner.referenceTracking.cleanCheckpoints=true`
   *    (reliable `iterCheckpoint` files are deleted with their RDDs).
+  *    Its `spark.sql.extensions` entry is covered by this class.
+  *
+  * One physical rule is installed at session build, not by `configure`:
+  * `spark.experimental` has no hook for physical-plan rules, so
+  * `Engine.buildConfs` names `graft.plans.ParamLiteralExtension` in
+  * `spark.sql.extensions`, and this class injects the same rule
+  * (`ParamLiteralRule`, run before the columnar transitions: filter
+  * literals become parameters of the generated code, so a read that
+  * differs only in a literal reuses the compiled class). Naming both
+  * classes injects it twice, which is harmless: the rule is idempotent.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -36,6 +46,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.SmallDimBroadcastRule())
     ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewriteRule())
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+    new graft.plans.ParamLiteralExtension()(ext)
   }
 }
 

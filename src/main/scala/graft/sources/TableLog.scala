@@ -541,9 +541,16 @@ object TableLog {
     s.conf.getOption("spark.graft.tablelog.dv.broadcastMaxBytes")
       .map(_.toLong).getOrElse(32L * 1024 * 1024)
 
+  /** Schema of a deletion-vector sidecar, as [[deleteVector]] writes
+    * it: file key and row index of each deleted row. */
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "file STRING, pos BIGINT")
+
   /** The union of `dvs` as a keyed (_g_dv_file, _g_dv_pos) frame,
     * broadcast-hinted while the sidecars' total on-disk size (driver
-    * metadata, no job) fits `spark.graft.tablelog.dv.broadcastMaxBytes`. */
+    * metadata, no job) fits `spark.graft.tablelog.dv.broadcastMaxBytes`.
+    * Read under the sidecars' fixed schema: inferring it would run a
+    * Spark job on every snapshot and mutation while a DV is active. */
   private def dvJoinFrame(s: SparkSession, root: String,
       dvs: Seq[String]): DataFrame = {
     val f = fs(s, root)
@@ -551,7 +558,7 @@ object TableLog {
       val p = new Path(abs(root, d))
       if (f.exists(p)) f.getContentSummary(p).getLength else 0L
     }.sum
-    val dvRaw = s.read.parquet(dvs.map(abs(root, _)): _*)
+    val dvRaw = s.read.schema(DvSchema).parquet(dvs.map(abs(root, _)): _*)
       .select(fileKey(col("file")).as("_g_dv_file"),
         col("pos").as("_g_dv_pos"))
     if (bytes <= dvBroadcastMaxBytes(s)) broadcast(dvRaw) else dvRaw
@@ -1274,8 +1281,61 @@ object TableLog {
   }
 
   /** The table as of `version` (-1 = latest). File list is resolved
-    * NOW — the returned frame is a stable snapshot. */
+    * NOW — the returned frame is a stable snapshot.
+    *
+    * The concrete version is resolved first (a log listing and one
+    * entry read); the frame built for it is memoized, so repeated
+    * reads of one version skip the log replay, the file listing and
+    * the analysis. The memo key holds everything the frame depends
+    * on besides immutable committed entries: the session (identity),
+    * the root, the resolved version, that version's entry text and
+    * modification time (a table re-created at the same root writes new
+    * entries: data commits name fresh uuids, and a metadata-only commit
+    * can repeat an old text but not its time), the checkpoint the replay
+    * starts from (deleting it forces a fresh JSON replay), and the DV
+    * broadcast threshold. A memoized frame keeps the file listing
+    * taken when it was built: after a [[vacuum]] that reclaims its
+    * files, reading it fails at scan (FileNotFound), as a fresh
+    * snapshot below the retention floor does. */
   def snapshot(s: SparkSession, root: String, version: Int = -1): DataFrame = {
+    val vs = versions(s, root)
+    val upto = if (version < 0) vs else vs.filter(_ <= version)
+    if (upto.isEmpty) return buildSnapshot(s, root, version) // replay's error
+    val v = upto.last
+    val f = fs(s, root)
+    val key = SnapshotKey(s, root, v, readText(f, logPath(root, v)),
+      f.getFileStatus(logPath(root, v)).getModificationTime,
+      checkpointVersions(s, root).filter(_ <= v).lastOption,
+      dvBroadcastMaxBytes(s))
+    Option(snapshots.synchronized(snapshots.get(key))).getOrElse {
+      val df = buildSnapshot(s, root, v)
+      snapshots.synchronized(snapshots.put(key, df))
+      df
+    }
+  }
+
+  /** Bound of the snapshot memo (LRU): more versions than a
+    * long-running reader pins at once; each entry holds one analyzed
+    * plan and its file listing. */
+  private val SnapshotMemoMaxEntries = 64
+
+  private case class SnapshotKey(session: SparkSession, root: String,
+      version: Int, entry: String, entryMtime: Long, replayBase: Option[Int],
+      dvBroadcastMaxBytes: Long)
+
+  private val snapshots =
+    new java.util.LinkedHashMap[SnapshotKey, DataFrame](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SnapshotKey, DataFrame]): Boolean =
+        size > SnapshotMemoMaxEntries
+    }
+
+  /** Drop a session's memoized snapshots (`Tables.invalidate`). */
+  private[sources] def invalidateSnapshots(s: SparkSession): Unit =
+    snapshots.synchronized(snapshots.keySet.removeIf(_.session eq s))
+
+  private def buildSnapshot(s: SparkSession, root: String,
+      version: Int): DataFrame = {
     val files = liveFiles(s, root, version).map(rel => abs(root, rel))
     val decl = tableSchema(s, root, version)
     val raw = applyDv(s, root, readUnion(s, files, decl),

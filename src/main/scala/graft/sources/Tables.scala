@@ -43,9 +43,12 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
 
-  /** Drop all cached plans for a session (call when stopping it). */
-  def invalidate(spark: SparkSession): Unit =
+  /** Drop all cached plans for a session (call when stopping it),
+    * its memoized TableLog snapshots included. */
+  def invalidate(spark: SparkSession): Unit = {
     cache.remove(spark)
+    TableLog.invalidateSnapshots(spark)
+  }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val perSession = cache.computeIfAbsent(spark, _ =>

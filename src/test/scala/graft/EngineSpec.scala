@@ -3,13 +3,18 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+import graft.plans.ParamLiteral
+import graft.sources.TableLog
 
 /** Session-build conventions: the static confs reach the session,
-  * Spark's generated-class cache holds the engine's working set, and
+  * Spark's generated-class cache holds the engine's working set,
+  * filter literals are parameters of the generated code, and
   * `Engine.configure` adds its planner rules without dropping a
   * user's. */
-class EngineSpec extends SparkSpec {
+class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private object UserRule extends Rule[LogicalPlan] {
     def apply(plan: LogicalPlan): LogicalPlan = plan
@@ -62,5 +67,84 @@ class EngineSpec extends SparkSpec {
     }
     compiles()
     assert(compiles() == 0)
+  }
+
+  /** A TableLog table of ids 0 until 3000 in three files, pinned at its
+    * latest version and registered as `view`. */
+  private def pinnedTable(view: String): Unit = {
+    val sp = spark; import sp.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_param").toString + "/t"
+    TableLog.append(spark, root, (0 until 3000).map(i => (i.toLong, i % 7))
+      .toDF("id", "g").repartition(3))
+    TableLog.snapshot(spark, root).createOrReplaceTempView(view)
+  }
+
+  private def filters(df: org.apache.spark.sql.DataFrame): Seq[FilterExec] =
+    collect(df.queryExecution.executedPlan) { case f: FilterExec => f }
+
+  private def params(f: FilterExec): Seq[Any] =
+    f.condition.collect { case p: ParamLiteral => p.lit.value }
+
+  test("pinned point reads differing only in a literal compile once " +
+      "and return their own rows") {
+    pinnedTable("param_point")
+    def read(id: Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val rows = spark.sql(
+        s"SELECT id, g FROM param_point WHERE id = $id").collect()
+      (rows.map(r => (r.getLong(0), r.getInt(1))).toSeq,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    val (first, _) = read(2711L)
+    assert(first == Seq((2711L, 2711 % 7)))
+    val (second, compiled) = read(2712L)
+    assert(second == Seq((2712L, 2712 % 7)))
+    assert(compiled == 0, s"second read compiled $compiled classes")
+  }
+
+  test("the filter reads its literal as a parameter; the scan's pushed " +
+      "filters keep the literal") {
+    pinnedTable("param_pushed")
+    val df = spark.sql("SELECT * FROM param_pushed WHERE id = 1234")
+    assert(df.count() == 1)
+    assert(filters(df).flatMap(params) == Seq(1234L), filters(df))
+    val scans = collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s }
+    assert(scans.size == 1)
+    val pushed = scans.head.metadata("PushedFilters")
+    assert(pushed.contains("EqualTo(id,1234)"), pushed)
+  }
+
+  test("filters differing only in a literal are not the same result; a " +
+      "union of two differently filtered inputs returns both row sets") {
+    pinnedTable("param_reuse")
+    // without AQE, exchange reuse compares the prepared plans, the ones
+    // that carry the parameters
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try {
+      // 3000 ids over g = id % 7: g < 4 has 429 rows each, the others 428
+      def groups(n: Long) =
+        s"SELECT g FROM param_reuse GROUP BY g HAVING count(*) > $n"
+      def having(n: Long): FilterExec = {
+        val fs = filters(spark.sql(groups(n)))
+        assert(fs.size == 1 && params(fs.head) == Seq(n), fs)
+        fs.head
+      }
+      // the two HAVING filters sit on identical aggregates: only the
+      // parameter's value tells them apart
+      assert(!having(428).sameResult(having(0)))
+      assert(having(428).sameResult(having(428)))
+      // an exchange above each filter: reuse keyed on a value-blind
+      // canonical form would answer both sides from one
+      val union = spark.sql(s"""
+        SELECT 'a' AS side, count(*) FROM (${groups(428)})
+        UNION ALL
+        SELECT 'b' AS side, count(*) FROM (${groups(0)})""")
+      val rows = union.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(rows == Map("a" -> 4L, "b" -> 7L), rows)
+      assert(filters(union).flatMap(params).toSet == Set(428L, 0L))
+    } finally spark.conf.set(aqe, saved)
   }
 }

@@ -39,6 +39,18 @@ class RelationalSpec extends SparkSpec {
     assert(both.getMessage.contains("nope_a") && both.getMessage.contains("nope_b"))
   }
 
+  test("Bench takes a committed baseline only at its own core count") {
+    val detail = (cpus: String) =>
+      s"""{"metric":"total","sf":"sf0.1"$cpus,"failures":0,""" +
+        """"observed":{"o":{"n":3}},"queries":{"q1_agg":0.5,"topk":-1.0}}"""
+    assert(Bench.baseline(detail(""","cpus":"8""""), "8") ==
+      Right(Map("q1_agg" -> 0.5, "topk" -> -1.0)))
+    val other = Bench.baseline(detail(""","cpus":"8""""), "32")
+    assert(other.left.exists(w => w.contains("cpus=8") && w.contains("cpus=32")), other)
+    val unrecorded = Bench.baseline(detail(""), "8")
+    assert(unrecorded.left.exists(_.contains("not recorded")), unrecorded)
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

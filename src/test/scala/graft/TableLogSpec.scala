@@ -1739,4 +1739,108 @@ class TableLogSpec extends SparkSpec {
       assert(ns == Set(1L, 9_000_000_000L))
     } finally q2.stop()
   }
+
+  test("snapshot memo: one version resolves to one frame; a re-created " +
+      "root and a new commit resolve to new ones") {
+    val root = freshRoot()
+    TableLog.append(spark, root, nums(0, 30))             // v0
+    TableLog.append(spark, root, nums(30, 50))            // v1
+    val pinned = TableLog.snapshot(spark, root, 1)
+    assert(TableLog.snapshot(spark, root, 1) eq pinned, "v1 rebuilt")
+    assert(TableLog.snapshot(spark, root) eq pinned,
+      "latest resolves to v1 and must share its frame")
+    assert(TableLog.snapshot(spark, root, 0) ne pinned)
+    TableLog.append(spark, root, nums(50, 60))            // v2
+    assert(TableLog.snapshot(spark, root).count() == 60)
+    assert(pinned.count() == 50)
+    // the same root deleted and re-created: same versions, new rows
+    val dir = new org.apache.hadoop.fs.Path(root)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+    TableLog.append(spark, root, nums(100, 103))          // v0 again
+    TableLog.append(spark, root, nums(103, 104))          // v1 again
+    val ids = TableLog.snapshot(spark, root, 1).collect().map(_.getLong(0))
+    assert(ids.sorted.toSeq == (100L until 104L), ids.mkString(","))
+    assert(TableLog.snapshot(spark, root, 0).count() == 3)
+  }
+
+  test("snapshot memo keeps the vacuum contract: a memoized snapshot " +
+      "below the retention floor fails loudly at scan") {
+    val root = freshRoot()
+    TableLog.append(spark, root, nums(0, 40))            // v0
+    TableLog.overwrite(spark, root, nums(100, 160))      // v1 delists v0
+    val pre = TableLog.snapshot(spark, root, 0)
+    assert(pre.count() == 40)
+    assert(TableLog.vacuum(spark, root, retainFrom = 1) > 0)
+    val again = TableLog.snapshot(spark, root, 0)
+    assert(again eq pre, "the log entry is unchanged, so the memo answers")
+    val err = intercept[Exception] { again.count() }
+    def chain(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
+    assert(chain(err).exists(e =>
+      e.isInstanceOf[java.io.FileNotFoundException] ||
+        e.getMessage != null && e.getMessage.contains("FileNotFound") ||
+        e.getMessage != null && e.getMessage.contains("does not exist")),
+      s"pre-retention read must fail file-not-found, got: $err")
+    assert(TableLog.snapshot(spark, root).count() == 60)
+  }
+
+  test("snapshot memo is keyed on the replay base: deleting the " +
+      "checkpoints forces a JSON replay, and log_checkpoint's rows agree") {
+    val key = "spark.graft.tablelog.checkpointInterval"
+    spark.conf.set(key, "2")
+    try {
+      val root = freshRoot()
+      (0 until 5).foreach(i => TableLog.append(spark, root, nums(i * 10, i * 10 + 10)))
+      val viaCkpt = TableLog.snapshot(spark, root)
+      assert(TableLog.replayState(spark, root, -1, useCheckpoint = true)._2.nonEmpty)
+      val f = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      f.globStatus(new org.apache.hadoop.fs.Path(s"$root/_log/ckpt-v*.tsv"))
+        .foreach(st => assert(f.delete(st.getPath, false)))
+      assert(TableLog.replayState(spark, root, -1, useCheckpoint = true)._2.isEmpty)
+      val viaJson = TableLog.snapshot(spark, root)
+      assert(viaJson ne viaCkpt, "replay base changed but the memo answered")
+      assert(viaJson.count() == 50 && viaCkpt.count() == 50)
+    } finally spark.conf.unset(key)
+    // the registered query deletes its checkpoints between two reads of
+    // the latest version: both must be answered, and answered alike
+    val rows = SparkEntry.queries("log_checkpoint")(spark, sfDir).collect()
+    def tagged(t: String) = rows.filter(_.getAs[String]("tag") == t)
+      .map(r => (r.getAs[Any]("o_orderstatus"), r.getAs[Any]("n"),
+        r.getAs[Any]("total_price"))).toSeq
+    assert(tagged("latest").nonEmpty)
+    assert(tagged("latest_log_only") == tagged("latest"))
+    assert(rows.forall(_.getAs[Number]("n_ckpt").intValue > 0))
+  }
+
+  test("building a snapshot launches no Spark job, with or without " +
+      "active deletion vectors") {
+    val root = freshRoot()
+    TableLog.append(spark, root, nums(0, 100).repartition(4))
+    def jobsWhileBuilding(version: Int): Int = {
+      val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          starts.add(j.time)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val t0 = System.currentTimeMillis()
+        TableLog.snapshot(spark, root, version)
+        val t1 = System.currentTimeMillis()
+        Thread.sleep(1500) // listener bus is async; let job events drain
+        starts.toArray.count { case t: Long => t >= t0 && t <= t1 }
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobsWhileBuilding(0) == 0, "snapshot without DVs ran a job")
+    val v1 = TableLog.deleteVector(spark, root, col("id") % 10 === 3)
+    val v2 = TableLog.deleteVector(spark, root, col("id") % 10 === 4)
+    assert(TableLog.dvState(spark, root, v2).size == 2)
+    assert(jobsWhileBuilding(v1) == 0, "snapshot with one DV ran a job")
+    assert(jobsWhileBuilding(v2) == 0, "snapshot with two DVs ran a job")
+    val alive = TableLog.snapshot(spark, root, v2)
+    assert(alive.count() == 80)
+    assert(alive.filter(col("id") % 10 === 3 || col("id") % 10 === 4).isEmpty)
+  }
 }
