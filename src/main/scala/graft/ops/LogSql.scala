@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions.{col, expr, lit}
   *   [WHEN NOT MATCHED THEN INSERT *]
   *   [WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE]
   *   [STATS (c1, c2)]
-  *       → TableLog.mergeFull — the full Delta-parity three-clause
-  *         merge, one atomic commit
+  *       → TableLog.mergeInto — the full Delta-parity three-clause
+  *         merge, one atomic commit; without the BY SOURCE clause it
+  *         rewrites only the files whose key stats admit a match
   *
   *   UPDATE graft_log('<root>') SET c = <expr>[, ...] WHERE <pred>
   *     [STATS (c1, c2)]
@@ -318,7 +319,7 @@ object LogSql {
         s"MERGE ON must be $tgtAlias.<key> = $srcAlias.<key>: $onText")
     }
 
-    // alias mapping to mergeFull's joined-frame names: source columns
+    // alias mapping to mergeInto's joined-frame names: source columns
     // are src_-prefixed, target columns are bare. Applied only on
     // CODE segments of the mask — 'signed by s. smith' in a literal,
     // an `s.`-lookalike in a comment, and a backticked identifier all
@@ -364,7 +365,7 @@ object LogSql {
 
     var cond = lit(true)
     var set = Map.empty[String, org.apache.spark.sql.Column]
-    var bySource = lit(false)
+    var bySource: Option[org.apache.spark.sql.Column] = None
     var insertUnmatched = false
     clauses.foreach { clause =>
       // the FIRST top-level THEN separates head from action (the AND
@@ -383,7 +384,7 @@ object LogSql {
             // SET LHS names a TARGET column — strip a target-alias
             // qualifier (Delta's `SET t.price = …` form), refuse a
             // source-alias one (you can't assign into the source);
-            // existence is validated downstream by mergeFull
+            // existence is validated downstream by mergeInto
             val lhs = a.take(i).trim.split('.').map(_.trim) match {
               case Array(q, c0) if q.equalsIgnoreCase(tgtAlias) => c0
               case Array(q, _) if q.equalsIgnoreCase(srcAlias) =>
@@ -397,7 +398,7 @@ object LogSql {
           }.toMap
         case (HeadBySource(c), DeleteAct()) =>
           bySource =
-            Option(c).map(t => expr(mapAliases(t))).getOrElse(lit(true))
+            Some(Option(c).map(t => expr(mapAliases(t))).getOrElse(lit(true)))
         case (HeadInsert(), InsertAct()) => insertUnmatched = true
         case _ => throw new IllegalArgumentException(
           s"unsupported MERGE clause: $clause")
@@ -407,7 +408,7 @@ object LogSql {
 
     val statsCols = stats.toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    val v = graft.sources.TableLog.mergeFull(s, root, s.sql(sourceQuery),
+    val v = graft.sources.TableLog.mergeInto(s, root, s.sql(sourceQuery),
       keyCol, cond, set, bySource, insertUnmatched, statsCols)
     versionDf(s, v)
   }

@@ -397,17 +397,17 @@ object TableLog {
   private val CkptEnd = "#end"
 
   private def writeCheckpoint(s: SparkSession, root: String, v: Int): Unit = {
-    val state = replayState(s, root, v, useCheckpoint = true)._1
+    val (state, _, _) = replay(s, root, v)
     // txn watermarks ride the checkpoint too ("#txn\tapp\tversion"
     // lines), so lastTxnVersion — the exactly-once ingestion check run
     // on EVERY appendIdempotent — replays O(interval) JSON entries,
     // not O(#commits)
-    val txns = txnState(s, root, v).toSeq.sortBy(_._1)
+    val txns = state.txns.toSeq.sortBy(_._1)
       .map { case (a, tv) => s"#txn\t$a\t$tv" }
     // active deletion vectors ride too ("#dv\t<dir>"), so dvState —
     // consulted by every snapshot — replays O(interval), not O(#commits)
-    val dvLines = dvState(s, root, v, useCheckpoint = true).map(d => s"#dv\t$d")
-    val body = (state.map { case (p, st) => s"$p\t${st.getOrElse("")}" } ++
+    val dvLines = state.dvs.map(d => s"#dv\t$d")
+    val body = (state.live.map { case (p, st) => s"$p\t${st.getOrElse("")}" } ++
       txns ++ dvLines :+ CkptEnd).mkString("", "\n", "\n")
     val f = fs(s, root)
     try {
@@ -445,56 +445,71 @@ object TableLog {
     }, txns.toMap, dvs.toSeq))
   }
 
-  /** Per-app transaction watermarks as of `version` (-1 = latest):
-    * newest usable checkpoint's #txn directives + a JSON-suffix scan. */
-  private[graft] def txnState(s: SparkSession, root: String,
-      version: Int): Map[String, Long] = {
-    val f = fs(s, root)
-    val vs = versions(s, root)
-    val upto = if (version < 0) vs else vs.filter(_ <= version)
-    if (upto.isEmpty) return Map.empty
-    val base = checkpointVersions(s, root).filter(_ <= upto.last).lastOption
-      .flatMap { cv =>
-        parseCheckpoint(readText(f, ckptPath(root, cv))).map(cv -> _._2)
-      }
-    val m = mutable.Map.empty[String, Long]
-    base.foreach { case (_, txns) => m ++= txns }
-    upto.filter(v => base.forall(_._1 < v)).foreach { v =>
-      parseTxn(readText(f, logPath(root, v))).foreach { case (a, tv) =>
-        if (m.get(a).forall(_ < tv)) m(a) = tv
-      }
-    }
-    m.toMap
+  /** The table as of one replayed `version`: the live file set
+    * (relative paths, insertion-ordered) with the stats sidecar of the
+    * commit that added each file, the active deletion vectors, and the
+    * per-app transaction watermarks. A mutation resolves it ONCE
+    * ([[tableState]]) and derives its remove set and `expectDvs` from
+    * it, so both come from the same version. */
+  private final case class TableState(version: Int,
+      live: Seq[(String, Option[String])], dvs: Seq[String],
+      txns: Map[String, Long]) {
+    def files: Seq[String] = live.map(_._1)
   }
 
-  /** Live file set (relative paths, insertion-ordered) plus the stats
-    * sidecar of the commit that added each file, as of `version`
-    * (-1 = latest): newest checkpoint at or below the target plus a
-    * replay of only the JSON entries after it. */
+  /** Live files with their stats, as of `version` (-1 = latest). */
   private def liveState(s: SparkSession, root: String,
       version: Int): Seq[(String, Option[String])] =
-    replayState(s, root, version, useCheckpoint = true)._1
+    replay(s, root, version)._1.live
 
-  /** The replay itself; also reports (checkpoint used, #JSON entries
-    * replayed) so TableLogSpec can pin the read footprint. */
+  /** The head state a mutation computes against. */
+  private def tableState(s: SparkSession, root: String): TableState =
+    replay(s, root, -1)._1
+
+  /** Per-app transaction watermarks as of `version` (-1 = latest);
+    * empty when no version is at or below it. */
+  private[graft] def txnState(s: SparkSession, root: String,
+      version: Int): Map[String, Long] =
+    replay(s, root, version, strict = false)._1.txns
+
+  /** [[replay]]'s live set and read footprint (checkpoint used, #JSON
+    * entries replayed), so TableLogSpec can pin the footprint. */
   private[graft] def replayState(s: SparkSession, root: String, version: Int,
       useCheckpoint: Boolean): (Seq[(String, Option[String])], Option[Int], Int) = {
+    val (st, base, n) = replay(s, root, version, useCheckpoint)
+    (st.live, base, n)
+  }
+
+  /** Newest checkpoint at or below `version` (-1 = latest) plus a
+    * replay of only the JSON entries after it. With no version at or
+    * below `version`, `strict` refuses and otherwise the state is
+    * empty. */
+  private def replay(s: SparkSession, root: String, version: Int,
+      useCheckpoint: Boolean = true,
+      strict: Boolean = true): (TableState, Option[Int], Int) = {
     val f = fs(s, root)
     val vs = versions(s, root)
-    require(vs.nonEmpty, s"TableLog at $root has no commits")
     val upto = if (version < 0) vs else vs.filter(_ <= version)
-    require(upto.nonEmpty, s"no committed version <= $version at $root")
+    if (upto.isEmpty) {
+      require(!strict, if (vs.isEmpty) s"TableLog at $root has no commits"
+        else s"no committed version <= $version at $root")
+      return (TableState(-1, Nil, Nil, Map.empty), None, 0)
+    }
     val live = mutable.LinkedHashMap.empty[String, Option[String]]
+    val txns = mutable.Map.empty[String, Long]
+    var dvs: Seq[String] = Seq.empty
     // a checkpoint that doesn't parse (torn write, pre-sentinel format)
     // is treated as ABSENT — fall back to full JSON replay rather than
     // trust a prefix that would silently drop live files
     val base = (if (useCheckpoint)
       checkpointVersions(s, root).filter(_ <= upto.last).lastOption
     else None).flatMap { cv =>
-      parseCheckpoint(readText(f, ckptPath(root, cv))).map(cv -> _._1)
+      parseCheckpoint(readText(f, ckptPath(root, cv))).map(cv -> _)
     }
-    base.foreach { case (_, entries) =>
+    base.foreach { case (_, (entries, ckptTxns, ckptDvs)) =>
       entries.foreach { case (p, st) => live.put(p, st) }
+      txns ++= ckptTxns
+      dvs = ckptDvs
     }
     val tail = upto.filter(v => base.forall(_._1 < v))
     tail.foreach { v =>
@@ -502,34 +517,24 @@ object TableLog {
       val st = parseStats(json)
       parseArr(json, "remove").foreach(live.remove)
       parseArr(json, "add").foreach(a => live.put(a, st))
+      // "dvs" records the full state: the newest record wins
+      parseDvs(json).foreach(dvs = _)
+      parseTxn(json).foreach { case (a, tv) =>
+        if (txns.get(a).forall(_ < tv)) txns(a) = tv
+      }
     }
-    (live.toSeq, base.map(_._1), tail.size)
+    (TableState(upto.last, live.toSeq, dvs, txns.toMap), base.map(_._1),
+      tail.size)
   }
 
   private def liveFiles(s: SparkSession, root: String, version: Int): Seq[String] =
     liveState(s, root, version).map(_._1)
 
-  /** Active deletion-vector sidecar dirs as of `version` (-1 = latest):
-    * newest checkpoint's `#dv` directives plus a last-writer-wins scan
-    * of the JSON suffix ("dvs" records the full state, so replay keeps
-    * only the newest record). */
-  private[graft] def dvState(s: SparkSession, root: String, version: Int,
-      useCheckpoint: Boolean = true): Seq[String] = {
-    val f = fs(s, root)
-    val vs = versions(s, root)
-    val upto = if (version < 0) vs else vs.filter(_ <= version)
-    if (upto.isEmpty) return Seq.empty
-    val base = (if (useCheckpoint)
-      checkpointVersions(s, root).filter(_ <= upto.last).lastOption
-    else None).flatMap { cv =>
-      parseCheckpoint(readText(f, ckptPath(root, cv))).map(cv -> _._3)
-    }
-    var dvs: Seq[String] = base.map(_._2).getOrElse(Seq.empty)
-    upto.filter(v => base.forall(_._1 < v)).foreach { v =>
-      parseDvs(readText(f, logPath(root, v))).foreach(dvs = _)
-    }
-    dvs
-  }
+  /** Active deletion-vector sidecar dirs as of `version` (-1 = latest);
+    * empty when no version is at or below it. */
+  private[graft] def dvState(s: SparkSession, root: String,
+      version: Int): Seq[String] =
+    replay(s, root, version, strict = false)._1.dvs
 
   /** File key shared by deletion vectors and `_metadata.file_path`:
     * the last three path components (`data/<uuid>/<part>.parquet`) —
@@ -564,22 +569,27 @@ object TableLog {
     if (bytes <= dvBroadcastMaxBytes(s)) broadcast(dvRaw) else dvRaw
   }
 
-  /** `df` (a parquet scan of this table's files) minus the rows the
-    * active deletion vectors name — an anti-join on (file key,
-    * `_metadata.row_index`). The DV side broadcasts while its on-disk
-    * size (driver metadata, no job) stays under
+  /** `df` (a parquet scan of this table's files) keyed by
+    * (_g_file, _g_pos) — file key and `_metadata.row_index` — minus the
+    * rows the active deletion vectors name. The DV side broadcasts
+    * while its on-disk size (driver metadata, no job) stays under
     * `spark.graft.tablelog.dv.broadcastMaxBytes`; past that the join
-    * shuffles and a [[compact]] is overdue. No-op without active DVs. */
-  private def applyDv(s: SparkSession, root: String, df: DataFrame,
+    * shuffles and a [[compact]] is overdue. */
+  private def keyedAlive(s: SparkSession, root: String, df: DataFrame,
       dvs: Seq[String]): DataFrame = {
-    if (dvs.isEmpty) return df
-    val cols = df.columns.map(col).toSeq
-    df.withColumn("_g_file", fileKey(col("_metadata.file_path")))
+    val keyed = df.withColumn("_g_file", fileKey(col("_metadata.file_path")))
       .withColumn("_g_pos", col("_metadata.row_index"))
-      .join(dvJoinFrame(s, root, dvs), col("_g_file") === col("_g_dv_file") &&
+    if (dvs.isEmpty) keyed
+    else keyed.join(dvJoinFrame(s, root, dvs),
+      col("_g_file") === col("_g_dv_file") &&
         col("_g_pos") === col("_g_dv_pos"), "left_anti")
-      .select(cols: _*)
   }
+
+  /** [[keyedAlive]] without the key columns; no-op without active DVs. */
+  private def applyDv(s: SparkSession, root: String, df: DataFrame,
+      dvs: Seq[String]): DataFrame =
+    if (dvs.isEmpty) df
+    else keyedAlive(s, root, df, dvs).select(df.columns.map(col).toSeq: _*)
 
   /** The declared table schema as of `version` (-1 = latest): the
     * newest commit at or below `version` that recorded one. None for
@@ -912,12 +922,16 @@ object TableLog {
       catch { case _: Throwable => () }
       throw e
     }
-    val f = fs(s, root)
-    val files = f.listStatus(new Path(s"$root/$sub"))
+    (sub, subFiles(s, root, sub))
+  }
+
+  /** The parquet files of the fresh subdir `sub`, relative to `root`,
+    * in name order. */
+  private def subFiles(s: SparkSession, root: String,
+      sub: String): Seq[String] =
+    fs(s, root).listStatus(new Path(s"$root/$sub"))
       .map(_.getPath.getName).filter(_.endsWith(".parquet"))
       .sorted.map(n => s"$sub/$n").toSeq
-    (sub, files)
-  }
 
   /** Per-file min/max lines for `statsCols` read from the parquet
     * FOOTERS the write already produced — integer column-chunk
@@ -1001,7 +1015,8 @@ object TableLog {
       if (files.length <= 2) Some(files.toSeq.flatMap(fileLines))
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, files.length))
+          math.min(8, files.length), { (r: Runnable) =>
+            val t = new Thread(r, "graft-footerStats"); t.setDaemon(true); t })
         try {
           val futs = files.toSeq.map(p =>
             pool.submit(new java.util.concurrent.Callable[Seq[String]] {
@@ -1013,7 +1028,14 @@ object TableLog {
             try fut.get()
             catch { case e: java.util.concurrent.ExecutionException =>
               throw e.getCause }))
-        } finally pool.shutdownNow()
+        } finally {
+          // a failed read interrupts the other reads and waits for
+          // them (the [[graft.ops.inParallel]] contract): no pool thread
+          // outlives the call, on the fallback path either
+          pool.shutdownNow()
+          pool.awaitTermination(Long.MaxValue,
+            java.util.concurrent.TimeUnit.NANOSECONDS)
+        }
       }
     } catch { case scala.util.control.NonFatal(e) =>
       // NonFatal only: an OOM/interrupt must propagate, and a
@@ -1336,10 +1358,10 @@ object TableLog {
 
   private def buildSnapshot(s: SparkSession, root: String,
       version: Int): DataFrame = {
-    val files = liveFiles(s, root, version).map(rel => abs(root, rel))
+    val st = replay(s, root, version)._1
     val decl = tableSchema(s, root, version)
-    val raw = applyDv(s, root, readUnion(s, files, decl),
-      dvState(s, root, version))
+    val raw = applyDv(s, root,
+      readUnion(s, st.files.map(rel => abs(root, rel)), decl), st.dvs)
     // when the log declares a schema (as of the requested version),
     // the DECLARED schema is the contract: columns added by
     // addColumn but not yet written read as null, column order is
@@ -1397,20 +1419,26 @@ object TableLog {
     } ++ keep: _*)
   }
 
-  /** Subset read with the SNAPSHOT contract: mergeSchema union over
+  /** Subset read with the SNAPSHOT contract: [[readUnion]] over
     * `files`, active DVs anti-joined, and the declared schema (as of
     * `version`) presented through the name mapping — every pruned
     * read or rewrite path must resolve renamed columns exactly like
     * [[snapshot]], or pre-rename rows would surface null under the
-    * declared name and silently vanish from filters. */
+    * declared name and silently vanish from filters. `keyed` keeps
+    * [[keyedAlive]]'s (_g_file, _g_pos) row key — taken on the scan
+    * itself, where the metadata columns resolve — for the mutations
+    * that address rows by position ([[deleteVector]], [[update]]). */
   private def readAligned(s: SparkSession, root: String,
-      files: Seq[String], version: Int, dv: Seq[String]): DataFrame = {
+      files: Seq[String], version: Int, dv: Seq[String],
+      keyed: Boolean = false): DataFrame = {
     val decl = tableSchema(s, root, version)
-    val raw = applyDv(s, root,
-      readUnion(s, files.map(rel => abs(root, rel)), decl), dv)
+    val raw = readUnion(s, files.map(rel => abs(root, rel)), decl)
+    val alive = if (keyed) keyedAlive(s, root, raw, dv)
+      else applyDv(s, root, raw, dv)
     decl match {
-      case None => raw
-      case Some(d) => alignDeclared(d, raw)
+      case None => alive
+      case Some(d) => alignDeclared(d, alive,
+        if (keyed) Seq(col("_g_file"), col("_g_pos")) else Nil)
     }
   }
 
@@ -1458,25 +1486,27 @@ object TableLog {
       val json = readText(f, logPath(root, v))
       if (parseDataChange(json)) parseArr(json, "add") else Seq.empty
     }
+    // the added files' rows as written: no deletion vector applies
     if (files.isEmpty) snapshot(s, root).limit(0)
-    else {
-      val decl = tableSchema(s, root)
-      val raw = readUnion(s, files.map(rel => abs(root, rel)), decl)
-      decl match {
-        case None => raw
-        case Some(d) => alignDeclared(d, raw)
-      }
-    }
+    else readAligned(s, root, files, -1, Seq.empty)
   }
 
   // ---- change data feed (Delta CDF parity) -------------------------------
   // Row-level change capture: when `spark.graft.tablelog.cdf` is true,
-  // the row-mutating commits (deleteRange / merge / mergeUpdate) write
-  // their changed rows — tagged with `_change_type` — as a parquet
-  // sidecar inside the commit's data area, and the log entry records
-  // it ("cdc":"<dir>"). Plain appends need no sidecar (their adds ARE
-  // the inserts); layout rewrites (dataChange=false, no cdc) change
+  // every row mutation (deleteRange, deleteVector, update, merge,
+  // mergeUpdate, mergeFull — all through commitMutation) writes its
+  // changed rows — tagged with `_change_type` — as a parquet sidecar
+  // inside the commit's data area, and the log entry records it
+  // ("cdc":"<dir>"). Plain appends need no sidecar (their adds ARE the
+  // inserts); layout rewrites (dataChange=false, no cdc) change
   // nothing. [[tableChanges]] then reads the feed for a version range.
+  // The sentinel rule, with capture OFF: deleteRange, deleteVector,
+  // update and a MERGE with a BY SOURCE clause record the EMPTY
+  // sentinel ("cdc":""), so the feed refuses them — a deleteRange
+  // would otherwise read as a layout rewrite and a deleteVector as a
+  // metadata-only commit. merge and a MERGE without BY SOURCE record
+  // none: one that removed files refuses as "not captured", and one
+  // that removed none is an append and reads back as its inserts.
   // Capture cost is O(changed rows) extra write per mutating commit —
   // the same contract as Delta's _change_data directory; the sidecar
   // is data-before-log like everything else (written, then published).
@@ -1489,18 +1519,6 @@ object TableLog {
 
   private def cdfEnabled(s: SparkSession): Boolean =
     s.conf.getOption("spark.graft.tablelog.cdf").exists(_.toBoolean)
-
-  /** Write a tagged change frame as this commit's CDC sidecar; returns
-    * its relative directory. An empty frame still writes (Spark emits
-    * a schema-bearing empty file), so "captured but no rows" reads
-    * back as zero changes, distinct from "not captured". */
-  private def writeCdc(s: SparkSession, root: String,
-      changes: DataFrame): Option[String] = {
-    if (!cdfEnabled(s)) return None
-    val sub = s"data/${UUID.randomUUID()}-cdc"
-    changes.write.parquet(s"$root/$sub")
-    Some(sub)
-  }
 
   /** The row-level change feed for commits in (sinceVersion, toVersion]
     * (toVersion = -1 → latest): every data column plus
@@ -1587,11 +1605,11 @@ object TableLog {
 
   /** Live files that can contain a row with `column` in [lo, hi]:
     * stats-pruned when bounds exist, kept when they don't. */
-  private def candidateFiles(s: SparkSession, root: String, version: Int,
-      column: String, lo: Long, hi: Long): (Seq[String], Seq[String]) = {
-    val state = liveState(s, root, version)
+  private def candidateFiles(s: SparkSession, root: String,
+      state: Seq[(String, Option[String])],
+      column: String, lo: Long, hi: Long): Seq[String] = {
     val b = bounds(s, root, state, column)
-    state.map(_._1).partition(file =>
+    state.map(_._1).filter(file =>
       b.get(file).forall { case (mn, mx) => mx >= lo && mn <= hi })
   }
 
@@ -1850,7 +1868,8 @@ object TableLog {
     * affect planning, never the answer. */
   def readRange(s: SparkSession, root: String, column: String,
       lo: Long, hi: Long, version: Int = -1): DataFrame = {
-    val (keep, _) = candidateFiles(s, root, version, column, lo, hi)
+    val keep =
+      candidateFiles(s, root, liveState(s, root, version), column, lo, hi)
     // stats may prune every live file — an empty path list would make
     // the reader throw instead of returning zero rows
     if (keep.isEmpty) return snapshot(s, root, version).limit(0)
@@ -1882,45 +1901,34 @@ object TableLog {
         col(c2) >= lo2 && col(c2) <= hi2)
   }
 
+  // ---- row mutations: each resolves the table ONCE ([[tableState]]),
+  // picks the files it touches, and ends in [[commitMutation]] --------
+
   /** Delete every row with `column` in [lo, hi], rewriting ONLY the
     * files whose stats admit a match; the swap publishes as one
     * commit and untouched files keep their identity and stats.
     * Returns the committed version. */
   def deleteRange(s: SparkSession, root: String, column: String,
       lo: Long, hi: Long): Int = {
-    val (touched, _) = candidateFiles(s, root, -1, column, lo, hi)
+    val st = tableState(s, root)
+    val touched = candidateFiles(s, root, st.live, column, lo, hi)
     require(touched.nonEmpty, "deleteRange: nothing to delete")
     // DV-filtered: rewriting a touched file must not resurrect its
     // vector-deleted rows (the survivors land in fresh files the
-    // vectors don't name); untouched files keep their DV entries live.
-    // The state is captured ONCE and CAS-revalidated at publish — a
-    // deleteVector landing mid-rewrite aborts this commit, never loses
-    val dv0 = dvState(s, root, -1)
-    val src = readAligned(s, root, touched, -1, dv0)
-    val survivors = src
-      // NULL in the delete column is inside neither range nor its
-      // negation — keep such rows explicitly, or every rewritten
-      // file (including stats-less ones, always rewritten) would
-      // silently drop them: data loss beyond the requested range
-      .filter(col(column).isNull ||
-        !(col(column) >= lo && col(column) <= hi))
-    // CDF: the deleted rows (the range complement of the survivors)
-    // are the feed — captured before the log entry that removes them.
-    // With capture OFF, record the EMPTY sentinel: a delete commit is
-    // otherwise indistinguishable from a layout rewrite (both publish
-    // dataChange=false), and the feed must refuse, not silently skip
-    // sidecar + data rewrite overlap: independent outputs (par2)
-    val ((sub, files), cdc) = par2(
-      writeData(s, root, survivors),
-      writeCdc(s, root, src
-        .filter(col(column) >= lo && col(column) <= hi)
-        .withColumn(ChangeTypeCol, lit("delete")))
-        .orElse(Some("")))
-    publishOrClean(s, root, sub +: cdc.toSeq) {
-      publish(s, root, files, touched,
-        writeStats(s, root, sub, Seq(column)), dataChange = false, cdc = cdc,
-        expectDvs = Some(dv0))
-    }
+    // vectors don't name); untouched files keep their DV entries live,
+    // and a deleteVector landing mid-rewrite aborts this commit at
+    // publish instead of losing its rows
+    val src = readAligned(s, root, touched, -1, st.dvs)
+    val inRange = col(column) >= lo && col(column) <= hi
+    // NULL in the delete column is inside neither range nor its
+    // negation — keep such rows explicitly, or every rewritten file
+    // (including stats-less ones, always rewritten) would silently
+    // drop them: data loss beyond the requested range. The survivors
+    // are old rows (dataChange=false); the deleted rows are the feed.
+    commitMutation(s, root, st, touched, sentinel = true,
+      statsCols = Seq(column), dataChange = false,
+      changes = src.filter(inRange).withColumn(ChangeTypeCol, lit("delete")))(
+      writeData(s, root, src.filter(col(column).isNull || !inRange)))
   }
 
   /** DELETE WHERE `predicate` without rewriting ANY data file — the
@@ -1945,67 +1953,28 @@ object TableLog {
     * silently losing rows (same posture as the remove-set check).
     * Already-vector-deleted rows are excluded from the read, so
     * re-deleting an overlapping predicate records only the NEW rows
-    * and the CDF feed never double-reports a delete. Requires at least
-    * one matching row (like [[deleteRange]]). Returns the version. */
-  /** Alive rows of `files` keyed by (_g_file, _g_pos) and presented
-    * under the DECLARED schema — the shared scan preamble of
-    * [[deleteVector]] and [[update]]: key FIRST (metadata columns
-    * resolve only on the scan itself), then drop already-vector-
-    * deleted rows, then the declared-name mapping (a predicate names
-    * declared columns and a pre-rename file must still match).
-    * [[readUnion]], not mergeSchema — the live set may span a
-    * type-widening boundary, whose narrow+wide physical generations
-    * mergeSchema refuses to merge. */
-  private def alignedAliveScan(s: SparkSession, root: String,
-      files: Seq[String], dv0: Seq[String]): DataFrame = {
-    val decl = tableSchema(s, root)
-    val raw = readUnion(s, files.map(rel => abs(root, rel)), decl)
-    val keyed = raw
-      .withColumn("_g_file", fileKey(col("_metadata.file_path")))
-      .withColumn("_g_pos", col("_metadata.row_index"))
-    val alive = if (dv0.isEmpty) keyed
-      else keyed.join(dvJoinFrame(s, root, dv0),
-        col("_g_file") === col("_g_dv_file") &&
-          col("_g_pos") === col("_g_dv_pos"), "left_anti")
-    decl match {
-      case None => alive
-      case Some(d) =>
-        alignDeclared(d, alive, Seq(col("_g_file"), col("_g_pos")))
-    }
-  }
-
+    * and the CDF feed never double-reports a delete. A predicate that
+    * matches nothing (or an empty table) is a no-op: no commit, the
+    * current version returned. */
   def deleteVector(s: SparkSession, root: String, predicate: Column): Int = {
-    val dv0 = dvState(s, root, -1)
-    val files = liveFiles(s, root, -1)
-    // zero live files: SQL DELETE on an empty table is a no-op, not
-    // an error (the log must exist — no versions is still an error)
-    if (files.isEmpty) return versions(s, root).lastOption.getOrElse(
-      throw new IllegalStateException(s"deleteVector: no table at $root"))
-    val aligned = alignedAliveScan(s, root, files, dv0)
+    val st = tableState(s, root)
+    if (st.live.isEmpty) return st.version
+    val aligned = readAligned(s, root, st.files, -1, st.dvs, keyed = true)
     val dataCols = aligned.columns.toSeq
       .filterNot(Set("_g_file", "_g_pos")).map(col)
     val matched = aligned.filter(predicate).cache()
     try {
-      // zero matched rows: a DELETE whose predicate hits nothing is a
-      // successful no-op (Delta/SQL semantics) — no commit, current
-      // version returned
-      if (matched.limit(1).count() == 0)
-        return versions(s, root).lastOption.getOrElse(-1)
+      if (matched.limit(1).count() == 0) return st.version
       val dvSub = s"data/${UUID.randomUUID()}-dv"
-      // DV sidecar + CDF sidecar overlap: independent outputs, both
-      // off the cached `matched` frame (par2). CDF keeps the
-      // deleteRange contract — captured sidecar with the feed on, the
-      // EMPTY sentinel (refuse-at-read) with it off.
-      val (_, cdc) = par2(
+      // the DV sidecar and the CDF sidecar both read the cached
+      // `matched` frame
+      commitMutation(s, root, st, Seq.empty, sentinel = true,
+        dvs = Some(st.dvs :+ dvSub), expectFiles = Some(st.files.toSet),
+        changes = matched.select(dataCols: _*)
+          .withColumn(ChangeTypeCol, lit("delete"))) {
         matched.select(col("_g_file").as("file"), col("_g_pos").as("pos"))
-          .write.parquet(s"$root/$dvSub"),
-        writeCdc(s, root, matched.select(dataCols: _*)
-          .withColumn(ChangeTypeCol, lit("delete")))
-          .orElse(Some("")))
-      publishOrClean(s, root, dvSub +: cdc.toSeq) {
-        publish(s, root, Seq.empty, Seq.empty, dataChange = true, cdc = cdc,
-          dvs = Some(dv0 :+ dvSub), expectFiles = Some(files.toSet),
-          expectDvs = Some(dv0))
+          .write.parquet(s"$root/$dvSub")
+        (dvSub, Seq.empty)
       }
     } finally matched.unpersist()
   }
@@ -2023,8 +1992,9 @@ object TableLog {
     * holds, and the swap publishes as ONE commit whose remove set and
     * expectDvs CAS-revalidate at publish — a racing delete/compact
     * aborts one side loudly. CDF records update_preimage/postimage
-    * pairs for the matched rows (the MERGE contract). Requires at
-    * least one matching row. Returns the committed version.
+    * pairs for the matched rows (the MERGE contract). A predicate
+    * that matches nothing is a no-op (SQL UPDATE semantics): no
+    * commit, the current version returned.
     *
     * 100 TB shape: write amplification is |touched files|, not
     * |table| — an UPDATE hitting 0.1% of a clustered table rewrites
@@ -2033,180 +2003,156 @@ object TableLog {
   def update(s: SparkSession, root: String, predicate: Column,
       set: Map[String, Column], statsCols: Seq[String] = Nil): Int = {
     require(set.nonEmpty, "update: empty SET clause")
-    val dv0 = dvState(s, root, -1)
-    val files = liveFiles(s, root, -1)
-    if (files.isEmpty) return versions(s, root).lastOption.getOrElse(
-      throw new IllegalStateException(s"update: no table at $root"))
-    val aligned = alignedAliveScan(s, root, files, dv0)
-    val touched = aligned.filter(predicate)
-      .select(col("_g_file")).distinct()
+    requireSetColumns(s, root, set, "update")
+    val st = tableState(s, root)
+    if (st.live.isEmpty) return st.version
+    val touched = readAligned(s, root, st.files, -1, st.dvs, keyed = true)
+      .filter(predicate).select(col("_g_file")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted // O(#files) metadata
-    // zero matched rows: SQL UPDATE semantics — successful no-op
-    if (touched.isEmpty) return versions(s, root).lastOption.getOrElse(-1)
-    val src = readAligned(s, root, touched, -1, dv0)
-    val unknown = set.keySet -- src.columns.toSet
-    require(unknown.isEmpty,
-      s"update: SET names unknown column(s) ${unknown.mkString(", ")}")
+    if (touched.isEmpty) return st.version
+    val src = readAligned(s, root, touched, -1, st.dvs)
     // hit flag materializes BEFORE any SET applies: a SET that
     // rewrites a predicate column (SET x = 0 WHERE x > 5) must still
     // report its postimages
     val flagged = src.withColumn("__g_hit", predicate)
     val hit = col("__g_hit")
-    // ONE projection, never chained withColumn: every SET right-hand
-    // side must evaluate against the row PREIMAGE (SQL UPDATE
-    // semantics — SET a = b, b = a swaps), where sequential
-    // withColumn would feed later assignments the already-updated
-    // values in Map-iteration order
-    val updated = flagged.select(flagged.columns.toSeq.map { c =>
+    val updated = applySet(flagged, set, hit)
+    val outCols = src.columns.map(col).toSeq
+    commitMutation(s, root, st, touched, sentinel = true,
+      statsCols = statsCols,
+      changes = updateImages(flagged, updated, hit, outCols))(
+      writeData(s, root, updated.select(outCols: _*)))
+  }
+
+  /** `df` with every `set` column replaced where `hit` holds, as ONE
+    * projection, never chained withColumn: every SET right-hand side
+    * evaluates against the row PREIMAGE (SQL semantics — SET a = b,
+    * b = a swaps), where sequential withColumn would feed later
+    * assignments the already-updated values in Map-iteration order. */
+  private def applySet(df: DataFrame, set: Map[String, Column],
+      hit: Column): DataFrame =
+    df.select(df.columns.toSeq.map { c =>
       set.get(c) match {
         case Some(e) => when(hit, e).otherwise(col(c)).as(c)
         case None => col(c)
       }
     }: _*)
-    val outCols = src.columns.map(col).toSeq
-    // sidecar + data rewrite overlap: independent outputs (par2)
-    val ((sub, outFiles), cdc) = par2(
-      writeData(s, root, updated.select(outCols: _*)),
-      writeCdc(s, root,
-        flagged.filter(hit).select(outCols: _*)
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(updated.filter(hit).select(outCols: _*)
-            .withColumn(ChangeTypeCol, lit("update_postimage"))))
-        .orElse(Some("")))
-    publishOrClean(s, root, sub +: cdc.toSeq) {
-      publish(s, root, outFiles, touched,
-        writeStats(s, root, sub, statsCols), cdc = cdc,
-        expectDvs = Some(dv0))
-    }
-  }
+
+  /** The CDF update pairs of the rows `hit` selects: preimages from
+    * `before`, postimages from `after` ([[applySet]] of `before`), both
+    * projected to `cols`. */
+  private def updateImages(before: DataFrame, after: DataFrame, hit: Column,
+      cols: Seq[Column]): DataFrame =
+    before.filter(hit).select(cols: _*)
+      .withColumn(ChangeTypeCol, lit("update_preimage"))
+      .unionByName(after.filter(hit).select(cols: _*)
+        .withColumn(ChangeTypeCol, lit("update_postimage")))
 
   /** MERGE (upsert-by-key): every target row whose `keyCol` appears
     * in `source` is REPLACED by the source row (all columns), and
     * source rows with new keys are INSERTED — one atomic commit.
     *
-    * Scale shape: file selection is PER-FILE EXACT — one distributed
-    * semi-join of the source keys against the broadcast per-file
-    * [min,max] ranges from the log stats — so an INSERT-heavy source
-    * (fresh keys outside every file's range) rewrites nothing it
-    * doesn't have to; a global source bounding box would smear
-    * updates and inserts together and touch everything in between.
-    * Touched files are rewritten with a LEFT ANTI join against the
-    * source keys (drop matched, keep the rest) and the source unioned
-    * in; the key set is broadcast while it fits
-    * (`spark.graft.merge.broadcastMaxKeys`, default 1M keys) and
-    * falls back to a shuffle anti-join for bulk backfill sources —
-    * only the O(#files) range frame is unconditionally broadcast.
-    * Every other file keeps its identity, stats, and bytes. Files without stats for `keyCol` are always
-    * rewritten (the no-stats always-read class — never a correctness
-    * risk, only write amplification). Duplicate or NULL keys in the
-    * SOURCE are rejected (one deterministic winner per key);
-    * duplicate keys in the target simply all get replaced. Returns
-    * the committed version. */
+    * Scale shape: file selection is PER-FILE EXACT ([[mergeFront]]),
+    * so an INSERT-heavy source (fresh keys outside every file's
+    * range) rewrites nothing it doesn't have to; a global source
+    * bounding box would smear updates and inserts together and touch
+    * everything in between. Touched files are rewritten with a LEFT
+    * ANTI join against the source keys (drop matched, keep the rest)
+    * and the source unioned in; the key set is broadcast while it
+    * fits the budget, else the anti-join shuffles. Every other file
+    * keeps its identity, stats, and bytes. Duplicate or NULL keys in
+    * the SOURCE are rejected (one deterministic winner per key);
+    * duplicate keys in the target all get replaced by the one source
+    * row — which is why this form keeps its anti-join body instead of
+    * [[mergeInto]]'s join, which would update each duplicate in place.
+    * Returns the committed version. */
   def merge(s: SparkSession, root: String, source: DataFrame,
       keyCol: String, statsCols: Seq[String] = Nil): Int = {
-    import org.apache.spark.sql.functions.broadcast
+    val st = tableState(s, root)
     val src = source.cache()
     try {
-      val (touched, smallSrc) = mergeTouched(s, root, src, keyCol)
-      val dv0 = dvState(s, root, -1)
+      val (touched, smallSrc) =
+        mergeFront(s, root, st, src, keyCol, prune = true)
       val keys = src.select(col(keyCol))
+      val srcKeys = if (smallSrc) broadcast(keys) else keys
       val tgt =
         if (touched.isEmpty) src.limit(0)
-        else readAligned(s, root, touched, -1, dv0)
-      val kept =
-        if (touched.isEmpty) src.limit(0)
-        else if (smallSrc) tgt.join(broadcast(keys), Seq(keyCol), "left_anti")
-        else tgt.join(keys, Seq(keyCol), "left_anti")
+        else readAligned(s, root, touched, -1, st.dvs)
       // CDF: matched keys can only live in touched files (stats-exact
       // selection), so `tgt` is the complete preimage universe —
       // replaced target rows are the update preimages, their source
       // counterparts the postimages, and fresh-key source rows inserts
-      val changes = if (!cdfEnabled(s)) None else {
+      def changes = {
         val tgtKeys = tgt.select(col(keyCol))
-        val pre = tgt.join(if (smallSrc) broadcast(keys) else keys,
-          Seq(keyCol), "left_semi")
+        tgt.join(srcKeys, Seq(keyCol), "left_semi")
           .withColumn(ChangeTypeCol, lit("update_preimage"))
-        val post = src.join(tgtKeys, Seq(keyCol), "left_semi")
-          .withColumn(ChangeTypeCol, lit("update_postimage"))
-        val ins = src.join(tgtKeys, Seq(keyCol), "left_anti")
-          .withColumn(ChangeTypeCol, lit("insert"))
-        Some(pre.unionByName(post).unionByName(ins))
+          .unionByName(src.join(tgtKeys, Seq(keyCol), "left_semi")
+            .withColumn(ChangeTypeCol, lit("update_postimage")))
+          .unionByName(src.join(tgtKeys, Seq(keyCol), "left_anti")
+            .withColumn(ChangeTypeCol, lit("insert")))
       }
-      // sidecar + data rewrite overlap: independent outputs (par2)
-      val ((sub, files), cdc) = par2(
-        writeData(s, root, kept.unionByName(src)),
-        changes.flatMap(writeCdc(s, root, _)))
-      publishOrClean(s, root, sub +: cdc.toSeq) {
-        publish(s, root, files, touched, writeStats(s, root, sub, statsCols),
-          cdc = cdc, expectDvs = Some(dv0))
-      }
+      commitMutation(s, root, st, touched, sentinel = false,
+        statsCols = statsCols, changes = changes)(writeData(s, root,
+        tgt.join(srcKeys, Seq(keyCol), "left_anti").unionByName(src)))
     } finally src.unpersist()
   }
 
-  /** Shared MERGE front half: validate the source (no NULL, no
-    * duplicate keys), then pick the files to rewrite PER-FILE EXACTLY
-    * — a distributed semi-join of source keys against the broadcast
-    * per-file [min,max] ranges — plus the stats-less always-rewrite
-    * class. Also decides whether the source key set is small enough
-    * to broadcast in the rewrite joins
-    * (`spark.graft.merge.broadcastMaxKeys`, default 1M): the O(#files)
-    * range frame is always broadcast, but a bulk backfill source must
-    * fall back to shuffle joins instead of OOMing the driver. */
-  /** Shared MERGE source guard: no NULL keys, no duplicate keys;
-    * returns whether the key set fits the broadcast budget. Split out
-    * of [[mergeTouched]] because [[mergeFull]] needs the guard but
-    * NOT the per-file selection (BY SOURCE touches every file — the
-    * selection job's result would be computed and thrown away). */
-  private def mergeSrcGuard(s: SparkSession, src: DataFrame,
-      keyCol: String): Boolean = {
-    // ONE validation pass: the null probe, the duplicate group-scan
-    // and the broadcast-budget count each re-ran the source as a
-    // separate action; a single aggregate answers all three.
-    // count_distinct ignores NULL keys, so the duplicate arithmetic
-    // (rows == distinct keys) is exact once the null gate passes —
-    // and the null gate throws first, preserving message precedence.
-    val r = src.agg(
-      count(lit(1)).as("n"),
-      count(when(col(keyCol).isNull, lit(1))).as("nulls"), // count: never NULL on empty src
-      count_distinct(col(keyCol)).as("nd")).head()
-    require(r.getAs[Long]("nulls") == 0L,
-      s"merge: NULL $keyCol values in source")
-    require(r.getAs[Long]("n") == r.getAs[Long]("nd"),
+  /** MERGE front half, ONE aggregate over the (cached) source: it
+    * rejects NULL and duplicate keys, counts them against the
+    * broadcast budget (`spark.graft.merge.broadcastMaxKeys`, default
+    * 1M keys — a bulk backfill source shuffles instead of OOMing the
+    * driver) and, with `prune`, tests each key against the live files'
+    * [min,max] key stats, held as one literal array (O(#keys ×
+    * #files) comparisons), collecting the indices of the files it
+    * falls in. Files without stats for `keyCol` are always touched;
+    * without `prune` (BY SOURCE) every file is. count_distinct ignores
+    * NULL keys, so rows == distinct keys is exact once the null gate,
+    * checked first, passes. Returns (touched files in live order,
+    * source fits the budget). */
+  private def mergeFront(s: SparkSession, root: String, st: TableState,
+      src: DataFrame, keyCol: String, prune: Boolean): (Seq[String], Boolean) = {
+    val b = if (prune) bounds(s, root, st.live, keyCol) else Map.empty[String, (Long, Long)]
+    val ranges = st.files.zipWithIndex.flatMap { case (fl, i) =>
+      b.get(fl).map { case (mn, mx) => (i, mn, mx) }
+    }
+    val k = col(keyCol).cast(LongType)
+    val hits = collect_set(transform(
+      filter(typedLit(ranges), r => k >= r.getField("_2") && k <= r.getField("_3")),
+      r => r.getField("_1")))
+    val guard = Seq(count(lit(1)),
+      count(when(col(keyCol).isNull, lit(1))), // count: never NULL on empty src
+      count_distinct(col(keyCol)))
+    val r = src.agg(guard.head,
+      guard.tail ++ (if (ranges.isEmpty) Nil else Seq(hits)): _*).head()
+    require(r.getLong(1) == 0L, s"merge: NULL $keyCol values in source")
+    require(r.getLong(0) == r.getLong(2),
       s"merge: duplicate $keyCol values in source")
-    val bcastMaxKeys =
-      s.conf.getOption("spark.graft.merge.broadcastMaxKeys")
-        .map(_.toLong).getOrElse(1000000L)
-    r.getAs[Long]("n") <= bcastMaxKeys
+    val hit = if (ranges.isEmpty) Set.empty[Int]
+      else r.getSeq[scala.collection.Seq[Int]](3).flatten.toSet
+    val touched = if (!prune) st.files else st.files.zipWithIndex.collect {
+      case (fl, i) if !b.contains(fl) || hit(i) => fl
+    }
+    val bcastMaxKeys = s.conf.getOption("spark.graft.merge.broadcastMaxKeys")
+      .map(_.toLong).getOrElse(1000000L)
+    (touched, r.getLong(0) <= bcastMaxKeys)
   }
 
-  private def mergeTouched(s: SparkSession, root: String, src: DataFrame,
-      keyCol: String): (Seq[String], Boolean) = {
-    import org.apache.spark.sql.functions.broadcast
-    val smallSrc = mergeSrcGuard(s, src, keyCol)
-    val state = liveState(s, root, -1)
-    val b = bounds(s, root, state, keyCol)
-    val (withStats, noStats) = state.map(_._1).partition(b.contains)
-    val ranges = s.createDataFrame(
-      java.util.Arrays.asList(withStats.map(fl =>
-        org.apache.spark.sql.Row(fl, b(fl)._1, b(fl)._2)): _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("mn", LongType),
-        org.apache.spark.sql.types.StructField("mx", LongType))))
-    val matched = src.select(col(keyCol).cast(LongType).as("k"))
-      .join(broadcast(ranges), col("k") >= col("mn") && col("k") <= col("mx"))
-      .select(col("file")).distinct()
-      .collect().map(_.getString(0)).toSet   // O(#files) driver metadata
-    val noStatsSet = noStats.toSet          // Seq.contains would be O(F²)
-    val touched = state.map(_._1).filter(fl =>
-      matched.contains(fl) || noStatsSet.contains(fl))
-    (touched, smallSrc)
+  /** Unknown SET names refuse loudly — `set.get(c)` against the
+    * joined frame would otherwise silently no-op a misspelled or
+    * alias-qualified assignment (the lost update nobody notices). */
+  private def requireSetColumns(s: SparkSession, root: String,
+      set: Map[String, Column], verb: String): Unit = {
+    val cols = tableSchema(s, root).map(_.fieldNames.toSeq)
+      .getOrElse(snapshot(s, root).columns.toSeq).toSet
+    val unknown = set.keySet -- cols
+    require(unknown.isEmpty,
+      s"$verb: SET names unknown target column(s) ${unknown.mkString(", ")}")
   }
 
   /** MERGE, conditional-update form (Delta parity:
     * `WHEN MATCHED AND <cond> THEN UPDATE SET c = expr, ...` +
-    * optional `WHEN NOT MATCHED THEN INSERT *`):
+    * optional `WHEN NOT MATCHED THEN INSERT *`) — [[mergeInto]]
+    * without a BY SOURCE clause:
     *
     *  - Target rows join the source by `keyCol`; inside `cond` and the
     *    `set` expressions, target columns appear under their own names
@@ -2220,171 +2166,128 @@ object TableLog {
     *    when `insertUnmatched` (aligned by name), else dropped.
     *
     * File selection, rewrite confinement, and the broadcast-vs-shuffle
-    * source threshold are identical to [[merge]] ([[mergeTouched]]);
-    * matched keys can only live in touched files (stats-exact
-    * selection), so the unmatched-insert anti-join needs only the
-    * touched files' keys. One atomic commit; returns the version. */
-  /** Unknown SET names refuse loudly — `set.get(c)` against the
-    * joined frame would otherwise silently no-op a misspelled or
-    * alias-qualified assignment (the lost update nobody notices). */
-  private def requireSetColumns(s: SparkSession, root: String,
-      set: Map[String, Column]): Unit = {
-    val cols = tableSchema(s, root).map(_.fieldNames.toSeq)
-      .getOrElse(snapshot(s, root).columns.toSeq).toSet
-    val unknown = set.keySet -- cols
-    require(unknown.isEmpty,
-      s"merge: SET names unknown target column(s) ${unknown.mkString(", ")}")
-  }
-
+    * source threshold are identical to [[merge]] ([[mergeFront]]).
+    * One atomic commit; returns the version. */
   def mergeUpdate(s: SparkSession, root: String, source: DataFrame,
       keyCol: String, cond: Column, set: Map[String, Column],
-      insertUnmatched: Boolean = true, statsCols: Seq[String] = Nil): Int = {
-    import org.apache.spark.sql.functions.broadcast
-    requireSetColumns(s, root, set)
-    val src = source.cache()
-    try {
-      val (touched, smallSrc) = mergeTouched(s, root, src, keyCol)
-      val dv0 = dvState(s, root, -1)
-      val srcPref = src.columns.foldLeft(src)((d, c) =>
-        d.withColumnRenamed(c, s"src_$c"))
-      def maybeBcast(df: DataFrame) = if (smallSrc) broadcast(df) else df
-      val (kept, cdc) =
-        if (touched.isEmpty) {
-          // no file can contain a matched key (stats-exact selection),
-          // so EVERY source row is unmatched: insert them all (or none)
-          val ins = if (insertUnmatched) src else src.limit(0)
-          (ins, if (!cdfEnabled(s)) None
-            else Some(ins.withColumn(ChangeTypeCol, lit("insert"))))
-        } else {
-          val tgt = readAligned(s, root, touched, -1, dv0)
-          // the clause flag is materialized BEFORE any SET applies:
-          // a condition referencing a SET column must see the TARGET
-          // value, not the half-updated frame (and every SET column
-          // must see the same verdict)
-          val joined = tgt.join(maybeBcast(srcPref),
-            tgt(keyCol) === srcPref(s"src_$keyCol"), "left")
-            .withColumn("__hit", col(s"src_$keyCol").isNotNull && cond)
-          val hit = col("__hit")
-          // one projection: every SET right-hand side evaluates
-          // against the row PREIMAGE (chained withColumn would feed
-          // later assignments already-updated values)
-          val updated = joined.select(joined.columns.toSeq.map { c =>
-            set.get(c) match {
-              case Some(e) => when(hit, e).otherwise(col(c)).as(c)
-              case None => col(c)
-            }
-          }: _*)
-          // right side here is the TARGET keys (not the source), so
-          // the smallSrc guard doesn't apply — leave the strategy to
-          // AQE, which sizes the touched-file key set at runtime
-          val tgtCols = tgt.columns.map(col).toSeq
-          // no-INSERT merges take an empty TARGET-schema frame: the
-          // source may legitimately be narrower than the target (an
-          // update-only merge), and src.limit(0) would poison the
-          // union with the source's schema
-          val inserts =
-            if (!insertUnmatched) tgt.select(tgtCols: _*).limit(0)
-            else src.join(tgt.select(col(keyCol)), Seq(keyCol), "left_anti")
-          // CDF: only predicate-passing matches are updates — rows the
-          // condition leaves untouched are NOT changes; preimages come
-          // from the joined frame pre-SET, postimages post-SET
-          val changes = if (!cdfEnabled(s)) None else Some(
-            joined.filter(hit).select(tgtCols: _*)
-              .withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(updated.filter(hit).select(tgtCols: _*)
-                .withColumn(ChangeTypeCol, lit("update_postimage")))
-              .unionByName(inserts.withColumn(ChangeTypeCol, lit("insert"))))
-          (updated.select(tgtCols: _*).unionByName(inserts), changes)
-        }
-      // sidecar + data rewrite overlap: independent outputs (par2)
-      val ((sub, files), cdcRes) = par2(
-        writeData(s, root, kept),
-        cdc.flatMap(writeCdc(s, root, _)))
-      publishOrClean(s, root, sub +: cdcRes.toSeq) {
-        publish(s, root, files, touched, writeStats(s, root, sub, statsCols),
-          cdc = cdcRes, expectDvs = Some(dv0))
-      }
-    } finally src.unpersist()
-  }
+      insertUnmatched: Boolean = true, statsCols: Seq[String] = Nil): Int =
+    mergeInto(s, root, source, keyCol, cond, set, None, insertUnmatched,
+      statsCols)
 
   /** MERGE, full three-clause form (Delta >= 2.4 parity) — adds
     * `WHEN NOT MATCHED BY SOURCE [AND <bySourceCond>] THEN DELETE`
     * to [[mergeUpdate]]'s matched-update + unmatched-insert clauses:
     * target rows whose key appears in NO source row and that satisfy
     * `bySourceCond` (target columns only) are deleted; everything
-    * else follows [[mergeUpdate]] exactly.
-    *
-    * File selection is where this clause differs fundamentally:
-    * "key NOT IN source" is true of almost every row of almost every
-    * file, so per-file stats CANNOT prune — the rewrite must touch
-    * EVERY live file (Delta pays the same; its docs call the clause
-    * out as a full-table operation). That cost is the honest
-    * semantics; the stats-exact confinement of [[merge]]/
-    * [[mergeUpdate]] remains the right tool when the clause isn't
-    * needed. One atomic commit; returns the version. */
+    * else follows [[mergeUpdate]] exactly. One atomic commit; returns
+    * the version. */
   def mergeFull(s: SparkSession, root: String, source: DataFrame,
       keyCol: String, cond: Column, set: Map[String, Column],
       bySourceCond: Column, insertUnmatched: Boolean = true,
-      statsCols: Seq[String] = Nil): Int = {
-    import org.apache.spark.sql.functions.broadcast
-    requireSetColumns(s, root, set)
+      statsCols: Seq[String] = Nil): Int =
+    mergeInto(s, root, source, keyCol, cond, set, Some(bySourceCond),
+      insertUnmatched, statsCols)
+
+  /** The one MERGE body behind [[mergeUpdate]], [[mergeFull]] and SQL
+    * MERGE: matched rows passing `cond` get `set`, unmatched source
+    * rows insert when `insertUnmatched`, and with `bySource` target
+    * rows whose key is in no source row and that satisfy it are
+    * deleted.
+    *
+    * File selection is where BY SOURCE differs fundamentally: "key NOT
+    * IN source" is true of almost every row of almost every file, so
+    * per-file stats CANNOT prune — the rewrite touches EVERY live file
+    * (Delta pays the same; its docs call the clause out as a
+    * full-table operation). Without it, files are picked by stats
+    * ([[mergeFront]]): matched keys can only live in touched files,
+    * so the unmatched-insert anti-join needs only the touched files'
+    * keys, and with no file touched every source row is an insert. */
+  private[graft] def mergeInto(s: SparkSession, root: String,
+      source: DataFrame, keyCol: String, cond: Column,
+      set: Map[String, Column], bySource: Option[Column],
+      insertUnmatched: Boolean, statsCols: Seq[String]): Int = {
+    requireSetColumns(s, root, set, "merge")
+    val st = tableState(s, root)
     val src = source.cache()
     try {
-      val smallSrc = mergeSrcGuard(s, src, keyCol)
-      val touched = liveFiles(s, root, -1) // BY SOURCE can hit any file
-      val dv0 = dvState(s, root, -1)
-      val srcPref = src.columns.foldLeft(src)((d, c) =>
-        d.withColumnRenamed(c, s"src_$c"))
-      def maybeBcast(df: DataFrame) = if (smallSrc) broadcast(df) else df
-      val tgt = readAligned(s, root, touched, -1, dv0)
-      // clause flags materialize BEFORE any SET applies — conditions
-      // must see TARGET values, not the half-updated frame
-      val joined = tgt.join(maybeBcast(srcPref),
-        tgt(keyCol) === srcPref(s"src_$keyCol"), "left")
-        .withColumn("__hit", col(s"src_$keyCol").isNotNull && cond)
-        // SQL MERGE deletes only on a definitive TRUE: a NULL
-        // bySourceCond row is kept (filter(!NULL) would silently drop
-        // it AND omit it from the CDF — the deleteRange NULL contract)
-        .withColumn("__doomed",
-          coalesce(col(s"src_$keyCol").isNull && bySourceCond, lit(false)))
-      val hit = col("__hit")
-      val doomed = col("__doomed")
-      // one projection — preimage semantics for every SET RHS (see
-      // [[update]])
-      val updated = joined.select(joined.columns.toSeq.map { c =>
-        set.get(c) match {
-          case Some(e) => when(hit, e).otherwise(col(c)).as(c)
-          case None => col(c)
+      val (touched, smallSrc) =
+        mergeFront(s, root, st, src, keyCol, prune = bySource.isEmpty)
+      val (kept, changes) =
+        if (touched.isEmpty) {
+          val ins = if (insertUnmatched) src else src.limit(0)
+          (ins, () => ins.withColumn(ChangeTypeCol, lit("insert")))
+        } else {
+          val tgt = readAligned(s, root, touched, -1, st.dvs)
+          val srcPref = src.columns.foldLeft(src)((d, c) =>
+            d.withColumnRenamed(c, s"src_$c"))
+          // clause flags materialize BEFORE any SET applies: a condition
+          // referencing a SET column must see the TARGET value, not the
+          // half-updated frame (and every SET column the same verdict).
+          // SQL MERGE deletes only on a definitive TRUE: a NULL BY
+          // SOURCE condition keeps its row (filter(!NULL) would silently
+          // drop it AND omit it from the CDF — the deleteRange NULL
+          // contract). Without the clause `__doomed` folds to false and
+          // the optimizer drops its filter and its CDF branch.
+          val joined = tgt.join(if (smallSrc) broadcast(srcPref) else srcPref,
+            tgt(keyCol) === srcPref(s"src_$keyCol"), "left")
+            .withColumn("__hit", col(s"src_$keyCol").isNotNull && cond)
+            .withColumn("__doomed", coalesce(col(s"src_$keyCol").isNull &&
+              bySource.getOrElse(lit(false)), lit(false)))
+          val hit = col("__hit")
+          val doomed = col("__doomed")
+          val updated = applySet(joined, set, hit)
+          val tgtCols = tgt.columns.map(col).toSeq
+          // right side here is the TARGET keys (not the source), so
+          // the smallSrc guard doesn't apply — leave the strategy to
+          // AQE. No-INSERT merges take an empty TARGET-schema frame:
+          // the source may legitimately be narrower than the target
+          // (an update-only merge)
+          val inserts =
+            if (!insertUnmatched) tgt.select(tgtCols: _*).limit(0)
+            else src.join(tgt.select(col(keyCol)), Seq(keyCol), "left_anti")
+          // CDF: only condition-passing matches are updates — rows the
+          // condition leaves untouched are NOT changes
+          (updated.filter(!doomed).select(tgtCols: _*).unionByName(inserts),
+            () => updateImages(joined, updated, hit, tgtCols)
+              .unionByName(joined.filter(doomed).select(tgtCols: _*)
+                .withColumn(ChangeTypeCol, lit("delete")))
+              .unionByName(inserts.withColumn(ChangeTypeCol, lit("insert"))))
         }
-      }: _*)
-      val tgtCols = tgt.columns.map(col).toSeq
-      // no-INSERT merges take an empty TARGET-schema frame (an
-      // update-only merge's source may be narrower than the target)
-      val inserts =
-        if (!insertUnmatched) tgt.select(tgtCols: _*).limit(0)
-        else src.join(tgt.select(col(keyCol)), Seq(keyCol), "left_anti")
-      val kept = updated.filter(!doomed).select(tgtCols: _*)
-        .unionByName(inserts)
-      val changes = if (!cdfEnabled(s)) None else Some(
-        joined.filter(hit).select(tgtCols: _*)
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(updated.filter(hit).select(tgtCols: _*)
-            .withColumn(ChangeTypeCol, lit("update_postimage")))
-          .unionByName(joined.filter(doomed).select(tgtCols: _*)
-            .withColumn(ChangeTypeCol, lit("delete")))
-          .unionByName(inserts.withColumn(ChangeTypeCol, lit("insert"))))
-      // sidecar + data rewrite overlap: independent outputs (par2).
-      // A row-deleting commit without capture must record the empty
-      // sentinel so feeds refuse instead of mistaking it for an
-      // ordinary merge (same contract as deleteRange).
-      val ((sub, files), cdc) = par2(
-        writeData(s, root, kept),
-        changes.flatMap(writeCdc(s, root, _)).orElse(Some("")))
-      publishOrClean(s, root, sub +: cdc.toSeq) {
-        publish(s, root, files, touched, writeStats(s, root, sub, statsCols),
-          cdc = cdc, expectDvs = Some(dv0))
-      }
+      commitMutation(s, root, st, touched, sentinel = bySource.isDefined,
+        statsCols = statsCols, changes = changes())(
+        writeData(s, root, kept))
     } finally src.unpersist()
+  }
+
+  /** The one commit tail of every row mutation: the data leg `write`
+    * (returning its fresh subdir and the files it added) overlaps the
+    * CDC sidecar write (par2); the stats sidecar follows the data;
+    * the entry publishes removing `remove`, CAS-revalidated against
+    * the DV state the mutation read (and, with `expectFiles`, the live
+    * set); a refused publish deletes every fresh directory.
+    * `changes` is evaluated only with capture on — an empty frame
+    * still writes a schema-bearing file, so "captured but no rows"
+    * reads back as zero changes, distinct from "not captured" — and
+    * `sentinel` records the empty CDC marker with capture off (the
+    * rule is in the change-data-feed section). Returns the committed
+    * version. */
+  private def commitMutation(s: SparkSession, root: String, st: TableState,
+      remove: Seq[String], changes: => DataFrame, sentinel: Boolean,
+      statsCols: Seq[String] = Nil, dataChange: Boolean = true,
+      dvs: Option[Seq[String]] = None,
+      expectFiles: Option[Set[String]] = None)(
+      write: => (String, Seq[String])): Int = {
+    val ((sub, adds), cdc) = par2(write,
+      if (cdfEnabled(s)) {
+        val dir = s"data/${UUID.randomUUID()}-cdc"
+        changes.write.parquet(s"$root/$dir")
+        Some(dir)
+      } else if (sentinel) Some("") else None)
+    publishOrClean(s, root, sub +: cdc.toSeq) {
+      publish(s, root, adds, remove, writeStats(s, root, sub, statsCols),
+        dataChange = dataChange, cdc = cdc, dvs = dvs,
+        expectFiles = expectFiles, expectDvs = Some(st.dvs))
+    }
   }
 
   /** Replace the live set with whatever `write` produces into the
@@ -2414,12 +2317,8 @@ object TableLog {
     val old = base.getOrElse(liveFiles(s, root, -1))
     val sub = s"data/${UUID.randomUUID()}"
     write(s"$root/$sub")
-    val f = fs(s, root)
-    val files = f.listStatus(new Path(s"$root/$sub"))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .sorted.map(n => s"$sub/$n").toSeq
     publishOrClean(s, root, Seq(sub)) {
-      publish(s, root, files, old, writeStats(s, root, sub, statsCols),
+      publish(s, root, subFiles(s, root, sub), old, writeStats(s, root, sub, statsCols),
         dataChange = false, dvs = Some(Seq.empty), expectDvs = Some(dv0))
     }
   }
@@ -2435,9 +2334,8 @@ object TableLog {
     * retryable). */
   def pinSnapshot(s: SparkSession, root: String)
       : (Seq[String], Seq[String], DataFrame) = {
-    val dv0 = dvState(s, root, -1)
-    val old = liveFiles(s, root, -1)
-    (old, dv0, readAligned(s, root, old, -1, dv0))
+    val st = tableState(s, root)
+    (st.files, st.dvs, readAligned(s, root, st.files, -1, st.dvs))
   }
 
   /** Rewrite the live set into `numFiles` files and publish the swap
@@ -2462,21 +2360,19 @@ object TableLog {
     * committed version. */
   def restore(s: SparkSession, root: String, version: Int): Int = {
     val f = fs(s, root)
-    val then_ = liveFiles(s, root, version)
-    then_.foreach(rel => require(f.exists(new Path(abs(root, rel))),
+    val then_ = replay(s, root, version)._1
+    then_.files.foreach(rel => require(f.exists(new Path(abs(root, rel))),
       s"restore: $rel was vacuumed; version $version is not restorable"))
     // the deletion-vector state restores with the file set — a restore
     // across a deleteVector resurrects its rows, a restore across a
     // materializing compact re-applies the then-active vectors
-    val thenDvs = dvState(s, root, version)
-    thenDvs.foreach(d => require(f.exists(new Path(abs(root, d))),
+    then_.dvs.foreach(d => require(f.exists(new Path(abs(root, d))),
       s"restore: deletion vector $d was vacuumed; " +
         s"version $version is not restorable"))
     val now = liveFiles(s, root, -1)
-    val nowSet = now.toSet
-    val thenSet = then_.toSet
-    publish(s, root, then_.filterNot(nowSet), now.filterNot(thenSet),
-      dataChange = true, dvs = Some(thenDvs))
+    val thenSet = then_.files.toSet
+    publish(s, root, then_.files.filterNot(now.toSet), now.filterNot(thenSet),
+      dataChange = true, dvs = Some(then_.dvs))
   }
 
   /** Commit history as a DataFrame — `DESCRIBE HISTORY` parity:

@@ -464,4 +464,66 @@ class SessionSpec extends SparkSpec {
       .orderBy("id").as[(Int, String)].collect().toSeq
     assert(snap == Seq((10, "r"), (11, "r")), s"got $snap")
   }
+
+  /** A table of two range-disjoint files with key stats: ids [0,49]
+    * and [100,149]; returns (root, live files). */
+  private def disjointTable(): (String, Set[String]) = {
+    val sp = spark; import sp.implicits._
+    import graft.sources.TableLog
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_sqlmerge").toString + "/t"
+    def rows(from: Int, until: Int) =
+      (from until until).map(i => (i.toLong, s"row$i")).toDF("id", "s")
+    TableLog.append(spark, root, rows(0, 50).repartition(1), Seq("id"))
+    TableLog.append(spark, root, rows(100, 150).repartition(1), Seq("id"))
+    (root, live(root))
+  }
+
+  private def live(root: String): Set[String] =
+    graft.sources.TableLog.replayState(spark, root, -1,
+      useCheckpoint = false)._1.map(_._1).toSet
+
+  test("lakehouse SQL: MERGE without BY SOURCE rewrites only the files " +
+      "whose key stats admit a match; with it, every file") {
+    val (root, before) = disjointTable()
+    val session = Session(spark)
+    def merge(bySource: String): Unit = session.sql(
+      s"MERGE INTO graft_log('$root') AS t " +
+        "USING (SELECT * FROM (VALUES (10L, 'u10'), (500L, 'i500')) " +
+        "AS v(id, s)) AS s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET s = s.s " +
+        s"WHEN NOT MATCHED THEN INSERT * $bySource STATS (id)")
+    merge("")
+    val afterPruned = live(root)
+    assert((before & afterPruned).size == 1,
+      s"the [100,149] file must keep its identity: $before -> $afterPruned")
+    merge("WHEN NOT MATCHED BY SOURCE AND t.id < 0 THEN DELETE")
+    assert((afterPruned & live(root)).isEmpty,
+      "a BY SOURCE clause must rewrite every live file")
+    val got = graft.sources.TableLog.snapshot(spark, root)
+      .filter(col("id").isin(10L, 30L, 120L, 500L))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == Map(10L -> "u10", 30L -> "row30", 120L -> "row120",
+      500L -> "i500"), s"got $got")
+    assert(graft.sources.TableLog.snapshot(spark, root).count() == 101)
+  }
+
+  test("lakehouse SQL: an insert-only MERGE with change capture off " +
+      "reads back from tableChanges as its inserts") {
+    val (root, before) = disjointTable()
+    assert(spark.conf.getOption("spark.graft.tablelog.cdf")
+      .forall(!_.toBoolean), "capture must be off for this case")
+    val v = Session(spark).sql(
+      s"MERGE INTO graft_log('$root') AS t " +
+        "USING (SELECT * FROM (VALUES (1000L, 'a'), (1001L, 'b')) " +
+        "AS v(id, s)) AS s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET s = s.s " +
+        "WHEN NOT MATCHED THEN INSERT * STATS (id)")
+      .head().getInt(0)
+    val feed = graft.sources.TableLog.tableChanges(spark, root, v - 1)
+      .select("id", graft.sources.TableLog.ChangeTypeCol)
+      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(feed == Seq((1000L, "insert"), (1001L, "insert")), s"got $feed")
+    assert(before.subsetOf(live(root)), "an insert-only MERGE removed files")
+  }
 }

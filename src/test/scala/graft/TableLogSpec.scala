@@ -1843,4 +1843,36 @@ class TableLogSpec extends SparkSpec {
     assert(alive.count() == 80)
     assert(alive.filter(col("id") % 10 === 3 || col("id") % 10 === 4).isEmpty)
   }
+
+  test("merge on a target holding a key twice replaces both rows with " +
+      "the one source row") {
+    val sp = spark; import sp.implicits._
+    val root = freshRoot()
+    TableLog.append(spark, root,
+      Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("id", "s").repartition(1),
+      Seq("id"))
+    TableLog.merge(spark, root, Seq((1L, "new"), (3L, "ins")).toDF("id", "s"),
+      "id", Seq("id"))
+    val got = TableLog.snapshot(spark, root).as[(Long, String)]
+      .collect().sorted.toSeq
+    assert(got == Seq((1L, "new"), (2L, "c"), (3L, "ins")), s"got $got")
+  }
+
+  test("no footer-stats pool thread outlives a commit, on the footer " +
+      "path and on the scan fallback") {
+    import scala.jdk.CollectionConverters._
+    def poolThreads(): Seq[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName == "graft-footerStats" && t.isAlive).toSeq
+    val root = freshRoot()
+    val df = nums(0, 40).repartition(4)
+    // 4 files: the footer reads run on the pool
+    TableLog.append(spark, root, df, statsCols = Seq("id"))
+    assert(poolThreads().isEmpty, "pool thread alive after a footer commit")
+    assert(TableLog.readRange(spark, root, "id", 5L, 5L).count() == 1)
+    // a STRING stats column has no usable integer footer stats: every
+    // pool read throws and the commit falls back to the scan
+    TableLog.append(spark, root, df, statsCols = Seq("s"))
+    assert(poolThreads().isEmpty, "pool thread alive after the fallback")
+    assert(TableLog.snapshot(spark, root).count() == 80)
+  }
 }
