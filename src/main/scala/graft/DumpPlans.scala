@@ -71,7 +71,29 @@ object DumpPlans {
     "tensor_ipc", "sparse_tensor_ipc", "ipc_dict_delta", "ipc_dict_dsv2")
 
   private def formatted(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    stable(df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
+
+  private val ExprId = "#(\\d+)".r
+  private val Masks = Seq(
+    "plan_id=\\d+".r -> "plan_id=*",
+    "graft_egress/p\\d+".r -> "graft_egress/p<pid>",
+    "\\$\\$Lambda[$/\\w]*@[0-9a-f]+".r -> "$$Lambda",
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r -> "<uuid>")
+
+  /** `plan` with everything that differs between two runs of one plan
+    * taken out: expression ids renumbered in order of first appearance
+    * (`#1`, `#2`, …), exchange `plan_id`s, the egress dir's pid, lambda
+    * class names and UUIDs masked — so a regenerated PLANS.md differs
+    * only where a plan changed shape. */
+  private def stable(plan: String): String = {
+    val ids = scala.collection.mutable.Map.empty[String, Int]
+    Masks.foldLeft(ExprId.replaceAllIn(plan,
+      m => "#" + ids.getOrElseUpdate(m.group(1), ids.size + 1))) {
+      case (txt, (re, mask)) => re.replaceAllIn(txt,
+        scala.util.matching.Regex.quoteReplacement(mask))
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")) match {
@@ -104,7 +126,9 @@ object DumpPlans {
     sb.append("`PushedFilters`/`ReadSchema` on scans (pushdown + pruning), ")
     sb.append("`BroadcastHashJoin` on dims vs `Exchange hashpartitioning` ")
     sb.append("on facts, `partial_`/final aggregate pairs, and codegen ")
-    sb.append("stage ids (`[codegen id : n]`).\n")
+    sb.append("stage ids (`[codegen id : n]`). Expression ids are ")
+    sb.append("renumbered per plan and run-specific ids (`plan_id`, pid, ")
+    sb.append("UUIDs, lambda classes) masked, so a rerun changes nothing.\n")
     for (name <- headline) {
       sb.append(s"\n## $name\n\n```\n")
       sb.append(formatted(SparkEntry.queries(name)(spark, sfDir)))

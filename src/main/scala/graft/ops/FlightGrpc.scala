@@ -1020,25 +1020,9 @@ object FlightGrpc {
   def doGetParallel(host: String, port: Int, ticket: String,
       maxParallel: Int = 8, token: String = ""): (Seq[Row], StructType) = {
     val (schema, endpoints) = getFlightInfo(host, port, ticket, token)
-    if (endpoints.isEmpty) return (Seq.empty, schema)
-    val out = new Array[Seq[Row]](endpoints.size)
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val queue = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
-    endpoints.indices.foreach(i => queue.add(i))
-    val workers = (0 until math.min(maxParallel, endpoints.size)).map { _ =>
-      val t = new Thread(() => {
-        var i = queue.poll()
-        while (i != null && err.get() == null) {
-          try out(i) = doGet(host, port, endpoints(i), token)._1
-          catch { case e: Throwable => err.compareAndSet(null, e) }
-          i = queue.poll()
-        }
-      })
-      t.setDaemon(true); t.start(); t
-    }
-    workers.foreach(_.join())
-    if (err.get() != null) throw err.get()
-    (out.toSeq.flatten, schema)
+    val parts = inParallel(maxParallel, "graft-doGetParallel")(
+      endpoints.map(e => () => doGet(host, port, e, token)._1))
+    (parts.flatten, schema)
   }
 
   // ---- oracle-checked query -----------------------------------------------

@@ -37,22 +37,35 @@ package object ops {
     * with disjoint outputs and no ordering contract; failures
     * propagate with the original cause. */
   def inParallel(actions: (() => Unit)*): Unit = {
-    if (actions.lengthCompare(1) <= 0) { actions.foreach(_()); return }
+    inParallel(actions.length, "graft-inParallel")(actions); ()
+  }
+
+  /** Run `legs` with at most `width` of them at once and return their
+    * results in leg order. The first leg runs on the caller thread (so
+    * it keeps the caller's thread-locals); the others run on `width - 1`
+    * daemon threads named `threadName`, and the caller, once its own
+    * leg is done, runs any leg no pool thread has started yet. The
+    * first failure in leg order is rethrown with its original cause,
+    * after the other legs are interrupted and awaited: no pool thread
+    * outlives the call. */
+  def inParallel[A](width: Int, threadName: String)(legs: Seq[() => A]): Seq[A] = {
+    if (width <= 1 || legs.lengthCompare(1) <= 0) return legs.map(_())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      actions.length - 1, { (r: Runnable) =>
-        val t = new Thread(r, "graft-inParallel"); t.setDaemon(true); t })
+      math.min(width, legs.length) - 1, { (r: Runnable) =>
+        val t = new Thread(r, threadName); t.setDaemon(true); t })
     try {
-      val futs = actions.tail.map(a =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = a()
-        }))
-      actions.head()
-      futs.foreach(f => try f.get() catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      })
+      val tasks = legs.tail.toVector.map(leg =>
+        new java.util.concurrent.FutureTask[A](() => leg()))
+      tasks.foreach(pool.execute)
+      val first = legs.head()
+      // run() is a no-op on a task a pool thread already started
+      first +: tasks.map { t =>
+        t.run()
+        try t.get() catch {
+          case e: java.util.concurrent.ExecutionException => throw e.getCause
+        }
+      }
     } finally {
-      // a failed leg interrupts its siblings and waits for them: no
-      // pool thread outlives the call
       pool.shutdownNow()
       pool.awaitTermination(Long.MaxValue,
         java.util.concurrent.TimeUnit.NANOSECONDS)

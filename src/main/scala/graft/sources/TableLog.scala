@@ -354,7 +354,7 @@ object TableLog {
   // analogue). Every `checkpointInterval` commits the PUBLISHING
   // writer also materializes the full live state as one TSV
   // (`_log/ckpt-v%05d.tsv`, "relpath<TAB>statsRel" per line, in
-  // insertion order); liveState then loads the newest checkpoint at
+  // insertion order); [[replay]] then loads the newest checkpoint at
   // or below the requested version and replays only the JSON suffix.
   // Checkpoints are pure caches: best-effort to write (a loser of the
   // create race just skips), safe to delete, and never consulted for
@@ -387,7 +387,7 @@ object TableLog {
   /** Sentinel last line of a checkpoint: a reader that finds it knows
     * the file was completely written (create+write+close in place
     * would expose an empty or torn prefix to a concurrent
-    * [[replayState]], silently dropping every file <= the checkpoint
+    * [[replay]], silently dropping every file <= the checkpoint
     * version from the live set). Belt: the tmp+rename below makes the
     * file appear atomically, same CAS protocol as [[publish]].
     * Suspenders: a checkpoint missing the sentinel (pre-sentinel
@@ -397,17 +397,15 @@ object TableLog {
   private val CkptEnd = "#end"
 
   private def writeCheckpoint(s: SparkSession, root: String, v: Int): Unit = {
-    val (state, _, _) = replay(s, root, v)
-    // txn watermarks ride the checkpoint too ("#txn\tapp\tversion"
-    // lines), so lastTxnVersion — the exactly-once ingestion check run
-    // on EVERY appendIdempotent — replays O(interval) JSON entries,
-    // not O(#commits)
-    val txns = state.txns.toSeq.sortBy(_._1)
+    val st = state(s, root, v)
+    // txn watermarks and active deletion vectors ride the checkpoint
+    // too ("#txn\tapp\tversion", "#dv\t<dir>"), so every [[state]]
+    // replays O(interval) JSON entries, not O(#commits); the schema
+    // does not ride — [[replay]] finds it in the entries
+    val txns = st.txns.toSeq.sortBy(_._1)
       .map { case (a, tv) => s"#txn\t$a\t$tv" }
-    // active deletion vectors ride too ("#dv\t<dir>"), so dvState —
-    // consulted by every snapshot — replays O(interval), not O(#commits)
-    val dvLines = state.dvs.map(d => s"#dv\t$d")
-    val body = (state.live.map { case (p, st) => s"$p\t${st.getOrElse("")}" } ++
+    val dvLines = st.dvs.map(d => s"#dv\t$d")
+    val body = (st.live.map { case (p, stats) => s"$p\t${stats.getOrElse("")}" } ++
       txns ++ dvLines :+ CkptEnd).mkString("", "\n", "\n")
     val f = fs(s, root)
     try {
@@ -447,30 +445,25 @@ object TableLog {
 
   /** The table as of one replayed `version`: the live file set
     * (relative paths, insertion-ordered) with the stats sidecar of the
-    * commit that added each file, the active deletion vectors, and the
-    * per-app transaction watermarks. A mutation resolves it ONCE
-    * ([[tableState]]) and derives its remove set and `expectDvs` from
-    * it, so both come from the same version. */
-  private final case class TableState(version: Int,
+    * commit that added each file, the active deletion vectors, the
+    * per-app transaction watermarks and the declared schema (None for
+    * logs written before schema recording). Every operation resolves
+    * it once per version it needs ([[state]]) and takes files,
+    * vectors and schema from that one value, so they always belong to
+    * the same version. */
+  private[graft] final case class TableState(version: Int,
       live: Seq[(String, Option[String])], dvs: Seq[String],
-      txns: Map[String, Long]) {
+      txns: Map[String, Long],
+      schema: Option[org.apache.spark.sql.types.StructType]) {
     def files: Seq[String] = live.map(_._1)
   }
 
-  /** Live files with their stats, as of `version` (-1 = latest). */
-  private def liveState(s: SparkSession, root: String,
-      version: Int): Seq[(String, Option[String])] =
-    replay(s, root, version)._1.live
-
-  /** The head state a mutation computes against. */
-  private def tableState(s: SparkSession, root: String): TableState =
-    replay(s, root, -1)._1
-
-  /** Per-app transaction watermarks as of `version` (-1 = latest);
-    * empty when no version is at or below it. */
-  private[graft] def txnState(s: SparkSession, root: String,
-      version: Int): Map[String, Long] =
-    replay(s, root, version, strict = false)._1.txns
+  /** The table as of `version` (-1 = latest), from one [[replay]].
+    * With no version at or below `version`, `strict` refuses and
+    * otherwise the state is empty (version -1). */
+  private[graft] def state(s: SparkSession, root: String, version: Int,
+      strict: Boolean = true): TableState =
+    replay(s, root, version, strict = strict)._1
 
   /** [[replay]]'s live set and read footprint (checkpoint used, #JSON
     * entries replayed), so TableLogSpec can pin the footprint. */
@@ -481,9 +474,12 @@ object TableLog {
   }
 
   /** Newest checkpoint at or below `version` (-1 = latest) plus a
-    * replay of only the JSON entries after it. With no version at or
-    * below `version`, `strict` refuses and otherwise the state is
-    * empty. */
+    * replay of only the JSON entries after it. The schema is the
+    * newest one those entries record; when none does, the walk goes on
+    * down the entries at or below the checkpoint (every data commit
+    * records one, so it stops at the first or second). With no
+    * version at or below `version`, `strict` refuses and otherwise the
+    * state is empty. */
   private def replay(s: SparkSession, root: String, version: Int,
       useCheckpoint: Boolean = true,
       strict: Boolean = true): (TableState, Option[Int], Int) = {
@@ -493,11 +489,12 @@ object TableLog {
     if (upto.isEmpty) {
       require(!strict, if (vs.isEmpty) s"TableLog at $root has no commits"
         else s"no committed version <= $version at $root")
-      return (TableState(-1, Nil, Nil, Map.empty), None, 0)
+      return (TableState(-1, Nil, Nil, Map.empty, None), None, 0)
     }
     val live = mutable.LinkedHashMap.empty[String, Option[String]]
     val txns = mutable.Map.empty[String, Long]
     var dvs: Seq[String] = Seq.empty
+    var schemaEntry: Option[String] = None  // newest tail entry with one
     // a checkpoint that doesn't parse (torn write, pre-sentinel format)
     // is treated as ABSENT — fall back to full JSON replay rather than
     // trust a prefix that would silently drop live files
@@ -511,7 +508,7 @@ object TableLog {
       txns ++= ckptTxns
       dvs = ckptDvs
     }
-    val tail = upto.filter(v => base.forall(_._1 < v))
+    val (below, tail) = upto.partition(v => base.exists(_._1 >= v))
     tail.foreach { v =>
       val json = readText(f, logPath(root, v))
       val st = parseStats(json)
@@ -522,19 +519,14 @@ object TableLog {
       parseTxn(json).foreach { case (a, tv) =>
         if (txns.get(a).forall(_ < tv)) txns(a) = tv
       }
+      if (json.contains("\"schema\":")) schemaEntry = Some(json)
     }
-    (TableState(upto.last, live.toSeq, dvs, txns.toMap), base.map(_._1),
-      tail.size)
+    val schema = schemaEntry.flatMap(parseSchema).orElse(below.reverseIterator
+      .map(v => parseSchema(readText(f, logPath(root, v))))
+      .collectFirst { case Some(sc) => sc })
+    (TableState(upto.last, live.toSeq, dvs, txns.toMap, schema),
+      base.map(_._1), tail.size)
   }
-
-  private def liveFiles(s: SparkSession, root: String, version: Int): Seq[String] =
-    liveState(s, root, version).map(_._1)
-
-  /** Active deletion-vector sidecar dirs as of `version` (-1 = latest);
-    * empty when no version is at or below it. */
-  private[graft] def dvState(s: SparkSession, root: String,
-      version: Int): Seq[String] =
-    replay(s, root, version, strict = false)._1.dvs
 
   /** File key shared by deletion vectors and `_metadata.file_path`:
     * the last three path components (`data/<uuid>/<part>.parquet`) —
@@ -593,18 +585,11 @@ object TableLog {
 
   /** The declared table schema as of `version` (-1 = latest): the
     * newest commit at or below `version` that recorded one. None for
-    * logs written before schema recording existed. O(#commits) JSON
-    * reads worst-case, but every data commit records a schema, so in
-    * practice the walk stops at the first or second entry. */
+    * logs written before schema recording existed, and for a version
+    * with no commit at or below it. */
   def tableSchema(s: SparkSession, root: String, version: Int = -1)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val f = fs(s, root)
-    val vs = versions(s, root)
-    val upTo = if (version < 0) vs else vs.filter(_ <= version)
-    upTo.reverseIterator
-      .map(v => parseSchema(readText(f, logPath(root, v))))
-      .collectFirst { case Some(sc) => sc }
-  }
+      : Option[org.apache.spark.sql.types.StructType] =
+    state(s, root, version, strict = false).schema
 
   // ---- CHECK constraints -------------------------------------------------
   // Delta's `ALTER TABLE ADD CONSTRAINT` parity: named boolean SQL
@@ -755,12 +740,19 @@ object TableLog {
     * layout rewrite that materializes DVs) re-validates, per attempt,
     * that the state is STILL exactly that — otherwise a delete landing
     * between a rewrite's read and its publish (or vice versa) would be
-    * silently lost. */
+    * silently lost.
+    *
+    * Each attempt resolves the head ONCE ([[state]]; the publish's
+    * [[LogCache]] keeps the log in memory) and every check — schema,
+    * remove set, expected files and vectors, txn watermark — as well
+    * as the recorded schema reads that one state, so they all see the
+    * same version: the one the attempt's slot follows. */
   private def publish(s: SparkSession, root: String, add: Seq[String],
       remove: Seq[String], statsFile: Option[String] = None,
       dataChange: Boolean = true, txn: Option[(String, Long)] = None,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
-      schemaNow: Option[() => org.apache.spark.sql.types.StructType] = None,
+      schemaNow: Option[org.apache.spark.sql.types.StructType =>
+        org.apache.spark.sql.types.StructType] = None,
       enforceSchema: Boolean = true, allowWiden: Boolean = false,
       cdc: Option[String] = None,
       check: Option[(String, String)] = None,
@@ -778,9 +770,10 @@ object TableLog {
     // widenColumn or rename landing between attempts must be folded
     // into THIS commit's recorded schema, or a racing narrow append
     // would regress the widening / drop the name mapping it never saw
-    def schemaRec(): Option[org.apache.spark.sql.types.StructType] =
+    def schemaRec(cur: Option[org.apache.spark.sql.types.StructType])
+        : Option[org.apache.spark.sql.types.StructType] =
       schema.map { next =>
-        tableSchema(s, root) match {
+        cur match {
           case None => next
           case Some(c) =>
             val curByName = c.fields.map(fl => fl.name -> fl).toMap
@@ -808,50 +801,46 @@ object TableLog {
     activeCache.set(cache)
     var attempts = 0
     try {
-    var attempt = versions(s, root).lastOption.getOrElse(-1) + 1
+    var attempt = -1
     while (true) {
       attempts += 1
+      val head = state(s, root, -1, strict = false)
+      attempt = math.max(attempt + 1, head.version + 1)
       // evolution commits (schemaNow) re-DERIVE their target schema
       // from the schema as of THIS attempt: a racing addColumn landing
       // between attempts must appear in this commit's record (a stale
       // pre-derived StructType would silently erase it), and a racing
-      // dropColumn must not be resurrected. The thunk's result is
+      // dropColumn must not be resurrected. The derivation's result is
       // authoritative — no fold — because it was computed FROM the
-      // current declared schema.
-      val schemaAttempt = schemaNow.map(fn => fn()).orElse(schema)
+      // attempt's declared schema.
+      val schemaAttempt = schemaNow.map(fn => fn(head.schema.get)).orElse(schema)
       // schema compatibility re-checked on EVERY attempt (CAS time):
       // a concurrent commit may have evolved the declared schema
       // between our check and our rename
       if (enforceSchema)
-        for (next <- schemaAttempt; cur <- tableSchema(s, root)) {
+        for (next <- schemaAttempt; cur <- head.schema) {
           val bad = schemaViolations(cur, next, allowWiden)
           if (bad.nonEmpty) throw new IllegalStateException(
             s"TableLog: incompatible schema change rejected: ${bad.mkString("; ")}")
         }
-      if (remove.nonEmpty) {
-        val live = liveFiles(s, root, -1).toSet
-        val gone = remove.filterNot(live)
-        if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-          "TableLog: commit would remove files a concurrent commit " +
-            s"already removed (rebase and retry): ${gone.take(3).mkString(", ")}")
-      }
-      expectFiles.foreach { exp =>
-        if (liveFiles(s, root, -1).toSet != exp)
-          throw new java.util.ConcurrentModificationException(
-            "TableLog: live file set changed under this commit " +
-              "(rebase and retry)")
-      }
-      expectDvs.foreach { exp =>
-        if (dvState(s, root, -1) != exp)
-          throw new java.util.ConcurrentModificationException(
-            "TableLog: deletion-vector state changed under this commit " +
-              "(rebase and retry)")
-      }
+      lazy val live = head.files.toSet
+      val gone = remove.filterNot(live)
+      if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
+        "TableLog: commit would remove files a concurrent commit " +
+          s"already removed (rebase and retry): ${gone.take(3).mkString(", ")}")
+      if (expectFiles.exists(_ != live))
+        throw new java.util.ConcurrentModificationException(
+          "TableLog: live file set changed under this commit " +
+            "(rebase and retry)")
+      if (expectDvs.exists(_ != head.dvs))
+        throw new java.util.ConcurrentModificationException(
+          "TableLog: deletion-vector state changed under this commit " +
+            "(rebase and retry)")
       // transactional idempotency re-checked on EVERY attempt: if a
       // concurrent writer committed the same (app, >=version) between
       // our check and our CAS, bow out instead of double-appending
       txn.foreach { case (app, v) =>
-        if (lastTxnVersion(s, root, app).exists(_ >= v))
+        if (head.txns.get(app).exists(_ >= v))
           throw new java.util.ConcurrentModificationException(
             s"TableLog: txn $app:$v already committed")
       }
@@ -861,7 +850,7 @@ object TableLog {
       // (sticky-wide + metadata carry, schemaRec); evolution commits
       // record the per-attempt derivation verbatim
       val schemaOut =
-        if (schemaNow.isDefined) schemaAttempt else schemaRec()
+        if (schemaNow.isDefined) schemaAttempt else schemaRec(head.schema)
       try out.write(
         render(attempt, add, remove, statsFile, dataChange, txn, schemaOut, cdc,
           check, uncheck, dvs).getBytes("UTF-8"))
@@ -874,8 +863,6 @@ object TableLog {
         return attempt
       }
       f.delete(tmp, false)            // lost the race: next version
-      attempt = math.max(attempt + 1,
-        versions(s, root).lastOption.getOrElse(-1) + 1)
     }
     -1 // unreachable
     } finally {
@@ -890,18 +877,17 @@ object TableLog {
     * sidecar write and its data rewrite share no outputs, so the
     * commit's wall is max(two jobs) instead of their sum — the next
     * job's tasks back-fill executors the first job's tail leaves
-    * idle. Runs on [[graft.ops.inParallel]]: `a` on the caller thread
-    * (`activeCache` is thread-local), `b` on the pool thread, and both
+    * idle. One call of [[graft.ops.inParallel]]: `a` on the caller
+    * thread (`activeCache` is thread-local), `b` beside it, and both
     * legs are awaited even when one throws.
     * Exceptions from either side propagate with their original cause;
     * the orphaned-dir contract is unchanged — a failure before publish
     * leaves at most the same unreferenced subdirs the sequential order
     * could. */
   private def par2[A, B](a: => A, b: => B): (A, B) = {
-    var ra: Option[A] = None
-    var rb: Option[B] = None
-    graft.ops.inParallel(() => ra = Some(a), () => rb = Some(b))
-    (ra.get, rb.get)
+    val Seq(Left(ra), Right(rb)) = graft.ops.inParallel(2, "graft-inParallel")(
+      Seq[() => Either[A, B]](() => Left(a), () => Right(b)))
+    (ra, rb)
   }
 
   /** Write `df` into a fresh per-commit subdir; returns (subdir,
@@ -956,11 +942,12 @@ object TableLog {
     val files = f.listStatus(new Path(s"$root/$sub"))
       .map(_.getPath).filter(_.getName.endsWith(".parquet"))
       .sortBy(_.getName)
-    // per-file footer reads are independent metadata I/O: a bounded
-    // pool keeps a many-file commit from serializing on the driver
+    // per-file footer reads are independent metadata I/O: up to 8 at
+    // once keep a many-file commit from serializing on the driver
     // (guide §5 — keep the driver thin; VERDICT r14 item 7). Output
     // keeps the deterministic (file-name-sorted, statsCols-ordered)
-    // line order the sidecar has always had.
+    // line order the sidecar has always had, and a failed read
+    // interrupts and awaits the others before the fallback below.
     def fileLines(p: Path): Seq[String] = {
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
       try {
@@ -1011,33 +998,10 @@ object TableLog {
         }
       } finally reader.close()
     }
-    try {
-      if (files.length <= 2) Some(files.toSeq.flatMap(fileLines))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, files.length), { (r: Runnable) =>
-            val t = new Thread(r, "graft-footerStats"); t.setDaemon(true); t })
-        try {
-          val futs = files.toSeq.map(p =>
-            pool.submit(new java.util.concurrent.Callable[Seq[String]] {
-              override def call(): Seq[String] = fileLines(p)
-            }))
-          // unwrap the pool's ExecutionException so the NonFatal
-          // fallback (and its log line) sees the real cause
-          Some(futs.flatMap(fut =>
-            try fut.get()
-            catch { case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause }))
-        } finally {
-          // a failed read interrupts the other reads and waits for
-          // them (the [[graft.ops.inParallel]] contract): no pool thread
-          // outlives the call, on the fallback path either
-          pool.shutdownNow()
-          pool.awaitTermination(Long.MaxValue,
-            java.util.concurrent.TimeUnit.NANOSECONDS)
-        }
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
+    try Some(graft.ops.inParallel(
+        if (files.length <= 2) 1 else math.min(8, files.length),
+        "graft-footerStats")(files.toSeq.map(p => () => fileLines(p))).flatten)
+    catch { case scala.util.control.NonFatal(e) =>
       // NonFatal only: an OOM/interrupt must propagate, and a
       // persistently-degraded footer path (every commit paying the
       // full-scan fallback) must be visible, not silent (ADVICE r14)
@@ -1076,11 +1040,17 @@ object TableLog {
         }
       }
     val rel = s"$sub/_stats.tsv"
-    val f = fs(s, root)
-    val out = f.create(new Path(s"$root/$rel"), false)
+    writeTsv(s, root, rel, lines)
+    Some(rel)
+  }
+
+  /** Write `lines` as the sidecar `rel` (relative to `root`), the
+    * format [[sidecarRows]] reads. */
+  private def writeTsv(s: SparkSession, root: String, rel: String,
+      lines: Seq[String]): Unit = {
+    val out = fs(s, root).create(new Path(s"$root/$rel"), false)
     try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
-    Some(rel)
   }
 
   /** Append `df` as a new commit; returns the committed version.
@@ -1102,9 +1072,9 @@ object TableLog {
   /** Highest committed transaction version for `app` (Delta's
     * `setTransaction`/`txnVersion` analogue) — the idempotency
     * watermark for [[appendIdempotent]]. Checkpoint-accelerated via
-    * [[txnState]]: O(checkpoint interval) JSON reads, not O(#commits). */
+    * [[state]]: O(checkpoint interval) JSON reads, not O(#commits). */
   def lastTxnVersion(s: SparkSession, root: String, app: String): Option[Long] =
-    txnState(s, root, -1).get(app)
+    state(s, root, -1, strict = false).txns.get(app)
 
   /** Idempotent transactional append — the streaming/exactly-once
     * ingestion primitive (Delta's idempotent writes: each commit
@@ -1119,9 +1089,7 @@ object TableLog {
     * mid-commit). */
   def appendIdempotent(s: SparkSession, root: String, df: DataFrame,
       app: String, txnVersion: Long, statsCols: Seq[String] = Nil): Option[Int] = {
-    val dir = new Path(s"$root/_log")
-    if (fs(s, root).exists(dir) &&
-        lastTxnVersion(s, root, app).exists(_ >= txnVersion)) return None
+    if (lastTxnVersion(s, root, app).exists(_ >= txnVersion)) return None
     val (sub, files) = writeData(s, root, df)
     try Some(publishOrClean(s, root, Seq(sub)) {
       publish(s, root, files, Seq.empty,
@@ -1142,8 +1110,7 @@ object TableLog {
     * the boundary changes meaning. */
   def overwrite(s: SparkSession, root: String, df: DataFrame,
       statsCols: Seq[String] = Nil, overwriteSchema: Boolean = false): Int = {
-    val old = if (versions(s, root).isEmpty) Seq.empty[String]
-      else liveFiles(s, root, -1)
+    val old = state(s, root, -1, strict = false).files
     val (sub, files) = writeData(s, root, df)
     // replacing every row discharges any pending deletion vectors
     publishOrClean(s, root, Seq(sub)) {
@@ -1210,8 +1177,7 @@ object TableLog {
     requireUnconstrained(s, root, oldName, "rename")
     // derived from the schema AS OF EACH publish attempt — a racing
     // evolution commit (addColumn, widen) is folded in, never erased
-    def next(): StructType = {
-      val base = tableSchema(s, root).get
+    def next(base: StructType): StructType = {
       require(base.fieldNames.contains(oldName),
         s"TableLog: column '$oldName' vanished under this rename")
       StructType(base.fields.map { f =>
@@ -1222,7 +1188,7 @@ object TableLog {
       })
     }
     publish(s, root, Seq.empty, Seq.empty, dataChange = false,
-      schemaNow = Some(() => next()), enforceSchema = false)
+      schemaNow = Some(next), enforceSchema = false)
   }
 
   /** DROP COLUMN as a metadata-only commit: the declared schema loses
@@ -1237,8 +1203,8 @@ object TableLog {
     requireUnconstrained(s, root, name, "drop")
     // per-attempt derivation: a racing addColumn survives this drop
     publish(s, root, Seq.empty, Seq.empty, dataChange = false,
-      schemaNow = Some(() => org.apache.spark.sql.types.StructType(
-        tableSchema(s, root).get.fields.filterNot(_.name == name))))
+      schemaNow = Some(base => org.apache.spark.sql.types.StructType(
+        base.fields.filterNot(_.name == name))))
   }
 
   /** ADD COLUMN as a metadata-only commit: declares a new NULLABLE
@@ -1255,8 +1221,7 @@ object TableLog {
       s"TableLog: column '$name' already exists")
     // per-attempt derivation: two racing addColumns both survive
     // (the loser's retry folds the winner's column into its record)
-    def next() = {
-      val base = tableSchema(s, root).get
+    def next(base: org.apache.spark.sql.types.StructType) = {
       require(!base.fieldNames.contains(name),
         s"TableLog: column '$name' already exists")
       org.apache.spark.sql.types.StructType(
@@ -1264,7 +1229,7 @@ object TableLog {
           name, dataType, nullable = true))
     }
     publish(s, root, Seq.empty, Seq.empty, dataChange = false,
-      schemaNow = Some(() => next()))
+      schemaNow = Some(next))
   }
 
   /** Widen a column's declared type WITHOUT rewriting any data file
@@ -1287,8 +1252,7 @@ object TableLog {
         s"'${dataType.simpleString}' (lossy or unrelated change)")
     // per-attempt derivation: a racing addColumn survives; a racing
     // IDENTICAL widen turns this commit into a harmless re-declaration
-    def next() = {
-      val base = tableSchema(s, root).get
+    def next(base: org.apache.spark.sql.types.StructType) = {
       val bf = base.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(
           s"TableLog: column '$name' vanished under this widen"))
@@ -1299,7 +1263,7 @@ object TableLog {
         if (fl.name == name) fl.copy(dataType = dataType) else fl))
     }
     publish(s, root, Seq.empty, Seq.empty, dataChange = false,
-      schemaNow = Some(() => next()), allowWiden = true)
+      schemaNow = Some(next), allowWiden = true)
   }
 
   /** The table as of `version` (-1 = latest). File list is resolved
@@ -1358,19 +1322,8 @@ object TableLog {
 
   private def buildSnapshot(s: SparkSession, root: String,
       version: Int): DataFrame = {
-    val st = replay(s, root, version)._1
-    val decl = tableSchema(s, root, version)
-    val raw = applyDv(s, root,
-      readUnion(s, st.files.map(rel => abs(root, rel)), decl), st.dvs)
-    // when the log declares a schema (as of the requested version),
-    // the DECLARED schema is the contract: columns added by
-    // addColumn but not yet written read as null, column order is
-    // the declared order, and stragglers from dropped nullable
-    // columns are hidden. Pre-schema logs keep the raw union frame.
-    decl match {
-      case None => raw
-      case Some(d) => alignDeclared(d, raw)
-    }
+    val st = state(s, root, version)
+    readAligned(s, root, st, st.files)
   }
 
   /** Union read of data files spanning schema generations. With a
@@ -1419,23 +1372,24 @@ object TableLog {
     } ++ keep: _*)
   }
 
-  /** Subset read with the SNAPSHOT contract: [[readUnion]] over
-    * `files`, active DVs anti-joined, and the declared schema (as of
-    * `version`) presented through the name mapping — every pruned
-    * read or rewrite path must resolve renamed columns exactly like
-    * [[snapshot]], or pre-rename rows would surface null under the
-    * declared name and silently vanish from filters. `keyed` keeps
-    * [[keyedAlive]]'s (_g_file, _g_pos) row key — taken on the scan
-    * itself, where the metadata columns resolve — for the mutations
-    * that address rows by position ([[deleteVector]], [[update]]). */
-  private def readAligned(s: SparkSession, root: String,
-      files: Seq[String], version: Int, dv: Seq[String],
-      keyed: Boolean = false): DataFrame = {
-    val decl = tableSchema(s, root, version)
-    val raw = readUnion(s, files.map(rel => abs(root, rel)), decl)
-    val alive = if (keyed) keyedAlive(s, root, raw, dv)
-      else applyDv(s, root, raw, dv)
-    decl match {
+  /** Read `files` of `st` with the SNAPSHOT contract: [[readUnion]]
+    * over them, `st`'s deletion vectors anti-joined, and `st`'s
+    * declared schema presented through the name mapping — columns added
+    * but not yet written read as null, declared column order, stragglers
+    * from dropped nullable columns hidden (pre-schema logs keep the raw
+    * union frame). [[snapshot]] reads every live file this way; a
+    * pruned read or a rewrite reads its subset this way too, or
+    * pre-rename rows would surface null under the declared name and
+    * silently vanish from filters. `keyed` keeps [[keyedAlive]]'s
+    * (_g_file, _g_pos) row key — taken on the scan itself, where the
+    * metadata columns resolve — for the mutations that address rows by
+    * position ([[deleteVector]], [[update]]). */
+  private def readAligned(s: SparkSession, root: String, st: TableState,
+      files: Seq[String], keyed: Boolean = false): DataFrame = {
+    val raw = readUnion(s, files.map(rel => abs(root, rel)), st.schema)
+    val alive = if (keyed) keyedAlive(s, root, raw, st.dvs)
+      else applyDv(s, root, raw, st.dvs)
+    st.schema match {
       case None => alive
       case Some(d) => alignDeclared(d, alive,
         if (keyed) Seq(col("_g_file"), col("_g_pos")) else Nil)
@@ -1482,13 +1436,15 @@ object TableLog {
     * consumer needing reconciled state re-reads a snapshot). */
   def changesSince(s: SparkSession, root: String, sinceVersion: Int): DataFrame = {
     val f = fs(s, root)
-    val files = versions(s, root).filter(_ > sinceVersion).flatMap { v =>
-      val json = readText(f, logPath(root, v))
-      if (parseDataChange(json)) parseArr(json, "add") else Seq.empty
-    }
+    val st = state(s, root, -1)
+    val files = versions(s, root)
+      .filter(v => v > sinceVersion && v <= st.version).flatMap { v =>
+        val json = readText(f, logPath(root, v))
+        if (parseDataChange(json)) parseArr(json, "add") else Seq.empty
+      }
     // the added files' rows as written: no deletion vector applies
-    if (files.isEmpty) snapshot(s, root).limit(0)
-    else readAligned(s, root, files, -1, Seq.empty)
+    if (files.isEmpty) snapshot(s, root, st.version).limit(0)
+    else readAligned(s, root, st.copy(dvs = Nil), files)
   }
 
   // ---- change data feed (Delta CDF parity) -------------------------------
@@ -1588,29 +1544,59 @@ object TableLog {
     }
   }
 
-  /** Per-file [lo, hi] bounds of `column` for the given live state,
-    * loaded from the commits' TSV sidecars (None = file has no stats
-    * for the column and must always be read). */
-  private def bounds(s: SparkSession, root: String,
-      state: Seq[(String, Option[String])],
-      column: String): Map[String, (Long, Long)] = {
+  // ---- pruned reads ------------------------------------------------------
+  // readPoint, readRange, readBox and readPartition are one read: each
+  // says which live files its sidecars admit and gives the residual
+  // filter, and [[prunedRead]] resolves the table once, opens only the
+  // admitted files under that state's vectors and schema, and filters.
+  // Sidecars are advisory — a file without a record is always read and
+  // the residual filter always applies — so they change the file list,
+  // never an answer.
+
+  /** The sidecar records of `st`'s live files, split into fields (file,
+    * column, values…). `fixedName` None reads the stats sidecars, which
+    * the adding commits name in the log; otherwise the sidecar of that
+    * fixed name in each live file's commit dir (a dir without one
+    * contributes nothing). */
+  private def sidecarRows(s: SparkSession, root: String, st: TableState,
+      fixedName: Option[String]): Seq[Array[String]] = {
     val f = fs(s, root)
-    state.flatMap(_._2).distinct.flatMap { rel =>
-      readText(f, new Path(abs(root, rel))).split('\n').filter(_.nonEmpty)
-        .map(_.split('\t'))
-        .collect { case Array(file, c, mn, mx) if c == column =>
-          file -> (mn.toLong, mx.toLong) }
-    }.toMap
+    val paths = fixedName match {
+      case None => st.live.flatMap(_._2).distinct.map(rel => new Path(abs(root, rel)))
+      case Some(n) => st.files.map(_.split('/').dropRight(1).mkString("/"))
+        .distinct.map(d => new Path(s"${abs(root, d)}/$n")).filter(f.exists)
+    }
+    paths.flatMap(p => readText(f, p).split('\n').filter(_.nonEmpty)
+      .map(_.split("\t", -1)))
   }
 
-  /** Live files that can contain a row with `column` in [lo, hi]:
-    * stats-pruned when bounds exist, kept when they don't. */
-  private def candidateFiles(s: SparkSession, root: String,
-      state: Seq[(String, Option[String])],
-      column: String, lo: Long, hi: Long): Seq[String] = {
-    val b = bounds(s, root, state, column)
-    state.map(_._1).filter(file =>
-      b.get(file).forall { case (mn, mx) => mx >= lo && mn <= hi })
+  /** Per-file [lo, hi] bounds of `column` over `st`'s live files, from
+    * the stats sidecars (absent = no stats for the column, always read). */
+  private def bounds(s: SparkSession, root: String, st: TableState,
+      column: String): Map[String, (Long, Long)] =
+    sidecarRows(s, root, st, None).collect {
+      case Array(file, c, mn, mx) if c == column => file -> (mn.toLong, mx.toLong)
+    }.toMap
+
+  /** Whether a live file of `st` can hold a row with `column` in
+    * [lo, hi]: stats-pruned when bounds exist, kept when they don't. */
+  private def rangeAdmits(s: SparkSession, root: String, st: TableState,
+      column: String, lo: Long, hi: Long): String => Boolean = {
+    val b = bounds(s, root, st, column)
+    file => b.get(file).forall { case (mn, mx) => mx >= lo && mn <= hi }
+  }
+
+  /** The one pruned read: the table as of `version` resolved once, the
+    * live files `admits` lets through (given that state) read with
+    * [[readAligned]] under the same state, then `residual`. With no
+    * file kept, the empty snapshot of that version — an empty path
+    * list would make the reader throw instead of returning zero rows. */
+  private def prunedRead(s: SparkSession, root: String, version: Int,
+      residual: Column)(admits: TableState => String => Boolean): DataFrame = {
+    val st = state(s, root, version)
+    val keep = st.files.filter(admits(st))
+    if (keep.isEmpty) snapshot(s, root, st.version).limit(0)
+    else readAligned(s, root, st, keep).filter(residual)
   }
 
   // ---- bloom-filter file skipping ----------------------------------------
@@ -1699,56 +1685,41 @@ object TableLog {
           s"$file\t$c\t$b64"
         }
     }
-    val f = fs(s, root)
-    val out = f.create(new Path(s"$root/$sub/_bloom.tsv"), false)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    writeTsv(s, root, s"$sub/_bloom.tsv", lines)
   }
 
-  /** The bloom bitsets declared for the live `files`, keyed by file —
-    * loaded lazily per distinct commit dir (one small TSV read each;
-    * dirs without a sidecar contribute nothing). */
-  private def bloomIndex(s: SparkSession, root: String,
-      files: Seq[String], column: String): Map[String, Array[Byte]] = {
-    val f = fs(s, root)
-    files.map(_.split('/').dropRight(1).mkString("/")).distinct.flatMap { d =>
-      val p = new Path(s"${abs(root, d)}/_bloom.tsv")
-      if (!f.exists(p)) Seq.empty
-      else readText(f, p).split('\n').filter(_.nonEmpty).map(_.split('\t'))
-        .collect { case Array(file, c, b64) if c == column =>
-          file -> java.util.Base64.getDecoder.decode(b64) }
+  /** Whether the bloom sidecar of a live file of `st` admits `value` in
+    * `column` (a file without one is admitted). */
+  private def bloomAdmits(s: SparkSession, root: String, st: TableState,
+      column: String, value: Long): String => Boolean = {
+    val blooms = sidecarRows(s, root, st, Some("_bloom.tsv")).collect {
+      case Array(file, c, b64) if c == column =>
+        file -> java.util.Base64.getDecoder.decode(b64)
     }.toMap
+    // probe positions depend on the bitset size, which may vary across
+    // commits (conf change) — memoize per distinct size
+    val posFor = mutable.Map.empty[Int, Seq[Int]]
+    file => blooms.get(file).forall { bits =>
+      posFor.getOrElseUpdate(bits.length * 8,
+        bloomPositions(value, bits.length * 8))
+        .forall(p => (bits(p >>> 3) & (1 << (p & 7))) != 0)
+    }
   }
 
   /** Point lookup with bloom + stats file skipping: opens only live
     * files whose bloom admits `value` (or that have no bloom) AND
     * whose min/max range admits it (or that have no stats), then
-    * applies the exact residual filter — both sidecars are advisory,
-    * neither can change an answer. The planning payoff on a
+    * applies the exact residual filter. The planning payoff on a
     * hash-distributed key: stats prune nothing (every file spans the
     * key range), the bloom prunes to ~1 file + the false-positive
     * tail. */
   def readPoint(s: SparkSession, root: String, column: String,
-      value: Long, version: Int = -1): DataFrame = {
-    val state = liveState(s, root, version)
-    val files = state.map(_._1)
-    val blooms = bloomIndex(s, root, files, column)
-    // probe positions depend on the bitset size, which may vary across
-    // commits (conf change) — memoize per distinct size
-    val posFor = mutable.Map.empty[Int, Seq[Int]]
-    val rangeOk = bounds(s, root, state, column)
-    val keep = files.filter { fl =>
-      blooms.get(fl).forall { bits =>
-        posFor.getOrElseUpdate(bits.length * 8,
-          bloomPositions(value, bits.length * 8))
-          .forall(p => (bits(p >>> 3) & (1 << (p & 7))) != 0)
-      } &&
-      rangeOk.get(fl).forall { case (mn, mx) => value >= mn && value <= mx }
+      value: Long, version: Int = -1): DataFrame =
+    prunedRead(s, root, version, col(column) === value) { st =>
+      val inBloom = bloomAdmits(s, root, st, column, value)
+      val inRange = rangeAdmits(s, root, st, column, value, value)
+      file => inBloom(file) && inRange(file)
     }
-    if (keep.isEmpty) return snapshot(s, root, version).limit(0)
-    readAligned(s, root, keep, version, dvState(s, root, version))
-      .filter(col(column) === value)
-  }
 
   // ---- hidden partitioning (Iceberg-style per-file partition values) -----
 
@@ -1786,26 +1757,19 @@ object TableLog {
           }
         }
     }
-    val out = fs(s, root).create(new Path(s"$root/$sub/_pv.tsv"), false)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    writeTsv(s, root, s"$sub/_pv.tsv", lines)
   }
 
-  /** The partition-value sets declared for the live `files` on
-    * `column`, keyed by file — one small TSV per distinct commit dir,
-    * same discovery as [[bloomIndex]]. */
-  private def pvIndex(s: SparkSession, root: String,
-      files: Seq[String], column: String): Map[String, Set[String]] = {
-    val f = fs(s, root)
-    files.map(_.split('/').dropRight(1).mkString("/")).distinct.flatMap { d =>
-      val p = new Path(s"${abs(root, d)}/_pv.tsv")
-      if (!f.exists(p)) Seq.empty
-      else readText(f, p).split('\n').filter(_.nonEmpty)
-        .map(_.split("\t", -1))
-        .collect { case Array(file, c, b64) if c == column =>
-          file -> b64.split(',').filter(_.nonEmpty).map(v =>
-            new String(java.util.Base64.getDecoder.decode(v), "UTF-8")).toSet }
+  /** Whether the partition-value set a live file of `st` records for
+    * `column` contains `value` (a file without a record is admitted). */
+  private def pvAdmits(s: SparkSession, root: String, st: TableState,
+      column: String, value: String): String => Boolean = {
+    val pv = sidecarRows(s, root, st, Some("_pv.tsv")).collect {
+      case Array(file, c, b64) if c == column =>
+        file -> b64.split(',').filter(_.nonEmpty).map(v =>
+          new String(java.util.Base64.getDecoder.decode(v), "UTF-8")).toSet
     }.toMap
+    file => pv.get(file).forall(_.contains(value))
   }
 
   /** Append with hidden partitioning (Iceberg-style): rows are
@@ -1844,41 +1808,25 @@ object TableLog {
     * touched. Paths relative to `root`. */
   def readPartitionFiles(s: SparkSession, root: String, column: String,
       value: String, version: Int = -1): Seq[String] = {
-    val files = liveState(s, root, version).map(_._1)
-    val pv = pvIndex(s, root, files, column)
-    files.filter(fl => pv.get(fl).forall(_.contains(value)))
+    val st = state(s, root, version)
+    st.files.filter(pvAdmits(s, root, st, column, value))
   }
 
   /** Exact-match partitioned read: opens only live files whose logged
     * partition-value set contains `value` (files without a record are
-    * always read), then applies the residual filter — the sidecar is
-    * advisory, like stats and blooms: it can change the FILE LIST,
-    * never an answer. */
+    * always read), then applies the residual filter. */
   def readPartition(s: SparkSession, root: String, column: String,
-      value: String, version: Int = -1): DataFrame = {
-    val keep = readPartitionFiles(s, root, column, value, version)
-    if (keep.isEmpty) return snapshot(s, root, version).limit(0)
-    readAligned(s, root, keep, version, dvState(s, root, version))
-      .filter(col(column) === value)
-  }
+      value: String, version: Int = -1): DataFrame =
+    prunedRead(s, root, version, col(column) === value)(
+      pvAdmits(s, root, _, column, value))
 
   /** Range read with metadata-level file skipping: opens only files
     * whose logged [min, max] intersects [lo, hi] (plus any file
-    * without stats), then applies the exact residual filter — stats
-    * affect planning, never the answer. */
+    * without stats), then applies the exact residual filter. */
   def readRange(s: SparkSession, root: String, column: String,
-      lo: Long, hi: Long, version: Int = -1): DataFrame = {
-    val keep =
-      candidateFiles(s, root, liveState(s, root, version), column, lo, hi)
-    // stats may prune every live file — an empty path list would make
-    // the reader throw instead of returning zero rows
-    if (keep.isEmpty) return snapshot(s, root, version).limit(0)
-    // snapshot contract (mergeSchema + DV filter + declared-name
-    // mapping): a pruned read must neither resurrect vector-deleted
-    // rows nor lose pre-rename rows to a null declared column
-    readAligned(s, root, keep, version, dvState(s, root, version))
-      .filter(col(column) >= lo && col(column) <= hi)
-  }
+      lo: Long, hi: Long, version: Int = -1): DataFrame =
+    prunedRead(s, root, version, col(column) >= lo && col(column) <= hi)(
+      rangeAdmits(s, root, _, column, lo, hi))
 
   /** Box read over TWO stats columns — the z-order payoff: a file
     * survives only if BOTH its logged ranges intersect the box, so a
@@ -1887,22 +1835,16 @@ object TableLog {
     * its own column. Residual filters applied as always. */
   def readBox(s: SparkSession, root: String,
       c1: String, lo1: Long, hi1: Long,
-      c2: String, lo2: Long, hi2: Long, version: Int = -1): DataFrame = {
-    val state = liveState(s, root, version)
-    val b1 = bounds(s, root, state, c1)
-    val b2 = bounds(s, root, state, c2)
-    val keep = state.map(_._1).filter { file =>
-      b1.get(file).forall { case (mn, mx) => mx >= lo1 && mn <= hi1 } &&
-      b2.get(file).forall { case (mn, mx) => mx >= lo2 && mn <= hi2 }
+      c2: String, lo2: Long, hi2: Long, version: Int = -1): DataFrame =
+    prunedRead(s, root, version, col(c1) >= lo1 && col(c1) <= hi1 &&
+        col(c2) >= lo2 && col(c2) <= hi2) { st =>
+      val in1 = rangeAdmits(s, root, st, c1, lo1, hi1)
+      val in2 = rangeAdmits(s, root, st, c2, lo2, hi2)
+      file => in1(file) && in2(file)
     }
-    if (keep.isEmpty) return snapshot(s, root, version).limit(0)
-    readAligned(s, root, keep, version, dvState(s, root, version))
-      .filter(col(c1) >= lo1 && col(c1) <= hi1 &&
-        col(c2) >= lo2 && col(c2) <= hi2)
-  }
 
-  // ---- row mutations: each resolves the table ONCE ([[tableState]]),
-  // picks the files it touches, and ends in [[commitMutation]] --------
+  // ---- row mutations: each resolves the table ONCE ([[state]]), reads
+  // the files it touches under that state, and ends in [[commitMutation]]
 
   /** Delete every row with `column` in [lo, hi], rewriting ONLY the
     * files whose stats admit a match; the swap publishes as one
@@ -1910,15 +1852,15 @@ object TableLog {
     * Returns the committed version. */
   def deleteRange(s: SparkSession, root: String, column: String,
       lo: Long, hi: Long): Int = {
-    val st = tableState(s, root)
-    val touched = candidateFiles(s, root, st.live, column, lo, hi)
+    val st = state(s, root, -1)
+    val touched = st.files.filter(rangeAdmits(s, root, st, column, lo, hi))
     require(touched.nonEmpty, "deleteRange: nothing to delete")
     // DV-filtered: rewriting a touched file must not resurrect its
     // vector-deleted rows (the survivors land in fresh files the
     // vectors don't name); untouched files keep their DV entries live,
     // and a deleteVector landing mid-rewrite aborts this commit at
     // publish instead of losing its rows
-    val src = readAligned(s, root, touched, -1, st.dvs)
+    val src = readAligned(s, root, st, touched)
     val inRange = col(column) >= lo && col(column) <= hi
     // NULL in the delete column is inside neither range nor its
     // negation — keep such rows explicitly, or every rewritten file
@@ -1957,9 +1899,9 @@ object TableLog {
     * matches nothing (or an empty table) is a no-op: no commit, the
     * current version returned. */
   def deleteVector(s: SparkSession, root: String, predicate: Column): Int = {
-    val st = tableState(s, root)
+    val st = state(s, root, -1)
     if (st.live.isEmpty) return st.version
-    val aligned = readAligned(s, root, st.files, -1, st.dvs, keyed = true)
+    val aligned = readAligned(s, root, st, st.files, keyed = true)
     val dataCols = aligned.columns.toSeq
       .filterNot(Set("_g_file", "_g_pos")).map(col)
     val matched = aligned.filter(predicate).cache()
@@ -2003,14 +1945,14 @@ object TableLog {
   def update(s: SparkSession, root: String, predicate: Column,
       set: Map[String, Column], statsCols: Seq[String] = Nil): Int = {
     require(set.nonEmpty, "update: empty SET clause")
-    requireSetColumns(s, root, set, "update")
-    val st = tableState(s, root)
+    val st = state(s, root, -1)
+    requireSetColumns(s, root, st, set, "update")
     if (st.live.isEmpty) return st.version
-    val touched = readAligned(s, root, st.files, -1, st.dvs, keyed = true)
+    val touched = readAligned(s, root, st, st.files, keyed = true)
       .filter(predicate).select(col("_g_file")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted // O(#files) metadata
     if (touched.isEmpty) return st.version
-    val src = readAligned(s, root, touched, -1, st.dvs)
+    val src = readAligned(s, root, st, touched)
     // hit flag materializes BEFORE any SET applies: a SET that
     // rewrites a predicate column (SET x = 0 WHERE x > 5) must still
     // report its postimages
@@ -2068,7 +2010,7 @@ object TableLog {
     * Returns the committed version. */
   def merge(s: SparkSession, root: String, source: DataFrame,
       keyCol: String, statsCols: Seq[String] = Nil): Int = {
-    val st = tableState(s, root)
+    val st = state(s, root, -1)
     val src = source.cache()
     try {
       val (touched, smallSrc) =
@@ -2077,7 +2019,7 @@ object TableLog {
       val srcKeys = if (smallSrc) broadcast(keys) else keys
       val tgt =
         if (touched.isEmpty) src.limit(0)
-        else readAligned(s, root, touched, -1, st.dvs)
+        else readAligned(s, root, st, touched)
       // CDF: matched keys can only live in touched files (stats-exact
       // selection), so `tgt` is the complete preimage universe —
       // replaced target rows are the update preimages, their source
@@ -2111,7 +2053,7 @@ object TableLog {
     * source fits the budget). */
   private def mergeFront(s: SparkSession, root: String, st: TableState,
       src: DataFrame, keyCol: String, prune: Boolean): (Seq[String], Boolean) = {
-    val b = if (prune) bounds(s, root, st.live, keyCol) else Map.empty[String, (Long, Long)]
+    val b = if (prune) bounds(s, root, st, keyCol) else Map.empty[String, (Long, Long)]
     val ranges = st.files.zipWithIndex.flatMap { case (fl, i) =>
       b.get(fl).map { case (mn, mx) => (i, mn, mx) }
     }
@@ -2141,9 +2083,9 @@ object TableLog {
     * joined frame would otherwise silently no-op a misspelled or
     * alias-qualified assignment (the lost update nobody notices). */
   private def requireSetColumns(s: SparkSession, root: String,
-      set: Map[String, Column], verb: String): Unit = {
-    val cols = tableSchema(s, root).map(_.fieldNames.toSeq)
-      .getOrElse(snapshot(s, root).columns.toSeq).toSet
+      st: TableState, set: Map[String, Column], verb: String): Unit = {
+    val cols = st.schema.map(_.fieldNames.toSeq)
+      .getOrElse(snapshot(s, root, st.version).columns.toSeq).toSet
     val unknown = set.keySet -- cols
     require(unknown.isEmpty,
       s"$verb: SET names unknown target column(s) ${unknown.mkString(", ")}")
@@ -2206,8 +2148,8 @@ object TableLog {
       source: DataFrame, keyCol: String, cond: Column,
       set: Map[String, Column], bySource: Option[Column],
       insertUnmatched: Boolean, statsCols: Seq[String]): Int = {
-    requireSetColumns(s, root, set, "merge")
-    val st = tableState(s, root)
+    val st = state(s, root, -1)
+    requireSetColumns(s, root, st, set, "merge")
     val src = source.cache()
     try {
       val (touched, smallSrc) =
@@ -2217,7 +2159,7 @@ object TableLog {
           val ins = if (insertUnmatched) src else src.limit(0)
           (ins, () => ins.withColumn(ChangeTypeCol, lit("insert")))
         } else {
-          val tgt = readAligned(s, root, touched, -1, st.dvs)
+          val tgt = readAligned(s, root, st, touched)
           val srcPref = src.columns.foldLeft(src)((d, c) =>
             d.withColumnRenamed(c, s"src_$c"))
           // clause flags materialize BEFORE any SET applies: a condition
@@ -2307,14 +2249,15 @@ object TableLog {
       expectDvs: Option[Seq[String]] = None,
       base: Option[Seq[String]] = None)(
       write: String => Unit): Int = {
-    val dv0 = expectDvs.getOrElse(dvState(s, root, -1))
+    lazy val head = state(s, root, -1)
+    val dv0 = expectDvs.getOrElse(head.dvs)
     // base = the file list the caller's snapshot was RESOLVED against.
     // Callers materializing a pre-read frame MUST pass it ([[pinSnapshot]]):
     // re-resolving here would race a commit landing between the
     // caller's snapshot and this call — the newcomer's file would
     // join the remove set without its rows joining the rewrite, a
     // silent lost update (caught by the TableLogSpec CAS storm fuzz).
-    val old = base.getOrElse(liveFiles(s, root, -1))
+    val old = base.getOrElse(head.files)
     val sub = s"data/${UUID.randomUUID()}"
     write(s"$root/$sub")
     publishOrClean(s, root, Seq(sub)) {
@@ -2334,8 +2277,8 @@ object TableLog {
     * retryable). */
   def pinSnapshot(s: SparkSession, root: String)
       : (Seq[String], Seq[String], DataFrame) = {
-    val st = tableState(s, root)
-    (st.files, st.dvs, readAligned(s, root, st.files, -1, st.dvs))
+    val st = state(s, root, -1)
+    (st.files, st.dvs, readAligned(s, root, st, st.files))
   }
 
   /** Rewrite the live set into `numFiles` files and publish the swap
@@ -2360,7 +2303,7 @@ object TableLog {
     * committed version. */
   def restore(s: SparkSession, root: String, version: Int): Int = {
     val f = fs(s, root)
-    val then_ = replay(s, root, version)._1
+    val then_ = state(s, root, version)
     then_.files.foreach(rel => require(f.exists(new Path(abs(root, rel))),
       s"restore: $rel was vacuumed; version $version is not restorable"))
     // the deletion-vector state restores with the file set — a restore
@@ -2369,7 +2312,7 @@ object TableLog {
     then_.dvs.foreach(d => require(f.exists(new Path(abs(root, d))),
       s"restore: deletion vector $d was vacuumed; " +
         s"version $version is not restorable"))
-    val now = liveFiles(s, root, -1)
+    val now = state(s, root, -1).files
     val thenSet = then_.files.toSet
     publish(s, root, then_.files.filterNot(now.toSet), now.filterNot(thenSet),
       dataChange = true, dvs = Some(then_.dvs))
@@ -2424,32 +2367,24 @@ object TableLog {
   def shallowClone(s: SparkSession, srcRoot: String, dstRoot: String): Int = {
     require(versions(s, dstRoot).isEmpty,
       s"shallowClone: $dstRoot already has a log")
-    val srcFs = fs(s, srcRoot)
-    val state = liveState(s, srcRoot, -1)
-    require(state.nonEmpty, s"shallowClone: $srcRoot is empty")
-    val files = state.map { case (rel, _) => abs(srcRoot, rel) }
+    val st = state(s, srcRoot, -1)
+    require(st.live.nonEmpty, s"shallowClone: $srcRoot is empty")
+    val files = st.files.map(abs(srcRoot, _))
     // one merged dst-local sidecar, keyed by the absolute names the
     // clone's add list uses (each source commit's sidecar keyed its
     // own relative names — a cross-root lookup would silently miss
     // and demote every file to the always-read class)
-    val statLines = state.flatMap(_._2).distinct.flatMap { rel =>
-      readText(srcFs, new Path(abs(srcRoot, rel))).split('\n')
-        .filter(_.nonEmpty).map(_.split('\t'))
-        .collect { case Array(file, c, mn, mx) =>
-          s"${abs(srcRoot, file)}\t$c\t$mn\t$mx" }
+    val statLines = sidecarRows(s, srcRoot, st, None).collect {
+      case Array(file, c, mn, mx) => s"${abs(srcRoot, file)}\t$c\t$mn\t$mx"
     }
     val statsFile = if (statLines.isEmpty) None else {
       val rel = s"data/clone-${UUID.randomUUID()}/_stats.tsv"
-      val f = fs(s, dstRoot)
-      f.mkdirs(new Path(s"$dstRoot/${rel.split('/').dropRight(1).mkString("/")}"))
-      val out = f.create(new Path(s"$dstRoot/$rel"), false)
-      try out.write((statLines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
+      writeTsv(s, dstRoot, rel, statLines) // create() makes the dir
       Some(rel)
     }
-    val srcDvs = dvState(s, srcRoot, -1).map(abs(srcRoot, _))
+    val srcDvs = st.dvs.map(abs(srcRoot, _))
     publish(s, dstRoot, files, Seq.empty, statsFile,
-      schema = tableSchema(s, srcRoot), enforceSchema = false,
+      schema = st.schema, enforceSchema = false,
       dvs = if (srcDvs.isEmpty) None else Some(srcDvs))
   }
 
@@ -2476,8 +2411,10 @@ object TableLog {
     val f = fs(s, root)
     val vs = versions(s, root)
     val retained = vs.filter(_ >= retainFrom)
-    val reachable = retained.flatMap(v => liveFiles(s, root, v)).toSet ++
-      liveFiles(s, root, -1).toSet
+    // one replay per retained version, plus the head (a commit may have
+    // landed since the listing)
+    val kept = (retained :+ -1).map(state(s, root, _))
+    val reachable = kept.flatMap(_.files).toSet
     val all = vs
       .flatMap(v => parseArr(readText(f, logPath(root, v)), "add")).toSet
     // external (clone-referenced) files belong to their source table —
@@ -2486,8 +2423,7 @@ object TableLog {
     doomed.foreach(rel => f.delete(new Path(s"$root/$rel"), false))
     // deletion-vector sidecars no retained version can need (a compact
     // cleared them, or the declaring commit fell out of retention)
-    val dvReachable = (retained.map(v => dvState(s, root, v)) :+
-      dvState(s, root, -1)).flatten.toSet
+    val dvReachable = kept.flatMap(_.dvs).toSet
     val dvAll = vs.flatMap(v =>
       parseDvs(readText(f, logPath(root, v))).getOrElse(Seq.empty)).toSet
     val dvDoomed = (dvAll -- dvReachable).filterNot(isExternal)

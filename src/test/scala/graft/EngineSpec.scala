@@ -147,4 +147,29 @@ class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(filters(union).flatMap(params).toSet == Set(428L, 0L))
     } finally spark.conf.set(aqe, saved)
   }
+
+  test("inParallel runs at most `width` legs at once, returns results in " +
+      "leg order, and rethrows the first failure with no pool thread left") {
+    import scala.jdk.CollectionConverters._
+    val running = new java.util.concurrent.atomic.AtomicInteger
+    val peak = new java.util.concurrent.atomic.AtomicInteger
+    val legs = (0 until 12).map { i => () =>
+      peak.accumulateAndGet(running.incrementAndGet(), (a, b) => math.max(a, b))
+      Thread.sleep(20)
+      running.decrementAndGet()
+      i * i
+    }
+    assert(graft.ops.inParallel(3, "graft-test-pool")(legs) ==
+      (0 until 12).map(i => i * i))
+    assert(peak.get >= 2 && peak.get <= 3, s"peak ${peak.get} legs at once")
+    val e = intercept[IllegalStateException](
+      graft.ops.inParallel(3, "graft-test-pool")(Seq(
+        () => { Thread.sleep(50); 0 },
+        () => throw new IllegalStateException("leg 1"),
+        () => { Thread.sleep(10000); 2 })))
+    assert(e.getMessage == "leg 1")
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == "graft-test-pool" && t.isAlive),
+      "a pool thread outlived the call")
+  }
 }

@@ -677,13 +677,13 @@ class TableLogSpec extends SparkSpec {
     TableLog.deleteVector(spark, root, col("id") % 10 === 3) // 10 rows
     TableLog.deleteVector(spark, root, col("id") < 40)       // 36 NEW rows
     assert(TableLog.snapshot(spark, root).count() == 54)
-    val dvs = TableLog.dvState(spark, root, -1)
+    val dvs = TableLog.state(spark, root, -1).dvs
     assert(dvs.size == 2, s"expected two active vectors, got $dvs")
     val second = spark.read.parquet(s"$root/${dvs(1)}")
     assert(second.count() == 36,
       "already-deleted rows must not be re-recorded by an overlapping delete")
     TableLog.compact(spark, root, 2)
-    assert(TableLog.dvState(spark, root, -1).isEmpty,
+    assert(TableLog.state(spark, root, -1).dvs.isEmpty,
       "compact must clear materialized vectors")
     val snap = TableLog.snapshot(spark, root)
     assert(snap.count() == 54 && snap.filter(col("id") < 40).isEmpty,
@@ -716,6 +716,95 @@ class TableLogSpec extends SparkSpec {
     assert(snap.filter(col("id") >= 10 && col("id") < 20).isEmpty,
       "merge rewrite resurrected vector-deleted rows")
     assert(snap.filter(col("s") === "upd5").count() == 1)
+  }
+
+  test("every pruned read on a vectored table hides deleted rows, at the " +
+      "latest version and pinned before the OPTIMIZE that materialized them") {
+    val root = freshRoot()
+    def rows(from: Int, until: Int) = nums(from, until)
+      .withColumn("k", col("id") * 2)
+      .withColumn("p", when(col("id") % 2 === 0, "a").otherwise("b"))
+    // one partitioned commit (pv sidecar) and one bloom commit
+    TableLog.appendPartitioned(spark, root, rows(0, 100), Seq("p"),
+      statsCols = Seq("id", "k"))
+    TableLog.append(spark, root, rows(100, 200).repartitionByRange(4, col("id")),
+      statsCols = Seq("id", "k"), bloomCols = Seq("id"))
+    val deleted = (10L until 20L) ++ (150L until 160L)
+    val pinned = TableLog.deleteVector(spark, root,
+      col("id").between(10, 19) || col("id").between(150, 159))
+    TableLog.compact(spark, root, 2, statsCols = Seq("id", "k"))
+    assert(TableLog.state(spark, root, -1).dvs.isEmpty,
+      "the OPTIMIZE should have materialized the vectors")
+    val live = (0L until 200L).filterNot(deleted.toSet)
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("id").collect().map(_.getLong(0)).toSeq.sorted
+    for (v <- Seq(-1, pinned)) {
+      assert(ids(TableLog.readPoint(spark, root, "id", 15L, v)).isEmpty &&
+        ids(TableLog.readPoint(spark, root, "id", 155L, v)).isEmpty,
+        s"readPoint at $v resurrected a vector-deleted row")
+      assert(ids(TableLog.readPoint(spark, root, "id", 25L, v)) == Seq(25L))
+      assert(ids(TableLog.readRange(spark, root, "id", 0L, 29L, v)) ==
+        live.filter(_ <= 29), s"readRange at $v")
+      assert(ids(TableLog.readBox(spark, root, "id", 140L, 170L,
+        "k", 0L, 330L, v)) == live.filter(i => i >= 140 && i <= 165),
+        s"readBox at $v")
+      assert(ids(TableLog.readPartition(spark, root, "p", "a", v)) ==
+        live.filter(_ % 2 == 0), s"readPartition at $v")
+    }
+  }
+
+  test("a latest-version pruned read racing deleteVector → OPTIMIZE " +
+      "cycles always sees one version's files with that version's vectors") {
+    val root = freshRoot()
+    TableLog.append(spark, root, nums(0, 200).repartitionByRange(4, col("id")),
+      statsCols = Seq("id"))
+    val order = (0 until 6).map(i => 7L + 31L * i) // one row per cycle
+    @volatile var done = 0                           // cycles committed
+    @volatile var writing = true
+    @volatile var failed: Throwable = null
+    val writer = new Thread(() => try order.foreach { id =>
+      TableLog.deleteVector(spark, root, col("id") === id)
+      done += 1
+      TableLog.compact(spark, root, 4, statsCols = Seq("id"))
+    } catch { case e: Throwable => failed = e } finally writing = false)
+    writer.start()
+    var reads = 0
+    try while (writing || reads == 0) {
+      val before = done
+      val got = TableLog.readRange(spark, root, "id", 0L, 199L)
+        .select("id").collect().map(_.getLong(0)).toSet
+      val missing = (0L until 200L).filterNot(got).toSet
+      // a version's answer: the first j cycles' rows gone, j >= the
+      // cycles committed before the read began
+      assert(missing.size >= before &&
+        missing == order.take(missing.size).toSet && got.size + missing.size == 200,
+        s"read after $before cycles is missing ${missing.toSeq.sorted}")
+      reads += 1
+    } finally writer.join()
+    if (failed != null) throw failed
+    assert(reads > 1, s"only $reads reads overlapped the writer")
+    assert(TableLog.snapshot(spark, root).count() == 200 - order.size)
+  }
+
+  test("the declared schema resolves through a checkpoint whose tail " +
+      "records none") {
+    val root = freshRoot()
+    spark.conf.set("spark.graft.tablelog.checkpointInterval", "2")
+    try {
+      TableLog.append(spark, root, nums(0, 20))              // v0
+      TableLog.addColumn(spark, root, "extra",
+        org.apache.spark.sql.types.LongType)                 // v1
+      TableLog.deleteVector(spark, root, col("id") < 5)      // v2, ckpt
+      TableLog.addConstraint(spark, root, "pos", "id >= 0")  // v3: no schema
+      assert(TableLog.replayState(spark, root, -1, useCheckpoint = true)._2
+        .contains(2), "expected the replay to start from the v2 checkpoint")
+      assert(TableLog.state(spark, root, -1).schema.map(_.fieldNames.toSeq)
+        .contains(Seq("id", "s", "extra")))
+      assert(TableLog.tableSchema(spark, root, 0).map(_.fieldNames.toSeq)
+        .contains(Seq("id", "s")))
+      val snap = TableLog.snapshot(spark, root)
+      assert(snap.columns.toSeq == Seq("id", "s", "extra") && snap.count() == 15)
+    } finally spark.conf.unset("spark.graft.tablelog.checkpointInterval")
   }
 
   test("restore across a deleteVector resurrects its rows; restore " +
@@ -853,7 +942,7 @@ class TableLogSpec extends SparkSpec {
       "losing the racing delete") {
     val root = freshRoot()
     TableLog.append(spark, root, nums(0, 50))
-    val staleDvs = TableLog.dvState(spark, root, -1) // empty
+    val staleDvs = TableLog.state(spark, root, -1).dvs // empty
     val snap = TableLog.snapshot(spark, root)        // pre-delete rows
     TableLog.deleteVector(spark, root, col("id") < 5) // races in between
     intercept[java.util.ConcurrentModificationException] {
@@ -1836,7 +1925,7 @@ class TableLogSpec extends SparkSpec {
     assert(jobsWhileBuilding(0) == 0, "snapshot without DVs ran a job")
     val v1 = TableLog.deleteVector(spark, root, col("id") % 10 === 3)
     val v2 = TableLog.deleteVector(spark, root, col("id") % 10 === 4)
-    assert(TableLog.dvState(spark, root, v2).size == 2)
+    assert(TableLog.state(spark, root, v2).dvs.size == 2)
     assert(jobsWhileBuilding(v1) == 0, "snapshot with one DV ran a job")
     assert(jobsWhileBuilding(v2) == 0, "snapshot with two DVs ran a job")
     val alive = TableLog.snapshot(spark, root, v2)
