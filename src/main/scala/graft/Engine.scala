@@ -9,9 +9,8 @@ import org.apache.spark.sql.SparkSession
   * `cpp/src/arrow/compute/kernels/cast.h:36`), i.e. invalid input →
   * null, overflow wraps, fractions truncate. Spark 4 defaults to ANSI
   * (errors); we pin the non-ANSI behavior, UTC session time, and the
-  * ns-as-long parquet reading the events fixture needs.
-  *
-  * Idempotent and cheap — callable from every table load.
+  * ns-as-long parquet reading the events fixture needs — all in
+  * [[Engine.buildConfs]], which every engine session is built with.
   */
 object Engine {
   /** Entries of Spark's JVM-wide generated-class cache
@@ -23,30 +22,31 @@ object Engine {
     * set (SCALE.md has the measured sets and the metaspace cost). */
   val CodegenCacheMaxEntries = 1000
 
-  /** Static confs every session of the engine is built with. They must
-    * be on the builder: Spark reads them once (the codegen cache is
-    * created by the JVM's first compile, extensions when the session
-    * is built), so `configure` on a live session cannot change them. */
+  /** Every conf the engine's sessions are built with, the one place
+    * engine behaviour is configured: `Engine.session` and the test
+    * session put it on the builder, and a cluster deployment puts it in
+    * spark-defaults. Some are static (Spark reads them once: the codegen
+    * cache is created by the JVM's first compile, extensions when the
+    * session is built), so they must be on the builder, not set on a
+    * live session. */
   val buildConfs: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheMaxEntries.toString,
-    // filter literals read from the plan, not inlined, so a read that
-    // differs from the last one only in a literal reuses its class
-    "spark.sql.extensions" -> classOf[graft.plans.ParamLiteralExtension].getName,
+    // the native functions, the planner rules and the filter-literal
+    // parameters (GraftExtensions installs them all)
+    "spark.sql.extensions" -> classOf[GraftExtensions].getName,
     // reliable `iterCheckpoint` files are deleted once their RDD is
     // garbage-collected, so checkpoint dirs do not grow without bound
-    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
-
-  def configure(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // TIME is part of the engine's declared type surface (§1.2 —
     // carried through the IPC/Flight codecs); Spark 4.1 gates the
     // type behind this flag
-    spark.conf.set("spark.sql.timeType.enabled", "true")
+    "spark.sql.timeType.enabled" -> "true",
     // AQE: runtime coalescing + skew-join handling — the 100 TB safety
     // net; on by default in Spark 4 but pinned here explicitly.
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    "spark.sql.adaptive.enabled" -> "true",
     // Post-shuffle coalescing keeps `parallelismFirst` sizing (target =
     // shuffle bytes / defaultParallelism, i.e. derived from the session's
     // core count, never a constant) but the default 1 MB
@@ -60,24 +60,7 @@ object Engine {
     // at production shuffle sizes partitions are >> 1 MB and this is a
     // no-op (measured: simjoin_topk verify stage 4 -> 30 tasks at
     // sf0.1, 2.8 s -> 0.9 s; zero effect on any >1 GB exchange).
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      "64k")
-    // native expressions (GraftExtensions is the spark.sql.extensions
-    // path for cluster deployment; this covers already-built sessions)
-    GraftExtensions.functions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    // prepend only the graft rules that are missing: rules a user
-    // installed survive, and a second call adds nothing
-    val exp = spark.experimental
-    exp.extraOptimizations = Seq(graft.plans.SmallDimBroadcastRule(),
-      graft.plans.WindowTopKRewriteRule())
-      .filterNot(exp.extraOptimizations.contains) ++ exp.extraOptimizations
-    exp.extraStrategies = Seq(graft.plans.TopKPerGroupStrategy)
-      .filterNot(exp.extraStrategies.contains) ++ exp.extraStrategies
-    spark
-  }
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k")
 
   /** Standard local session for mains (driver runs local[32]). */
   def session(threads: String, shufflePartitions: String): SparkSession = {
@@ -89,6 +72,6 @@ object Engine {
       .config(buildConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    configure(s)
+    s
   }
 }

@@ -3,50 +3,43 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 import graft.functions.{CdcChunks, CosineSimilarity, Md5BucketFeats, Md5Shingles64, Md5ShinglesPos64, MinHashSigs, NormalizeText, ShingleHashes, SimHash64, SortedIntersectCount, Md5Margin, TextSegments, TokenProfile, VectorDots}
 
-/** SparkSessionExtensions entry point — the deployment-grade way to
-  * install the engine's native expressions into a cluster session:
+/** The engine's one installer, a SparkSessionExtensions entry point.
+  * Every engine session is built with [[Engine.buildConfs]], which
+  * names this class in `spark.sql.extensions`; a cluster deployment
+  * puts the same map in spark-defaults. This mirrors the reference's
+  * registry pattern: Gandiva's function registry
+  * (`cpp/src/gandiva/function_registry.cc`) is the analogous plug-in
+  * point for its JIT'd kernels.
   *
-  *   spark.sql.extensions=graft.GraftExtensions
-  *
-  * (`Engine.configure` also installs the same functions directly into
-  * a live session's registry, which is what local mains and tests
-  * use.) This mirrors the reference's registry pattern: Gandiva's
-  * function registry (`cpp/src/gandiva/function_registry.cc`) is the
-  * analogous plug-in point for its JIT'd kernels.
-  *
-  * Extensions cannot set confs, so cluster deployments should also put
-  * these in spark-defaults:
-  *  - `spark.sql.timeType.enabled=true`: the engine's TIME column
-  *    support (IPC/Flight codecs, `ipc_types`) needs Spark 4.1's TIME
-  *    type unlocked;
-  *  - the static confs of `Engine.buildConfs`, which `Engine.session`
-  *    sets on its builder: `spark.sql.codegen.cache.maxEntries=1000`
-  *    (the generated-class cache holds the engine's working set) and
-  *    `spark.cleaner.referenceTracking.cleanCheckpoints=true`
-  *    (reliable `iterCheckpoint` files are deleted with their RDDs).
-  *    Its `spark.sql.extensions` entry is covered by this class.
-  *
-  * One physical rule is installed at session build, not by `configure`:
-  * `spark.experimental` has no hook for physical-plan rules, so
-  * `Engine.buildConfs` names `graft.plans.ParamLiteralExtension` in
-  * `spark.sql.extensions`, and this class injects the same rule
-  * (`ParamLiteralRule`, run before the columnar transitions: filter
-  * literals become parameters of the generated code, so a read that
-  * differs only in a literal reuses the compiled class). Naming both
-  * classes injects it twice, which is harmless: the rule is idempotent.
+  * It installs:
+  *  - the native functions of [[GraftExtensions.functions]];
+  *  - the optimizer rules `SmallDimBroadcastRule` and
+  *    `WindowTopKRewriteRule`, once, right after operator optimization
+  *    (`injectPreCBORule`); `injectOptimizerRule` gives the same plans
+  *    but runs them in every iteration of both operator-optimization
+  *    fixed points;
+  *  - the planner strategy `TopKPerGroupStrategy`;
+  *  - `ParamLiteralRule`, before the columnar transitions: filter
+  *    literals become parameters of the generated code, so a read that
+  *    differs only in a literal reuses the compiled class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    ext.injectOptimizerRule(_ => graft.plans.SmallDimBroadcastRule())
-    ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewriteRule())
+    ext.injectPreCBORule(_ => graft.plans.SmallDimBroadcastRule())
+    ext.injectPreCBORule(_ => graft.plans.WindowTopKRewriteRule())
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    new graft.plans.ParamLiteralExtension()(ext)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] =
+        graft.plans.ParamLiteralRule
+    })
   }
 }
 

@@ -6,15 +6,21 @@ import org.apache.spark.sql.types.StructType
 /** The engine's user-facing session, mirroring the reference's
   * `ExecutionContext` surface (`rust/datafusion/src/execution/
   * context.rs:57-217`: register_csv / register_parquet /
-  * register_table / sql / table) on top of a conventions-configured
-  * SparkSession.
+  * register_table / sql / table) on top of a SparkSession built with
+  * [[Engine.buildConfs]].
   *
   * Like the reference, SQL and the DataFrame/Table API lower to the
   * same logical plan (proven in SessionSpec, the analogue of
   * `execution/table_impl.rs:196` assert_same_plan).
   */
 class Session(val spark: SparkSession) {
-  Engine.configure(spark)
+  // a session built without the engine's confs would run with ANSI
+  // casts and without the native functions, silently
+  require(spark.conf.getOption("spark.sql.extensions").exists(
+      _.split(',').map(_.trim).contains(classOf[GraftExtensions].getName)),
+    "graft.Session needs a session whose spark.sql.extensions names " +
+      "graft.GraftExtensions: build it with Engine.session, or put " +
+      "Engine.buildConfs on its builder")
 
   /** register_parquet (context.rs:188): name a parquet path as a table. */
   def registerParquet(name: String, path: String): Unit =

@@ -272,7 +272,7 @@ package object functions {
 
   // ---- native kernels (CosineSimilarity.scala, TextVectorKernels.scala) ----
   /** Codegen'd cosine similarity over float vectors; registered by
-    * Engine.configure / GraftExtensions. */
+    * GraftExtensions. */
   def cosine_sim(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
   /** Sorted distinct xxhash64 values of word-n-gram shingles. */

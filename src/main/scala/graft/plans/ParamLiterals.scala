@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, In, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.types._
 
 /** A non-null primitive literal whose generated code does not contain
@@ -50,7 +49,7 @@ case class ParamLiteral(lit: Literal) extends LeafExpression {
   *
   * It runs before the columnar transitions and whole-stage codegen
   * (`ColumnarRule.preColumnarTransitions`), in the plain and in the
-  * adaptive preparation alike; [[ParamLiteralExtension]] installs it. */
+  * adaptive preparation alike; [[graft.GraftExtensions]] installs it. */
 object ParamLiteralRule extends Rule[SparkPlan] {
   private val primitive: Set[DataType] = Set(IntegerType, LongType,
     ShortType, ByteType, FloatType, DoubleType, DateType, TimestampType)
@@ -69,16 +68,4 @@ object ParamLiteralRule extends Rule[SparkPlan] {
       val cond = parameterize(f.condition)
       if (cond fastEquals f.condition) f else f.copy(condition = cond)
   }
-}
-
-/** Session extension installing [[ParamLiteralRule]] ahead of the
-  * columnar transitions. `Engine.buildConfs` names it in
-  * `spark.sql.extensions`, so every session the engine or its tests
-  * build carries it; [[graft.GraftExtensions]] injects the same rule
-  * for cluster deployments. */
-class ParamLiteralExtension extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    ext.injectColumnar((_: SparkSession) => new ColumnarRule {
-      override def preColumnarTransitions: Rule[SparkPlan] = ParamLiteralRule
-    })
 }

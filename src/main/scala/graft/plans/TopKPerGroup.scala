@@ -30,10 +30,8 @@ import scala.collection.mutable
   * (/root/reference/rust/datafusion/src/execution/physical_plan/sort.rs)
   * — its global top-k; the grouped form is this engine's extension.
   *
-  * The strategy is registered both via `Engine.configure`
-  * (`experimental.extraStrategies`) and `GraftExtensions`
-  * (`injectPlannerStrategy`) — the deployment path a cluster user
-  * configures with `spark.sql.extensions=graft.GraftExtensions`.
+  * `GraftExtensions` registers the strategy (`injectPlannerStrategy`)
+  * in every session built with `Engine.buildConfs`.
   */
 case class TopKPerGroupNode(
     groupExprs: Seq[Expression],

@@ -160,14 +160,13 @@ object TableLog {
     }.getOrElse("")
     // base64 keeps the schema's own JSON (quotes, braces) out of the
     // line so the regex parsers above stay sound
-    val sc = schema.map(sch => s""","schema":"${java.util.Base64.getEncoder
-      .encodeToString(sch.json.getBytes("UTF-8"))}"""").getOrElse("")
+    val sc = schema.map(sch => s""","schema":"${base64(sch.json)}"""")
+      .getOrElse("")
     val cd = cdc.map(p => s""","cdc":"$p"""").getOrElse("")
     // constraint expression rides base64 for the same reason as schema
     val ck = check.map { case (n, e) =>
       require(n.matches("[A-Za-z0-9_]+"), s"constraint name must be [A-Za-z0-9_]+: $n")
-      s""","check":"$n:${java.util.Base64.getEncoder
-        .encodeToString(e.getBytes("UTF-8"))}""""
+      s""","check":"$n:${base64(e)}""""
     }.getOrElse("")
     val uk = uncheck.map(n => s""","uncheck":"$n"""").getOrElse("")
     // dvs renders the FULL post-commit deletion-vector state: absence
@@ -195,8 +194,13 @@ object TableLog {
 
   private def parseCheck(json: String): Option[(String, String)] =
     "\"check\":\"([A-Za-z0-9_]+):([^\"]+)\"".r.findFirstMatchIn(json).map(m =>
-      (m.group(1), new String(
-        java.util.Base64.getDecoder.decode(m.group(2)), "UTF-8")))
+      (m.group(1), unbase64(m.group(2))))
+
+  private def base64(text: String): String =
+    java.util.Base64.getEncoder.encodeToString(text.getBytes("UTF-8"))
+
+  private def unbase64(b64: String): String =
+    new String(java.util.Base64.getDecoder.decode(b64), "UTF-8")
 
   private def parseUncheck(json: String): Option[String] =
     "\"uncheck\":\"([A-Za-z0-9_]+)\"".r.findFirstMatchIn(json).map(_.group(1))
@@ -204,8 +208,7 @@ object TableLog {
   private def parseSchema(json: String)
       : Option[org.apache.spark.sql.types.StructType] =
     "\"schema\":\"([^\"]+)\"".r.findFirstMatchIn(json).map { m =>
-      org.apache.spark.sql.types.DataType.fromJson(new String(
-        java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8"))
+      org.apache.spark.sql.types.DataType.fromJson(unbase64(m.group(1)))
         .asInstanceOf[org.apache.spark.sql.types.StructType]
     }
 
@@ -396,17 +399,28 @@ object TableLog {
     * caches, never trusted over the log. */
   private val CkptEnd = "#end"
 
+  /** Marker line of a checkpoint that carries the declared CHECK
+    * constraints ("#check\tname\tbase64(expr)", none when the table
+    * has none). A checkpoint without it predates constraints riding
+    * the checkpoint and is treated as absent, so a constraint is never
+    * dropped: an old table pays one JSON replay until its next
+    * checkpoint. */
+  private val CkptChecks = "#checks"
+
   private def writeCheckpoint(s: SparkSession, root: String, v: Int): Unit = {
     val st = state(s, root, v)
-    // txn watermarks and active deletion vectors ride the checkpoint
-    // too ("#txn\tapp\tversion", "#dv\t<dir>"), so every [[state]]
-    // replays O(interval) JSON entries, not O(#commits); the schema
-    // does not ride — [[replay]] finds it in the entries
+    // txn watermarks, active deletion vectors and CHECK constraints
+    // ride the checkpoint too ("#txn\tapp\tversion", "#dv\t<dir>"),
+    // so every [[state]] replays O(interval) JSON entries, not
+    // O(#commits); the schema does not ride — [[replay]] finds it in
+    // the entries
     val txns = st.txns.toSeq.sortBy(_._1)
       .map { case (a, tv) => s"#txn\t$a\t$tv" }
     val dvLines = st.dvs.map(d => s"#dv\t$d")
+    val checks = st.constraints.toSeq.map { case (n, e) =>
+      s"#check\t$n\t${base64(e)}" } :+ CkptChecks
     val body = (st.live.map { case (p, stats) => s"$p\t${stats.getOrElse("")}" } ++
-      txns ++ dvLines :+ CkptEnd).mkString("", "\n", "\n")
+      txns ++ dvLines ++ checks :+ CkptEnd).mkString("", "\n", "\n")
     val f = fs(s, root)
     try {
       val tmp = new Path(s"$root/_log/.tmp-ckpt-${UUID.randomUUID()}")
@@ -418,43 +432,49 @@ object TableLog {
     } catch { case _: java.io.IOException => () } // best-effort cache
   }
 
-  /** Parse a checkpoint body into (live state, txn watermarks, active
-    * deletion vectors); None when the file is incomplete (no
-    * [[CkptEnd]] sentinel) or malformed (a line without a tab, an
+  /** Parse the checkpoint of version `v` into its table state (the
+    * schema is not in it); None when the file is incomplete (no
+    * [[CkptEnd]] sentinel), predates constraints riding it (no
+    * [[CkptChecks]] marker) or is malformed (a line without a tab, an
     * unknown directive) — the caller then ignores the checkpoint
     * entirely. */
-  private def parseCheckpoint(body: String)
-      : Option[(Seq[(String, Option[String])], Map[String, Long], Seq[String])] = {
+  private def parseCheckpoint(v: Int, body: String): Option[TableState] = {
     val lines = body.split('\n').filter(_.nonEmpty)
     if (lines.isEmpty || lines.last != CkptEnd) return None
     val (directives, entries) = lines.dropRight(1).partition(_.startsWith("#"))
     if (entries.exists(!_.contains('\t'))) return None
+    if (!directives.contains(CkptChecks)) return None
     val txns = mutable.Map.empty[String, Long]
     val dvs = mutable.ArrayBuffer.empty[String]
+    val checks = mutable.LinkedHashMap.empty[String, String]
     directives.map(_.split('\t')).foreach {
-      case Array("#txn", app, v) => txns(app) = v.toLong
+      case Array("#txn", app, tv) => txns(app) = tv.toLong
       case Array("#dv", dir) => dvs += dir
+      case Array("#check", n, e) => checks(n) = unbase64(e)
+      case Array(CkptChecks) => ()
       case _ => return None
     }
-    Some((entries.toSeq.map { line =>
+    Some(TableState(v, entries.toSeq.map { line =>
       val i = line.indexOf('\t')
       val st = line.substring(i + 1)
       (line.substring(0, i), if (st.isEmpty) None else Some(st))
-    }, txns.toMap, dvs.toSeq))
+    }, dvs.toSeq, txns.toMap, None, checks.toMap))
   }
 
   /** The table as of one replayed `version`: the live file set
     * (relative paths, insertion-ordered) with the stats sidecar of the
     * commit that added each file, the active deletion vectors, the
-    * per-app transaction watermarks and the declared schema (None for
-    * logs written before schema recording). Every operation resolves
-    * it once per version it needs ([[state]]) and takes files,
-    * vectors and schema from that one value, so they always belong to
-    * the same version. */
+    * per-app transaction watermarks, the declared schema (None for
+    * logs written before schema recording) and the declared CHECK
+    * constraints by name. Every operation resolves it once per version
+    * it needs ([[state]]) and takes files, vectors, schema and
+    * constraints from that one value, so they always belong to the
+    * same version. */
   private[graft] final case class TableState(version: Int,
       live: Seq[(String, Option[String])], dvs: Seq[String],
       txns: Map[String, Long],
-      schema: Option[org.apache.spark.sql.types.StructType]) {
+      schema: Option[org.apache.spark.sql.types.StructType],
+      constraints: Map[String, String]) {
     def files: Seq[String] = live.map(_._1)
   }
 
@@ -489,26 +509,27 @@ object TableLog {
     if (upto.isEmpty) {
       require(!strict, if (vs.isEmpty) s"TableLog at $root has no commits"
         else s"no committed version <= $version at $root")
-      return (TableState(-1, Nil, Nil, Map.empty, None), None, 0)
+      return (TableState(-1, Nil, Nil, Map.empty, None, Map.empty), None, 0)
     }
     val live = mutable.LinkedHashMap.empty[String, Option[String]]
     val txns = mutable.Map.empty[String, Long]
     var dvs: Seq[String] = Seq.empty
+    val checks = mutable.LinkedHashMap.empty[String, String]
     var schemaEntry: Option[String] = None  // newest tail entry with one
-    // a checkpoint that doesn't parse (torn write, pre-sentinel format)
-    // is treated as ABSENT — fall back to full JSON replay rather than
-    // trust a prefix that would silently drop live files
+    // a checkpoint that doesn't parse (torn write, pre-sentinel or
+    // pre-constraint format) is treated as ABSENT — fall back to full
+    // JSON replay rather than trust a prefix that would silently drop
+    // live files or constraints
     val base = (if (useCheckpoint)
       checkpointVersions(s, root).filter(_ <= upto.last).lastOption
-    else None).flatMap { cv =>
-      parseCheckpoint(readText(f, ckptPath(root, cv))).map(cv -> _)
+    else None).flatMap(cv => parseCheckpoint(cv, readText(f, ckptPath(root, cv))))
+    base.foreach { ck =>
+      ck.live.foreach { case (p, st) => live.put(p, st) }
+      txns ++= ck.txns
+      dvs = ck.dvs
+      checks ++= ck.constraints
     }
-    base.foreach { case (_, (entries, ckptTxns, ckptDvs)) =>
-      entries.foreach { case (p, st) => live.put(p, st) }
-      txns ++= ckptTxns
-      dvs = ckptDvs
-    }
-    val (below, tail) = upto.partition(v => base.exists(_._1 >= v))
+    val (below, tail) = upto.partition(v => base.exists(_.version >= v))
     tail.foreach { v =>
       val json = readText(f, logPath(root, v))
       val st = parseStats(json)
@@ -519,13 +540,15 @@ object TableLog {
       parseTxn(json).foreach { case (a, tv) =>
         if (txns.get(a).forall(_ < tv)) txns(a) = tv
       }
+      parseCheck(json).foreach { case (n, e) => checks(n) = e }
+      parseUncheck(json).foreach(checks.remove)
       if (json.contains("\"schema\":")) schemaEntry = Some(json)
     }
     val schema = schemaEntry.flatMap(parseSchema).orElse(below.reverseIterator
       .map(v => parseSchema(readText(f, logPath(root, v))))
       .collectFirst { case Some(sc) => sc })
-    (TableState(upto.last, live.toSeq, dvs, txns.toMap, schema),
-      base.map(_._1), tail.size)
+    (TableState(upto.last, live.toSeq, dvs, txns.toMap, schema,
+      checks.toMap), base.map(_.version), tail.size)
   }
 
   /** File key shared by deletion vectors and `_metadata.file_path`:
@@ -605,18 +628,8 @@ object TableLog {
 
   /** Declared constraints as of `version` (-1 = latest), by name. */
   def constraints(s: SparkSession, root: String,
-      version: Int = -1): Map[String, String] = {
-    val f = fs(s, root)
-    val vs = versions(s, root)
-    val upto = if (version < 0) vs else vs.filter(_ <= version)
-    val m = mutable.LinkedHashMap.empty[String, String]
-    upto.foreach { v =>
-      val json = readText(f, logPath(root, v))
-      parseCheck(json).foreach { case (n, e) => m(n) = e }
-      parseUncheck(json).foreach(m.remove)
-    }
-    m.toMap
-  }
+      version: Int = -1): Map[String, String] =
+    state(s, root, version, strict = false).constraints
 
   /** Rows that DEFINITIVELY violate `e` (false, not null — SQL CHECK). */
   private def violating(df: DataFrame, e: String): DataFrame =

@@ -56,14 +56,13 @@ object Tables {
     perSession.computeIfAbsent((dir, name), { _ =>
       // The events fixture's ts column has shipped as either parquet
       // TIMESTAMP(NANOS) — which Spark 4 rejects outright, so
-      // Engine.configure reads nanos as long and we truncate to micros
+      // Engine.buildConfs reads nanos as long and we truncate to micros
       // (integer `div`, not `/` — ns-since-epoch exceeds double's 2^53
       // exact-integer range) — or, in newer fixture generations, as
       // TIMESTAMP(MICROS) without timezone, which loads as
       // TimestampNTZ. Normalize BY LOADED TYPE so both generations
       // land on session-UTC TimestampType, the µs convention every
       // query and oracle assumes (SURVEY §1.2 ns-truncation note).
-      graft.Engine.configure(spark)
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (name == "events") {
         import org.apache.spark.sql.functions.{col, expr}

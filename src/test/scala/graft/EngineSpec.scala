@@ -9,11 +9,11 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import graft.plans.ParamLiteral
 import graft.sources.TableLog
 
-/** Session-build conventions: the static confs reach the session,
-  * Spark's generated-class cache holds the engine's working set,
-  * filter literals are parameters of the generated code, and
-  * `Engine.configure` adds its planner rules without dropping a
-  * user's. */
+/** Session-build conventions: the engine's confs reach the session
+  * and stay as the caller sets them, `GraftExtensions` installs the
+  * engine once, Spark's generated-class cache holds the engine's
+  * working set, and filter literals are parameters of the generated
+  * code. */
 class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private object UserRule extends Rule[LogicalPlan] {
@@ -23,27 +23,50 @@ class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     def apply(plan: LogicalPlan): Seq[SparkPlan] = Nil
   }
 
-  test("configure keeps user-installed rules and installs its own once") {
+  /** The rules of every optimizer batch (`batches` is protected in
+    * Scala and public in the bytecode). */
+  private def optimizerRules: Seq[Rule[_]] = {
+    val opt = spark.sessionState.optimizer
+    opt.getClass.getMethod("batches").invoke(opt).asInstanceOf[Seq[AnyRef]]
+      .flatMap(b => b.getClass.getMethod("rules").invoke(b)
+        .asInstanceOf[Seq[Rule[_]]])
+  }
+
+  test("the built session installs the engine once") {
+    val rules = optimizerRules
+    for (r <- Seq(graft.plans.SmallDimBroadcastRule(),
+        graft.plans.WindowTopKRewriteRule()))
+      assert(rules.count(_ == r) == 1, s"$r in ${rules.map(_.ruleName)}")
+    val strategies = spark.sessionState.planner.strategies
+    assert(strategies.count(_ == graft.plans.TopKPerGroupStrategy) == 1,
+      strategies)
+    for ((name, _, _) <- GraftExtensions.functions)
+      assert(spark.catalog.functionExists(name), name)
     val exp = spark.experimental
     val (savedOpt, savedStrat) = (exp.extraOptimizations, exp.extraStrategies)
     try {
       exp.extraOptimizations = Seq(UserRule)
       exp.extraStrategies = Seq(UserStrategy)
-      Engine.configure(spark)
-      Engine.configure(spark)
-      val opt = exp.extraOptimizations
-      for (r <- Seq(UserRule, graft.plans.SmallDimBroadcastRule(),
-          graft.plans.WindowTopKRewriteRule()))
-        assert(opt.count(_ == r) == 1, s"$r in $opt")
-      assert(opt.size == 3, opt)
-      val strat = exp.extraStrategies
-      for (st <- Seq(UserStrategy, graft.plans.TopKPerGroupStrategy))
-        assert(strat.count(_ == st) == 1, s"$st in $strat")
-      assert(strat.size == 2, strat)
+      Session(spark)
+      assert(exp.extraOptimizations == Seq(UserRule))
+      assert(exp.extraStrategies == Seq(UserStrategy))
     } finally {
       exp.extraOptimizations = savedOpt
       exp.extraStrategies = savedStrat
     }
+  }
+
+  test("building a Session and loading a fixture keep a conf the caller " +
+      "set") {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "1m")
+    try {
+      Session(spark)
+      graft.sources.Tables.invalidate(spark)
+      graft.sources.Tables(spark, sfDir, "nation")
+      assert(spark.conf.get(key) == "1m")
+    } finally spark.conf.set(key, saved)
   }
 
   test("the shared session is built with the engine's static confs") {

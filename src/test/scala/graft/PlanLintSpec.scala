@@ -137,11 +137,10 @@ class PlanLintSpec extends SparkSpec {
       "whole-stage codegen") {
     import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.QueryStageExec
-    // AQE inserts codegen per stage only at execution (and AQE-off
-    // conf games don't survive — Engine.configure, called from every
-    // Tables load, re-pins it on). So: EXECUTE the query, then walk
-    // the finalized adaptive plan, descending into materialized
-    // query stages.
+    // AQE inserts codegen per stage only at execution (and the
+    // session is built with AQE on, by Engine.buildConfs). So: EXECUTE
+    // the query, then walk the finalized adaptive plan, descending
+    // into materialized query stages.
     for ((name, fn) <- SparkEntry.queries if codegenLinted(name)) {
       val df = fn(spark, sfDir)
       df.collect() // finalize every adaptive stage

@@ -16,12 +16,11 @@ object SparkSpec {
       .master("local[4, 2]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(Engine.buildConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    Engine.configure(s)
+    s
   }
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -821,6 +821,36 @@ class TableLogSpec extends SparkSpec {
       "restore did not re-apply the vector")
   }
 
+  test("a CHECK constraint declared before a checkpoint is listed and " +
+      "enforced after it; a checkpoint without constraints is ignored") {
+    val root = freshRoot()
+    spark.conf.set("spark.graft.tablelog.checkpointInterval", "2")
+    try {
+      TableLog.append(spark, root, nums(0, 10))                     // v0
+      TableLog.addConstraint(spark, root, "id_bound", "id < 1000")  // v1
+      TableLog.append(spark, root, nums(10, 20))                    // v2, ckpt
+      TableLog.append(spark, root, nums(20, 30))                    // v3
+      def base = TableLog.replayState(spark, root, -1, useCheckpoint = true)._2
+      assert(base.contains(2), "expected the replay to start from the v2 checkpoint")
+      assert(TableLog.constraints(spark, root) == Map("id_bound" -> "id < 1000"))
+      val e = intercept[IllegalStateException] {
+        TableLog.append(spark, root, nums(995, 1005))
+      }
+      assert(e.getMessage.contains("id_bound"), e.getMessage)
+      assert(TableLog.snapshot(spark, root).count() == 30)
+      // the same checkpoint as written before constraints rode it
+      val ckpt = new org.apache.hadoop.fs.Path(s"$root/_log/ckpt-v00002.tsv")
+      val f = ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val body = scala.io.Source.fromFile(ckpt.toString).mkString
+      assert(body.contains("#check\tid_bound\t"), body)
+      val out = f.create(ckpt, true)
+      try out.write(body.linesIterator.filterNot(_.startsWith("#check"))
+        .mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+      assert(base.isEmpty, "a checkpoint without the constraints marker was used")
+      assert(TableLog.constraints(spark, root) == Map("id_bound" -> "id < 1000"))
+    } finally spark.conf.unset("spark.graft.tablelog.checkpointInterval")
+  }
+
   test("deleteVector rides the CDF and the checkpoint") {
     val root = freshRoot()
     spark.conf.set("spark.graft.tablelog.cdf", "true")
