@@ -37,6 +37,13 @@ object Engine {
     // reliable `iterCheckpoint` files are deleted once their RDD is
     // garbage-collected, so checkpoint dirs do not grow without bound
     "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
+    // local writes (TableLog commits, the output committer, exports,
+    // checkpoints) set file and dir modes with a syscall instead of
+    // forking `chmod` per create and mkdirs (graft.sources.LocalFs).
+    // Hadoop caches one `file:` FileSystem per JVM and user, so this
+    // takes effect only if the session is built before anything in the
+    // JVM creates a local FileSystem
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sources.LocalFs].getName,
     "spark.sql.ansi.enabled" -> "false",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",

@@ -11,8 +11,11 @@ import graft.functions.{CdcChunks, CosineSimilarity, Md5BucketFeats, Md5Shingles
 /** The engine's one installer, a SparkSessionExtensions entry point.
   * Every engine session is built with [[Engine.buildConfs]], which
   * names this class in `spark.sql.extensions`; a cluster deployment
-  * puts the same map in spark-defaults. This mirrors the reference's
-  * registry pattern: Gandiva's function registry
+  * puts the same map in spark-defaults. Its static entries, which a
+  * live session cannot take, are `spark.sql.extensions`,
+  * `spark.sql.codegen.cache.maxEntries` and `spark.hadoop.fs.file.impl`
+  * (read when the JVM first creates a `file:` FileSystem). This
+  * mirrors the reference's registry pattern: Gandiva's function registry
   * (`cpp/src/gandiva/function_registry.cc`) is the analogous plug-in
   * point for its JIT'd kernels.
   *

@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -7,13 +12,13 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 import graft.plans.ParamLiteral
-import graft.sources.TableLog
+import graft.sources.{LocalFs, TableLog}
 
 /** Session-build conventions: the engine's confs reach the session
   * and stay as the caller sets them, `GraftExtensions` installs the
   * engine once, Spark's generated-class cache holds the engine's
-  * working set, and filter literals are parameters of the generated
-  * code. */
+  * working set, filter literals are parameters of the generated code,
+  * and local writes set file modes without starting a process. */
 class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private object UserRule extends Rule[LogicalPlan] {
@@ -96,7 +101,7 @@ class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * latest version and registered as `view`. */
   private def pinnedTable(view: String): Unit = {
     val sp = spark; import sp.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_param").toString + "/t"
+    val root = Files.createTempDirectory("graft_param").toString + "/t"
     TableLog.append(spark, root, (0 until 3000).map(i => (i.toLong, i % 7))
       .toDF("id", "g").repartition(3))
     TableLog.snapshot(spark, root).createOrReplaceTempView(view)
@@ -173,7 +178,6 @@ class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("inParallel runs at most `width` legs at once, returns results in " +
       "leg order, and rethrows the first failure with no pool thread left") {
-    import scala.jdk.CollectionConverters._
     val running = new java.util.concurrent.atomic.AtomicInteger
     val peak = new java.util.concurrent.atomic.AtomicInteger
     val legs = (0 until 12).map { i => () =>
@@ -194,5 +198,80 @@ class EngineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!Thread.getAllStackTraces.keySet.asScala
       .exists(t => t.getName == "graft-test-pool" && t.isAlive),
       "a pool thread outlived the call")
+  }
+
+  /** One SQL commit of each kind on a 130-row table whose log
+    * checkpoints every 2 commits. */
+  private def commitRound(root: String): Unit = {
+    val key = "spark.graft.tablelog.checkpointInterval"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "2")
+    val t = s"graft_log('$root')"
+    val session = Session(spark)
+    try Seq(
+      s"CREATE TABLE $t STATS (id) AS SELECT id, id % 7 AS g FROM range(100)",
+      s"INSERT INTO $t SELECT id, 0L AS g FROM range(100, 120)",
+      s"""MERGE INTO $t AS t
+         |USING (SELECT id, 1L AS g FROM range(110, 130)) AS s ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET g = s.g
+         |WHEN NOT MATCHED THEN INSERT *
+         |STATS (id)""".stripMargin,
+      s"DELETE FROM $t WHERE id % 11 = 0",
+      s"OPTIMIZE $t",
+      s"UPDATE $t SET g = g + 1 WHERE id % 13 = 0 STATS (id)"
+    ).foreach(session.sql)
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(TableLog.snapshot(spark, root).count() == 130 - 12)
+  }
+
+  test("a round of SQL commits starts no chmod process") {
+    val root = Files.createTempDirectory("graft_nofork").toString + "/t"
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try commitRound(root) finally rec.stop()
+    val dump = Files.createTempFile("graft_nofork", ".jfr")
+    try {
+      rec.dump(dump)
+      // Spark's asynchronous `rm -rf` cleanup may start processes from
+      // other threads during the window; only chmod is the write path's
+      val chmods = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .map(_.getString("command")).filter(_.startsWith("chmod"))
+      assert(chmods.isEmpty, s"${chmods.size} chmod processes: ${chmods.take(3)}")
+    } finally { rec.close(); Files.delete(dump) }
+  }
+
+  test("local writes keep the stock modes, the sticky bit and the " +
+      "refused rename onto a file, through the engine's file: filesystem") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val local = FileSystem.get(new java.net.URI("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    assert(local.getClass == classOf[LocalFs])
+    val root = Files.createTempDirectory("graft_modes").toString + "/t"
+    commitRound(root)
+    val all = Files.walk(Paths.get(root)).iterator.asScala
+      .filter(Files.isRegularFile(_)).toSeq
+    def named(re: String) = {
+      val hits = all.filter(_.getFileName.toString.matches(re))
+      assert(hits.nonEmpty, re)
+      hits
+    }
+    val files = Seq(".*\\.parquet", "\\..*\\.parquet\\.crc", "v\\d+\\.json",
+      "_stats\\.tsv", "ckpt-v\\d+\\.tsv").flatMap(named)
+    def mode(f: java.nio.file.Path) =
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(f))
+    for (f <- files) assert(mode(f) == "rw-r--r--", f)
+    for (d <- files.map(_.getParent).distinct) assert(mode(d) == "rwxr-xr-x", d)
+    val dir = Files.createTempDirectory("graft_sticky")
+    val sticky = Integer.parseInt("1755", 8)
+    local.setPermission(new Path(dir.toUri), new FsPermission(sticky.toShort))
+    assert((Files.getAttribute(dir, "unix:mode").asInstanceOf[Int] & 0xfff) == sticky)
+    assert(local.getFileStatus(new Path(dir.toUri)).getPermission.toShort == sticky)
+    val Seq(a, b) = Seq("a", "b").map { n =>
+      val p = new Path(dir.toUri.toString, n)
+      val out = local.create(p); out.write(n.getBytes); out.close(); p }
+    assert(!local.rename(a, b))
+    assert(Files.readString(Paths.get(b.toUri)) == "b")
   }
 }
