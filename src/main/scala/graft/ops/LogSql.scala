@@ -195,12 +195,14 @@ object LogSql {
       // named columns' bit representations for multi-column skipping
       // defaults: plain compaction folds to ONE file; a ZORDER
       // rewrite defaults to 8 (clustering into a single file would
-      // leave nothing for file skipping to skip)
+      // leave nothing for file skipping to skip). Compaction keeps the
+      // key stats the live files carry, so pruning survives it.
       val v =
         if (z1 != null) graft.ops.Layout.optimizeZorder(s, root, z1, z2,
           Option(nFiles).map(_.toInt).getOrElse(8))
         else graft.sources.TableLog.compact(s, root,
-          Option(nFiles).map(_.toInt).getOrElse(1))
+          Option(nFiles).map(_.toInt).getOrElse(1),
+          graft.sources.TableLog.statsColumns(s, root))
       Some(versionDf(s, v))
     case HistoryRe(root) =>
       // Delta's `DESCRIBE HISTORY t` — the commit audit, surfaced

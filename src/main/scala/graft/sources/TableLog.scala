@@ -113,11 +113,12 @@ import org.apache.spark.sql.types.LongType
   *    list (`"dvs":[...]` = the FULL post-commit state, so replay is
   *    last-writer-wins and old logs parse unchanged). Every read path
   *    ([[snapshot]]/[[readRange]]/[[readBox]]) and every rewriting
-  *    mutation ([[deleteRange]]/[[merge]]/[[mergeUpdate]]) anti-joins
-  *    the active vectors by (file key, `_metadata.row_index`) — the DV
-  *    side auto-broadcasts below
-  *    `spark.graft.tablelog.dv.broadcastMaxBytes` (32 MB default,
-  *    decided from driver-side file lengths, no extra job). Layout
+  *    mutation ([[deleteRange]]/[[merge]]/[[mergeUpdate]]) drops the
+  *    rows the active vectors name by (file key, `_metadata.row_index`)
+  *    — below `spark.graft.tablelog.dv.broadcastMaxBytes` (32 MB
+  *    default, decided from driver-side file lengths, no extra job) the
+  *    vectors are read on the driver and the parquet reader drops their
+  *    rows by row index, above it they are anti-joined with a shuffle. Layout
   *    rewrites ([[rewrite]]/[[compact]]/[[overwrite]]) MATERIALIZE the
   *    deletes (they rewrite from the DV-filtered snapshot) and clear
   *    the vector state; [[restore]] restores it; [[vacuum]] reclaims
@@ -557,6 +558,10 @@ object TableLog {
     * collision-free by the per-commit uuid. */
   private def fileKey(c: Column): Column = substring_index(c, "/", -3)
 
+  /** [[fileKey]] of one path string, on the driver. */
+  private def fileKey(p: String): String =
+    p.split("/", -1).takeRight(3).mkString("/")
+
   private def dvBroadcastMaxBytes(s: SparkSession): Long =
     s.conf.getOption("spark.graft.tablelog.dv.broadcastMaxBytes")
       .map(_.toLong).getOrElse(32L * 1024 * 1024)
@@ -566,36 +571,114 @@ object TableLog {
   private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "file STRING, pos BIGINT")
 
-  /** The union of `dvs` as a keyed (_g_dv_file, _g_dv_pos) frame,
-    * broadcast-hinted while the sidecars' total on-disk size (driver
-    * metadata, no job) fits `spark.graft.tablelog.dv.broadcastMaxBytes`.
-    * Read under the sidecars' fixed schema: inferring it would run a
-    * Spark job on every snapshot and mutation while a DV is active. */
-  private def dvJoinFrame(s: SparkSession, root: String,
-      dvs: Seq[String]): DataFrame = {
+  /** The rows the deletion-vector sidecars `dvs` (absolute paths)
+    * delete, as sorted row positions per [[fileKey]]: read on the driver
+    * with parquet-hadoop's reader, so no Spark job runs. */
+  private def dvPositions(s: SparkSession,
+      dvs: Seq[String]): Map[String, Array[Long]] = {
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    val conf = s.sparkContext.hadoopConfiguration
+    val acc = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofLong]
+    dvs.foreach { d =>
+      // a directory path reads every visible part file under it
+      val r = ParquetReader.builder(new GroupReadSupport, new Path(d))
+        .withConf(conf).build()
+      try Iterator.continually(r.read()).takeWhile(_ != null).foreach { g =>
+        acc.getOrElseUpdate(fileKey(g.getString("file", 0)),
+          new mutable.ArrayBuilder.ofLong) += g.getLong("pos", 0)
+      } finally r.close()
+    }
+    acc.map { case (k, b) =>
+      val ps = b.result()
+      java.util.Arrays.sort(ps)
+      k -> ps
+    }.toMap
+  }
+
+  /** Whether the active vectors `dvs` fit
+    * `spark.graft.tablelog.dv.broadcastMaxBytes` by their total on-disk
+    * size (file-system metadata, no job): then the reader drops their
+    * rows ([[DvParquetFormat]]), else they are anti-joined. */
+  private def dvInReader(s: SparkSession, root: String,
+      dvs: Seq[String]): Boolean = {
     val f = fs(s, root)
-    val bytes = dvs.map { d =>
+    dvs.nonEmpty && dvs.map { d =>
       val p = new Path(abs(root, d))
       if (f.exists(p)) f.getContentSummary(p).getLength else 0L
-    }.sum
-    val dvRaw = s.read.schema(DvSchema).parquet(dvs.map(abs(root, _)): _*)
-      .select(fileKey(col("file")).as("_g_dv_file"),
-        col("pos").as("_g_dv_pos"))
-    if (bytes <= dvBroadcastMaxBytes(s)) broadcast(dvRaw) else dvRaw
+    }.sum <= dvBroadcastMaxBytes(s)
+  }
+
+  /** Parquet that drops the `deleted` rows (positions per [[fileKey]],
+    * [[dvPositions]]) inside the reader, as Delta's and Iceberg's
+    * readers do: the positions ride one broadcast variable and each
+    * file's rows are tested by their row index, so no filter, join or
+    * exchange enters the plan and no extra job or adaptive re-plan runs.
+    * Rows come out one at a time (from the vectorized reader where it
+    * applies), and the row index is read even when the query does not
+    * ask for it. The relation's options name the vectors ([[readFiles]]):
+    * parquet formats all compare equal, so the options are what keeps
+    * scans over other vector states from ever sharing a plan or cache. */
+  private final class DvParquetFormat(
+      deleted: org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]])
+      extends org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+    import org.apache.spark.sql.execution.datasources.PartitionedFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.{StructField, StructType}
+
+    override def supportBatch(s: SparkSession, schema: StructType): Boolean = false
+
+    override def buildReaderWithPartitionValues(s: SparkSession,
+        dataSchema: StructType, partitionSchema: StructType,
+        requiredSchema: StructType,
+        filters: Seq[org.apache.spark.sql.sources.Filter],
+        options: Map[String, String],
+        conf: org.apache.hadoop.conf.Configuration)
+        : PartitionedFile => Iterator[InternalRow] = {
+      val rowIndex = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
+      val asked = Some(requiredSchema.fieldNames.indexOf(rowIndex)).filter(_ >= 0)
+      // nullable, as a column no file holds must be, or the reader
+      // refuses it as missing instead of filling it
+      val read = super.buildReaderWithPartitionValues(s, dataSchema,
+        partitionSchema, if (asked.isDefined) requiredSchema
+          else requiredSchema.add(StructField(rowIndex, LongType, nullable = true)),
+        filters, options, conf)
+      val at = asked.getOrElse(requiredSchema.length)
+      // the output row is the read schema then the partition values;
+      // an added row index is projected out again
+      val kept = (requiredSchema.fields ++ partitionSchema.fields).zipWithIndex
+        .map { case (f, i) => (f, if (asked.isEmpty && i >= at) i + 1 else i) }
+      val deleted = this.deleted
+      file => {
+        val ps = deleted.value.getOrElse(fileKey(file.filePath.toString), null)
+        val rows = read(file)
+        val alive = if (ps == null) rows
+          else rows.filter(r => java.util.Arrays.binarySearch(ps, r.getLong(at)) < 0)
+        if (asked.isDefined) alive
+        else {
+          val drop = UnsafeProjection.create(kept.toSeq.map { case (f, i) =>
+            BoundReference(i, f.dataType, f.nullable) })
+          alive.map(drop)
+        }
+      }
+    }
   }
 
   /** `df` (a parquet scan of this table's files) keyed by
     * (_g_file, _g_pos) — file key and `_metadata.row_index` — minus the
-    * rows the active deletion vectors name. The DV side broadcasts
-    * while its on-disk size (driver metadata, no job) stays under
-    * `spark.graft.tablelog.dv.broadcastMaxBytes`; past that the join
-    * shuffles and a [[compact]] is overdue. */
+    * rows the deletion vectors `dvs` name, read as a frame under their
+    * fixed schema (no inference job) and anti-joined with a shuffle:
+    * the path for vectors over the broadcast budget ([[dvInReader]]),
+    * where a [[compact]] is overdue. */
   private def keyedAlive(s: SparkSession, root: String, df: DataFrame,
       dvs: Seq[String]): DataFrame = {
     val keyed = df.withColumn("_g_file", fileKey(col("_metadata.file_path")))
       .withColumn("_g_pos", col("_metadata.row_index"))
     if (dvs.isEmpty) keyed
-    else keyed.join(dvJoinFrame(s, root, dvs),
+    else keyed.join(readFiles(s, dvs.map(abs(root, _)), Some(DvSchema))
+        .select(fileKey(col("file")).as("_g_dv_file"), col("pos").as("_g_dv_pos")),
       col("_g_file") === col("_g_dv_file") &&
         col("_g_pos") === col("_g_dv_pos"), "left_anti")
   }
@@ -1349,16 +1432,45 @@ object TableLog {
     * a file surface null, stragglers from drops are never even read.
     * Pre-schema logs keep the mergeSchema union. */
   private[sources] def readUnion(s: SparkSession, files: Seq[String],
-      decl: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+      decl: Option[org.apache.spark.sql.types.StructType],
+      dvs: Seq[String] = Nil): DataFrame =
     decl match {
-      case None => s.read.option("mergeSchema", "true").parquet(files: _*)
+      case None => readFiles(s, files, None, Map("mergeSchema" -> "true"), dvs)
       case Some(d) =>
         val phys = org.apache.spark.sql.types.StructType(
           d.fields.toSeq.flatMap(f => physNames(f).map(n =>
             org.apache.spark.sql.types.StructField(n, f.dataType,
               nullable = true))))
-        s.read.schema(phys).parquet(files: _*)
+        readFiles(s, files, Some(phys), dvs = dvs)
     }
+
+  /** A parquet frame over `files`, which the log names, so the relation
+    * resolves without Spark's path-existence check (a fresh
+    * `checkPathsExist` thread pool per read): the listing stats every
+    * file anyway, and a file it cannot find — vacuumed below the
+    * retention floor — refuses here, while one deleted after the
+    * listing fails at scan. With deletion-vector sidecars `dvs`
+    * (absolute paths) the reader drops their rows ([[DvParquetFormat]]). */
+  private def readFiles(s: SparkSession, files: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      options: Map[String, String] = Map.empty,
+      dvs: Seq[String] = Nil): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation}
+    val rel = DataSource(s, "parquet", paths = files,
+      userSpecifiedSchema = schema, options = options)
+      .resolveRelation(checkFilesExist = false).asInstanceOf[HadoopFsRelation]
+    if (rel.location.inputFiles.length < files.distinct.size) {
+      val f = fs(s, files.head)
+      val gone = files.filterNot(p => f.exists(new Path(p)))
+      throw new java.io.FileNotFoundException(
+        s"TableLog: ${gone.mkString(", ")} does not exist")
+    }
+    s.baseRelationToDataFrame(if (dvs.isEmpty) rel
+      else rel.copy(fileFormat = new DvParquetFormat(
+          s.sparkContext.broadcast(dvPositions(s, dvs))),
+        options = rel.options + ("graft.deletionVectors" -> dvs.mkString(",")))(
+        rel.sparkSession))
+  }
 
   /** Present `raw` under the DECLARED schema: declared column order,
     * columns added by addColumn but not yet written read as null,
@@ -1386,7 +1498,8 @@ object TableLog {
   }
 
   /** Read `files` of `st` with the SNAPSHOT contract: [[readUnion]]
-    * over them, `st`'s deletion vectors anti-joined, and `st`'s
+    * over them, `st`'s deletion vectors applied (by the reader within the
+    * broadcast budget, by an anti-join past it), and `st`'s
     * declared schema presented through the name mapping — columns added
     * but not yet written read as null, declared column order, stragglers
     * from dropped nullable columns hidden (pre-schema logs keep the raw
@@ -1399,9 +1512,12 @@ object TableLog {
     * position ([[deleteVector]], [[update]]). */
   private def readAligned(s: SparkSession, root: String, st: TableState,
       files: Seq[String], keyed: Boolean = false): DataFrame = {
-    val raw = readUnion(s, files.map(rel => abs(root, rel)), st.schema)
-    val alive = if (keyed) keyedAlive(s, root, raw, st.dvs)
-      else applyDv(s, root, raw, st.dvs)
+    val inReader = dvInReader(s, root, st.dvs)
+    val raw = readUnion(s, files.map(rel => abs(root, rel)), st.schema,
+      if (inReader) st.dvs.map(abs(root, _)) else Nil)
+    val antiJoined = if (inReader) Nil else st.dvs
+    val alive = if (keyed) keyedAlive(s, root, raw, antiJoined)
+      else applyDv(s, root, raw, antiJoined)
     st.schema match {
       case None => alive
       case Some(d) => alignDeclared(d, alive,
@@ -1417,13 +1533,20 @@ object TableLog {
   private def publishOrClean(s: SparkSession, root: String,
       subs: => Seq[String])(commit: => Int): Int =
     try commit catch { case e: Throwable =>
-      val f = fs(s, root)
-      subs.filter(_.nonEmpty).foreach { sub =>
-        try { f.delete(new Path(s"$root/$sub"), true); () }
-        catch { case _: Throwable => () }
-      }
+      dropDirs(s, root, subs)
       throw e
     }
+
+  /** Best-effort delete of the unpublished directories `subs` ("" =
+    * none). */
+  private def dropDirs(s: SparkSession, root: String,
+      subs: Seq[String]): Unit = {
+    val f = fs(s, root)
+    subs.filter(_.nonEmpty).foreach { sub =>
+      try { f.delete(new Path(s"$root/$sub"), true); () }
+      catch { case _: Throwable => () }
+    }
+  }
 
   /** One commit as the streaming source sees it: (dataChange,
     * absolute add paths, remove count, whether the commit records
@@ -1590,6 +1713,16 @@ object TableLog {
     sidecarRows(s, root, st, None).collect {
       case Array(file, c, mn, mx) if c == column => file -> (mn.toLong, mx.toLong)
     }.toMap
+
+  /** The columns the live files' stats sidecars bound and the table
+    * still declares: what a layout rewrite must bound again for the
+    * pruned reads and MERGE to keep skipping the files it writes. */
+  private[graft] def statsColumns(s: SparkSession, root: String): Seq[String] = {
+    val st = state(s, root, -1)
+    val declared = st.schema.map(_.fieldNames.toSet)
+    sidecarRows(s, root, st, None).map(_(1)).distinct
+      .filter(c => declared.forall(_(c)))
+  }
 
   /** Whether a live file of `st` can hold a row with `column` in
     * [lo, hi]: stats-pruned when bounds exist, kept when they don't. */
@@ -1892,7 +2025,7 @@ object TableLog {
     * pairs are written as a parquet sidecar (O(deleted rows) bytes,
     * distributed write) and ONE metadata commit appends it to the
     * active-vector list; every data file keeps its identity, bytes,
-    * and stats. Reads anti-join the vectors (see [[applyDv]]); a later
+    * and stats. Reads drop the vectors' rows (see [[readAligned]]); a later
     * [[compact]]/[[rewrite]] materializes and clears them. Pre-delete
     * versions remain time-travelable (the vectors are versioned state,
     * not file mutations).
@@ -1900,7 +2033,14 @@ object TableLog {
     * Why it matters at scale: deleting 0.1% of a 100 TB table by
     * rewrite copies ~100 TB; by vector it appends kilobytes and defers
     * the copy to the next scheduled compaction. The trade is read-side
-    * work — one broadcast anti-join per scan while vectors are active.
+    * work — a per-row position test inside each scan's reader while
+    * vectors are active (an anti-join past the broadcast budget, see
+    * [[readAligned]]).
+    *
+    * Cost: ONE Spark job, the sidecar write, which also counts the
+    * matched rows (a named `Observation`) — no separate emptiness probe.
+    * The matched rows are cached only while change capture is on, when
+    * the CDC sidecar is their second reader.
     *
     * Publish CAS-revalidates that BOTH the live-file set and the DV
     * state still equal what this delete computed against — a
@@ -1909,37 +2049,39 @@ object TableLog {
     * Already-vector-deleted rows are excluded from the read, so
     * re-deleting an overlapping predicate records only the NEW rows
     * and the CDF feed never double-reports a delete. A predicate that
-    * matches nothing (or an empty table) is a no-op: no commit, the
-    * current version returned. */
+    * matches nothing (or an empty table) is a no-op: no commit, no
+    * sidecar left on disk, the current version returned. */
   def deleteVector(s: SparkSession, root: String, predicate: Column): Int = {
     val st = state(s, root, -1)
     if (st.live.isEmpty) return st.version
     val aligned = readAligned(s, root, st, st.files, keyed = true)
     val dataCols = aligned.columns.toSeq
       .filterNot(Set("_g_file", "_g_pos")).map(col)
-    val matched = aligned.filter(predicate).cache()
+    val hits = aligned.filter(predicate)
+    val matched = if (cdfEnabled(s)) hits.cache() else hits
+    val counted = org.apache.spark.sql.Observation("graft_dv_matched")
     try {
-      if (matched.limit(1).count() == 0) return st.version
       val dvSub = s"data/${UUID.randomUUID()}-dv"
-      // the DV sidecar and the CDF sidecar both read the cached
-      // `matched` frame
       commitMutation(s, root, st, Seq.empty, sentinel = true,
         dvs = Some(st.dvs :+ dvSub), expectFiles = Some(st.files.toSet),
         changes = matched.select(dataCols: _*)
-          .withColumn(ChangeTypeCol, lit("delete"))) {
+          .withColumn(ChangeTypeCol, lit("delete")),
+        abandon = counted.get("rows") == 0L) {
         matched.select(col("_g_file").as("file"), col("_g_pos").as("pos"))
+          .observe(counted, count(lit(1)).as("rows"))
           .write.parquet(s"$root/$dvSub")
         (dvSub, Seq.empty)
       }
-    } finally matched.unpersist()
+    } finally if (matched ne hits) matched.unpersist()
   }
 
   /** UPDATE … SET … WHERE (Delta UPDATE parity): rewrite ONLY the
     * files containing at least one matching alive row; every other
     * file keeps its identity, bytes, and stats. File targeting is
-    * predicate-EXACT — one distributed pass marks each matching row
-    * with its `_metadata` file identity and the distinct file keys
-    * come back as O(#files) driver metadata — where min/max stats
+    * predicate-EXACT — one map-only pass marks each matching row with
+    * its `_metadata` file identity, each partition sends back its
+    * distinct file keys, and the driver de-duplicates the O(#files ×
+    * #partitions) keys (one job, no shuffle) — where min/max stats
     * could only approximate an arbitrary predicate (and would still
     * be consulted by the scan below them). The touched files are
     * re-read under the captured DV state (rewriting must not
@@ -1961,9 +2103,11 @@ object TableLog {
     val st = state(s, root, -1)
     requireSetColumns(s, root, st, set, "update")
     if (st.live.isEmpty) return st.version
+    val str = org.apache.spark.sql.Encoders.STRING
     val touched = readAligned(s, root, st, st.files, keyed = true)
-      .filter(predicate).select(col("_g_file")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted // O(#files) metadata
+      .filter(predicate).select(col("_g_file")).as(str)
+      .mapPartitions(_.toSet.iterator)(str)
+      .collect().distinct.toSeq.sorted
     if (touched.isEmpty) return st.version
     val src = readAligned(s, root, st, touched)
     // hit flag materializes BEFORE any SET applies: a SET that
@@ -2060,10 +2204,13 @@ object TableLog {
     * [min,max] key stats, held as one literal array (O(#keys ×
     * #files) comparisons), collecting the indices of the files it
     * falls in. Files without stats for `keyCol` are always touched;
-    * without `prune` (BY SOURCE) every file is. count_distinct ignores
-    * NULL keys, so rows == distinct keys is exact once the null gate,
-    * checked first, passes. Returns (touched files in live order,
-    * source fits the budget). */
+    * without `prune` (BY SOURCE) every file is. The distinct-key count
+    * is the size of the key set, which ignores NULL keys, so rows ==
+    * distinct keys is exact once the null gate, checked first, passes;
+    * the set plans one shuffle where count_distinct plans two (one by
+    * key, one to the final task), at the price of holding the source's
+    * distinct keys in that final task.
+    * Returns (touched files in live order, source fits the budget). */
   private def mergeFront(s: SparkSession, root: String, st: TableState,
       src: DataFrame, keyCol: String, prune: Boolean): (Seq[String], Boolean) = {
     val b = if (prune) bounds(s, root, st, keyCol) else Map.empty[String, (Long, Long)]
@@ -2076,7 +2223,7 @@ object TableLog {
       r => r.getField("_1")))
     val guard = Seq(count(lit(1)),
       count(when(col(keyCol).isNull, lit(1))), // count: never NULL on empty src
-      count_distinct(col(keyCol)))
+      size(collect_set(col(keyCol))).cast(LongType))
     val r = src.agg(guard.head,
       guard.tail ++ (if (ranges.isEmpty) Nil else Seq(hits)): _*).head()
     require(r.getLong(1) == 0L, s"merge: NULL $keyCol values in source")
@@ -2173,8 +2320,7 @@ object TableLog {
           (ins, () => ins.withColumn(ChangeTypeCol, lit("insert")))
         } else {
           val tgt = readAligned(s, root, st, touched)
-          val srcPref = src.columns.foldLeft(src)((d, c) =>
-            d.withColumnRenamed(c, s"src_$c"))
+          val srcPref = src.toDF(src.columns.toSeq.map(c => s"src_$c"): _*)
           // clause flags materialize BEFORE any SET applies: a condition
           // referencing a SET column must see the TARGET value, not the
           // half-updated frame (and every SET column the same verdict).
@@ -2185,9 +2331,9 @@ object TableLog {
           // the optimizer drops its filter and its CDF branch.
           val joined = tgt.join(if (smallSrc) broadcast(srcPref) else srcPref,
             tgt(keyCol) === srcPref(s"src_$keyCol"), "left")
-            .withColumn("__hit", col(s"src_$keyCol").isNotNull && cond)
-            .withColumn("__doomed", coalesce(col(s"src_$keyCol").isNull &&
-              bySource.getOrElse(lit(false)), lit(false)))
+            .select(col("*"), (col(s"src_$keyCol").isNotNull && cond).as("__hit"),
+              coalesce(col(s"src_$keyCol").isNull &&
+                bySource.getOrElse(lit(false)), lit(false)).as("__doomed"))
           val hit = col("__hit")
           val doomed = col("__doomed")
           val updated = applySet(joined, set, hit)
@@ -2224,13 +2370,15 @@ object TableLog {
     * still writes a schema-bearing file, so "captured but no rows"
     * reads back as zero changes, distinct from "not captured" — and
     * `sentinel` records the empty CDC marker with capture off (the
-    * rule is in the change-data-feed section). Returns the committed
-    * version. */
+    * rule is in the change-data-feed section). `abandon`, evaluated
+    * once both writes are done, drops the fresh directories and
+    * publishes nothing. Returns the committed version, or `st`'s when
+    * abandoned. */
   private def commitMutation(s: SparkSession, root: String, st: TableState,
       remove: Seq[String], changes: => DataFrame, sentinel: Boolean,
       statsCols: Seq[String] = Nil, dataChange: Boolean = true,
       dvs: Option[Seq[String]] = None,
-      expectFiles: Option[Set[String]] = None)(
+      expectFiles: Option[Set[String]] = None, abandon: => Boolean = false)(
       write: => (String, Seq[String])): Int = {
     val ((sub, adds), cdc) = par2(write,
       if (cdfEnabled(s)) {
@@ -2238,6 +2386,10 @@ object TableLog {
         changes.write.parquet(s"$root/$dir")
         Some(dir)
       } else if (sentinel) Some("") else None)
+    if (abandon) {
+      dropDirs(s, root, sub +: cdc.toSeq)
+      return st.version
+    }
     publishOrClean(s, root, sub +: cdc.toSeq) {
       publish(s, root, adds, remove, writeStats(s, root, sub, statsCols),
         dataChange = dataChange, cdc = cdc, dvs = dvs,

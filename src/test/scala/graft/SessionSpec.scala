@@ -526,4 +526,106 @@ class SessionSpec extends SparkSpec {
     assert(feed == Seq((1000L, "insert"), (1001L, "insert")), s"got $feed")
     assert(before.subsetOf(live(root)), "an insert-only MERGE removed files")
   }
+
+  /** A fresh 150-row `graft_log` table with key stats on `id`, created
+    * through SQL; returns its `graft_log('…')` reference and root. */
+  private def sqlTable(session: Session): (String, String) = {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_sqljobs").toString + "/t"
+    val t = s"graft_log('$root')"
+    session.sql(s"CREATE TABLE $t STATS (id) AS " +
+      "SELECT id, id % 7 AS g FROM range(150)")
+    (t, root)
+  }
+
+  test("lakehouse SQL: each commit runs only the Spark jobs its data " +
+      "needs: DELETE 1, OPTIMIZE after it 1, UPDATE 2, MERGE 6") {
+    val session = Session(spark)
+    val (t, root) = sqlTable(session)
+    val delete = jobsDuring(session.sql(s"DELETE FROM $t WHERE id % 11 = 0"))
+    val optimize = jobsDuring(session.sql(s"OPTIMIZE $t"))
+    val update = jobsDuring(session.sql(
+      s"UPDATE $t SET g = g + 1 WHERE id % 13 = 0 STATS (id)"))
+    // a VALUES source, not range(…): a range is already clustered by
+    // its id, which spares any distinct-key count its key shuffle
+    val rows = (140 until 160).map(i => s"(${i}L, 1L)").mkString(", ")
+    val merge = jobsDuring(session.sql(
+      s"""MERGE INTO $t AS t
+         |USING (SELECT * FROM VALUES $rows AS v(id, g)) AS s ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET g = s.g
+         |WHEN NOT MATCHED THEN INSERT *
+         |STATS (id)""".stripMargin))
+    assert((delete, optimize, update, merge) == (1, 1, 2, 6),
+      s"jobs per statement: DELETE $delete, OPTIMIZE $optimize, " +
+        s"UPDATE $update, MERGE $merge")
+    // 14 ids deleted; 143 of them comes back as a MERGE insert
+    val snap = graft.sources.TableLog.snapshot(spark, root)
+    assert(snap.count() == 150 - 14 + 11)
+    assert(snap.filter(col("id") % 13 === 0 && col("id") < 140)
+      .collect().forall(r => r.getLong(1) == r.getLong(0) % 7 + 1))
+  }
+
+  test("lakehouse SQL: a DELETE matching nothing publishes no version " +
+      "and leaves no -dv or -cdc directory, with capture off and on") {
+    val session = Session(spark)
+    Seq("false", "true").foreach { cdf =>
+      val (t, root) = sqlTable(session)
+      spark.conf.set("spark.graft.tablelog.cdf", cdf)
+      val v = try session.sql(s"DELETE FROM $t WHERE id < 0").head().getInt(0)
+        finally spark.conf.unset("spark.graft.tablelog.cdf")
+      assert(v == 0, s"capture $cdf: a no-op DELETE returned version $v")
+      assert(graft.sources.TableLog.versions(spark, root) == Seq(0),
+        s"capture $cdf: a no-op DELETE published a version")
+      val left = new java.io.File(s"$root/data").list()
+        .filter(d => d.endsWith("-dv") || d.endsWith("-cdc"))
+      assert(left.isEmpty, s"capture $cdf: left ${left.mkString(", ")}")
+    }
+  }
+
+  test("lakehouse SQL: OPTIMIZE keeps the key stats, so a MERGE after " +
+      "it leaves the file outside its keys' range untouched") {
+    val (root, _) = disjointTable()
+    val session = Session(spark)
+    session.sql(s"OPTIMIZE graft_log('$root') INTO 2 FILES")
+    val compacted = live(root)
+    assert(compacted.size == 2, s"expected two files, got $compacted")
+    session.sql(s"MERGE INTO graft_log('$root') AS t " +
+      "USING (SELECT * FROM (VALUES (10L, 'u10')) AS v(id, s)) AS s " +
+      "ON t.id = s.id WHEN MATCHED THEN UPDATE SET s = s.s STATS (id)")
+    assert((compacted & live(root)).size == 1,
+      s"the [100,149] file must keep its identity: $compacted -> ${live(root)}")
+    assert(graft.sources.TableLog.snapshot(spark, root)
+      .filter(col("s") === "u10").count() == 1)
+  }
+
+  test("lakehouse SQL: a round of commits and pinned reads starts no " +
+      "checkPathsExist thread") {
+    val session = Session(spark)
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ThreadStart")
+    rec.start()
+    val root = try {
+      val (t, root) = sqlTable(session)
+      Seq(s"INSERT INTO $t SELECT id, 0L AS g FROM range(150, 170)",
+        s"DELETE FROM $t WHERE id % 11 = 0",
+        s"UPDATE $t SET g = g + 1 WHERE id % 13 = 0 STATS (id)",
+        s"OPTIMIZE $t").foreach(session.sql)
+      (0 to 4).foreach { v =>
+        graft.sources.TableLog.snapshot(spark, root, v)
+          .createOrReplaceTempView("pinned")
+        session.sql("SELECT g, COUNT(*) FROM pinned GROUP BY g").collect()
+      }
+      root
+    } finally rec.stop()
+    val dump = java.nio.file.Files.createTempFile("graft_nocheck", ".jfr")
+    try {
+      rec.dump(dump)
+      import scala.jdk.CollectionConverters._
+      val checks = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .flatMap(e => Option(e.getThread("thread")).map(_.getJavaName))
+        .filter(n => n != null && n.startsWith("checkPathsExist"))
+      assert(checks.isEmpty, s"${checks.size} threads: ${checks.take(3)}")
+    } finally { rec.close(); java.nio.file.Files.delete(dump) }
+    assert(graft.sources.TableLog.snapshot(spark, root).count() == 170 - 16)
+  }
 }

@@ -28,4 +28,25 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
+
+  /** Spark jobs started while `body` runs, the listener bus drained
+    * before and after (it is asynchronous; `listenerBus` is
+    * `private[spark]`, hence the reflective call). */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try { body; drain(); jobs.get() }
+    finally sc.removeSparkListener(listener)
+  }
 }

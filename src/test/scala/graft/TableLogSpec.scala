@@ -1994,4 +1994,89 @@ class TableLogSpec extends SparkSpec {
     assert(poolThreads().isEmpty, "pool thread alive after the fallback")
     assert(TableLog.snapshot(spark, root).count() == 80)
   }
+
+  test("a deletion-vector read returns the same rows through the " +
+      "reader-side filter (vectorized and row-based) and the shuffle " +
+      "anti-join, latest and pinned around an OPTIMIZE") {
+    val key = "spark.graft.tablelog.dv.broadcastMaxBytes"
+    val root = freshRoot()
+    TableLog.append(spark, root, nums(0, 200).repartition(4))
+    TableLog.deleteVector(spark, root, col("id") % 10 === 3)
+    val beforeOpt = TableLog.deleteVector(spark, root, col("id") % 7 === 0)
+    val opt = TableLog.compact(spark, root, 2)
+    TableLog.deleteVector(spark, root, col("id") % 5 === 1)
+    def read(version: Int, budget: Option[String]): (Seq[(Long, String)], Boolean) = {
+      budget.foreach(spark.conf.set(key, _))
+      try {
+        val df = TableLog.snapshot(spark, root, version)
+        val joins = df.queryExecution.optimizedPlan
+          .collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+        (df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq,
+          joins.nonEmpty)
+      } finally spark.conf.unset(key)
+    }
+    Seq(beforeOpt, opt, -1).foreach { v =>
+      val (shuffled, joined) = read(v, Some("0"))
+      val (filtered, filterJoined) = read(v, None)
+      assert(filtered == shuffled, s"version $v: the two DV paths disagree")
+      assert(!filterJoined, s"version $v: the in-budget read planned a join")
+      if (v != opt) assert(joined, s"version $v: budget 0 did not anti-join")
+      // a fresh plan over the memoized frame, through parquet-mr's reader
+      val vec = "spark.sql.parquet.enableVectorizedReader"
+      spark.conf.set(vec, "false")
+      val rowBased = try TableLog.snapshot(spark, root, v).select("id", "s")
+        .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+        finally spark.conf.unset(vec)
+      assert(rowBased == shuffled, s"version $v: the row-based reader disagrees")
+    }
+    val expect = (0L until 200L).filter(i => i % 10 != 3 && i % 7 != 0)
+    assert(read(opt, None)._1.map(_._1) == expect)
+    assert(read(-1, None)._1.map(_._1) == expect.filter(_ % 5 != 1))
+  }
+
+  test("a cached snapshot without vectors never answers a read of the " +
+      "same files with them") {
+    val root = freshRoot()
+    TableLog.append(spark, root, nums(0, 100).repartition(2))
+    val before = TableLog.snapshot(spark, root, 0).cache()
+    try {
+      assert(before.count() == 100)
+      TableLog.deleteVector(spark, root, col("id") < 30)
+      val after = TableLog.snapshot(spark, root)
+      assert(after.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }.isEmpty, "the vectored read was answered from the cache")
+      assert(after.count() == 70)
+    } finally before.unpersist()
+  }
+
+  test("an overlapping second deleteVector records only the new rows " +
+      "in the change feed") {
+    val root = freshRoot()
+    spark.conf.set("spark.graft.tablelog.cdf", "true")
+    try {
+      TableLog.append(spark, root, nums(0, 120).repartition(3))
+      TableLog.deleteVector(spark, root, col("id") % 2 === 0)
+      val v = TableLog.deleteVector(spark, root, col("id") % 3 === 0)
+      val feed = TableLog.tableChanges(spark, root, v - 1, v)
+        .select(col("id"), col(TableLog.ChangeTypeCol))
+        .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+      assert(feed == (0L until 120L).filter(i => i % 3 == 0 && i % 2 != 0)
+        .map(_ -> "delete"), s"got $feed")
+    } finally spark.conf.unset("spark.graft.tablelog.cdf")
+    assert(TableLog.snapshot(spark, root).count() == 40)
+  }
+
+  test("a fresh read of a version whose files were vacuumed refuses at " +
+      "listing, naming the missing file") {
+    val root = freshRoot()
+    TableLog.append(spark, root, nums(0, 40))            // v0
+    TableLog.overwrite(spark, root, nums(100, 160))      // v1 delists v0
+    assert(TableLog.vacuum(spark, root, retainFrom = 1) > 0)
+    val err = intercept[java.io.FileNotFoundException] {
+      TableLog.snapshot(spark, root, 0)
+    }
+    assert(err.getMessage.contains("does not exist"), err.getMessage)
+    assert(TableLog.snapshot(spark, root).count() == 60)
+  }
 }
