@@ -201,8 +201,7 @@ object LogSql {
         if (z1 != null) graft.ops.Layout.optimizeZorder(s, root, z1, z2,
           Option(nFiles).map(_.toInt).getOrElse(8))
         else graft.sources.TableLog.compact(s, root,
-          Option(nFiles).map(_.toInt).getOrElse(1),
-          graft.sources.TableLog.statsColumns(s, root))
+          Option(nFiles).map(_.toInt).getOrElse(1))
       Some(versionDf(s, v))
     case HistoryRe(root) =>
       // Delta's `DESCRIBE HISTORY t` — the commit audit, surfaced

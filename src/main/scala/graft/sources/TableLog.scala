@@ -584,9 +584,18 @@ object TableLog {
       // a directory path reads every visible part file under it
       val r = ParquetReader.builder(new GroupReadSupport, new Path(d))
         .withConf(conf).build()
+      // a sidecar holds each file's rows together: the file key is
+      // decoded once per run of rows, not once per row
+      var file: org.apache.parquet.io.api.Binary = null
+      var into: mutable.ArrayBuilder.ofLong = null
       try Iterator.continually(r.read()).takeWhile(_ != null).foreach { g =>
-        acc.getOrElseUpdate(fileKey(g.getString("file", 0)),
-          new mutable.ArrayBuilder.ofLong) += g.getLong("pos", 0)
+        val f = g.getBinary("file", 0)
+        if (f != file) {
+          file = f.copy()
+          into = acc.getOrElseUpdate(fileKey(f.toStringUsingUTF8),
+            new mutable.ArrayBuilder.ofLong)
+        }
+        into += g.getLong("pos", 0)
       } finally r.close()
     }
     acc.map { case (k, b) =>
@@ -596,17 +605,42 @@ object TableLog {
     }.toMap
   }
 
+  /** [[dvPositions]] of the vector list `dvs` as one broadcast
+    * variable, kept for the few most recently read lists: sidecars
+    * never change once published, so a version's vectors are decoded
+    * once rather than on every read. An evicted broadcast is cleaned by
+    * Spark once no plan holds it. */
+  private def dvBroadcast(s: SparkSession, dvs: Seq[String])
+      : org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]] = {
+    val sc = s.sparkContext
+    dvBroadcasts.synchronized {
+      dvBroadcasts.computeIfAbsent((sc, dvs),
+        _ => sc.broadcast(dvPositions(s, dvs)))
+    }
+  }
+
+  private val dvBroadcasts = new java.util.LinkedHashMap[
+      (org.apache.spark.SparkContext, Seq[String]),
+      org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]]](
+      8, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[
+        (org.apache.spark.SparkContext, Seq[String]),
+        org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]]]): Boolean =
+      size > 4
+  }
+
   /** Whether the active vectors `dvs` fit
     * `spark.graft.tablelog.dv.broadcastMaxBytes` by their total on-disk
     * size (file-system metadata, no job): then the reader drops their
-    * rows ([[DvParquetFormat]]), else they are anti-joined. */
+    * rows ([[DvParquetFormat]]), else they are anti-joined. A missing
+    * sidecar (vacuumed) refuses here, on either path, so a decode of it
+    * kept by [[dvBroadcast]] never answers for it. */
   private def dvInReader(s: SparkSession, root: String,
       dvs: Seq[String]): Boolean = {
     val f = fs(s, root)
-    dvs.nonEmpty && dvs.map { d =>
-      val p = new Path(abs(root, d))
-      if (f.exists(p)) f.getContentSummary(p).getLength else 0L
-    }.sum <= dvBroadcastMaxBytes(s)
+    dvs.nonEmpty && dvs.map(d =>
+      f.getContentSummary(new Path(abs(root, d))).getLength
+    ).sum <= dvBroadcastMaxBytes(s)
   }
 
   /** Parquet that drops the `deleted` rows (positions per [[fileKey]],
@@ -1378,7 +1412,10 @@ object TableLog {
     * broadcast threshold. A memoized frame keeps the file listing
     * taken when it was built: after a [[vacuum]] that reclaims its
     * files, reading it fails at scan (FileNotFound), as a fresh
-    * snapshot below the retention floor does. */
+    * snapshot below the retention floor does. Deletion vectors it
+    * applies within the budget are already in memory, so one whose
+    * vector sidecars alone were reclaimed still answers, with the
+    * same rows. */
   def snapshot(s: SparkSession, root: String, version: Int = -1): DataFrame = {
     val vs = versions(s, root)
     val upto = if (version < 0) vs else vs.filter(_ <= version)
@@ -1459,15 +1496,17 @@ object TableLog {
     val rel = DataSource(s, "parquet", paths = files,
       userSpecifiedSchema = schema, options = options)
       .resolveRelation(checkFilesExist = false).asInstanceOf[HadoopFsRelation]
-    if (rel.location.inputFiles.length < files.distinct.size) {
-      val f = fs(s, files.head)
-      val gone = files.filterNot(p => f.exists(new Path(p)))
-      throw new java.io.FileNotFoundException(
-        s"TableLog: ${gone.mkString(", ")} does not exist")
-    }
+    // the listing skips a root it cannot find: a root that is neither a
+    // listed file nor the directory of one (a vector sidecar) is checked
+    val bare = (p: String) => Path.getPathWithoutSchemeAndAuthority(new Path(p))
+    val listed = rel.location.inputFiles.iterator.map(bare)
+      .flatMap(p => Iterator(p, p.getParent)).toSet
+    val gone = files.distinct.filterNot(p => listed(bare(p)))
+      .filterNot(p => fs(s, p).exists(new Path(p)))
+    if (gone.nonEmpty) throw new java.io.FileNotFoundException(
+      s"TableLog: ${gone.mkString(", ")} does not exist")
     s.baseRelationToDataFrame(if (dvs.isEmpty) rel
-      else rel.copy(fileFormat = new DvParquetFormat(
-          s.sparkContext.broadcast(dvPositions(s, dvs))),
+      else rel.copy(fileFormat = new DvParquetFormat(dvBroadcast(s, dvs)),
         options = rel.options + ("graft.deletionVectors" -> dvs.mkString(",")))(
         rel.sparkSession))
   }
@@ -1713,16 +1752,6 @@ object TableLog {
     sidecarRows(s, root, st, None).collect {
       case Array(file, c, mn, mx) if c == column => file -> (mn.toLong, mx.toLong)
     }.toMap
-
-  /** The columns the live files' stats sidecars bound and the table
-    * still declares: what a layout rewrite must bound again for the
-    * pruned reads and MERGE to keep skipping the files it writes. */
-  private[graft] def statsColumns(s: SparkSession, root: String): Seq[String] = {
-    val st = state(s, root, -1)
-    val declared = st.schema.map(_.fieldNames.toSet)
-    sidecarRows(s, root, st, None).map(_(1)).distinct
-      .filter(c => declared.forall(_(c)))
-  }
 
   /** Whether a live file of `st` can hold a row with `column` in
     * [lo, hi]: stats-pruned when bounds exist, kept when they don't. */
@@ -2204,12 +2233,14 @@ object TableLog {
     * [min,max] key stats, held as one literal array (O(#keys ×
     * #files) comparisons), collecting the indices of the files it
     * falls in. Files without stats for `keyCol` are always touched;
-    * without `prune` (BY SOURCE) every file is. The distinct-key count
-    * is the size of the key set, which ignores NULL keys, so rows ==
-    * distinct keys is exact once the null gate, checked first, passes;
-    * the set plans one shuffle where count_distinct plans two (one by
-    * key, one to the final task), at the price of holding the source's
-    * distinct keys in that final task.
+    * without `prune` (BY SOURCE) every file is. Both distinct-key
+    * counts ignore NULL keys, so rows == distinct keys is exact once the
+    * null gate, checked first, passes. A source whose plan bounds its
+    * rows within the key budget (a VALUES list, a driver-side batch) is
+    * counted as the size of its key set: one shuffle where
+    * count_distinct plans two, holding at most the budget's keys in the
+    * final task, as the broadcast source holds them on the driver. Any
+    * other source keeps count_distinct, whose aggregation spills.
     * Returns (touched files in live order, source fits the budget). */
   private def mergeFront(s: SparkSession, root: String, st: TableState,
       src: DataFrame, keyCol: String, prune: Boolean): (Seq[String], Boolean) = {
@@ -2217,13 +2248,17 @@ object TableLog {
     val ranges = st.files.zipWithIndex.flatMap { case (fl, i) =>
       b.get(fl).map { case (mn, mx) => (i, mn, mx) }
     }
+    val bcastMaxKeys = s.conf.getOption("spark.graft.merge.broadcastMaxKeys")
+      .map(_.toLong).getOrElse(1000000L)
     val k = col(keyCol).cast(LongType)
     val hits = collect_set(transform(
       filter(typedLit(ranges), r => k >= r.getField("_2") && k <= r.getField("_3")),
       r => r.getField("_1")))
+    val bounded = src.queryExecution.analyzed.maxRows.exists(_ <= bcastMaxKeys)
     val guard = Seq(count(lit(1)),
       count(when(col(keyCol).isNull, lit(1))), // count: never NULL on empty src
-      size(collect_set(col(keyCol))).cast(LongType))
+      if (bounded) size(collect_set(col(keyCol))).cast(LongType)
+      else count_distinct(col(keyCol)))
     val r = src.agg(guard.head,
       guard.tail ++ (if (ranges.isEmpty) Nil else Seq(hits)): _*).head()
     require(r.getLong(1) == 0L, s"merge: NULL $keyCol values in source")
@@ -2234,8 +2269,6 @@ object TableLog {
     val touched = if (!prune) st.files else st.files.zipWithIndex.collect {
       case (fl, i) if !b.contains(fl) || hit(i) => fl
     }
-    val bcastMaxKeys = s.conf.getOption("spark.graft.merge.broadcastMaxKeys")
-      .map(_.toLong).getOrElse(1000000L)
     (touched, r.getLong(0) <= bcastMaxKeys)
   }
 
@@ -2447,11 +2480,19 @@ object TableLog {
   }
 
   /** Rewrite the live set into `numFiles` files and publish the swap
-    * as one atomic commit. Old snapshots keep reading the old files. */
+    * as one atomic commit. Old snapshots keep reading the old files.
+    * The new files get stats for `statsCols`, by default for the columns
+    * the live files' stats sidecars bound and the table still declares,
+    * so the pruned reads and MERGE keep skipping after a compaction. */
   def compact(s: SparkSession, root: String, numFiles: Int,
       statsCols: Seq[String] = Nil): Int = {
-    val (old, dv0, snap) = pinSnapshot(s, root)
-    rewrite(s, root, statsCols, expectDvs = Some(dv0), base = Some(old))(
+    val st = state(s, root, -1)
+    val snap = readAligned(s, root, st, st.files)
+    val declared = st.schema.map(_.fieldNames.toSet)
+    val bound = if (statsCols.nonEmpty) statsCols
+      else sidecarRows(s, root, st, None).map(_(1)).distinct
+        .filter(c => declared.forall(_(c)))
+    rewrite(s, root, bound, expectDvs = Some(st.dvs), base = Some(st.files))(
       dir => snap.coalesce(numFiles).write.parquet(dir))
   }
 

@@ -2079,4 +2079,82 @@ class TableLogSpec extends SparkSpec {
     assert(err.getMessage.contains("does not exist"), err.getMessage)
     assert(TableLog.snapshot(spark, root).count() == 60)
   }
+
+  test("a read over a deleted deletion-vector sidecar refuses, within " +
+      "the broadcast budget and past it") {
+    val key = "spark.graft.tablelog.dv.broadcastMaxBytes"
+    val root = freshRoot()
+    TableLog.append(spark, root, nums(0, 120).repartition(3))
+    TableLog.deleteVector(spark, root, col("id") % 3 === 0)
+    val Array(first) = new java.io.File(s"$root/data").listFiles()
+      .filter(_.getName.endsWith("-dv"))
+    assert(TableLog.snapshot(spark, root).count() == 80) // decoded, kept
+    TableLog.deleteVector(spark, root, col("id") % 5 === 0)
+    org.apache.commons.io.FileUtils.deleteDirectory(first)
+    // a fresh session misses the snapshot memo but shares the decode
+    val fresh = spark.newSession()
+    Seq(Some("0"), None).foreach { budget =>
+      budget.foreach(fresh.conf.set(key, _))
+      try Seq(1, -1).foreach { v =>
+        intercept[java.io.FileNotFoundException] {
+          TableLog.snapshot(fresh, root, v).count()
+        }
+      } finally fresh.conf.unset(key)
+    }
+  }
+
+  test("reads of one deletion-vector list share one decoded broadcast") {
+    val root = freshRoot()
+    TableLog.append(spark, root, nums(0, 60).repartition(2))
+    TableLog.deleteVector(spark, root, col("id") < 10)
+    def positions(df: org.apache.spark.sql.DataFrame): Long = {
+      val format = df.queryExecution.optimizedPlan.collectFirst {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation.asInstanceOf[
+            org.apache.spark.sql.execution.datasources.HadoopFsRelation].fileFormat
+      }.get
+      val field = format.getClass.getDeclaredFields.find(f =>
+        classOf[org.apache.spark.broadcast.Broadcast[_]]
+          .isAssignableFrom(f.getType)).get
+      field.setAccessible(true)
+      field.get(format).asInstanceOf[org.apache.spark.broadcast.Broadcast[_]].id
+    }
+    val a = TableLog.snapshot(spark, root)
+    TableLog.append(spark, root, nums(100, 110)) // same vectors, new version
+    val b = TableLog.snapshot(spark, root).filter(col("id") > 30)
+    assert(positions(a) == positions(b))
+    assert(a.count() == 50 && b.count() == 39)
+    TableLog.deleteVector(spark, root, col("id") > 55)
+    assert(positions(TableLog.snapshot(spark, root)) != positions(a))
+  }
+
+  test("merge refuses duplicate and NULL source keys whether or not the " +
+      "source's row bound fits the broadcast key budget") {
+    val sp = spark; import sp.implicits._
+    val root = freshRoot()
+    TableLog.append(spark, root, nums(0, 20), Seq("id"))
+    val dup = Seq((3L, "a"), (3L, "b"), (30L, "c")).toDF("id", "s")
+    val nul = Seq((Some(3L), "a"), (None, "b")).toDF("id", "s")
+    // the same rows through parquet: a plan with no row bound
+    val dir = Files.createTempDirectory("graft_mergesrc").toString
+    dup.write.parquet(s"$dir/dup")
+    val sources = Seq(dup, spark.read.parquet(s"$dir/dup"))
+    val key = "spark.graft.merge.broadcastMaxKeys"
+    Seq(None, Some("2")).foreach { budget =>
+      budget.foreach(spark.conf.set(key, _))
+      try {
+        sources.foreach { src =>
+          val e = intercept[IllegalArgumentException] {
+            TableLog.merge(spark, root, src, "id", Seq("id"))
+          }
+          assert(e.getMessage.contains("duplicate"), e.getMessage)
+        }
+        val e = intercept[IllegalArgumentException] {
+          TableLog.merge(spark, root, nul, "id", Seq("id"))
+        }
+        assert(e.getMessage.contains("NULL"), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
+    assert(TableLog.versions(spark, root) == Seq(0))
+  }
 }
