@@ -80,12 +80,15 @@ object DumpPlans {
     "graft_egress/p\\d+".r -> "graft_egress/p<pid>",
     "\\$\\$Lambda[$/\\w]*@[0-9a-f]+".r -> "$$Lambda",
     "(?<=[\\w$])@[0-9a-f]+\\b".r -> "@<hash>",
+    "RDD\\[\\d+\\]".r -> "RDD[<id>]",
+    "Broadcast\\(\\d+\\)".r -> "Broadcast(<id>)",
     "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r -> "<uuid>")
 
   /** `plan` with everything that differs between two runs of one plan
     * taken out: expression ids renumbered in order of first appearance
     * (`#1`, `#2`, …), exchange `plan_id`s, the egress dir's pid, lambda
-    * class names, object hashes (`Class@5ed8b130`) and UUIDs masked —
+    * class names, object hashes (`Class@5ed8b130`), RDD and broadcast
+    * ids (`RDD[957]`, `Broadcast(617)`) and UUIDs masked —
     * so a regenerated PLANS.md differs only where a plan changed shape. */
   private def stable(plan: String): String = {
     val ids = scala.collection.mutable.Map.empty[String, Int]
@@ -128,8 +131,8 @@ object DumpPlans {
     sb.append("`BroadcastHashJoin` on dims vs `Exchange hashpartitioning` ")
     sb.append("on facts, `partial_`/final aggregate pairs, and codegen ")
     sb.append("stage ids (`[codegen id : n]`). Expression ids are ")
-    sb.append("renumbered per plan and run-specific ids (`plan_id`, pid, ")
-    sb.append("UUIDs, lambda classes, object hashes) masked, so a rerun ")
+    sb.append("renumbered per plan and run-specific ids (`plan_id`, pid, RDD and ")
+    sb.append("broadcast ids, UUIDs, lambda classes, object hashes) masked, so a rerun ")
     sb.append("changes nothing.\n")
     for (name <- headline) {
       sb.append(s"\n## $name\n\n```\n")

@@ -5,42 +5,46 @@ import scala.jdk.CollectionConverters._
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.{BigIntVector, BitVector, DateDayVector, DecimalVector, DurationVector, FieldVector, Float4Vector, Float8Vector, IntVector, IntervalDayVector, IntervalYearVector, SmallIntVector, TimeMicroVector, TimeMilliVector, TimeNanoVector, TimeSecVector, TimeStampMicroTZVector, TimeStampMicroVector, TinyIntVector, VarBinaryVector, VarCharVector, VectorSchemaRoot}
 import org.apache.arrow.vector.complex.{ListVector, MapVector, StructVector}
-import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
-import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter}
+import org.apache.arrow.vector.dictionary.Dictionary
+import org.apache.arrow.vector.ipc.ArrowFileReader
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, IntervalUnit, TimeUnit}
-import org.apache.arrow.vector.types.pojo.{ArrowType, DictionaryEncoding, Field, FieldType, Schema => ArrowSchema}
+import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
 import org.apache.hadoop.fs.{FSDataInputStream, Path => HPath}
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.Tables
+import graft.sources.ipc.IpcWriteSpec
 
-/** Arrow IPC (Feather v2) file source/sink — the reference's native
-  * interchange format (`cpp/src/arrow/ipc/reader.h:58`
+/** Arrow IPC (Feather v2) file and stream codec — the reference's
+  * native interchange format (`cpp/src/arrow/ipc/reader.h:58`
   * RecordBatchFileReader, `writer.h:54`, `feather.h:129`), built on
   * the Arrow Java library Spark already ships.
   *
-  * Both directions are distributed with the reference's own
-  * granularity: the writer emits ONE .arrow FILE PER PARTITION from
-  * the executors (the `write_csv` one-file-per-partition model,
-  * `rust/datafusion/src/execution/context.rs:451-496`), and the
-  * reader plans ONE PARTITION PER FILE (DataFusion's
-  * `CsvExec::build_file_list` model, `physical_plan/csv.rs:31-66`).
-  * Schema comes from the file footer of one file, the
-  * `SourceFactory::Inspect` discovery step (`dataset/discovery.h:55`).
+  * Files have one codec, the `graft-ipc` DataSource V2 connector
+  * ([[graft.sources.ipc.IpcDataSource]]); [[writeIpc]],
+  * [[writeIpcDict]], [[writeIpcDictDelta]] and [[readIpc]] are entry
+  * points over `df.write.format("graft-ipc")` and
+  * `spark.read.format("graft-ipc")`. Writes emit one .arrow file per
+  * partition from the executors (the `write_csv` model,
+  * `rust/datafusion/src/execution/context.rs:451-496`) under the
+  * connector's job-level commit; reads plan one partition per file or
+  * record-batch split (`CsvExec::build_file_list`,
+  * `physical_plan/csv.rs:31-66`) with the schema from one footer (the
+  * `SourceFactory::Inspect` step, `dataset/discovery.h:55`). All file
+  * I/O goes through the Hadoop FileSystem API, so the path may be any
+  * Hadoop-supported filesystem.
   *
-  * All file I/O goes through the Hadoop FileSystem API (driver-side
-  * listing/cleanup AND executor-side writes/reads), so the path may
-  * be any Hadoop-supported filesystem (local, HDFS, object store) —
-  * executors need not share the driver's local disk. Writes follow a
-  * task-commit protocol: each attempt writes an attempt-unique
-  * temporary file and renames it into place on success, so a
-  * speculative or retried task can never interleave bytes with the
-  * winning attempt (first successful rename wins; losers delete
-  * their temp).
+  * The STREAM format ([[writeIpcStreamTo]], [[readIpcStream]]) is the
+  * Flight transport's codec: it converts `Row`s at its edges with an
+  * encoder and fills and reads vectors through the same Catalyst
+  * converters as the connector ([[setCatalystValue]],
+  * [[getCatalystValue]]).
   *
   * Type coverage (the reference's `format/Schema.fbs:235-261` union
   * Type): the signed integer ladder TINYINT/SMALLINT/INT/BIGINT
@@ -178,22 +182,9 @@ object Ipc {
         s"list/struct/map, got $other for ${f.getName}")
   }
 
-  // ---- temporal payload conversions (shared by all four kernels) ----
-  // Spark encodings: TIME = nanos-of-day long (external LocalTime);
-  // DayTimeInterval = µs long (external java.time.Duration);
-  // YearMonthInterval = months int (external java.time.Period);
-  // TimestampNTZ = µs long (external LocalDateTime, UTC-anchored).
-  private def durationToMicros(d: java.time.Duration): Long =
-    math.addExact(math.multiplyExact(d.getSeconds, 1000000L), d.getNano / 1000L)
-  private def microsToDuration(us: Long): java.time.Duration =
-    java.time.Duration.ofSeconds(math.floorDiv(us, 1000000L),
-      math.floorMod(us, 1000000L) * 1000L)
-  private def ldtToMicros(t: java.time.LocalDateTime): Long =
-    math.addExact(math.multiplyExact(
-      t.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L), t.getNano / 1000L)
-  private def microsToLdt(us: Long): java.time.LocalDateTime =
-    java.time.LocalDateTime.ofEpochSecond(math.floorDiv(us, 1000000L),
-      (math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
+  // ---- temporal payload conversions (Arrow → Catalyst) ----
+  // Catalyst encodings: TIME = nanos-of-day long, DayTimeInterval = µs
+  // long, YearMonthInterval = months int, TimestampNTZ = µs long.
   // Arrow TIME32/64 widen to nanos-of-day; duration units widen to µs
   // (ns floor-divides — the engine's µs convention)
   private def timeVectorNanos(vec: FieldVector, r: Int): Long = vec match {
@@ -228,153 +219,53 @@ object Ipc {
       math.multiplyExact(buf.getInt(base + 4L).toLong, 1000L))
   }
 
-  /** Shared per-type copy kernels between Spark external rows and
-    * Arrow vectors (the Row-based writeIpc/readIpc paths; the DSv2
-    * writer uses the Catalyst-encoded variants below). Nested vectors
-    * recurse: a value skipped (null) at any level stays invalid in the
-    * Arrow validity bitmap — Arrow Java's fill-holes machinery
-    * (variable-width fillEmpties, ListVector lastSet) keeps offset
-    * buffers consistent around the gaps. */
-  private[graft] def setFromRow(vec: FieldVector,
-      r: Int, row: Row, c: Int): Unit = setExternal(vec, r, row.get(c))
-
-  /** External (Row-side) value → Arrow vector slot. `value` is
-    * non-null; Scala Seq/Array for lists, Row for structs,
-    * scala.collection.Map for maps, java.math.BigDecimal for
-    * decimals. */
-  private[graft] def setExternal(vec: FieldVector, r: Int, value: Any): Unit =
-    vec match {
-      case v: BigIntVector => v.setSafe(r, value.asInstanceOf[Long])
-      case v: IntVector    => v.setSafe(r, value.asInstanceOf[Int])
-      case v: SmallIntVector => v.setSafe(r, value.asInstanceOf[Short])
-      case v: TinyIntVector  => v.setSafe(r, value.asInstanceOf[Byte])
-      case v: Float8Vector => v.setSafe(r, value.asInstanceOf[Double])
-      case v: Float4Vector => v.setSafe(r, value.asInstanceOf[Float])
-      case v: VarCharVector =>
-        v.setSafe(r, value.asInstanceOf[String].getBytes("UTF-8"))
-      case v: BitVector => v.setSafe(r, if (value.asInstanceOf[Boolean]) 1 else 0)
-      case v: VarBinaryVector => v.setSafe(r, value.asInstanceOf[Array[Byte]])
-      case v: DateDayVector =>
-        v.setSafe(r, value.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
-      case v: TimeStampMicroTZVector =>
-        val ts = value.asInstanceOf[java.sql.Timestamp]
-        v.setSafe(r, math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L)
-      case v: TimeStampMicroVector =>
-        v.setSafe(r, ldtToMicros(value.asInstanceOf[java.time.LocalDateTime]))
-      case v: TimeNanoVector =>
-        v.setSafe(r, value.asInstanceOf[java.time.LocalTime].toNanoOfDay)
-      case v: DurationVector =>
-        v.setSafe(r, durationToMicros(value.asInstanceOf[java.time.Duration]))
-      case v: IntervalYearVector =>
-        v.setSafe(r,
-          Math.toIntExact(value.asInstanceOf[java.time.Period].toTotalMonths))
-      case v: DecimalVector =>
-        // setScale to the vector's declared scale: Arrow stores the
-        // unscaled int128; a mismatched-scale BigDecimal would throw
-        v.setSafe(r, value.asInstanceOf[java.math.BigDecimal]
-          .setScale(v.getScale))
-      case v: MapVector => // before ListVector: MapVector extends it
-        val m = value.asInstanceOf[scala.collection.Map[Any, Any]]
-        val start = v.startNewValue(r)
-        val entries = v.getDataVector.asInstanceOf[StructVector]
-        val kv = entries.getChildByOrdinal(0).asInstanceOf[FieldVector]
-        val vv = entries.getChildByOrdinal(1).asInstanceOf[FieldVector]
-        var i = 0
-        m.foreach { case (k, mv) =>
-          entries.setIndexDefined(start + i)
-          setExternal(kv, start + i, k)
-          if (mv != null) setExternal(vv, start + i, mv)
-          i += 1
-        }
-        v.endValue(r, m.size)
-      case v: ListVector =>
-        val seq: scala.collection.Seq[Any] = value match {
-          case s: scala.collection.Seq[_] => s
-          case a: Array[_] => scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
-        }
-        val start = v.startNewValue(r)
-        val dv = v.getDataVector
-        var i = 0
-        seq.foreach { e =>
-          if (e != null) setExternal(dv, start + i, e)
-          i += 1
-        }
-        v.endValue(r, seq.length)
-      case v: StructVector =>
-        val row = value.asInstanceOf[Row]
-        v.setIndexDefined(r)
-        val kids = v.getChildrenFromFields
-        var i = 0
-        while (i < kids.size()) {
-          if (!row.isNullAt(i)) setExternal(kids.get(i), r, row.get(i))
-          i += 1
-        }
+  /** Catalyst rows out of the batch loaded into `root`: the columns at
+    * `cols`, each read through its dictionary when encoded
+    * (`Message.fbs` DictionaryBatch — indices in the record batch,
+    * values in the dictionary batch, at any index width: pandas/pyarrow
+    * categoricals pick the narrowest of int8/16/32/64). Vectors bind
+    * once — file and stream readers reload the same vectors batch after
+    * batch, and an isDelta batch grows its dictionary's vector in
+    * place. Serves the connector's row reader and the stream reader. */
+  private[graft] final class CatalystRows(root: VectorSchemaRoot,
+      dicts: java.util.Map[java.lang.Long, Dictionary], cols: Array[Int]) {
+    private val vecs: Array[FieldVector] = cols.map(root.getVector)
+    private val values: Array[FieldVector] = vecs.map { v =>
+      val enc = v.getField.getDictionary
+      if (enc == null) null
+      else dicts.get(enc.getId).getVector.asInstanceOf[FieldVector]
     }
 
-  private[graft] def getToAny(vec: FieldVector, r: Int): Any = vec match {
-    case v: BigIntVector    => v.get(r)
-    case v: IntVector       => v.get(r)
-    case v: SmallIntVector  => v.get(r)
-    case v: TinyIntVector   => v.get(r)
-    case v: Float8Vector    => v.get(r)
-    case v: Float4Vector    => v.get(r)
-    case v: VarCharVector   => new String(v.get(r), "UTF-8")
-    case v: BitVector       => v.get(r) == 1
-    case v: VarBinaryVector => v.get(r)
-    case v: DateDayVector   =>
-      java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(v.get(r).toLong))
-    case v: TimeStampMicroTZVector =>
-      val us = v.get(r)
-      val ts = new java.sql.Timestamp(math.floorDiv(us, 1000000L) * 1000L)
-      ts.setNanos((math.floorMod(us, 1000000L) * 1000L).toInt)
-      ts
-    case v: TimeStampMicroVector => microsToLdt(v.get(r))
-    case _: TimeNanoVector | _: TimeMicroVector | _: TimeMilliVector |
-        _: TimeSecVector =>
-      java.time.LocalTime.ofNanoOfDay(timeVectorNanos(vec, r))
-    case v: DurationVector => microsToDuration(durationVectorMicros(v, r))
-    case v: IntervalYearVector =>
-      java.time.Period.ofMonths(v.get(r)).normalized()
-    case v: IntervalDayVector => microsToDuration(intervalDayMicros(v, r))
-    case v: DecimalVector => v.getObject(r) // java.math.BigDecimal
-    case v: MapVector => // before ListVector: MapVector extends it
-      val start = v.getElementStartIndex(r)
-      val end = v.getElementEndIndex(r)
-      val entries = v.getDataVector.asInstanceOf[StructVector]
-      val kv = entries.getChildByOrdinal(0).asInstanceOf[FieldVector]
-      val vv = entries.getChildByOrdinal(1).asInstanceOf[FieldVector]
-      val b = scala.collection.immutable.Map.newBuilder[Any, Any]
-      var i = start
-      while (i < end) {
-        b += ((getToAny(kv, i), if (vv.isNull(i)) null else getToAny(vv, i)))
-        i += 1
+    def row(r: Int): InternalRow = {
+      val out = new Array[Any](vecs.length)
+      var c = 0
+      while (c < vecs.length) {
+        val v = vecs(c)
+        out(c) = if (v.isNull(r)) null
+          else if (values(c) == null) getCatalystValue(v, r)
+          // toIntExact: an int64 index above Int.MaxValue must fail
+          // loudly, not truncate into a wrong-but-valid slot
+          else getCatalystValue(values(c), Math.toIntExact(
+            v.asInstanceOf[org.apache.arrow.vector.BaseIntVector].getValueAsLong(r)))
+        c += 1
       }
-      b.result()
-    case v: ListVector =>
-      val start = v.getElementStartIndex(r)
-      val end = v.getElementEndIndex(r)
-      val dv = v.getDataVector
-      val out = new Array[Any](end - start)
-      var i = start
-      while (i < end) {
-        out(i - start) = if (dv.isNull(i)) null else getToAny(dv, i)
-        i += 1
-      }
-      out.toIndexedSeq
-    case v: StructVector =>
-      val kids = v.getChildrenFromFields
-      val out = new Array[Any](kids.size())
-      var i = 0
-      while (i < kids.size()) {
-        val ch = kids.get(i)
-        out(i) = if (ch.isNull(r)) null else getToAny(ch, r)
-        i += 1
-      }
-      Row.fromSeq(out.toIndexedSeq)
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+    }
   }
 
-  /** Catalyst-encoded value → Arrow vector slot, the DSv2 writer's
-    * kernel ([[graft.sources.ipc.IpcDataSource]]). `value` is non-null
+  /** The Spark schema of a loaded file or stream: every column
+    * nullable, dictionary-encoded ones at their value type. */
+  private[graft] def sparkSchema(root: VectorSchemaRoot,
+      dicts: java.util.Map[java.lang.Long, Dictionary]): StructType =
+    StructType(root.getSchema.getFields.asScala.toSeq.map(f =>
+      StructField(f.getName, resolvedSparkType(f, dicts), nullable = true)))
+
+  /** Catalyst-encoded value → Arrow vector slot, the kernel of every
+    * writer (the connector's file writer and the stream codec). Nested
+    * vectors recurse: a value skipped (null) at any level stays invalid
+    * in the Arrow validity bitmap — Arrow Java's fill-holes machinery
+    * (variable-width fillEmpties, ListVector lastSet) keeps offset
+    * buffers consistent around the gaps. `value` is non-null
     * and carries InternalRow encodings: UTF8String, days-int dates,
     * µs-long timestamps, Decimal, ArrayData, InternalRow, MapData. */
   private[graft] def setCatalystValue(vec: FieldVector, r: Int,
@@ -444,9 +335,10 @@ object Ipc {
       }
   }
 
-  /** Arrow vector slot → Catalyst-encoded value, the DSv2 row-based
-    * reader's kernel (the columnar path wraps vectors in Spark's own
-    * nested-aware ArrowColumnVector instead). */
+  /** Arrow vector slot → Catalyst-encoded value, the kernel of the
+    * connector's row reader and the stream codec (the columnar reader
+    * wraps vectors in Spark's own nested-aware ArrowColumnVector
+    * instead). It widens every Arrow width the schema maps. */
   private[graft] def getCatalystValue(vec: FieldVector, r: Int): Any =
     vec match {
       case v: BigIntVector    => v.get(r)
@@ -531,9 +423,8 @@ object Ipc {
         s"unknown IPC compression codec '$other' (expected zstd, lz4, none)")
     }
   }
-
-  /** The codec factory every reader (and compressed writer) passes:
-    * ZSTD through native zstd-jni, LZ4_FRAME through native lz4-java
+  /** The codec factory every reader and writer passes: ZSTD through
+    * native zstd-jni, LZ4_FRAME through native lz4-java
     * ([[graft.sources.ipc.GraftCompressionFactory]] — the stock
     * commons-compress LZ4 path measured ~10x slower on writes). A
     * free no-op on uncompressed files, so ALL read paths accept
@@ -541,359 +432,89 @@ object Ipc {
   private[graft] def readCodecs: org.apache.arrow.vector.compression.CompressionCodec.Factory =
     graft.sources.ipc.GraftCompressionFactory
 
-  /** Build an ArrowFileWriter, compressed iff `codec` says so. */
-  private[graft] def newFileWriter(root: VectorSchemaRoot,
-      provider: DictionaryProvider,
-      ch: java.nio.channels.WritableByteChannel,
-      codec: String): ArrowFileWriter = {
-    import org.apache.arrow.vector.compression.CompressionUtil.CodecType
-    codecTypeOf(codec) match {
-      case CodecType.NO_COMPRESSION =>
-        new ArrowFileWriter(root, provider, ch)
-      case ct =>
-        new ArrowFileWriter(root, provider, ch, null,
-          org.apache.arrow.vector.ipc.message.IpcOption.DEFAULT,
-          readCodecs, ct)
-    }
-  }
+  /** Distributed IPC write through the connector: each task streams
+    * its partition into its own Arrow file in `dir` (the directory's
+    * previous files are replaced), [[BatchRows]] rows per record batch
+    * — rows never leave their executor. */
+  def writeIpc(df: DataFrame, dir: String): Unit = writeIpc(df, dir, "none")
 
-  /** Distributed IPC write: each task streams its partition into its
-    * own Arrow file in `dir`, batching [[BatchRows]] rows per record
-    * batch — rows never leave their executor. */
-  def writeIpc(df: DataFrame, dir: String): Unit =
-    writeIpcFiles(df, dir, Map.empty)
-
-  /** [[writeIpc]] with body-buffer compression (`zstd` or `lz4`):
-    * same file-per-partition layout, every record batch's buffers
-    * individually compressed per the Arrow BodyCompression spec. The
-    * engine's readers (imperative + DSv2) decode transparently; so
-    * does any stock Arrow reader built with a compression factory. */
+  /** [[writeIpc]] with body-buffer compression (`zstd` or `lz4`): every
+    * record batch's buffers individually compressed per the Arrow
+    * BodyCompression spec. The reader decodes transparently; so does
+    * any stock Arrow reader built with a compression factory. */
   def writeIpc(df: DataFrame, dir: String, compression: String): Unit =
-    writeIpcFiles(df, dir, Map.empty, compression)
+    save(df, dir, Map("compression" -> compression))
 
   /** Dictionary-encoded IPC write (`format/Message.fbs` DictionaryBatch,
     * `cpp/src/arrow/ipc/writer.h:54` dictionary support): the named
     * low-cardinality STRING columns ship as int32 indices plus one
     * dictionary batch per file instead of repeated UTF-8 bytes.
     *
-    * The dictionary is GLOBAL and driver-built: one distinct-scan job
-    * collects each column's value set (sorted, so ids are
+    * The dictionary is GLOBAL and driver-built ([[dictionaries]]: one
+    * aggregation collects every column's value set, sorted so ids are
     * deterministic), bounded at 65536 values — dictionary encoding is
     * for columns you KNOW are low-cardinality (statuses, priorities,
-    * country codes); anything wider should ship plain — and the
-    * arrays ride the task closure (same broadcast-sized-dimension
-    * posture as the engine's other driver-collected bounds). Every
+    * country codes); anything wider should ship plain. The values
+    * reach the writers as the connector's `dictionary` option. Every
     * file carries the full dictionary, so each stays self-describing
-    * and the readers never coordinate across files. [[readIpc]]
-    * decodes transparently. */
+    * and the readers never coordinate across files. */
   def writeIpcDict(df: DataFrame, dir: String, dictCols: Seq[String],
-      compression: String = "none"): Unit = {
-    val dicts: Map[String, Array[String]] = dictCols.map { c =>
-      require(df.schema(c).dataType == StringType,
-        s"dictionary-encoded column $c must be string, is ${df.schema(c).dataType}")
-      val vals = df.select(col(c)).na.drop().distinct().orderBy(col(c))
-        .collect().map(_.getString(0))
-      require(vals.length <= 65536,
-        s"column $c has ${vals.length} distinct values — too wide for a " +
-          "broadcast dictionary; write it plain")
-      c -> vals
-    }.toMap
-    writeIpcFiles(df, dir, dicts, compression)
-  }
-
-  /** [[ArrowFileWriter]] exposing the protected dictionary-batch hook
-    * so [[writeIpcDictDelta]] can emit `isDelta` extensions between
-    * record batches (the footer records every dictionary block, so
-    * file readers replay them in order). */
-  private final class DeltaDictFileWriter(root: VectorSchemaRoot,
-      provider: DictionaryProvider,
-      ch: java.nio.channels.WritableByteChannel)
-      extends ArrowFileWriter(root, provider, ch) {
-    def writeDelta(b: org.apache.arrow.vector.ipc.message.ArrowDictionaryBatch)
-        : Unit = writeDictionaryBatch(b)
-  }
+      compression: String = "none"): Unit =
+    save(df, dir, Map("compression" -> compression,
+      "dictionary" -> IpcWriteSpec.dictionaryOption(dictionaries(df, dictCols))))
 
   /** Dictionary-encoded IPC write with STREAMING per-file dictionaries
     * (reference `format/Message.fbs:69-79` `isDelta`;
     * `cpp/src/arrow/ipc/writer.h` IpcWriteOptions
-    * `emit_dictionary_deltas`): no driver-side distinct scan — each
-    * task discovers its values as it writes, ships the first batch's
-    * values as the initial DictionaryBatch and every later batch's
-    * NEW values as `isDelta` extensions — the append-only grammar
-    * [[DeltaIpcFileReader]] (and pyarrow's file reader) already
-    * decode. This is the form for dictionary-encoding a 100 TB write
-    * whose value set is unknown up front: zero extra jobs, zero
-    * cross-task coordination, and each file's dictionary holds
-    * exactly the values that file uses. The 65536-distinct cap still
-    * refuses loudly, now per file mid-write. [[writeIpcDict]] keeps
-    * the prebuilt global-dictionary form (deterministic ids shared
-    * across files, one non-delta batch — pinned by IpcPropertySpec's
-    * message walk). */
+    * `emit_dictionary_deltas`), the connector's `deltaDictionary`
+    * option: no driver-side pass — each task discovers its values as
+    * it writes, ships the first batch's values as the initial
+    * DictionaryBatch and every later batch's NEW values as `isDelta`
+    * extensions, the append-only grammar [[DeltaIpcFileReader]] (and
+    * pyarrow's file reader) decode. This is the form for
+    * dictionary-encoding a 100 TB write whose value set is unknown up
+    * front: zero extra jobs, zero cross-task coordination, and each
+    * file's dictionary holds exactly the values that file uses. The
+    * 65536-distinct cap refuses per file, mid-write. [[writeIpcDict]]
+    * keeps the prebuilt global form (deterministic ids shared across
+    * files, one non-delta batch — pinned by IpcPropertySpec's message
+    * walk). */
   def writeIpcDictDelta(df: DataFrame, dir: String, dictCols: Seq[String],
-      batchRows: Int = BatchRows): Unit = {
-    require(batchRows > 0, s"batchRows must be positive, is $batchRows")
-    dictCols.foreach { c =>
-      require(df.schema(c).dataType == StringType,
-        s"dictionary-encoded column $c must be string, is ${df.schema(c).dataType}")
-    }
-    val schema = df.schema
-    val confSer = new SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val dirPath = new HPath(dir)
-    val fs = dirPath.getFileSystem(confSer.value)
-    fs.mkdirs(dirPath)
-    // same overwrite semantics as writeIpcFiles: no stale parts/temps
-    for (pat <- Seq("*.arrow", ".*.arrow.tmp", "*.arrow.stats", ".*.arrow.tmp.stats");
-         st <- Option(fs.globStatus(new HPath(dirPath, pat))).getOrElse(Array()))
-      fs.delete(st.getPath, false)
-    val cols = dictCols.sorted
-    df.rdd.foreachPartition { rows =>
-      val tc = TaskContext.get()
-      val pid = tc.partitionId()
-      val taskFs = new HPath(dir).getFileSystem(confSer.value)
-      val finalPath = new HPath(dir, s"part-$pid.arrow")
-      val tmpPath = new HPath(dir, s".part-$pid-a${tc.taskAttemptId()}.arrow.tmp")
-      val allocator = new RootAllocator()
-      var resourcesClosed = false
-      tc.addTaskFailureListener((_, _) =>
-        if (!resourcesClosed) {
-          resourcesClosed = true
-          try allocator.close() catch { case _: Throwable => () }
-        })
-      val provider = new DictionaryProvider.MapDictionaryProvider()
-      val encodings = new scala.collection.mutable.HashMap[String, DictionaryEncoding]
-      // insertion-ordered: a value's id is its first-appearance rank
-      val lookups = new scala.collection.mutable.HashMap[String, java.util.LinkedHashMap[String, Integer]]
-      val initVecs = new scala.collection.mutable.HashMap[String, VarCharVector]
-      cols.zipWithIndex.foreach { case (c, id) =>
-        val dv = new VarCharVector(s"$c-dictionary", allocator)
-        val enc = new DictionaryEncoding(id.toLong, false, new ArrowType.Int(32, true))
-        provider.put(new Dictionary(dv, enc))
-        encodings(c) = enc
-        lookups(c) = new java.util.LinkedHashMap[String, Integer]
-        initVecs(c) = dv
-      }
-      val fields = schema.fields.map { f =>
-        encodings.get(f.name) match {
-          case Some(enc) => new Field(f.name,
-            new FieldType(true, new ArrowType.Int(32, true), enc), NoKids)
-          case None => toArrowField(f.name, f.dataType, nullable = true)
-        }
-      }
-      val root = VectorSchemaRoot.create(
-        new ArrowSchema(fields.toSeq.asJava), allocator)
-      val dictIdx: Array[java.util.LinkedHashMap[String, Integer]] =
-        schema.fields.map(f => lookups.getOrElse(f.name, null))
-      val out = taskFs.create(tmpPath, true)
-      val ch = java.nio.channels.Channels.newChannel(out)
-      val writer = new DeltaDictFileWriter(root, provider, ch)
-      writer.start()
-      var firstFlush = true
-      val buf = new Array[Row](batchRows)
-      // n == 0 is meaningful on the FIRST flush only: an empty
-      // partition still writes its (empty) dictionary + a zero-row
-      // batch so every file stays self-describing
-      def flush(n: Int): Unit = if (n > 0 || firstFlush) {
-        // 1. this batch's NEW values per encoded column, in
-        //    first-appearance order (ids are append-only)
-        val fresh = cols.map { cName =>
-          val ci = schema.fieldIndex(cName)
-          val m = lookups(cName)
-          val vsNew = new java.util.ArrayList[String]()
-          var r = 0
-          while (r < n) {
-            val row = buf(r)
-            if (!row.isNullAt(ci)) {
-              val v = row.getString(ci)
-              if (!m.containsKey(v)) {
-                require(m.size < 65536,
-                  s"column $cName exceeded 65536 distinct values in one " +
-                    "file — too wide for dictionary encoding; write it plain")
-                m.put(v, Integer.valueOf(m.size))
-                vsNew.add(v)
-              }
-            }
-            r += 1
-          }
-          cName -> vsNew
-        }
-        def fill(dv: VarCharVector, vs: java.util.ArrayList[String]): Unit = {
-          dv.allocateNew(vs.size)
-          var j = 0
-          while (j < vs.size) { dv.setSafe(j, vs.get(j).getBytes("UTF-8")); j += 1 }
-          dv.setValueCount(vs.size)
-        }
-        // 2. first flush: the fresh values ARE the initial dictionary
-        //    (the file writer emits provider dictionaries before the
-        //    first record batch); later flushes: one isDelta batch per
-        //    column that grew, BEFORE the record batch indexing it
-        if (firstFlush) {
-          fresh.foreach { case (cName, vs) => fill(initVecs(cName), vs) }
-          firstFlush = false
-        } else fresh.foreach { case (cName, vs) =>
-          if (!vs.isEmpty) {
-            val dv = new VarCharVector(s"$cName-dictionary", allocator)
-            fill(dv, vs)
-            val deltaRoot = new VectorSchemaRoot(
-              java.util.Arrays.asList(dv.getField),
-              java.util.Arrays.asList[FieldVector](dv), vs.size)
-            val rb = new org.apache.arrow.vector.VectorUnloader(deltaRoot)
-              .getRecordBatch
-            val db = new org.apache.arrow.vector.ipc.message.ArrowDictionaryBatch(
-              encodings(cName).getId, rb, true)
-            try writer.writeDelta(db)
-            finally { db.close(); deltaRoot.close() }
-          }
-        }
-        // 3. the record batch itself (int32 indices for encoded cols)
-        var c = 0
-        while (c < schema.length) {
-          val vec = root.getVector(c)
-          vec.setInitialCapacity(n)
-          vec.allocateNew()
-          var r = 0
-          while (r < n) {
-            val row = buf(r)
-            if (row.isNullAt(c)) () // unset = null in Arrow validity
-            else if (dictIdx(c) != null)
-              vec.asInstanceOf[IntVector].setSafe(
-                r, dictIdx(c).get(row.getString(c)).intValue())
-            else setFromRow(vec, r, row, c)
-            r += 1
-          }
-          vec.setValueCount(n)
-          c += 1
-        }
-        root.setRowCount(n)
-        writer.writeBatch()
-      }
-      var n = 0
-      for (row <- rows) {
-        buf(n) = row; n += 1
-        if (n == batchRows) { flush(n); n = 0 }
-      }
-      flush(n)
-      writer.end(); writer.close(); out.close(); root.close()
-      provider.getDictionaryIds.asScala // release dictionary vectors
-        .foreach(id => provider.lookup(id).getVector.close())
-      resourcesClosed = true
-      allocator.close()
-      if (!graft.sources.CasFs.publish(taskFs, tmpPath, finalPath))
-        taskFs.delete(tmpPath, false)
-    }
+      batchRows: Int = BatchRows): Unit =
+    save(df, dir, Map("deltaDictionary" -> dictCols.mkString(","),
+      "batchRows" -> batchRows.toString))
+
+  // a bad codec name fails here as itself, before any planning
+  private def save(df: DataFrame, dir: String,
+      options: Map[String, String]): Unit = {
+    options.get("compression").foreach(codecTypeOf)
+    df.write.format("graft-ipc").mode("overwrite").options(options).save(dir)
   }
 
-  private def writeIpcFiles(df: DataFrame, dir: String,
-      dicts: Map[String, Array[String]],
-      compression: String = "none"): Unit = {
-    codecTypeOf(compression) // validate on the driver, not per task
-    val schema = df.schema
-    val confSer = new SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val dirPath = new HPath(dir)
-    val fs = dirPath.getFileSystem(confSer.value)
-    fs.mkdirs(dirPath)
-    // overwrite semantics: a previous run with MORE partitions must not
-    // leave stale part files behind to be re-read alongside new ones;
-    // also clear orphaned temps from crashed attempts
-    // also collect DSv2 stats sidecars: a stale sidecar must never
-    // outlive the data file it described
-    for (pat <- Seq("*.arrow", ".*.arrow.tmp", "*.arrow.stats", ".*.arrow.tmp.stats");
-         st <- Option(fs.globStatus(new HPath(dirPath, pat))).getOrElse(Array()))
-      fs.delete(st.getPath, false)
-    df.rdd.foreachPartition { rows =>
-      val tc = TaskContext.get()
-      val pid = tc.partitionId()
-      val taskFs = new HPath(dir).getFileSystem(confSer.value)
-      val finalPath = new HPath(dir, s"part-$pid.arrow")
-      val tmpPath = new HPath(dir, s".part-$pid-a${tc.taskAttemptId()}.arrow.tmp")
-      val allocator = new RootAllocator()
-      // a task failure mid-write must not leak the allocator's direct
-      // buffers in the executor (the success path closes explicitly;
-      // Arrow allocators refuse double-close, hence the flag)
-      var resourcesClosed = false
-      tc.addTaskFailureListener((_, _) =>
-        if (!resourcesClosed) {
-          resourcesClosed = true
-          try allocator.close() catch { case _: Throwable => () }
-        })
-      // dictionary vectors + index lookups for the encoded columns
-      val provider = new DictionaryProvider.MapDictionaryProvider()
-      val encodings = new scala.collection.mutable.HashMap[String, DictionaryEncoding]
-      val lookups = new scala.collection.mutable.HashMap[String, java.util.HashMap[String, Integer]]
-      dicts.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((c, vals), id) =>
-        val dv = new VarCharVector(s"$c-dictionary", allocator)
-        dv.allocateNew(vals.length)
-        var j = 0
-        while (j < vals.length) { dv.setSafe(j, vals(j).getBytes("UTF-8")); j += 1 }
-        dv.setValueCount(vals.length)
-        val enc = new DictionaryEncoding(id.toLong, false, new ArrowType.Int(32, true))
-        provider.put(new Dictionary(dv, enc))
-        encodings(c) = enc
-        val m = new java.util.HashMap[String, Integer](vals.length * 2)
-        j = 0
-        while (j < vals.length) { m.put(vals(j), j); j += 1 }
-        lookups(c) = m
-      }
-      val fields = schema.fields.map { f =>
-        encodings.get(f.name) match {
-          case Some(enc) => new Field(f.name,
-            new FieldType(true, new ArrowType.Int(32, true), enc), NoKids)
-          case None => toArrowField(f.name, f.dataType, nullable = true)
-        }
-      }
-      val root = VectorSchemaRoot.create(
-        new ArrowSchema(fields.toSeq.asJava), allocator)
-      val dictIdx: Array[java.util.HashMap[String, Integer]] =
-        schema.fields.map(f => lookups.getOrElse(f.name, null))
-      val out = taskFs.create(tmpPath, true)
-      val ch = java.nio.channels.Channels.newChannel(out)
-      val writer = newFileWriter(root, provider, ch, compression)
-      writer.start()
-      val buf = new Array[Row](BatchRows)
-      def flush(n: Int): Unit = if (n > 0) {
-        var c = 0
-        while (c < schema.length) {
-          val vec = root.getVector(c)
-          vec.setInitialCapacity(n)
-          vec.allocateNew()
-          var r = 0
-          while (r < n) {
-            val row = buf(r)
-            if (row.isNullAt(c)) () // unset = null in Arrow validity
-            else if (dictIdx(c) != null) {
-              val idx = dictIdx(c).get(row.getString(c))
-              require(idx != null, s"value outside the prebuilt dictionary " +
-                s"for ${schema.fields(c).name} (source mutated mid-write?)")
-              vec.asInstanceOf[IntVector].setSafe(r, idx.intValue())
-            } else setFromRow(vec, r, row, c)
-            r += 1
-          }
-          vec.setValueCount(n)
-          c += 1
-        }
-        root.setRowCount(n)
-        writer.writeBatch()
-      }
-      var n = 0
-      for (row <- rows) {
-        buf(n) = row; n += 1
-        if (n == BatchRows) { flush(n); n = 0 }
-      }
-      flush(n)
-      writer.end(); writer.close(); out.close(); root.close()
-      provider.getDictionaryIds.asScala // release dictionary vectors
-        .foreach(id => provider.lookup(id).getVector.close())
-      resourcesClosed = true
-      allocator.close()
-      // commit: first attempt to commit wins; a loser (speculative twin
-      // already committed) discards its temp. CasFs.publish is atomic
-      // fail-if-exists on both local FS (link(2)) and HDFS (rename
-      // refuses an existing destination) — a losing twin can never
-      // overwrite the winner's file.
-      if (!graft.sources.CasFs.publish(taskFs, tmpPath, finalPath))
-        taskFs.delete(tmpPath, false)
-    }
+  /** Every dictionary column's sorted distinct non-null values, from
+    * ONE aggregation: the (column, value) pairs are made distinct (a
+    * partial, spilling aggregation), then numbered within their column
+    * in value order; the driver collects at most 65537 numbered values
+    * per column — enough to refuse a column past the cap without
+    * holding its whole value set. */
+  private def dictionaries(df: DataFrame,
+      dictCols: Seq[String]): Map[String, Array[String]] = {
+    IpcWriteSpec.requireStrings(df.schema, dictCols)
+    if (dictCols.isEmpty) return Map.empty
+    val numbered = df.select(inline(array(dictCols.zipWithIndex.map {
+        case (c, i) => struct(lit(i).as("c"), col(c).as("v")) }: _*)))
+      .where(col("v").isNotNull).distinct()
+      .withColumn("id", row_number().over(Window.partitionBy("c").orderBy("v")))
+      .where(col("id") <= 65537)
+      .collect()
+    dictCols.zipWithIndex.map { case (c, i) =>
+      val vals = numbered.filter(_.getInt(0) == i).sortBy(_.getInt(2))
+        .map(_.getString(1))
+      require(vals.length <= 65536,
+        s"column $c has more than 65536 distinct values — too wide for a " +
+          "broadcast dictionary; write it plain")
+      c -> vals
+    }.toMap
   }
 
   /** Minimal SeekableByteChannel over a Hadoop FSDataInputStream, the
@@ -962,128 +583,13 @@ object Ipc {
     if (f.getDictionary == null) toSparkType(f)
     else toSparkType(dicts.get(f.getDictionary.getId).getVector.getField)
 
-  /** Per-column value getter, decoding through the dictionary when the
-    * column is encoded (`Message.fbs` DictionaryBatch — indices in the
-    * record batches, values in the dictionary batch). */
-  private def columnGetter(vec: FieldVector,
-      dicts: java.util.Map[java.lang.Long, Dictionary]): Int => Any = {
-    val enc = vec.getField.getDictionary
-    if (enc == null) { r => if (vec.isNull(r)) null else getToAny(vec, r) }
-    else {
-      val dv = dicts.get(enc.getId).getVector.asInstanceOf[FieldVector]
-      // index width is part of the producer's DictionaryEncoding —
-      // pandas/pyarrow categoricals pick the narrowest of
-      // int8/int16/int32/int64, so decode through the BaseIntVector
-      // interface instead of assuming int32
-      val iv = vec.asInstanceOf[org.apache.arrow.vector.BaseIntVector]
-      r =>
-        if (vec.isNull(r)) null
-        // toIntExact: an int64 dictionary index above Int.MaxValue
-        // must fail loudly, not truncate into a wrong-but-valid slot
-        else getToAny(dv, Math.toIntExact(iv.getValueAsLong(r)))
-    }
-  }
-
-  /** Distributed IPC read: schema discovered from one file's footer,
-    * then one scan partition per file. Dictionary-encoded columns
-    * (written by [[writeIpcDict]] or any Arrow producer) decode
-    * transparently to their value types. */
-  def readIpc(s: SparkSession, dir: String): DataFrame = {
-    val confSer = new SerializableConfiguration(
-      s.sparkContext.hadoopConfiguration)
-    val dirPath = new HPath(dir)
-    val fs = dirPath.getFileSystem(confSer.value)
-    // discovery via the Hadoop FS listing — sees files written by any
-    // executor, not just ones sharing the driver's local disk
-    val files = Option(fs.globStatus(new HPath(dirPath, "*.arrow")))
-      .getOrElse(Array()).toSeq
-      .map(st => (st.getPath.toString, st.getLen)).sortBy(_._1)
-    require(files.nonEmpty, s"no .arrow files in $dir")
-    // discovery/Inspect: one footer read on the driver
-    val sparkSchema = {
-      val allocator = new RootAllocator()
-      val (headPath, headLen) = files.head
-      val rd = new DeltaIpcFileReader(
-        new HadoopSeekableChannel(fs.open(new HPath(headPath)), headLen),
-        allocator, readCodecs)
-      rd.loadDeltaDictionaries()
-      val dicts = rd.getDictionaryVectors
-      val arrowFields = rd.getVectorSchemaRoot.getSchema.getFields.asScala.toSeq
-      val st = StructType(arrowFields.map(f =>
-        StructField(f.getName, resolvedSparkType(f, dicts), nullable = true)))
-      rd.close(); allocator.close()
-      st
-    }
-    val nCols = sparkSchema.length
-    // RECORD-BATCH SPLITTABILITY (guide §6, same contract as the DSv2
-    // scan): one large file feeds several tasks — each split owns a
-    // contiguous record-batch index range resolved from the footer at
-    // open time. Target is scale-adaptive (bytes/defaultParallelism,
-    // 4 MB floor, maxPartitionBytes cap), never a core-count constant.
-    val totalLen = files.map(_._2).sum
-    val maxPB = s.sessionState.conf.filesMaxPartitionBytes
-    val target = math.max(4L << 20, math.min(maxPB,
-      totalLen / math.max(1, s.sparkContext.defaultParallelism) + 1))
-    val splits = files.flatMap { case (path, len) =>
-      val nSplits = math.min(256L, (len + target - 1) / target).toInt.max(1)
-      (0 until nSplits).map(i => (path, len, i, nSplits))
-    }
-    val rowRdd = s.sparkContext
-      .parallelize(splits, splits.size)
-      .flatMap { case (path, len, splitIdx, nSplits) =>
-        val p = new HPath(path)
-        val taskFs = p.getFileSystem(confSer.value)
-        val allocator = new RootAllocator()
-        val rd = new DeltaIpcFileReader(
-          new HadoopSeekableChannel(taskFs.open(p), len), allocator,
-          readCodecs)
-        // close on task END (success or failure): a corrupt batch
-        // mid-file must not leak the allocator's direct buffers in
-        // the long-lived executor JVM
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            try rd.close() finally allocator.close()
-          })
-        rd.loadDeltaDictionaries()
-        val root = rd.getVectorSchemaRoot
-        val dicts = rd.getDictionaryVectors
-        val getters: Array[Int => Any] =
-          (0 until nCols).map(c => columnGetter(root.getVector(c), dicts)).toArray
-        val blocks = {
-          val all = rd.getRecordBlocks.asScala.toIndexedSeq
-          val lo = (all.length.toLong * splitIdx / nSplits).toInt
-          val hi = (all.length.toLong * (splitIdx + 1) / nSplits).toInt
-          all.slice(lo, hi)
-        }
-        var nextBlock = 0
-        // LAZY batch-at-a-time iterator: peak task memory is one
-        // decoded batch, never the whole file's rows (the
-        // IpcPartitionReader shape, not an ArrayBuffer of the file)
-        new Iterator[Row] {
-          private var rowIdx = 0
-          private var nRows = 0
-          private def advance(): Boolean = {
-            while (rowIdx >= nRows) {
-              if (nextBlock >= blocks.length) return false
-              rd.loadRecordBatch(blocks(nextBlock))
-              nextBlock += 1
-              nRows = root.getRowCount; rowIdx = 0
-            }
-            true
-          }
-          override def hasNext: Boolean = advance()
-          override def next(): Row = {
-            if (!advance()) throw new NoSuchElementException
-            val vals = new Array[Any](nCols)
-            var c = 0
-            while (c < nCols) { vals(c) = getters(c)(rowIdx); c += 1 }
-            rowIdx += 1
-            Row.fromSeq(vals.toIndexedSeq)
-          }
-        }
-      }
-    s.createDataFrame(rowRdd, sparkSchema)
-  }
+  /** Distributed IPC read through the connector: schema from one
+    * file's footer, one scan partition per file or record-batch split,
+    * each file's columns bound by name, dictionary-encoded columns
+    * (written by [[writeIpcDict]] or any Arrow producer) decoded to
+    * their value types. Refuses a directory with no .arrow files. */
+  def readIpc(s: SparkSession, dir: String): DataFrame =
+    s.read.format("graft-ipc").load(dir)
 
   /** Arrow IPC STREAM format (`ipc/reader.h:58`
     * RecordBatchStreamReader): the unseekable wire variant of the file
@@ -1097,22 +603,21 @@ object Ipc {
     bos.toByteArray
   }
 
-  /** Incremental stream-format writer: drains `rows` in [[BatchRows]]
-    * batches straight to `out` (socket, pipe, file), holding at most
-    * one batch in memory — the transport-side half of the codec. */
+  /** Incremental stream-format writer: encodes `rows` to Catalyst rows
+    * and drains them in [[BatchRows]] batches straight to `out`
+    * (socket, pipe, file), holding at most one batch in memory — the
+    * transport-side half of the codec. */
   def writeIpcStreamTo(rows: Iterator[Row], schema: StructType,
       out: java.io.OutputStream, compression: String = "none"): Unit = {
-    import org.apache.arrow.vector.compression.CompressionUtil.CodecType
+    val toInternal = withTimeType(
+      ExpressionEncoder(schema, lenient = true).createSerializer())
+    val types = schema.fields.map(_.dataType)
     val allocator = new RootAllocator()
     val root = VectorSchemaRoot.create(toArrowSchema(schema), allocator)
-    val ch = java.nio.channels.Channels.newChannel(out)
-    val writer = codecTypeOf(compression) match {
-      case CodecType.NO_COMPRESSION =>
-        new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, null, ch)
-      case ct => new org.apache.arrow.vector.ipc.ArrowStreamWriter(
-        root, null, ch,
-        org.apache.arrow.vector.ipc.message.IpcOption.DEFAULT, readCodecs, ct)
-    }
+    val writer = new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, null,
+      java.nio.channels.Channels.newChannel(out),
+      org.apache.arrow.vector.ipc.message.IpcOption.DEFAULT, readCodecs,
+      codecTypeOf(compression))
     // A failing row iterator (e.g. a query error mid-stream) must not
     // leak the allocator's direct buffers — but it must also NOT close
     // the writer: ArrowStreamWriter.close() calls end(), which emits
@@ -1123,26 +628,21 @@ object Ipc {
     var ok = false
     try {
       writer.start()
-      rows.grouped(BatchRows).foreach { batch =>
-        val n = batch.length
+      var n = 0
+      def flush(): Unit = { root.setRowCount(n); writer.writeBatch(); n = 0 }
+      rows.foreach { external =>
+        if (n == 0) root.allocateNew() // clears the previous batch
+        val row = toInternal(external)
         var c = 0
-        while (c < schema.length) {
-          val vec = root.getVector(c)
-          vec.setInitialCapacity(n)
-          vec.allocateNew()
-          var r = 0
-          while (r < n) {
-            val row = batch(r)
-            if (row.isNullAt(c)) ()
-            else setFromRow(vec, r, row, c)
-            r += 1
-          }
-          vec.setValueCount(n)
+        while (c < types.length) {
+          if (!row.isNullAt(c)) // unset = null in Arrow validity
+            setCatalystValue(root.getVector(c), n, types(c), row.get(c, types(c)))
           c += 1
         }
-        root.setRowCount(n)
-        writer.writeBatch()
+        n += 1
+        if (n == BatchRows) flush()
       }
+      if (n > 0) flush()
       writer.end()
       ok = true
     } finally {
@@ -1151,7 +651,19 @@ object Ipc {
     }
   }
 
-  /** Stream-format read: schema from the stream head, batches to EOS. */
+  // The stream codec builds its encoders under one fixed conf, whichever
+  // thread calls it (a Flight gRPC thread with no session, an executor
+  // task): Spark's defaults — java.sql dates and timestamps, as the
+  // codec has always produced — plus the TIME type, which they leave off.
+  private def withTimeType[T](build: => T): T = {
+    val conf = new SQLConf
+    conf.setConfString(SQLConf.TIME_TYPE_ENABLED.key, "true")
+    SQLConf.withExistingConf(conf)(build)
+  }
+
+  /** Stream-format read: schema from the stream head, batches to EOS,
+    * each row decoded to Catalyst and converted at the edge with an
+    * encoder. */
   def readIpcStream(bytes: Array[Byte]): (Seq[Row], StructType) = {
     val allocator = new RootAllocator()
     // try/finally: a truncated or corrupt stream must not leak the
@@ -1160,31 +672,24 @@ object Ipc {
       new java.io.ByteArrayInputStream(bytes), allocator, readCodecs)
     try {
       val root = rd.getVectorSchemaRoot
-      val nCols = root.getSchema.getFields.size()
       // dictionary messages arrive on the wire BEFORE the first record
-      // batch, so getters (and dictionary-resolved types) bind after the
-      // first loadNextBatch
-      var getters: Array[Int => Any] = null
+      // batch, so the decoder (and dictionary-resolved types) bind
+      // after the first loadNextBatch
+      var rowsOf: CatalystRows = null
+      var toExternal: ExpressionEncoder.Deserializer[Row] = null
       val out = scala.collection.mutable.ArrayBuffer.empty[Row]
       while (rd.loadNextBatch()) {
-        if (getters == null)
-          getters = (0 until nCols)
-            .map(c => columnGetter(root.getVector(c), rd.getDictionaryVectors))
-            .toArray
-        var r = 0
-        val n = root.getRowCount
-        while (r < n) {
-          val vals = new Array[Any](nCols)
-          var c = 0
-          while (c < nCols) { vals(c) = getters(c)(r); c += 1 }
-          out += Row.fromSeq(vals.toIndexedSeq)
-          r += 1
+        if (rowsOf == null) {
+          rowsOf = new CatalystRows(root, rd.getDictionaryVectors,
+            Array.range(0, root.getFieldVectors.size))
+          toExternal = withTimeType(
+            ExpressionEncoder(sparkSchema(root, rd.getDictionaryVectors))
+              .resolveAndBind().createDeserializer())
         }
+        var r = 0
+        while (r < root.getRowCount) { out += toExternal(rowsOf.row(r)); r += 1 }
       }
-      val sparkSchema = StructType(root.getSchema.getFields.asScala.toSeq
-        .map(f => StructField(f.getName,
-          resolvedSparkType(f, rd.getDictionaryVectors), nullable = true)))
-      (out.toSeq, sparkSchema)
+      (out.toSeq, sparkSchema(root, rd.getDictionaryVectors))
     } finally {
       try rd.close() finally allocator.close()
     }
@@ -1222,11 +727,13 @@ object Ipc {
     * union Type beyond the nine base primitives): TINYINT/SMALLINT
     * (Arrow Int 8/16), TIMESTAMP_NTZ (zoneless µs), TIME (TIME64[ns]),
     * INTERVAL DAY TO SECOND (Duration[µs]) and INTERVAL YEAR TO MONTH
-    * (Interval[YEAR_MONTH]) — written once, read back through BOTH the
-    * imperative file codec and the DSv2 columnar path (union'd, so a
-    * value either codec corrupts breaks the doubled aggregates), then
+    * (Interval[YEAR_MONTH]) — written once, read back twice through
+    * the connector, once via [[readIpc]] and once via `spark.read`
+    * (union'd: both halves now run the one reader, so the doubled
+    * aggregates pin that the entry point and the format agree), then
     * reduced to engine-neutral longs/strings the DuckDB oracle can
-    * recompute from the original parquet. */
+    * recompute from the original parquet. Foreign widths the writer
+    * never emits (TIME32, TIME64[µs], DAY_TIME) are IpcSpec's. */
   def qIpcTypes(s: SparkSession, dir: String): DataFrame = {
     val out = Egress.outRoot(dir) + "/orders_ipc_types"
     val src = Tables(s, dir, "orders").select(
@@ -1311,14 +818,11 @@ object Ipc {
 
   /** Body-buffer compression round trip (reference `ipc/options.h`
     * IpcWriteOptions::codec, `format/Message.fbs` BodyCompression —
-    * LZ4_FRAME and ZSTD): orders written twice, once ZSTD through the
-    * imperative writer and read back through the DSv2 columnar path,
-    * once LZ4 through the DSv2 writer (`option("compression","lz4")`)
-    * and read back through the imperative codec — each direction
-    * CROSSES writer and reader implementations, so the hash proves
-    * both halves speak the same compressed wire format, not merely
-    * that each can re-read its own output. Aggregates are tagged per
-    * codec; a corrupted buffer in either codec breaks its rows. At
+    * LZ4_FRAME and ZSTD): orders written twice, once ZSTD through
+    * [[writeIpc]] and read back through `spark.read`, once LZ4 through
+    * `option("compression","lz4")` and read back through [[readIpc]] —
+    * one connector underneath every entry point. Aggregates are tagged
+    * per codec; a corrupted buffer in either codec breaks its rows. At
     * 100 TB, buffer compression is the interchange bandwidth knob:
     * frames are per-buffer, so the footer's batch offsets stay valid
     * and compression costs no scan parallelism or random access. */
@@ -1581,9 +1085,8 @@ object Ipc {
     * (r14: `ArrowColumnVector` has no dictionary accessor, so the
     * reader decodes each batch's index vectors through the
     * (delta-grown) dictionary into per-batch stand-in vectors): same
-    * write as `ipc_dict`, but the read is `spark.read.format
-    * ("graft-ipc")` instead of the row-based codec — the aggregate
-    * must still equal the parquet original. */
+    * write as `ipc_dict`, read with `spark.read.format("graft-ipc")` —
+    * the aggregate must still equal the parquet original. */
   def qIpcDictDsv2(s: SparkSession, dir: String): DataFrame = {
     val out = Egress.outRoot(dir) + "/orders_ipc_dict_dsv2"
     val src = Tables(s, dir, "orders")

@@ -1,7 +1,7 @@
 package graft.sources.ipc
 
 import org.apache.arrow.memory.{ArrowBuf, BufferAllocator}
-import org.apache.arrow.vector.compression.{AbstractCompressionCodec, CompressionCodec, CompressionUtil}
+import org.apache.arrow.vector.compression.{AbstractCompressionCodec, CompressionCodec, CompressionUtil, NoCompressionCodec}
 
 /** LZ4_FRAME body-buffer codec on NATIVE lz4-java (the reference's
   * `cpp/src/arrow/util/compression_lz4.cc` is native LZ4 too) instead
@@ -90,10 +90,11 @@ private object Lz4NativeCodec {
     net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
 }
 
-/** The engine's codec factory for every IPC read and compressed
-  * write: ZSTD rides arrow-compression's zstd-jni codec (already
-  * native), LZ4_FRAME rides [[Lz4NativeCodec]]. Readers pass this
-  * unconditionally — it is a free no-op on uncompressed files. */
+/** The engine's codec factory for every IPC read and write: ZSTD
+  * rides arrow-compression's zstd-jni codec (already native),
+  * LZ4_FRAME rides [[Lz4NativeCodec]], NO_COMPRESSION is Arrow's
+  * no-op codec. Readers and writers pass this unconditionally — it is
+  * free on uncompressed files. */
 object GraftCompressionFactory extends CompressionCodec.Factory {
   private val fallback: CompressionCodec.Factory =
     org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE
@@ -101,6 +102,7 @@ object GraftCompressionFactory extends CompressionCodec.Factory {
   override def createCodec(t: CompressionUtil.CodecType): CompressionCodec =
     t match {
       case CompressionUtil.CodecType.LZ4_FRAME => new Lz4NativeCodec
+      case CompressionUtil.CodecType.NO_COMPRESSION => NoCompressionCodec.INSTANCE
       case other => fallback.createCodec(other)
     }
 

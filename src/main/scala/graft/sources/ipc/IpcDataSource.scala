@@ -4,13 +4,19 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.{BigIntVector, BitVector, DateDayVector, FieldVector, Float4Vector, Float8Vector, IntVector, TimeStampMicroTZVector, VarBinaryVector, VarCharVector}
-import org.apache.arrow.vector.ipc.ArrowFileReader
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.arrow.memory.{BufferAllocator, RootAllocator}
+import org.apache.arrow.vector.{FieldVector, IntVector, VarCharVector, VectorSchemaRoot, VectorUnloader}
+import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
+import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter}
+import org.apache.arrow.vector.ipc.message.{ArrowDictionaryBatch, IpcOption}
+import org.apache.arrow.vector.types.{IntervalUnit, TimeUnit}
+import org.apache.arrow.vector.types.pojo.{ArrowType, DictionaryEncoding, Field, FieldType, Schema => ArrowSchema}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
@@ -25,27 +31,36 @@ import graft.ops.Ipc
 
 /** Arrow IPC (Feather v2) as a first-class Spark DataSource V2 —
   * `spark.read.format("graft-ipc").load(dir)` /
-  * `df.write.format("graft-ipc").mode("overwrite").save(dir)`.
+  * `df.write.format("graft-ipc").mode("overwrite").save(dir)` — and
+  * the engine's one Arrow IPC file codec: [[graft.ops.Ipc]]'s
+  * `writeIpc`, `writeIpcDict`, `writeIpcDictDelta` and `readIpc` are
+  * entry points over it.
   *
-  * This is the library-grade packaging of the same capability
-  * [[graft.ops.Ipc]] exposes imperatively (the reference's IPC file
-  * format, `cpp/src/arrow/ipc/reader.h:58` RecordBatchFileReader /
-  * `writer.h:54`; dataset discovery `dataset/discovery.h:55`):
-  * registering it as a `TableProvider` puts the format behind
-  * Catalyst's connector surface, so scans get planned like any other
-  * source — one `InputPartition` per .arrow file (DataFusion's
-  * file-granularity parallelism, `physical_plan/csv.rs:31-66`),
-  * column pruning pushed into the reader via
-  * `SupportsPushDownRequiredColumns` (the reference's
-  * `ScannerBuilder::Project`, `dataset/scanner.h:196`), and writes
-  * running under Spark's commit coordinator with job-level
+  * The reference's IPC file format (`cpp/src/arrow/ipc/reader.h:58`
+  * RecordBatchFileReader / `writer.h:54`; dataset discovery
+  * `dataset/discovery.h:55`) behind Catalyst's connector surface, so
+  * scans get planned like any other source — one `InputPartition` per
+  * .arrow file or record-batch split (DataFusion's file-granularity
+  * parallelism, `physical_plan/csv.rs:31-66`), column pruning pushed
+  * into the reader via `SupportsPushDownRequiredColumns` (the
+  * reference's `ScannerBuilder::Project`, `dataset/scanner.h:196`),
+  * stats-sidecar file skipping, COUNT/MIN/MAX and LIMIT pushdown — and
+  * writes running under Spark's commit coordinator with job-level
   * atomic-rename commit (temps become visible only in
   * `BatchWrite.commit`, after every task succeeded).
   *
-  * All I/O is Hadoop-FileSystem-based — works on any Hadoop FS, no
-  * shared-local-disk assumption. Type subset as [[graft.ops.Ipc]]'s
-  * nine-type wire convention: bigint/int/float/double/string/boolean/
-  * binary/date/timestamp(µs UTC), nullable throughout.
+  * Reads are columnar (Spark's ArrowColumnVector over the file's own
+  * vectors) unless the head file's footer carries an Arrow width those
+  * accessors misread (TIME32, TIME64[µs], non-µs Duration, DAY_TIME,
+  * at any depth); such a directory takes the row reader, which widens
+  * every width through [[graft.ops.Ipc.getCatalystValue]]. Either
+  * reader binds the planned columns by name in each file's own footer.
+  *
+  * Write options: `compression` (zstd, lz4, none) and the two
+  * dictionary forms ([[IpcWriteSpec]]). All I/O is
+  * Hadoop-FileSystem-based — works on any Hadoop FS, no
+  * shared-local-disk assumption. Types: [[graft.ops.Ipc]]'s full wire
+  * ladder, nested types included, nullable throughout.
   */
 final class IpcDataSource extends TableProvider with DataSourceRegister {
 
@@ -55,78 +70,90 @@ final class IpcDataSource extends TableProvider with DataSourceRegister {
   // directory to already exist for inference
   override def supportsExternalMetadata(): Boolean = true
 
+  // Spark calls inferSchema and then getTable on one provider
+  // instance, so the reader choice the inferring footer read made
+  // rides along; None when the caller supplied the schema
+  private var columnar: Option[Boolean] = None
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val dir = IpcDataSource.pathOf(options)
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val dirPath = new HPath(dir)
-    val fs = dirPath.getFileSystem(conf)
-    val head = Option(fs.globStatus(new HPath(dirPath, "*.arrow")))
-      .getOrElse(Array()).sortBy(_.getPath.toString).headOption
-      .getOrElse(throw new IllegalArgumentException(s"no .arrow files in $dir"))
-    // discovery/Inspect: one footer (+ dictionary blocks) read on the
-    // driver — dictionary-encoded columns resolve to their VALUE type
-    // (the logical type lives on the dictionary vector's field) and
-    // decode transparently on both DSv2 read paths (r14)
-    val allocator = new RootAllocator()
-    val rd = new Ipc.DeltaIpcFileReader(
-      new Ipc.HadoopSeekableChannel(fs.open(head.getPath), head.getLen),
-      allocator, Ipc.readCodecs)
-    try StructType({
-      rd.loadDeltaDictionaries()
-      val dicts = rd.getDictionaryVectors
-      rd.getVectorSchemaRoot.getSchema.getFields.asScala.toSeq
-      .map { fRaw =>
-        val f = if (fRaw.getDictionary == null) fRaw
-          else dicts.get(fRaw.getDictionary.getId).getVector.getField
-        // Spark's ArrowColumnVector has a TIME accessor for
-        // TimeNanoVector only (our own writer's choice) and no
-        // accessor for the DAY_TIME (days, millis) pair; a foreign
-        // file carrying either would surface as a runtime accessor
-        // error mid-scan — refuse at schema time instead, RECURSING
-        // through list/struct/map children (a nested time32 fails the
-        // same way a top-level one does). The row-based readIpc
-        // widens all of these.
-        def gate(g: org.apache.arrow.vector.types.pojo.Field): Unit = {
-          g.getType match {
-            case t: org.apache.arrow.vector.types.pojo.ArrowType.Time =>
-              require(t.getUnit ==
-                org.apache.arrow.vector.types.TimeUnit.NANOSECOND,
-                s"graft-ipc DSv2 reads TIME64[ns] only; field " +
-                  s"'${g.getName}' (in column '${f.getName}') is " +
-                  s"TIME[${t.getUnit}] — read this directory with " +
-                  "graft.ops.Ipc.readIpc")
-            case iv: org.apache.arrow.vector.types.pojo.ArrowType.Interval
-                if iv.getUnit ==
-                  org.apache.arrow.vector.types.IntervalUnit.DAY_TIME =>
-              throw new IllegalArgumentException(
-                s"graft-ipc DSv2 does not read DAY_TIME interval field " +
-                  s"'${g.getName}' (in column '${f.getName}'; our " +
-                  "writer emits Duration[µs]); read this directory " +
-                  "with graft.ops.Ipc.readIpc")
-            case _ => ()
-          }
-          g.getChildren.asScala.foreach(gate)
-        }
-        gate(f)
-        StructField(fRaw.getName, Ipc.toSparkType(f), nullable = true)
-      }
-    })
-    finally { rd.close(); allocator.close() }
+    val (schema, col) = IpcDataSource.headFooter(dir).getOrElse(
+      throw new IllegalArgumentException(s"no .arrow files in $dir"))
+    columnar = Some(col)
+    schema
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table =
     new IpcTable(schema,
-      IpcDataSource.pathOf(new CaseInsensitiveStringMap(properties)))
+      IpcDataSource.pathOf(new CaseInsensitiveStringMap(properties)), columnar)
 }
 
 private object IpcDataSource {
   def pathOf(options: CaseInsensitiveStringMap): String =
     Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("graft-ipc requires a path"))
+
+  /** Discovery/Inspect: the first file's footer (+ dictionary blocks),
+    * read on the driver — its Spark schema (dictionary-encoded columns
+    * at their VALUE type) and whether Spark's ArrowColumnVector can
+    * read every column; None for a directory without .arrow files. */
+  def headFooter(dir: String): Option[(StructType, Boolean)] = {
+    val dirPath = new HPath(dir)
+    val fs = dirPath.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new HPath(dirPath, "*.arrow"))).getOrElse(Array())
+      .sortBy(_.getPath.toString).headOption.map { head =>
+        val allocator = new RootAllocator()
+        val rd = new Ipc.DeltaIpcFileReader(
+          new Ipc.HadoopSeekableChannel(fs.open(head.getPath), head.getLen),
+          allocator, Ipc.readCodecs)
+        try {
+          rd.loadDeltaDictionaries()
+          val dicts = rd.getDictionaryVectors
+          val root = rd.getVectorSchemaRoot
+          (Ipc.sparkSchema(root, dicts),
+            root.getSchema.getFields.asScala.forall { f =>
+              columnarReadable(if (f.getDictionary == null) f
+                else dicts.get(f.getDictionary.getId).getVector.getField)
+            })
+        } finally { rd.close(); allocator.close() }
+      }
+  }
+
+  /** Whether Spark's ArrowColumnVector reads `f` right: it reads TIME
+    * only as TIME64[ns] and a Duration's raw count as µs, and has no
+    * DAY_TIME accessor — the widths a foreign producer (C++, pyarrow)
+    * may write and the engine's writer never does. */
+  private def columnarReadable(f: Field): Boolean = (f.getType match {
+    case t: ArrowType.Time => t.getUnit == TimeUnit.NANOSECOND
+    case d: ArrowType.Duration => d.getUnit == TimeUnit.MICROSECOND
+    case iv: ArrowType.Interval => iv.getUnit != IntervalUnit.DAY_TIME
+    case _ => true
+  }) && f.getChildren.asScala.forall(columnarReadable)
+
+  /** The position of each planned column in one file, bound by NAME in
+    * that file's own footer: files of one directory may order their
+    * columns differently (an append with another column order), and a
+    * caller-supplied schema may too. A column the file lacks, or one
+    * whose type is not the planned type, is refused naming both. */
+  def bind(path: String, root: VectorSchemaRoot,
+      dicts: JMap[java.lang.Long, Dictionary], required: StructType): Array[Int] = {
+    val fields = root.getSchema.getFields
+    required.fields.map { want =>
+      val i = (0 until fields.size).find(fields.get(_).getName == want.name)
+        .getOrElse(throw new IllegalArgumentException(
+          s"graft-ipc file $path has no column '${want.name}'"))
+      val got = Ipc.resolvedSparkType(fields.get(i), dicts)
+      require(DataTypeUtils.equalsIgnoreNullability(got, want.dataType),
+        s"graft-ipc file $path: column '${want.name}' is ${got.sql}, " +
+          s"planned as ${want.dataType.sql}")
+      i
+    }
+  }
 }
 
-private final class IpcTable(tableSchema: StructType, dir: String)
+private final class IpcTable(tableSchema: StructType, dir: String,
+    columnar: Option[Boolean])
     extends Table with SupportsRead with SupportsWrite {
   override def name(): String = s"graft-ipc:$dir"
   override def schema(): StructType = tableSchema
@@ -136,18 +163,18 @@ private final class IpcTable(tableSchema: StructType, dir: String)
       TableCapability.STREAMING_WRITE, TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new IpcScanBuilder(tableSchema, dir,
+    new IpcScanBuilder(tableSchema, dir, columnar,
       Option(options.get("maxFilesPerTrigger")).map(_.toInt))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new IpcWriteBuilder(info.schema(), dir, info.queryId(),
-      info.options().getOrDefault("compression", "none"))
+      IpcWriteSpec.parse(info.schema(), info.options()))
 }
 
 // ---------------------------------------------------------------- read
 
 private final class IpcScanBuilder(fullSchema: StructType, dir: String,
-    maxFilesPerTrigger: Option[Int] = None)
+    columnar: Option[Boolean], maxFilesPerTrigger: Option[Int] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
@@ -182,9 +209,12 @@ private final class IpcScanBuilder(fullSchema: StructType, dir: String,
     * batch_size/head, `dataset/scanner.h`). */
   override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
   // Catalyst hands down exactly the referenced columns (ColumnPruning →
-  // V2ScanRelationPushDown) — the reference's ScannerBuilder::Project
+  // V2ScanRelationPushDown) — the reference's ScannerBuilder::Project.
+  // Top-level only: a struct keeps its whole planned type, because both
+  // readers hand Spark the file's whole struct (nested pruning would
+  // shift child ordinals under it)
   override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+    required = StructType(requiredSchema.fieldNames.map(fullSchema(_)))
 
   /** COUNT(*) pushdown: the row count of an Arrow file lives in each
     * record batch's METADATA header (`RecordBatch.length` in the
@@ -281,7 +311,7 @@ private final class IpcScanBuilder(fullSchema: StructType, dir: String,
   override def build(): Scan =
     if (countStar) new IpcCountScan(dir)
     else if (statsAggs.nonEmpty) new IpcStatsAggScan(dir, statsAggs)
-    else new IpcScan(fullSchema, required, dir, maxFilesPerTrigger, limit,
+    else new IpcScan(required, dir, columnar, maxFilesPerTrigger, limit,
       pushed)
 }
 
@@ -447,8 +477,8 @@ private object IpcStatsAggScan {
     }
 }
 
-private final class IpcScan(fullSchema: StructType, required: StructType,
-    dir: String, maxFilesPerTrigger: Option[Int] = None,
+private final class IpcScan(required: StructType, dir: String,
+    columnar: Option[Boolean], maxFilesPerTrigger: Option[Int] = None,
     limit: Option[Int] = None,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends Scan with Batch
@@ -461,7 +491,7 @@ private final class IpcScan(fullSchema: StructType, required: StructType,
       (if (filters.nonEmpty) s", filters=${filters.mkString(";")}" else "")
 
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new IpcMicroBatchStream(fullSchema, required, dir, maxFilesPerTrigger)
+    new IpcMicroBatchStream(required, dir, columnar, maxFilesPerTrigger)
 
   /** On-disk byte size of the file set. Without this, Catalyst falls
     * back to spark.sql.defaultSizeInBytes (≈ Long.Max) for a DSv2
@@ -548,14 +578,11 @@ private final class IpcScan(fullSchema: StructType, required: StructType,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // file position of every required column; missing-in-file columns
-    // are impossible (schema comes from these files' own footers)
-    val idx = required.fieldNames.map(n => fullSchema.fieldIndex(n))
-    new IpcPartitionReaderFactory(required, idx,
+  override def createReaderFactory(): PartitionReaderFactory =
+    new IpcPartitionReaderFactory(required,
       new SerializableConfiguration(
-        SparkSession.active.sparkContext.hadoopConfiguration), limit)
-  }
+        SparkSession.active.sparkContext.hadoopConfiguration),
+      columnar.getOrElse(IpcDataSource.headFooter(dir).forall(_._2)), limit)
 }
 
 /** `splitIdx`/`nSplits`: this partition reads the `splitIdx`-th of
@@ -602,8 +629,8 @@ private object IpcSourceOffset {
   * IPC-handoff pattern — another process drops whole files, the
   * stream picks each up once). Batch-identical read path: same
   * partition-per-file planning, same columnar reader factory. */
-private final class IpcMicroBatchStream(fullSchema: StructType,
-    required: StructType, dir: String, maxFilesPerTrigger: Option[Int] = None)
+private final class IpcMicroBatchStream(required: StructType, dir: String,
+    columnar: Option[Boolean], maxFilesPerTrigger: Option[Int] = None)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
@@ -675,77 +702,96 @@ private final class IpcMicroBatchStream(fullSchema: StructType,
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val idx = required.fieldNames.map(n => fullSchema.fieldIndex(n))
-    new IpcPartitionReaderFactory(required, idx, confSer)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new IpcPartitionReaderFactory(required, confSer,
+      columnar.getOrElse(IpcDataSource.headFooter(dir).forall(_._2)))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
 private final class IpcPartitionReaderFactory(required: StructType,
-    fileIdx: Array[Int], confSer: SerializableConfiguration,
+    confSer: SerializableConfiguration, columnar: Boolean,
     limit: Option[Int] = None)
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[IpcInputPartition]
-    new IpcPartitionReader(part.path, part.len, required, fileIdx, confSer,
-      limit, part.splitIdx, part.nSplits)
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new IpcPartitionReader(p.asInstanceOf[IpcInputPartition], required,
+      confSer, limit)
 
-  // The scan is COLUMNAR: each loaded Arrow record batch is handed to
-  // Spark as a ColumnarBatch of ArrowColumnVector wrappers — zero
-  // per-value conversion, and Catalyst plans a codegen'd ColumnarToRow
-  // on top (same mechanism as Spark's vectorized parquet reader). The
-  // row-based reader above remains as the non-columnar fallback.
-  override def supportColumnarReads(p: InputPartition): Boolean = true
+  // Columnar unless the footer carries a width ArrowColumnVector
+  // misreads: each loaded Arrow record batch is handed to Spark as a
+  // ColumnarBatch of ArrowColumnVector wrappers — zero per-value
+  // conversion, and Catalyst plans a codegen'd ColumnarToRow on top
+  // (same mechanism as Spark's vectorized parquet reader). The choice
+  // is per scan: Spark refuses a scan mixing the two.
+  override def supportColumnarReads(p: InputPartition): Boolean = columnar
 
-  override def createColumnarReader(p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val part = p.asInstanceOf[IpcInputPartition]
-    new IpcColumnarPartitionReader(part.path, part.len, fileIdx, confSer,
-      limit, part.splitIdx, part.nSplits)
-  }
+  override def createColumnarReader(p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new IpcColumnarPartitionReader(p.asInstanceOf[IpcInputPartition],
+      required, confSer, limit)
 }
 
-/** Columnar reader: streams record batches, wrapping the REQUIRED
-  * columns' Arrow vectors directly (pruning = untouched vectors are
-  * simply never wrapped or walked). Vector memory is owned by the
-  * file reader's VectorSchemaRoot and reused across loadNextBatch —
-  * safe because Spark fully consumes a batch before calling next(). */
-private final class IpcColumnarPartitionReader(path: String, len: Long,
-    fileIdx: Array[Int], confSer: SerializableConfiguration,
-    limit: Option[Int] = None, splitIdx: Int = 0, nSplits: Int = 1)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector, ColumnarBatch}
-
+/** One open file split, shared by both readers: the footer and
+  * (delta-grown) dictionaries, the split's contiguous record-batch
+  * range from the footer's block list (dictionaries load fully in
+  * EVERY split — the file format puts them before any record batch, so
+  * a mid-file split decodes identically), and the planned columns bound
+  * by name. Vector memory is owned by the file reader's
+  * VectorSchemaRoot and reused across batches — safe because Spark
+  * fully consumes a batch or row before calling next(). */
+private class IpcFileSplit(part: IpcInputPartition, required: StructType,
+    confSer: SerializableConfiguration, limit: Option[Int]) {
   private val allocator = new RootAllocator()
-  private val reader = {
-    val p = new HPath(path)
+  protected val reader = {
+    val p = new HPath(part.path)
     val fs = p.getFileSystem(confSer.value)
     new Ipc.DeltaIpcFileReader(
-      new Ipc.HadoopSeekableChannel(fs.open(p), len), allocator,
+      new Ipc.HadoopSeekableChannel(fs.open(p), part.len), allocator,
       Ipc.readCodecs)
   }
   reader.loadDeltaDictionaries() // dict ids -> (delta-grown) value vectors
-  // this split's contiguous record-batch range, from the footer's
-  // block list (dictionaries above load fully in EVERY split — the
-  // file format puts them in the footer block list, before any record
-  // batch, so a mid-file split decodes identically)
   private val blocks = {
-    import scala.jdk.CollectionConverters._
     val all = reader.getRecordBlocks.asScala.toIndexedSeq
-    val (lo, hi) = IpcInputPartition.ownedRange(all.length, splitIdx, nSplits)
+    val (lo, hi) = IpcInputPartition.ownedRange(all.length, part.splitIdx,
+      part.nSplits)
     all.slice(lo, hi)
   }
   private var nextBlock = 0
-  private val root = reader.getVectorSchemaRoot
+  protected val root = reader.getVectorSchemaRoot
+  protected val fileIdx: Array[Int] = IpcDataSource.bind(part.path, root,
+    reader.getDictionaryVectors, required)
+  protected var served = 0L
+
+  /** Load the split's next non-empty batch; false when done or when a
+    * pushed limit is satisfied (whole batches are emitted — Spark's
+    * GlobalLimit trims the surplus). */
+  protected def loadNext(): Boolean = {
+    if (limit.exists(served >= _)) return false
+    while (nextBlock < blocks.length) {
+      reader.loadRecordBatch(blocks(nextBlock))
+      nextBlock += 1
+      if (root.getRowCount > 0) return true
+    }
+    false
+  }
+
+  def close(): Unit = { reader.close(); allocator.close() }
+}
+
+/** Columnar reader: wraps the REQUIRED columns' Arrow vectors directly
+  * (pruning = untouched vectors are simply never wrapped or walked). */
+private final class IpcColumnarPartitionReader(part: IpcInputPartition,
+    required: StructType, confSer: SerializableConfiguration,
+    limit: Option[Int])
+    extends IpcFileSplit(part, required, confSer, limit)
+    with PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector, ColumnarBatch}
+
   private var batch: ColumnarBatch = null
-  private var served = 0L
   // decoded stand-ins for dictionary-encoded vectors: allocated per
   // batch (ArrowColumnVector has no dictionary accessor), released
-  // when the NEXT batch loads — Spark fully consumes a batch before
-  // calling next(), the same contract the raw-vector reuse rides on
+  // when the NEXT batch loads — the same contract the raw-vector reuse
+  // rides on
   private var decoded: List[org.apache.arrow.vector.ValueVector] = Nil
   private def closeDecoded(): Unit = {
     decoded.foreach(v => try v.close() catch { case _: Throwable => () })
@@ -753,14 +799,8 @@ private final class IpcColumnarPartitionReader(path: String, len: Long,
   }
 
   override def next(): Boolean = {
-    // pushed limit satisfied: stop pulling batches (whole batches are
-    // emitted — Spark's GlobalLimit trims the last one's surplus)
-    if (limit.exists(served >= _)) return false
     closeDecoded()
-    if (nextBlock >= blocks.length) return false
-    reader.loadRecordBatch(blocks(nextBlock))
-    nextBlock += 1
-    if (root.getRowCount == 0) return next()
+    if (!loadNext()) return false
     val cols: Array[ColumnVector] = fileIdx.map { i =>
       val vec = root.getVector(i)
       val enc = vec.getField.getDictionary
@@ -779,90 +819,45 @@ private final class IpcColumnarPartitionReader(path: String, len: Long,
 
   override def get(): ColumnarBatch = batch
 
-  override def close(): Unit = {
-    closeDecoded(); reader.close(); allocator.close()
-  }
+  override def close(): Unit = { closeDecoded(); super.close() }
 }
 
-/** Streams one .arrow file batch-by-batch; only the REQUIRED columns
-  * are converted to InternalRow fields (pruning saves decode work;
-  * skipping the bytes themselves is the parquet path's job — IPC is
-  * the interchange format, not the 100 TB at-rest format). */
-private final class IpcPartitionReader(path: String, len: Long,
-    required: StructType, fileIdx: Array[Int],
-    confSer: SerializableConfiguration,
-    limit: Option[Int] = None, splitIdx: Int = 0, nSplits: Int = 1)
-    extends PartitionReader[InternalRow] {
-
-  private val allocator = new RootAllocator()
-  private val reader = {
-    val p = new HPath(path)
-    val fs = p.getFileSystem(confSer.value)
-    new Ipc.DeltaIpcFileReader(
-      new Ipc.HadoopSeekableChannel(fs.open(p), len), allocator,
-      Ipc.readCodecs)
-  }
-  reader.loadDeltaDictionaries()
-  private val blocks = {
-    import scala.jdk.CollectionConverters._
-    val all = reader.getRecordBlocks.asScala.toIndexedSeq
-    val (lo, hi) = IpcInputPartition.ownedRange(all.length, splitIdx, nSplits)
-    all.slice(lo, hi)
-  }
-  private var nextBlock = 0
-  private val root = reader.getVectorSchemaRoot
-  // per required column: the dictionary VALUE vector to decode
-  // through, or null for plain columns
-  private val dictVecs: Array[FieldVector] = fileIdx.map { i =>
-    val enc = root.getVector(i).getField.getDictionary
-    if (enc == null) null
-    else reader.getDictionaryVectors.get(enc.getId).getVector
-      .asInstanceOf[FieldVector]
-  }
-  private var served = 0L
+/** Row reader: only the REQUIRED columns are converted to InternalRow
+  * fields, through [[graft.ops.Ipc.CatalystRows]] (pruning saves decode
+  * work; skipping the bytes themselves is the parquet path's job — IPC
+  * is the interchange format, not the 100 TB at-rest format). */
+private final class IpcPartitionReader(part: IpcInputPartition,
+    required: StructType, confSer: SerializableConfiguration,
+    limit: Option[Int])
+    extends IpcFileSplit(part, required, confSer, limit)
+    with PartitionReader[InternalRow] {
+  private val rows = new Ipc.CatalystRows(root, reader.getDictionaryVectors,
+    fileIdx)
   private var rowInBatch = 0
   private var batchRows = 0
 
   override def next(): Boolean = {
     if (limit.exists(served >= _)) return false // pushed limit satisfied
     if (rowInBatch < batchRows) return true
-    if (nextBlock >= blocks.length) return false
-    reader.loadRecordBatch(blocks(nextBlock))
-    nextBlock += 1
+    if (!loadNext()) return false
     rowInBatch = 0
     batchRows = root.getRowCount
-    if (batchRows == 0) next() else true
+    true
   }
 
   override def get(): InternalRow = {
-    val vals = new Array[Any](fileIdx.length)
-    var c = 0
-    while (c < fileIdx.length) {
-      val vec = root.getVector(fileIdx(c))
-      vals(c) = if (vec.isNull(rowInBatch)) null
-        else if (dictVecs(c) != null)
-          // toIntExact: an int64 index above Int.MaxValue must fail
-          // loudly, not truncate into a wrong-but-valid slot
-          Ipc.getCatalystValue(dictVecs(c), java.lang.Math.toIntExact(
-            vec.asInstanceOf[org.apache.arrow.vector.BaseIntVector]
-              .getValueAsLong(rowInBatch)))
-        else Ipc.getCatalystValue(vec, rowInBatch)
-      c += 1
-    }
+    val row = rows.row(rowInBatch)
     rowInBatch += 1
     served += 1
-    new GenericInternalRow(vals)
+    row
   }
-
-  override def close(): Unit = { reader.close(); allocator.close() }
 }
 
 // --------------------------------------------------------------- write
 
 private final class IpcWriteBuilder(schema: StructType, dir: String,
-    queryId: String, compression: String)
+    queryId: String, spec: IpcWriteSpec)
     extends WriteBuilder with SupportsTruncate {
-  Ipc.codecTypeOf(compression) // reject a bad codec name at plan time
   private var truncateFirst = false
   // mode("overwrite") arrives as OverwriteByExpression(AlwaysTrue) and
   // Catalyst lowers it onto truncate() when the builder supports it;
@@ -871,10 +866,10 @@ private final class IpcWriteBuilder(schema: StructType, dir: String,
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
-      new IpcBatchWrite(schema, dir, truncateFirst, queryId, compression)
+      new IpcBatchWrite(schema, dir, truncateFirst, queryId, spec)
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
       new IpcStreamingWrite(schema, dir, replaceEachEpoch = truncateFirst,
-        compression)
+        spec)
   }
 }
 
@@ -893,7 +888,7 @@ private final class IpcWriteBuilder(schema: StructType, dir: String,
   * exactly once, just possibly split across triggers. `abort()`
   * deletes temps. */
 private final class IpcBatchWrite(schema: StructType, dir: String,
-    truncateFirst: Boolean, queryId: String, compression: String)
+    truncateFirst: Boolean, queryId: String, spec: IpcWriteSpec)
     extends BatchWrite {
 
   private val confSer = new SerializableConfiguration(
@@ -913,7 +908,7 @@ private final class IpcBatchWrite(schema: StructType, dir: String,
            st <- Option(fs.globStatus(new HPath(new HPath(dir), pat)))
              .getOrElse(Array()))
         fs.delete(st.getPath, false)
-    new IpcDataWriterFactory(schema, dir, confSer, queryId, compression)
+    new IpcDataWriterFactory(schema, dir, confSer, queryId, spec)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -960,7 +955,7 @@ private final case class IpcCommitMessage(tmpPath: String, finalPath: String,
 private case object IpcEmptyCommit extends WriterCommitMessage
 
 private final class IpcDataWriterFactory(schema: StructType, dir: String,
-    confSer: SerializableConfiguration, queryId: String, compression: String)
+    confSer: SerializableConfiguration, queryId: String, spec: IpcWriteSpec)
     extends DataWriterFactory {
   // queryId (a per-write UUID) scopes names across applications;
   // taskId disambiguates retried attempts within this job's temps
@@ -968,7 +963,7 @@ private final class IpcDataWriterFactory(schema: StructType, dir: String,
     new IpcDataWriter(schema,
       new HPath(dir, s".part-$queryId-$partitionId-t$taskId.arrow.tmp"),
       new HPath(dir, s"part-$queryId-$partitionId.arrow"), confSer,
-      compression = compression)
+      spec)
 }
 
 /** Structured-Streaming sink half of the connector: every epoch is an
@@ -983,7 +978,7 @@ private final class IpcDataWriterFactory(schema: StructType, dir: String,
   * epochs' files, so the directory always holds exactly the latest
   * full snapshot instead of an accumulating union. */
 private final class IpcStreamingWrite(schema: StructType, dir: String,
-    replaceEachEpoch: Boolean, compression: String)
+    replaceEachEpoch: Boolean, spec: IpcWriteSpec)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
@@ -993,7 +988,7 @@ private final class IpcStreamingWrite(schema: StructType, dir: String,
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     val fs = new HPath(dir).getFileSystem(confSer.value)
     fs.mkdirs(new HPath(dir))
-    new IpcStreamingDataWriterFactory(schema, dir, confSer, compression)
+    new IpcStreamingDataWriterFactory(schema, dir, confSer, spec)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -1025,7 +1020,7 @@ private final class IpcStreamingWrite(schema: StructType, dir: String,
 }
 
 private final class IpcStreamingDataWriterFactory(schema: StructType,
-    dir: String, confSer: SerializableConfiguration, compression: String)
+    dir: String, confSer: SerializableConfiguration, spec: IpcWriteSpec)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
@@ -1034,32 +1029,166 @@ private final class IpcStreamingDataWriterFactory(schema: StructType,
     new IpcDataWriter(schema,
       new HPath(dir, s".part-e$epochId-$partitionId-t$taskId.arrow.tmp"),
       new HPath(dir, s"part-e$epochId-$partitionId.arrow"), confSer,
-      lazyCreate = true, compression = compression)
+      spec, lazyCreate = true)
+}
+
+
+/** The connector's write options, parsed and checked once on the
+  * driver at plan time. Beside `compression` (body-buffer codec: zstd,
+  * lz4, none), each option stands for one parameter of a
+  * [[graft.ops.Ipc]] entry point:
+  *  - `dictionary` (`writeIpcDict`'s columns with their values): a
+  *    JSON object of string column → sorted values; every file ships
+  *    those columns as int32 ids into ONE prebuilt, non-delta
+  *    dictionary batch;
+  *  - `deltaDictionary` (`writeIpcDictDelta`'s columns):
+  *    comma-separated string columns whose dictionary each file
+  *    discovers as it writes — the first batch's values as the initial
+  *    dictionary batch, later batches' new values as `isDelta`
+  *    extensions;
+  *  - `batchRows` (`writeIpcDictDelta`'s `batchRows`): rows per record
+  *    batch of a delta-dictionary write.
+  * Either form refuses past 65536 values per column: the prebuilt one
+  * here, the delta one per file, mid-write. */
+private[graft] final case class IpcWriteSpec(compression: String,
+    prebuilt: Map[String, Array[String]], delta: Seq[String], batchRows: Int)
+
+private[graft] object IpcWriteSpec {
+  val MaxDictValues = 65536
+
+  def parse(schema: StructType, o: CaseInsensitiveStringMap): IpcWriteSpec = {
+    val compression = o.getOrDefault("compression", "none")
+    Ipc.codecTypeOf(compression) // reject a bad codec name at plan time
+    val prebuilt = Option(o.get("dictionary")).map { json =>
+      new ObjectMapper().readValue(json,
+          classOf[java.util.Map[String, java.util.List[String]]])
+        .asScala.map { case (c, vs) => c -> vs.asScala.toArray }.toMap
+    }.getOrElse(Map.empty[String, Array[String]])
+    val delta = Option(o.get("deltaDictionary")).toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    require(!o.containsKey("batchRows") || delta.nonEmpty,
+      "batchRows sets the record-batch size of a deltaDictionary write only")
+    val batchRows = Option(o.get("batchRows")).map(_.toInt).getOrElse(Ipc.BatchRows)
+    require(batchRows > 0, s"batchRows must be positive, is $batchRows")
+    requireStrings(schema, prebuilt.keys.toSeq ++ delta)
+    prebuilt.foreach { case (c, vs) =>
+      require(vs.length <= MaxDictValues, s"column $c has ${vs.length} " +
+        "dictionary values — too wide for a broadcast dictionary; write it plain")
+    }
+    IpcWriteSpec(compression, prebuilt, delta, batchRows)
+  }
+
+  def requireStrings(schema: StructType, cols: Seq[String]): Unit =
+    cols.foreach { c =>
+      require(schema(c).dataType == StringType,
+        s"dictionary-encoded column $c must be string, is ${schema(c).dataType}")
+    }
+
+  /** The `dictionary` option's value for prebuilt `dicts`. */
+  def dictionaryOption(dicts: Map[String, Array[String]]): String =
+    new ObjectMapper().writeValueAsString(
+      dicts.map { case (c, vs) => c -> vs.toSeq.asJava }.asJava)
+}
+
+/** Arrow file writer with the spec's body-buffer codec, and the
+  * protected dictionary-batch hook opened so a delta-dictionary write
+  * can emit `isDelta` extensions between record batches (the footer
+  * records every dictionary block, so file readers replay them in
+  * order). */
+private final class IpcFileWriter(root: VectorSchemaRoot,
+    provider: DictionaryProvider, ch: java.nio.channels.WritableByteChannel,
+    codec: String)
+    extends ArrowFileWriter(root, provider, ch, null, IpcOption.DEFAULT,
+      Ipc.readCodecs, Ipc.codecTypeOf(codec)) {
+  def writeDelta(b: ArrowDictionaryBatch): Unit = writeDictionaryBatch(b)
+}
+
+/** One dictionary-encoded string column of one file: the value → id
+  * lookup and the values not yet shipped. A prebuilt column starts
+  * with all its values pending and never grows; a delta column starts
+  * empty and grows as rows arrive (ids are first-appearance ranks,
+  * append-only), each flush shipping what it gained. */
+private final class DictColumn(name: String, id: Long,
+    prebuilt: Array[String], growable: Boolean, allocator: BufferAllocator) {
+  val encoding = new DictionaryEncoding(id, false, new ArrowType.Int(32, true))
+  /** The initial dictionary, registered with the file writer. */
+  val vector = new VarCharVector(s"$name-dictionary", allocator)
+  private val ids = new java.util.HashMap[UTF8String, Integer]
+  private val pending = new java.util.ArrayList[UTF8String]
+  prebuilt.foreach(v => add(UTF8String.fromString(v)))
+
+  private def add(v: UTF8String): Int = {
+    require(ids.size < IpcWriteSpec.MaxDictValues,
+      s"column $name exceeded 65536 distinct values in one file — too " +
+        "wide for dictionary encoding; write it plain")
+    val next = ids.size
+    ids.put(v, next)
+    pending.add(v)
+    next
+  }
+
+  def idOf(v: UTF8String): Int = {
+    val known = ids.get(v)
+    if (known != null) known.intValue
+    else {
+      require(growable, s"value outside the prebuilt dictionary for $name " +
+        "(source mutated mid-write?)")
+      add(v.clone()) // the row's bytes are reused for the next row
+    }
+  }
+
+  def hasPending: Boolean = !pending.isEmpty
+
+  /** Move the pending values into `dv`. */
+  def drainInto(dv: VarCharVector): Unit = {
+    dv.allocateNew(pending.size)
+    var j = 0
+    while (j < pending.size) { dv.setSafe(j, pending.get(j).getBytes); j += 1 }
+    dv.setValueCount(pending.size)
+    pending.clear()
+  }
 }
 
 private final class IpcDataWriter(schema: StructType,
     tmpPath: HPath, finalPath: HPath, confSer: SerializableConfiguration,
-    lazyCreate: Boolean = false, compression: String = "none")
+    spec: IpcWriteSpec, lazyCreate: Boolean = false)
     extends DataWriter[InternalRow] {
   private val fs = tmpPath.getFileSystem(confSer.value)
   private val allocator = new RootAllocator()
-  private val root = org.apache.arrow.vector.VectorSchemaRoot.create(
-    Ipc.toArrowSchema(schema), allocator)
+  // encoded columns take dictionary ids in name order, so every file
+  // of one write numbers them alike
+  private val dicts: Seq[(String, DictColumn)] =
+    (spec.prebuilt.keySet ++ spec.delta).toSeq.sorted.zipWithIndex.map {
+      case (c, id) => c -> new DictColumn(c, id.toLong,
+        spec.prebuilt.getOrElse(c, Array.empty), spec.delta.contains(c), allocator)
+    }
+  private val dictOf: Array[DictColumn] =
+    schema.fields.map(f => dicts.find(_._1 == f.name).map(_._2).orNull)
+  private val provider = new DictionaryProvider.MapDictionaryProvider()
+  dicts.foreach { case (_, d) => provider.put(new Dictionary(d.vector, d.encoding)) }
+  private val root = VectorSchemaRoot.create(new ArrowSchema(
+    schema.fields.zip(dictOf).map {
+      case (f, null) => Ipc.toArrowField(f.name, f.dataType, nullable = true)
+      case (f, d) => new Field(f.name,
+        new FieldType(true, new ArrowType.Int(32, true), d.encoding),
+        java.util.Collections.emptyList[Field])
+    }.toSeq.asJava), allocator)
   // batch writes are eager (a schema-only file per partition keeps the
   // directory self-describing); streaming epochs create the file only
   // when the first row arrives
   private var out: org.apache.hadoop.fs.FSDataOutputStream = null
-  private var writer: org.apache.arrow.vector.ipc.ArrowFileWriter = null
+  private var writer: IpcFileWriter = null
   private def ensureOpen(): Unit = if (writer == null) {
     out = fs.create(tmpPath, true)
-    writer = Ipc.newFileWriter(
-      root, null, java.nio.channels.Channels.newChannel(out), compression)
+    writer = new IpcFileWriter(
+      root, provider, java.nio.channels.Channels.newChannel(out), spec.compression)
     writer.start()
   }
   if (!lazyCreate) ensureOpen()
 
   private val colTypes: Array[DataType] = schema.fields.map(_.dataType)
   private var n = 0
+  private var batches = 0
   private var vectorsReady = false
   // per-column min/max/null accumulators for the .stats sidecar
   private val accs: Array[IpcStats.ColAcc] =
@@ -1067,15 +1196,13 @@ private final class IpcDataWriter(schema: StructType,
   private var totalRows = 0L
 
   // values stream STRAIGHT into the Arrow vectors (setSafe grows
-  // variable-width buffers): the old path copied every InternalRow
-  // (row.copy() — one allocation per row) into a buffer and converted
-  // in a second pass per flush; the per-batch allocateNew resets
-  // validity so skipped (null) slots stay unset, same as before
+  // variable-width buffers); the per-batch allocateNew resets validity
+  // so skipped (null) slots stay unset
   private def ensureVectors(): Unit = if (!vectorsReady) {
     var c = 0
     while (c < schema.length) {
       val vec = root.getVector(c)
-      vec.setInitialCapacity(Ipc.BatchRows)
+      vec.setInitialCapacity(spec.batchRows)
       vec.allocateNew()
       c += 1
     }
@@ -1089,24 +1216,50 @@ private final class IpcDataWriter(schema: StructType,
     ensureVectors()
     c = 0
     while (c < schema.length) {
-      if (!row.isNullAt(c)) // unset = null in Arrow validity
-        Ipc.setCatalystValue(root.getVector(c), n, colTypes(c),
+      if (!row.isNullAt(c)) { // unset = null in Arrow validity
+        if (dictOf(c) != null)
+          root.getVector(c).asInstanceOf[IntVector]
+            .setSafe(n, dictOf(c).idOf(row.getUTF8String(c)))
+        else Ipc.setCatalystValue(root.getVector(c), n, colTypes(c),
           row.get(c, colTypes(c)))
+      }
       c += 1
     }
     n += 1
-    if (n == Ipc.BatchRows) flush()
+    if (n == spec.batchRows) flush()
   }
 
-  private def flush(): Unit = if (n > 0) {
-    ensureOpen()
-    var c = 0
-    while (c < schema.length) { root.getVector(c).setValueCount(n); c += 1 }
-    root.setRowCount(n)
-    writer.writeBatch()
-    n = 0
-    vectorsReady = false // next batch re-allocates (clears validity)
-  }
+  // n == 0 flushes only as an open dictionary file's first batch: an
+  // empty partition still ships its dictionaries (and a zero-row
+  // batch), so every file stays self-describing
+  private def flush(): Unit =
+    if (n > 0 || (batches == 0 && writer != null && dicts.nonEmpty)) {
+      ensureOpen()
+      ensureVectors()
+      // dictionaries go out before the record batch indexing them: the
+      // first batch's as the initial dictionary batches (the file
+      // writer writes the provider's vectors before its first record
+      // batch), later growth as isDelta batches
+      dicts.foreach { case (_, d) =>
+        if (batches == 0) d.drainInto(d.vector)
+        else if (d.hasPending) {
+          val dv = new VarCharVector(d.vector.getName, allocator)
+          d.drainInto(dv)
+          val deltaRoot = new VectorSchemaRoot(
+            java.util.Arrays.asList(dv.getField),
+            java.util.Arrays.asList[FieldVector](dv), dv.getValueCount)
+          val db = new ArrowDictionaryBatch(d.encoding.getId,
+            new VectorUnloader(deltaRoot).getRecordBatch, true)
+          try writer.writeDelta(db)
+          finally { db.close(); deltaRoot.close() }
+        }
+      }
+      root.setRowCount(n)
+      writer.writeBatch()
+      batches += 1
+      n = 0
+      vectorsReady = false // next batch re-allocates (clears validity)
+    }
 
   override def commit(): WriterCommitMessage = {
     flush()
@@ -1143,5 +1296,7 @@ private final class IpcDataWriter(schema: StructType,
     }
   }
 
-  override def close(): Unit = { root.close(); allocator.close() }
+  override def close(): Unit = {
+    root.close(); dicts.foreach(_._2.vector.close()); allocator.close()
+  }
 }

@@ -500,4 +500,203 @@ class IpcSpec extends SparkSpec with RoundTripGen {
     assert(back3.exceptAll(src).count() == 0 &&
       src.exceptAll(back3).count() == 0)
   }
+
+  // ---- one reader: by-name binding, foreign widths, one-pass dictionaries --
+
+  test("the reader binds columns by name: a caller-supplied schema in " +
+      "another order reads each value under its own name") {
+    val sp = spark; import sp.implicits._
+    val out = Egress.outRoot(sfDir) + "/ipc_bind_schema"
+    Seq((1, 100)).toDF("a", "b").coalesce(1)
+      .write.format("graft-ipc").mode("overwrite").save(out)
+    val got = spark.read.schema("b INT, a INT").format("graft-ipc")
+      .load(out).collect().toSeq
+    assert(got == Seq(Row(100, 1)), got)
+  }
+
+  test("the reader binds columns by name: a directory appended to in " +
+      "another column order reads right through both entry points") {
+    val sp = spark; import sp.implicits._
+    val out = Egress.outRoot(sfDir) + "/ipc_bind_append"
+    Seq((1, 100)).toDF("a", "b").coalesce(1)
+      .write.format("graft-ipc").mode("overwrite").save(out)
+    Seq((200, 2)).toDF("b", "a").coalesce(1)
+      .write.format("graft-ipc").mode("append").save(out)
+    val want = Set(Row(1, 100), Row(2, 200))
+    assert(spark.read.format("graft-ipc").load(out).select("a", "b")
+      .collect().toSet == want)
+    assert(Ipc.readIpc(spark, out).select("a", "b").collect().toSet == want)
+  }
+
+  test("the reader refuses a planned column a file lacks, or one of " +
+      "another type, naming the file and the column") {
+    val sp = spark; import sp.implicits._
+    val out = Egress.outRoot(sfDir) + "/ipc_bind_refuse"
+    Seq((1, 100)).toDF("a", "b").coalesce(1)
+      .write.format("graft-ipc").mode("overwrite").save(out)
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    def refusal(schema: String): String = messages(intercept[Exception] {
+      spark.read.schema(schema).format("graft-ipc").load(out).collect()
+    }).find(_.contains("graft-ipc file ")).getOrElse("no refusal message")
+    val missing = refusal("a INT, c INT")
+    assert(missing.contains(".arrow") && missing.contains("no column 'c'"),
+      missing)
+    val retyped = refusal("a STRING")
+    assert(retyped.contains(".arrow") && retyped.contains("column 'a' is INT") &&
+      retyped.contains("planned as STRING"), retyped)
+  }
+
+  test("foreign temporal widths read through the connector: TIME32[s/ms], " +
+      "TIME64[µs], Duration[s] and DAY_TIME, top-level and nested, take " +
+      "the row reader; the engine's own files stay columnar") {
+    import org.apache.arrow.vector._
+    import org.apache.arrow.vector.complex.{ListVector, StructVector}
+    import org.apache.arrow.vector.types.{IntervalUnit, TimeUnit => ATU}
+    import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ASchema}
+    // a file the engine's writer never produces, built with Arrow Java
+    // the way a foreign producer (C++, pyarrow) would
+    def f(n: String, t: ArrowType, kids: Field*) =
+      new Field(n, FieldType.nullable(t), kids.asJava)
+    val schema = new ASchema(Seq(
+      f("t_s", new ArrowType.Time(ATU.SECOND, 32)),
+      f("t_ms", new ArrowType.Time(ATU.MILLISECOND, 32)),
+      f("t_us", new ArrowType.Time(ATU.MICROSECOND, 64)),
+      f("d_s", new ArrowType.Duration(ATU.SECOND)),
+      f("iv_dt", new ArrowType.Interval(IntervalUnit.DAY_TIME)),
+      f("l_ms", ArrowType.List.INSTANCE,
+        f("element", new ArrowType.Time(ATU.MILLISECOND, 32))),
+      f("st", ArrowType.Struct.INSTANCE,
+        f("t_s", new ArrowType.Time(ATU.SECOND, 32)),
+        f("iv", new ArrowType.Interval(IntervalUnit.DAY_TIME)))).asJava)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ipc_foreign_time")
+    val allocator = new RootAllocator()
+    val root = VectorSchemaRoot.create(schema, allocator)
+    val fos = new java.io.FileOutputStream(dir.resolve("part-0.arrow").toFile)
+    val w = new org.apache.arrow.vector.ipc.ArrowFileWriter(root, null, fos.getChannel)
+    try {
+      w.start()
+      root.getVector("t_s").asInstanceOf[TimeSecVector].setSafe(0, 3661) // 01:01:01
+      root.getVector("t_ms").asInstanceOf[TimeMilliVector].setSafe(0, 3661500)
+      root.getVector("t_us").asInstanceOf[TimeMicroVector].setSafe(0, 3661000250L)
+      root.getVector("d_s").asInstanceOf[DurationVector].setSafe(0, 90L)
+      val iv = root.getVector("iv_dt").asInstanceOf[IntervalDayVector]
+      iv.setSafe(0, 2, 500) // 2 days + 500 ms
+      iv.setSafe(1, -3, -250) // both packed ints keep their sign
+      val l = root.getVector("l_ms").asInstanceOf[ListVector]
+      val start = l.startNewValue(0)
+      l.getDataVector.asInstanceOf[TimeMilliVector].setSafe(start, 3661500)
+      l.getDataVector.asInstanceOf[TimeMilliVector].setNull(start + 1)
+      l.endValue(0, 2)
+      l.setNull(1)
+      val st = root.getVector("st").asInstanceOf[StructVector]
+      st.setIndexDefined(0)
+      st.getChild("t_s").asInstanceOf[TimeSecVector].setSafe(0, 7200)
+      st.getChild("iv").asInstanceOf[IntervalDayVector].setSafe(0, 1, 1)
+      st.setNull(1)
+      root.setRowCount(2)
+      w.writeBatch(); w.end()
+    } finally { w.close(); fos.close(); root.close(); allocator.close() }
+    val df = spark.read.format("graft-ipc").load(dir.toString)
+    val rows = df.collect()
+    val r = rows(0)
+    assert(r.get(0) == java.time.LocalTime.of(1, 1, 1))
+    assert(r.get(1) == java.time.LocalTime.of(1, 1, 1, 500000000))
+    assert(r.get(2) == java.time.LocalTime.ofNanoOfDay(3661000250L * 1000L))
+    assert(r.get(3) == java.time.Duration.ofSeconds(90))
+    assert(r.get(4) == java.time.Duration.ofSeconds(2 * 86400, 500000000L))
+    assert(sameValue(r.get(5), Seq(java.time.LocalTime.of(1, 1, 1, 500000000), null)),
+      s"nested list: ${r.get(5)}")
+    assert(r.getStruct(6) ==
+      Row(java.time.LocalTime.of(2, 0), java.time.Duration.ofMillis(86400001L)))
+    val r1 = rows(1)
+    assert(r1.get(4) == java.time.Duration.ofMillis(-3L * 86400000L - 250L),
+      s"negative DAY_TIME pair must keep both signs, got ${r1.get(4)}")
+    assert(Seq(0, 1, 2, 3, 5, 6).forall(r1.isNullAt), s"row 1: $r1")
+    // the file decides the reader: this one takes the row reader …
+    assert(!df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      df.queryExecution.executedPlan.toString)
+    // … while a file of the engine's own writer keeps the columnar one
+    val own = Egress.outRoot(sfDir) + "/ipc_own_temporal"
+    spark.range(3).selectExpr("id", "CAST('01:02:03' AS TIME) AS t",
+        "make_dt_interval(0, 0, 0, CAST(id AS INT)) AS d")
+      .write.format("graft-ipc").mode("overwrite").save(own)
+    val ownDf = spark.read.format("graft-ipc").load(own)
+    assert(ownDf.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(ownDf.orderBy("id").collect().last.get(2) == java.time.Duration.ofSeconds(2))
+  }
+
+  test("foreign temporal widths from STOCK pyarrow read through the " +
+      "connector (skips when python3/pyarrow is absent)") {
+    val py = Seq("python3", "python").find { p =>
+      try new ProcessBuilder(p, "-c", "import pyarrow").start().waitFor() == 0
+      catch { case _: Throwable => false }
+    }.getOrElse(cancel("no python3 with pyarrow on this machine"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_ipc_pyarrow_time")
+    val script = """
+      |import sys, pyarrow as pa, pyarrow.ipc as ipc
+      |t = pa.table({
+      |  "t_s": pa.array([3661, None], pa.time32("s")),
+      |  "t_ms": pa.array([3661500, None], pa.time32("ms")),
+      |  "t_us": pa.array([3661000250, None], pa.time64("us")),
+      |  "d_s": pa.array([90, None], pa.duration("s")),
+      |  "l_ms": pa.array([[3661500, None], None], pa.list_(pa.time32("ms"))),
+      |  "st": pa.array([{"t_s": 7200, "d_ns": 1999}, None],
+      |                 pa.struct([("t_s", pa.time32("s")), ("d_ns", pa.duration("ns"))])),
+      |})
+      |with ipc.new_file(sys.argv[1], t.schema) as w:
+      |    w.write_table(t)
+      |""".stripMargin
+    val pr = new ProcessBuilder(py, "-c", script,
+      dir.resolve("part-0.arrow").toString).redirectErrorStream(true).start()
+    val log = new String(pr.getInputStream.readAllBytes())
+    assert(pr.waitFor() == 0, s"pyarrow writer failed:\n$log")
+    val df = spark.read.format("graft-ipc").load(dir.toString)
+    val Array(r, r1) = df.collect()
+    assert(r.get(0) == java.time.LocalTime.of(1, 1, 1))
+    assert(r.get(1) == java.time.LocalTime.of(1, 1, 1, 500000000))
+    assert(r.get(2) == java.time.LocalTime.ofNanoOfDay(3661000250L * 1000L))
+    assert(r.get(3) == java.time.Duration.ofSeconds(90))
+    assert(sameValue(r.get(4), Seq(java.time.LocalTime.of(1, 1, 1, 500000000), null)))
+    // ns floor-divides to µs (1999 ns -> 1 µs)
+    assert(r.getStruct(5) ==
+      Row(java.time.LocalTime.of(2, 0), java.time.Duration.ofNanos(1000)))
+    assert((0 until 6).forall(r1.isNullAt), s"row 1: $r1")
+    assert(!df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+  }
+
+  test("writeIpcDict builds every dictionary in one aggregation: sorted " +
+      "ids, NULLs left out, and the 65536 cap refused") {
+    val sp = spark; import sp.implicits._
+    val out = Egress.outRoot(sfDir) + "/ipc_dict_one_pass"
+    val df = (0 until 3000).map(i => (i.toLong,
+        if (i % 11 == 0) null else s"s${(i * 5) % 7}", s"p${i % 5}"))
+      .toDF("id", "s", "p").coalesce(2)
+    // one dictionary job per shuffle stage of the aggregation (distinct,
+    // then numbering per column) plus its result, then the write
+    assert(jobsDuring(Ipc.writeIpcDict(df, out, Seq("s", "p"))) == 4)
+    val f = new java.io.File(out).listFiles()
+      .filter(_.getName.endsWith(".arrow")).minBy(_.getName)
+    val allocator = new RootAllocator()
+    val rd = new ArrowFileReader(
+      new java.io.FileInputStream(f).getChannel, allocator)
+    try {
+      val root = rd.getVectorSchemaRoot
+      def dictOf(c: String): Seq[String] = {
+        val dv = rd.getDictionaryVectors
+          .get(root.getVector(c).getField.getDictionary.getId).getVector
+          .asInstanceOf[org.apache.arrow.vector.VarCharVector]
+        (0 until dv.getValueCount).map(i => new String(dv.get(i), "UTF-8"))
+      }
+      assert(dictOf("s") == (0 until 7).map(i => s"s$i"))
+      assert(dictOf("p") == (0 until 5).map(i => s"p$i"))
+    } finally { rd.close(); allocator.close() }
+    val back = Ipc.readIpc(spark, out)
+    assert(back.exceptAll(df).count() == 0 && df.exceptAll(back).count() == 0)
+    val wide = (0 to 65536).map(i => s"v$i").toDF("v")
+    val e = intercept[IllegalArgumentException] {
+      Ipc.writeIpcDict(wide, out + "_wide", Seq("v"))
+    }
+    assert(e.getMessage.contains("more than 65536"), e.getMessage)
+  }
 }

@@ -102,6 +102,23 @@ class PlanLintSpec extends SparkSpec {
     }
   }
 
+  // every Arrow IPC file read plans over the graft-ipc connector (its
+  // column pruning and stats skipping), never over an RDD that
+  // graft.ops.Ipc hands to createDataFrame
+  test("no query scans an RDD built in graft.ops.Ipc") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    for ((name, fn) <- SparkEntry.queries) {
+      val plan = fn(spark, sfDir).queryExecution.executedPlan
+      val inner: SparkPlan = plan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      inner.collectWithSubqueries { case s: RDDScanExec => s.rdd.toString }
+        .foreach(rdd => assert(!rdd.contains(" at Ipc.scala:"),
+          s"$name scans $rdd"))
+    }
+  }
+
   // deliberate full-row reads: limit/limit_offset are SELECT *
   // pagination demos; mv_refresh replays its own 5-column state table;
   // sql_select_replace is a star modifier — the star KEEPS every
